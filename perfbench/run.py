@@ -51,13 +51,15 @@ sys.path.insert(0, ROOT)
 import gen  # noqa: E402
 from spans import Tracer  # noqa: E402
 
-PAGES_N = 30_000
+PAGES_N = 40_000
 # lines per second: low enough that a slow tick barely grows the next
 # batch, so fixed per-tick costs set the latency
 DAEMON_RATE = 300.0
-DAEMON_WARM_TICKS = 2
+DAEMON_WARM_TICKS = 1
 SETUP_REPS = 3
-WARM_MIN, WARM_MAX, WARM_SETTLE = 4, 8, 0.10
+# a fixed warm-up, so every run measures the JIT at the same stage; the
+# median over the measured batches absorbs what warming is left
+WARM_BATCHES = 2
 CEL_RULE = "event.code == 200 || event.code >= 400"
 DAEMON_CEL_RULE = 'event.device_vendor == "synthetic"'
 QUARANTINE = "__quarantine__"
@@ -78,8 +80,10 @@ def log(msg: str) -> None:
     print(f"[perfbench {time.perf_counter() - _T0:7.1f}s] {msg}", file=sys.stderr, flush=True)
 
 
-def cores() -> int:
-    return len(os.sched_getaffinity(0))
+CPUS = sorted(os.sched_getaffinity(0))
+# Spark task threads: half the cores, so the JVM's GC and compiler threads
+# and this process run beside the tasks rather than between them
+THREADS = max(1, len(CPUS) // 2)
 
 
 def driver_mem() -> str:
@@ -121,14 +125,15 @@ def start_session(st: State):
 
     return get_spark(
         app_name="perfbench",
-        master=f"local[{cores()}]",
+        master=f"local[{THREADS}]",
         extra_conf={
             "spark.ui.showConsoleProgress": "false",
             "spark.local.dir": st.path("spark-local"),
-            # a fixed heap layout keeps the driver's peak RSS comparable
-            # between runs; ParallelGC as in get_spark
+            # a fixed, pre-touched heap keeps the driver's peak RSS
+            # comparable between runs; ParallelGC as in get_spark
             "spark.driver.extraJavaOptions": (
-                f"-XX:+UseParallelGC -Xms{driver_mem()} -XX:-UseAdaptiveSizePolicy "
+                f"-XX:+UseParallelGC -XX:ParallelGCThreads={THREADS} "
+                f"-Xms{driver_mem()} -XX:-UseAdaptiveSizePolicy -XX:+AlwaysPreTouch "
                 f"-Djava.io.tmpdir={st.path('tmp')}"
             ),
         },
@@ -136,7 +141,8 @@ def start_session(st: State):
 
 
 def warm_python(spark) -> None:
-    """Fork one Python worker per core and import pandas/pyarrow there."""
+    """Fork one Python worker per task thread and import pandas/pyarrow
+    there."""
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
@@ -144,7 +150,7 @@ def warm_python(spark) -> None:
     def plus_one(s: pd.Series) -> pd.Series:
         return s + 1
 
-    n = cores()
+    n = THREADS
     spark.range(0, n * 1000, numPartitions=n).select(plus_one("id")).write.format(
         "noop"
     ).mode("overwrite").save()
@@ -305,9 +311,10 @@ class Run:
 
 
 class BatchWorkload:
-    """Shared loop of the two batch workloads: warm until two iterations
-    agree, then iterate for the measured seconds."""
+    """Shared loop of the two batch workloads: a fixed number of warm-up
+    iterations, then iterations for the measured seconds."""
 
+    cpus = CPUS
     last_id = None
 
     def after_batch(self, i: int) -> None:
@@ -317,18 +324,11 @@ class BatchWorkload:
         return 0
 
     def warm(self, spark, bound) -> int:
-        prev, i = None, 0
-        while i < WARM_MAX:
-            t0 = time.perf_counter()
+        for i in range(WARM_BATCHES):
             self.check_record(self.batch(spark, bound, i))
-            dt = time.perf_counter() - t0
             self.after_batch(i)
-            i += 1
-            if i >= WARM_MIN and abs(dt - prev) <= WARM_SETTLE * prev:
-                break
-            prev = dt
-        self.next_id = i
-        return i
+        self.next_id = WARM_BATCHES
+        return WARM_BATCHES
 
     def measure(self, spark, bound, seconds: float, tracer: Tracer | None) -> Run:
         run = Run()
@@ -530,6 +530,12 @@ class DaemonTicks:
 
     name = "daemon_ticks"
     INSTANCE = "daemon"
+    # A tick is a chain of short hand-offs between the driver, the JVM's
+    # scheduler and task threads and a Python worker. On a shared host each
+    # hand-off to an idle vCPU can wait for the hypervisor to wake it, so
+    # the whole run is kept on THREADS CPUs: on a 4-vCPU guest this cut the
+    # run-to-run spread of latency_p50_s by more than half.
+    cpus = CPUS[:THREADS]
     SINKS = ("events", "quarantine")
 
     def prepare(self, st: State, seed: int) -> None:
@@ -567,8 +573,9 @@ class DaemonTicks:
         collector.start(self.INSTANCE, self.config())
         return collector
 
-    def tick(self, spark, collector, last: int, run: Run | None, window=(0.0, 0.0)) -> None:
-        """Append lines up to (not including) seq ``last``, then tick."""
+    def tick(self, spark, collector, last: int, run: Run | None, since: float = 0.0) -> None:
+        """Append lines up to (not including) seq ``last``, then tick. The
+        run records the latency of each line due at or after ``since``."""
         first = self.appended
         batch = gen.daemon_schedule(self.seed, DAEMON_RATE, self.seq0, first, last)
         with open(self.log_path, "a") as f:
@@ -589,9 +596,8 @@ class DaemonTicks:
         run.records.append(record)
         run.lag_lines.append(lag)
         run.sink_bytes.append(self.sink_bytes(record.batch_id))
-        lo, hi = window
         commit = done - self.t0
-        run.latencies.extend(commit - due for due, _ in batch if lo <= due < hi)
+        run.latencies.extend(commit - due for due, _ in batch if due >= since)
 
     def due_upto(self, now: float) -> int:
         """One past the last seq due by ``now``."""
@@ -608,18 +614,18 @@ class DaemonTicks:
         return DAEMON_WARM_TICKS
 
     def measure(self, spark, collector, seconds: float, tracer: Tracer | None) -> Run:
+        """Ticks started within ``seconds``. Each tick commits every line
+        due before it started, so the lines measured are all lines due
+        from the start of the phase to the start of its last tick."""
         run = Run()
-        lo = time.perf_counter() - self.t0
-        hi = lo + seconds
-        while (
-            self.appended == self.seq0
-            or gen.due_s(self.appended - 1, self.seq0, DAEMON_RATE) < hi
-        ):
+        start = time.perf_counter()
+        since = start - self.t0
+        while run.attempted == 0 or time.perf_counter() < start + seconds:
             group = f"perfbench-tick-{self.appended}"
             if tracer is not None:
                 spark.sparkContext.setJobGroup(group, group)
             run.groups.append(group)
-            self.tick(spark, collector, self.due_upto(time.perf_counter()), run, (lo, hi))
+            self.tick(spark, collector, self.due_upto(time.perf_counter()), run, since)
         return run
 
     def sink_bytes(self, batch_id: int) -> int:
@@ -780,6 +786,7 @@ def main() -> int:
     st = State(os.path.join(ROOT, ".perfbench_state"))
     configure_env(st)
     workload = WORKLOADS[args.workload]()
+    os.sched_setaffinity(0, workload.cpus)  # the JVM and Python workers inherit it
     workload.prepare(st, args.seed)
     log("inputs generated")
     spark, bound, samples = setup(workload, st)
