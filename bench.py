@@ -37,15 +37,6 @@ N_PAGES = int(
     os.environ.get("SPARK_GRAFT_PAGES_N", max(int(400_000 * _SF_FROM_DIR), 200))
 )
 
-# deliberate zero-Python redundancies of queries already measured on
-# their primary (Arrow) engine — timed and reported, but in their own
-# bucket so the headline total reflects each operator once (the native
-# Catalyst regex chains are measured ~2.5x slower by design; CLAUDE.md)
-ALTERNATE_ENGINE_QUERIES = [
-    "kv_roundtrip_native",
-    "cef_roundtrip_native",
-]
-
 BENCH_QUERIES = [
     "pipeline_parse_route_agg",
     "cel_filter_accept",
@@ -53,9 +44,7 @@ BENCH_QUERIES = [
     "json_mutate",
     "syslog_strip",
     "kv_roundtrip",
-    "kv_roundtrip_native",
     "cef_roundtrip",
-    "cef_roundtrip_native",
     "enrich_broadcast_agg",
     "agg_pricing_summary",
     "window_top_orders",
@@ -286,8 +275,8 @@ def main() -> None:
         spark.catalog.clearCache()
 
     # pages_extract_udf is the Arrow alternate of the native extract the
-    # pages pipeline already times — same redundancy bucket
-    alternates = set(ALTERNATE_ENGINE_QUERIES) | {"pages_extract_udf"}
+    # pages pipeline already times — a redundancy, so its own bucket
+    alternates = {"pages_extract_udf"}
     primary_total = round(
         sum(v for k, v in timings.items() if k not in alternates), 3
     )

@@ -11,6 +11,10 @@ JSON encodes (kv: map<string,string>; cef: 7 header fields + extensions
 map). ``as_json=True`` reproduces the reference's JSON-line output for
 byte-level parity tests. Parse failures yield NULL structs which the
 ``apply`` step filters out (reference drops such lines, kv.go:66-79).
+
+This is the only kv/cef implementation: a pure-Catalyst regex chain
+measured about 2.5x slower than these Arrow UDFs at sf0.1, because
+per-row Java regex chains do not vectorize.
 """
 
 from __future__ import annotations
@@ -38,19 +42,26 @@ CEF_SCHEMA = T.StructType(
 KV_SCHEMA = T.MapType(T.StringType(), T.StringType())
 
 
-def _parse_kv_series(s: pd.Series) -> pd.Series:
+def _per_row(parse, failed=None):
+    """One-row wrapper around an oracle parser: the line is stripped
+    first; a NULL or blank line, or a ParseError, yields ``failed``."""
+
     def one(line):
         if line is None:
-            return None
+            return failed
         line = line.strip()
         if not line:
-            return None
+            return failed
         try:
-            return oracle.parse_kv(line)
+            return parse(line)
         except oracle.ParseError:
-            return None
+            return failed
 
-    return s.map(one)
+    return one
+
+
+def _parse_kv_series(s: pd.Series) -> pd.Series:
+    return s.map(_per_row(oracle.parse_kv))
 
 
 _CEF_COLS = [f.name for f in CEF_SCHEMA.fields]
@@ -61,195 +72,22 @@ def _parse_cef_frame(s: pd.Series) -> pd.DataFrame:
     """StructType pandas UDFs return a DataFrame (one column per field).
     Unparseable rows become all-NULL structs; apply() filters them on the
     non-nullable ``version`` field."""
-
-    def one(line):
-        if line is None:
-            return _CEF_NULL_ROW
-        line = line.strip()
-        if not line:
-            return _CEF_NULL_ROW
-        try:
-            return oracle.parse_cef(line)
-        except oracle.ParseError:
-            return _CEF_NULL_ROW
-
+    one = _per_row(oracle.parse_cef, _CEF_NULL_ROW)
     return pd.DataFrame([one(v) for v in s], columns=_CEF_COLS)
+
+
+def _kv_json_series(s: pd.Series) -> pd.Series:
+    return s.map(_per_row(oracle.parse_kv_json))
+
+
+def _cef_json_series(s: pd.Series) -> pd.Series:
+    return s.map(_per_row(oracle.parse_cef_json))
 
 
 kv_parse_udf = F.pandas_udf(_parse_kv_series, KV_SCHEMA)
 cef_parse_udf = F.pandas_udf(_parse_cef_frame, CEF_SCHEMA)
-
-
-def _kv_json_series(s: pd.Series) -> pd.Series:
-    def one(line):
-        if line is None:
-            return None
-        line = line.strip()
-        if not line:
-            return None
-        try:
-            return oracle.parse_kv_json(line)
-        except oracle.ParseError:
-            return None
-
-    return s.map(one)
-
-
-def _cef_json_series(s: pd.Series) -> pd.Series:
-    def one(line):
-        if line is None:
-            return None
-        line = line.strip()
-        if not line:
-            return None
-        try:
-            return oracle.parse_cef_json(line)
-        except oracle.ParseError:
-            return None
-
-    return s.map(one)
-
-
 kv_json_udf = F.pandas_udf(_kv_json_series, T.StringType())
 cef_json_udf = F.pandas_udf(_cef_json_series, T.StringType())
-
-
-# ---------------------------------------------------------------------------
-# Native (JVM) raw-kv fast path — zero Python per row
-# ---------------------------------------------------------------------------
-
-# mirror of oracle._EMPTY_KV_RE / _TRAILING_KV_RE (kv.go:89-96)
-_EMPTY_KV_JAVA = "[a-zA-Z0-9]+=[ ]"
-_TRAILING_KV_JAVA = "[ ][a-zA-Z0-9]+=$"
-# one valid token: key (no spaces/'='), '=', value not starting with '='
-_TOKEN_JAVA = "^[^\\s=]+=($|[^=].*$)"
-
-
-def native_kv_map_col(col: Column) -> Column:
-    """parse_kv as pure Catalyst expressions. NULL when any token is
-    malformed (the reference's ParseError → line dropped, kv.go:66-79).
-    Duplicate keys: last wins (session mapKeyDedupPolicy=LAST_WIN).
-    Matches oracle.parse_kv token-for-token: empty-valued keys blanked,
-    trailing 'key=' stripped, token split at the FIRST '='."""
-    # the oracle/pandas path runs str.strip() on the line first — btrim
-    # with Python's whitespace set, NOT F.trim (spaces only)
-    stripped = F.btrim(col, F.lit(_PY_WS))
-    cleaned = F.regexp_replace(stripped, _EMPTY_KV_JAVA, " ")
-    cleaned = F.when(
-        cleaned.endswith("="), F.regexp_replace(cleaned, _TRAILING_KV_JAVA, "")
-    ).otherwise(cleaned)
-    toks = F.filter(F.split(F.trim(cleaned), r"\s+"), lambda t: t != "")
-    valid = F.forall(toks, lambda t: t.rlike(_TOKEN_JAVA))
-    # split ONCE per token (Catalyst does not CSE inside transform
-    # lambdas — referencing split(t) twice ran the regex twice/token)
-    pairs = F.transform(toks, lambda t: F.split(t, "=", 2))
-    entries = F.transform(
-        pairs,
-        lambda p: F.struct(p[0].alias("key"), p[1].alias("value")),
-    )
-    # empty original line → NULL (dropped, tmp_writer.go:54-56); a line
-    # that merely cleans down to no tokens parses to an EMPTY map (the
-    # oracle returns {} there)
-    return F.when(
-        F.length(stripped) > 0, F.when(valid, F.map_from_entries(entries))
-    )
-
-
-# ---------------------------------------------------------------------------
-# Native (JVM) CEF fast path — zero Python per row
-# ---------------------------------------------------------------------------
-
-_SENTINEL = "\x00"
-# Java regex supports the lookahead the reference needed regexp2 for
-# (cef.go:78). NOTE: Java \w is ASCII while Python's is unicode-aware —
-# identical on ASCII keys (all fixtures); unicode extension keys are the
-# pandas path's job.
-_NON_KV_SPACE_JAVA = "\\s(?!([\\w\\-]+)=)"
-
-
-def _unescape_header(col: Column) -> Column:
-    """Single-pass \\\\ -> \\, \\| -> |, \\n -> newline (cef.go:122-131):
-    consuming double-backslashes FIRST via a sentinel reproduces the Go
-    Replacer's one-pass semantics with chained literal replaces."""
-    col = F.replace(col, F.lit("\\\\"), F.lit(_SENTINEL))
-    col = F.replace(col, F.lit("\\|"), F.lit("|"))
-    col = F.replace(col, F.lit("\\n"), F.lit("\n"))
-    return F.replace(col, F.lit(_SENTINEL), F.lit("\\"))
-
-
-def _unescape_extension(col: Column) -> Column:
-    """\\\\ -> \\, \\n -> newline (\\= never appears here — it is
-    placeholder-protected before tokenization, cef.go:64-76)."""
-    col = F.replace(col, F.lit("\\\\"), F.lit(_SENTINEL))
-    col = F.replace(col, F.lit("\\n"), F.lit("\n"))
-    return F.replace(col, F.lit(_SENTINEL), F.lit("\\"))
-
-
-def _restore_placeholders(col: Column) -> Column:
-    col = F.replace(col, F.lit("{{SPACE}}"), F.lit(" "))
-    col = F.replace(col, F.lit("{{EQUAL_ESCAPE_1}}"), F.lit("\\="))
-    col = F.replace(col, F.lit("{{EQUAL_ESCAPE_2}}"), F.lit("\\\\="))
-    return F.replace(col, F.lit("{{COLON}}"), F.lit(":"))
-
-
-_PY_WS = " \t\n\r\x0b\x0c"  # Python str.strip()'s ASCII whitespace set
-
-
-def native_cef_struct_col(col: Column) -> Column:
-    """parse_cef as pure Catalyst expressions — NULL struct when invalid
-    (mirrors oracle.parse_cef / cefStringToObject, cef.go:43-119)."""
-    col = F.btrim(col, F.lit(_PY_WS))  # oracle strips the line first
-    arr = F.split(col, "\\|")
-    first = arr[0]
-    has_colon = first.contains(":")
-    version = F.when(
-        # segment between the 1st and 2nd colon (cef.go:52-61 —
-        # 'CEF:0:junk' → '0'); split always has index 2 when has_colon
-        has_colon, F.element_at(F.split(first, ":"), 2)
-    ).otherwise(first)
-    version_ok = F.when(has_colon, first.rlike("^CEF:")).otherwise(
-        first.rlike("^[+-]?[0-9]{1,18}$")  # strconv.Atoi acceptance
-    )
-    valid = (F.size(arr) >= 7) & version_ok
-
-    ext_raw = F.array_join(F.slice(arr, 8, F.greatest(F.size(arr) - 7, F.lit(0))), "|")
-    safe = F.replace(ext_raw, F.lit(":"), F.lit("{{COLON}}"))
-    safe = F.replace(safe, F.lit("\\\\="), F.lit("{{EQUAL_ESCAPE_2}}"))
-    safe = F.replace(safe, F.lit("\\="), F.lit("{{EQUAL_ESCAPE_1}}"))
-    safe = F.regexp_replace(safe, _NON_KV_SPACE_JAVA, "{{SPACE}}")
-
-    # kv cleanup + tokenization on the protected string (kv.go:89-139)
-    cleaned = F.regexp_replace(F.trim(safe), _EMPTY_KV_JAVA, " ")
-    cleaned = F.when(
-        cleaned.endswith("="), F.regexp_replace(cleaned, _TRAILING_KV_JAVA, "")
-    ).otherwise(cleaned)
-    toks = F.filter(F.split(F.trim(cleaned), r"\s+"), lambda t: t != "")
-    kv_ok = F.forall(toks, lambda t: t.rlike(_TOKEN_JAVA))
-    # split ONCE per token (no CSE inside transform lambdas)
-    pairs = F.transform(toks, lambda t: F.split(t, "=", 2))
-    entries = F.transform(
-        pairs,
-        lambda p: F.struct(
-            _restore_placeholders(_unescape_extension(p[0])).alias("key"),
-            F.btrim(
-                _restore_placeholders(_unescape_extension(p[1])),
-                F.lit(_PY_WS),
-            ).alias("value"),
-        ),
-    )
-    extensions = F.map_from_entries(entries)
-
-    struct = F.struct(
-        version.alias("version"),
-        _unescape_header(arr[1]).alias("device_vendor"),
-        _unescape_header(arr[2]).alias("device_product"),
-        _unescape_header(arr[3]).alias("device_version"),
-        _unescape_header(arr[4]).alias("device_event_class_id"),
-        _unescape_header(arr[5]).alias("name"),
-        _unescape_header(arr[6]).alias("severity"),
-        extensions.alias("extensions"),
-    )
-    return F.when(valid & kv_ok, struct)
 
 
 class KvParser:
@@ -257,22 +95,9 @@ class KvParser:
 
     apply() drops unparseable rows (reference logs + skips) and adds a
     ``parsed`` struct/map column; with as_json=True it instead rewrites
-    ``value`` with the compact JSON the reference would emit.
-
-    engine='native': the whole parse (raw kv AND cef) is Catalyst
-    expressions inside whole-stage codegen — no Python workers, no Arrow
-    transfer; throughput is on par with the Arrow path (the win is
-    operational: executors without Python, full codegen fusion).
-    engine='pandas' (default) runs the shared-oracle UDF (general path;
-    byte-identical by construction). Both engines are fuzz-proven equal
-    on thousands of adversarial ASCII lines
-    (tests/test_processors_spark.py). KNOWN DIVERGENCE on non-ASCII
-    whitespace: the oracle path tokenizes with Python's unicode-aware
-    str.split()/str.strip() (mirroring Go's strings.Fields/TrimSpace in
-    the reference), while the native path uses Java's ASCII \\s and an
-    ASCII btrim set — a line containing U+00A0/U+0085 etc. splits
-    differently. Unicode-whitespace inputs are the pandas engine's job
-    (same ASCII caveat as the documented CEF \\w note below).
+    ``value`` with the compact JSON the reference would emit. Every row
+    goes through the shared-oracle pandas UDF, so the output is
+    byte-identical to oracle.parse_kv / parse_cef by construction.
     """
 
     def __init__(
@@ -280,32 +105,22 @@ class KvParser:
         type: str = "raw",
         value_col: str = "value",
         as_json: bool = False,
-        engine: str = "pandas",
     ):
         if type not in ("raw", "cef"):
             raise ValueError(f"kv type must be raw|cef, got {type!r}")
-        if engine not in ("pandas", "native"):
-            raise ValueError(engine)
-        if engine == "native" and as_json:
-            raise ValueError("engine='native' emits typed structs, not JSON lines")
         self.type = type
         self.value_col = value_col
         self.as_json = as_json
-        self.engine = engine
 
     def apply(self, df: DataFrame) -> DataFrame:
         df, keep = self.tag(df)
         return df.filter(keep)
 
-    def tag(self, df: DataFrame) -> tuple[DataFrame, "F.Column"]:
+    def tag(self, df: DataFrame) -> tuple[DataFrame, Column]:
         """Non-dropping variant for the quarantine path: adds the parse
         output and returns the parse-success boolean instead of
         filtering."""
         col = F.col(self.value_col)
-        if self.engine == "native":
-            builder = native_kv_map_col if self.type == "raw" else native_cef_struct_col
-            out = df.withColumn("parsed", builder(col))
-            return out, F.col("parsed").isNotNull()
         if self.as_json:
             udf = kv_json_udf if self.type == "raw" else cef_json_udf
             out = df.withColumn(self.value_col, udf(col))

@@ -25,7 +25,6 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark import StorageLevel
 
 from collector_spark.operators.cel import CelFilter, ColumnCompiler, SqlCompiler, parse_rule
 
@@ -55,7 +54,7 @@ class Router:
     """Fan a DataFrame out to named routes.
 
     with_routes()   → adds an array<string> ``routes`` column (matched sinks)
-    split()         → {sink_name: filtered DataFrame view} over a persisted parent
+    split()         → {sink_name: filtered DataFrame view} of one parent
     sink_counts()   → DataFrame (sink, cnt) per-sink aggregate counts
     """
 
@@ -89,10 +88,9 @@ class Router:
         )
         return df.withColumn(out_col, arr)
 
-    def split(self, df: DataFrame, persist: bool = True) -> dict[str, DataFrame]:
-        """One persisted parent, N filtered children (write each to its sink)."""
-        if persist:
-            df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    def split(self, df: DataFrame) -> dict[str, DataFrame]:
+        """N filtered views of ``df``, one per route (write each to its
+        sink). Persist ``df`` first so the views share one computation."""
         return {name: df.filter(col) for name, col in self._route_cols()}
 
     def sink_counts(self, df: DataFrame) -> DataFrame:

@@ -24,6 +24,7 @@ import os
 import uuid
 from dataclasses import dataclass, field
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -153,13 +154,14 @@ class Pipeline:
         for i, (kind, stage) in enumerate(self.stages):
             df = stage.apply(df)
             if observations is not None:
-                obs = Observation(f"stage_{i}_{kind}")
-                df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-                observations[f"stage_{i}_{kind}"] = obs
+                name = f"stage_{i}_{kind}"
+                obs = Observation(name)
+                df = df.observe(obs, F.count(F.lit(1)).alias(name))
+                observations[name] = obs
         return df
 
     def transform_tagged(
-        self, df: DataFrame
+        self, df: DataFrame, observations: dict[str, Observation] | None = None
     ) -> tuple[DataFrame, DataFrame, DataFrame]:
         """Quarantine variant of transform(): every stage TAGS instead of
         filters; a row's first failing stage is recorded. Returns
@@ -167,7 +169,11 @@ class Pipeline:
         filtered views of the parent (persist the parent to share the
         parse work). ``quarantined`` carries the ORIGINAL input value
         plus ``fail_stage`` — the dead-letter record replacing the
-        reference's silent drops (manager.go:166-169)."""
+        reference's silent drops (manager.go:166-169).
+
+        ``observations`` is filled as in transform(): one Observation on
+        the parent counts, per stage, the rows that passed it and every
+        stage before it, so the counts equal the filtering path's."""
         vc = self.config.value_col
         df = df.withColumn("_orig", F.col(vc))
         ok_cols: list[tuple[str, str]] = []
@@ -183,6 +189,14 @@ class Pipeline:
         for ok_col, name in reversed(ok_cols):
             fail = F.when(~F.col(ok_col), F.lit(name)).otherwise(fail)
         tagged = df.withColumn("_fail_stage", fail)
+        if observations is not None and ok_cols:
+            obs = Observation("stages")
+            passed, counts = F.lit(True), []
+            for ok_col, name in ok_cols:
+                passed = passed & F.col(ok_col)
+                counts.append(F.count(F.when(passed, 1)).alias(name))
+                observations[name] = obs
+            tagged = tagged.observe(obs, *counts)
         helper_cols = ["_orig", "_fail_stage"] + [c for c, _ in ok_cols]
         kept = tagged.filter(F.col("_fail_stage").isNull()).drop(*helper_cols)
         quarantined = tagged.filter(F.col("_fail_stage").isNotNull()).select(
@@ -232,47 +246,55 @@ class Pipeline:
     def _run_batch_inner(
         self, df: DataFrame, batch_id: int, source_state: dict | None
     ) -> BatchRecord:
-        if self.quarantine_sink is not None:
-            return self._run_batch_quarantine(df, batch_id, source_state)
-
+        """One persisted parent, then every sink write, the lineage job
+        and the commit. Plain mode filters stage by stage (later stages
+        never run on dropped rows); quarantine mode tags every row in one
+        pass and adds the dead-letter write (original value + first
+        failing stage) for the rows the filters would have dropped."""
         observations: dict[str, Observation] = {}
-        out = self.transform(df, observations=observations)
+        if self.quarantine_sink is None:
+            parent = out = self.transform(df, observations=observations)
+            dead_letter = []
+        else:
+            parent, out, quarantined = self.transform_tagged(df, observations)
+            dead_letter = [("__quarantine__", self.quarantine_sink, quarantined)]
+        routed = (
+            [(name, self.sinks[name], view) for name, view in self.router.split(out).items()]
+            if self.router is not None
+            else []
+        )
+        targets = routed + dead_letter
 
         per_sink: dict[str, int] = {}
         per_sink_empty: dict[str, int] = {}
         per_sink_retry: dict[str, int] = {}
         partition_counts: dict[str, int] = {}
-        wrote_any = False
-        if self.router is not None:
-            views = self.router.split(out, persist=True)
+        per_stage: dict[str, int] = {}
+        if targets:
+            parent.persist(StorageLevel.MEMORY_AND_DISK)
             try:
-                for name, view in views.items():
-                    sink = self.sinks[name]
+                for name, sink, view in targets:
                     per_sink[name] = sink.write(view, batch_id=batch_id)
                     metrics = getattr(sink, "last_metrics", None) or {}
                     if metrics.get("empty"):
                         per_sink_empty[name] = metrics["empty"]
                     if metrics.get("retries"):
                         per_sink_retry[name] = metrics["retries"]
-                    wrote_any = True
                 # per-partition lineage over the persisted parent (cheap:
                 # no recompute, one count per cached partition)
                 partition_counts = {
                     str(r.pid): r.rows
-                    for r in out.groupBy(
-                        F.spark_partition_id().alias("pid")
-                    )
+                    for r in out.groupBy(F.spark_partition_id().alias("pid"))
                     .agg(F.count(F.lit(1)).alias("rows"))
                     .collect()
                 }
             finally:
-                out.unpersist()
-
-        per_stage = (
-            {name: int(obs.get["rows"]) for name, obs in observations.items()}
-            if wrote_any and observations
-            else {}
-        )
+                parent.unpersist()
+            # only read after a write ran: Observation.get blocks on a
+            # plan that never executed
+            per_stage = {
+                name: int(obs.get[name]) for name, obs in observations.items()
+            }
         record = BatchRecord(
             batch_id=batch_id,
             source_state=source_state or {},
@@ -284,54 +306,6 @@ class Pipeline:
         )
         if self.manifest is not None:
             self.manifest.commit(record)  # AFTER sinks — reference order
-        return record
-
-    def _run_batch_quarantine(
-        self, df: DataFrame, batch_id: int, source_state: dict | None
-    ) -> BatchRecord:
-        """run_batch with the dead-letter path: one persisted tagged pass;
-        kept rows fan out to the routed sinks, dropped rows (original
-        value + first failing stage) go to the quarantine sink."""
-        from pyspark import StorageLevel
-
-        tagged, kept, quarantined = self.transform_tagged(df)
-        tagged = tagged.persist(StorageLevel.MEMORY_AND_DISK)
-        per_sink: dict[str, int] = {}
-        per_sink_empty: dict[str, int] = {}
-        per_sink_retry: dict[str, int] = {}
-        partition_counts: dict[str, int] = {}
-        try:
-            if self.router is not None:
-                views = self.router.split(kept, persist=False)
-                for name, view in views.items():
-                    sink = self.sinks[name]
-                    per_sink[name] = sink.write(view, batch_id=batch_id)
-                    metrics = getattr(sink, "last_metrics", None) or {}
-                    if metrics.get("empty"):
-                        per_sink_empty[name] = metrics["empty"]
-                    if metrics.get("retries"):
-                        per_sink_retry[name] = metrics["retries"]
-            per_sink["__quarantine__"] = self.quarantine_sink.write(
-                quarantined, batch_id=batch_id
-            )
-            partition_counts = {
-                str(r.pid): r.rows
-                for r in kept.groupBy(F.spark_partition_id().alias("pid"))
-                .agg(F.count(F.lit(1)).alias("rows"))
-                .collect()
-            }
-        finally:
-            tagged.unpersist()
-        record = BatchRecord(
-            batch_id=batch_id,
-            source_state=source_state or {},
-            per_sink_counts=per_sink,
-            per_sink_empty_counts=per_sink_empty,
-            per_sink_retry_counts=per_sink_retry,
-            partition_counts=partition_counts,
-        )
-        if self.manifest is not None:
-            self.manifest.commit(record)
         return record
 
     def run_tick(self, spark: SparkSession, on_error: str = "raise") -> BatchRecord:

@@ -266,7 +266,8 @@ def merge_kafka_headers(value, headers):
     ))
 
     def pair(h):
-        hv = h.getField("value").cast("string")
+        # a nil header value embeds as "" (Go: string(nil), kafka.go)
+        hv = F.coalesce(h.getField("value").cast("string"), F.lit(""))
         embedded = F.when(F.try_parse_json(hv).isNotNull(), hv).otherwise(
             _json_quote(hv)
         )

@@ -62,8 +62,6 @@ def spec(*types, required=False, choices=(), min_value=None) -> Spec:
     return Spec(types=tuple(types), required=required, choices=tuple(choices), min_value=min_value)
 
 
-_ENGINES = ("pandas", "native")
-
 PROCESSOR_SCHEMAS: dict[str, dict[str, Spec]] = {
     # cel.go:14-17
     "cel": {
@@ -79,7 +77,7 @@ PROCESSOR_SCHEMAS: dict[str, dict[str, Spec]] = {
         "replace": spec(list),
         "mode": spec(str, choices=("json", "columns")),
         "value_col": spec(str),
-        "engine": spec(str, choices=_ENGINES),
+        "engine": spec(str, choices=("pandas", "native")),
     },
     # syslog.go config
     "syslog": {
@@ -91,7 +89,6 @@ PROCESSOR_SCHEMAS: dict[str, dict[str, Spec]] = {
         "type": spec(str, choices=("raw", "cef")),
         "value_col": spec(str),
         "as_json": spec(bool),
-        "engine": spec(str, choices=_ENGINES),
     },
     # logstash-style %{PATTERN:field} extraction (operators/grok.py);
     # the general form of the north rule's grok/regex parse stage

@@ -24,7 +24,7 @@ GOOD = {
         "cel": {"rules": ["event.code == 200"]},
         "json": {"add": [{"key": "a", "value": "1"}], "engine": "pandas"},
         "syslog": {"type": "rfc5424"},
-        "kv": {"type": "cef", "engine": "native"},
+        "kv": {"type": "cef"},
     },
     "source": {
         "file": {"path": "/tmp/x/*.log", "delete": False},
@@ -63,7 +63,7 @@ BAD = {
         ],
         "json": [{"engine": "rust"}, {"add": "not-a-list"}],
         "syslog": [{"type": "rfc9999"}],
-        "kv": [{"type": "xml"}, {"as_json": "yes"}],
+        "kv": [{"type": "xml"}, {"as_json": "yes"}, {"type": "cef", "engine": "native"}],
     },
     "source": {
         "file": [{}, {"path": "/x", "delete": "no"}],

@@ -32,6 +32,9 @@ def _go_merge_twin(value: str, headers):
         return value
     hs = {}
     for k, v in headers or []:
+        if v is None:
+            hs[k] = ""  # Unmarshal(nil) fails → string(nil) == ""
+            continue
         try:
             hs[k] = json.loads(v)
         except Exception:
@@ -52,6 +55,7 @@ MERGE_CASES = [
     ("5", [("k", "v")]),                                     # JSON scalar: unchanged
     ('["a","b"]', [("k", "v")]),                             # JSON array: unchanged
     ('{"f":1.5}', [("num", "3.14"), ("neg", "-7"), ("b", "true")]),  # typed headers
+    ('{"a":1}', [("nil", None), ("k", "v")]),               # nil header value -> ""
 ]
 
 
@@ -63,7 +67,8 @@ def test_headers_merge_matches_go_twin(fake_kafka):
 
     spark = fake_kafka
     rows = [
-        (v, [(k, hv.encode()) for k, hv in hs]) for v, hs in MERGE_CASES
+        (v, [(k, None if hv is None else hv.encode()) for k, hv in hs])
+        for v, hs in MERGE_CASES
     ]
     df = spark.createDataFrame(
         rows, "value string, headers array<struct<key:string,value:binary>>"

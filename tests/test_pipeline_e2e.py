@@ -36,7 +36,7 @@ def test_router_multi_match_and_counts(spark):
     # 'not json' predicates eval to null→False but the all route still matches
     assert counts == {"all_events": 4, "ok": 2, "big": 1}
 
-    views = router.split(df, persist=False)
+    views = router.split(df)
     assert {r.value for r in views["ok"].collect()} == {events[0], events[2]}
     assert {r.value for r in views["big"].collect()} == {events[2]}
     assert views["all_events"].count() == 4
@@ -166,9 +166,17 @@ def test_quarantine_dead_letter_path(spark, tmp_path):
         processors=config.processors,
         sinks=[SinkSpec("out", "parquet", None, {"path": str(tmp_path / "out2")})],
     )
-    Pipeline(config2, state_dir=str(tmp_path / "state")).run_batch(df, batch_id=0)
+    plain_record = Pipeline(config2, state_dir=str(tmp_path / "state")).run_batch(
+        df, batch_id=0
+    )
     plain = spark.read.parquet(str(tmp_path / "out2" / "batch_id=0")).collect()
     assert sorted(r.value for r in kept) == sorted(r.value for r in plain)
+    # both modes report the same per-stage survivors, and the lineage
+    # counts cover exactly the kept rows
+    assert record.per_stage_counts == {"stage_0_cel": 2, "stage_1_json": 2}
+    assert plain_record.per_stage_counts == record.per_stage_counts
+    assert sum(record.partition_counts.values()) == 2
+    assert sum(plain_record.partition_counts.values()) == 2
 
 
 def test_quarantine_second_stage_failure(spark, tmp_path):
@@ -189,6 +197,8 @@ def test_quarantine_second_stage_failure(spark, tmp_path):
     quar = spark.read.parquet(str(tmp_path / "q" / "batch_id=0")).collect()
     assert quar[0].value == "=broken line="
     assert quar[0].fail_stage == "stage_0_kv"
+    assert record.per_stage_counts == {"stage_0_kv": 1}
+    assert sum(record.partition_counts.values()) == 1
 
 
 def test_enrich_broadcast_plan_and_values(spark):

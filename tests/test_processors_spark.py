@@ -34,9 +34,10 @@ def test_kv_parser_spark(spark):
 
 
 def test_kv_native_engine_matches_oracle(spark):
-    """The zero-Python native kv path must agree with oracle.parse_kv on
-    every line: same surviving rows, same maps (incl. first-'=' split,
-    empty-value stripping, trailing-kv removal, last-dup-wins)."""
+    """The kv UDF plumbing (strip, NULL and blank-line handling) must
+    agree with oracle.parse_kv on every line: same surviving rows, same
+    maps (incl. first-'=' split, empty-value stripping, trailing-kv
+    removal, last-dup-wins)."""
     lines = [
         KV1,
         KV2,
@@ -55,10 +56,7 @@ def test_kv_native_engine_matches_oracle(spark):
         "a=b tail=",             # trailing 'key=' at end of line stripped
     ]
     df = spark.createDataFrame([(l,) for l in lines], ["value"])
-    native = {
-        r.value: dict(r.parsed)
-        for r in KvParser(type="raw", engine="native").apply(df).collect()
-    }
+    got = {r.value: dict(r.parsed) for r in KvParser(type="raw").apply(df).collect()}
     expected = {}
     for l in lines:
         s = l.strip()
@@ -68,12 +66,12 @@ def test_kv_native_engine_matches_oracle(spark):
             expected[l] = oracle.parse_kv(s)
         except oracle.ParseError:
             pass
-    assert native == expected, (native, expected)
+    assert got == expected, (got, expected)
 
 
 def test_kv_native_engine_fuzz(spark):
-    """200 seeded random kv-ish lines: native and oracle paths must agree
-    on which lines survive AND on every parsed map."""
+    """200 seeded random kv-ish lines: the Spark and oracle paths must
+    agree on which lines survive AND on every parsed map."""
     import random
 
     rng = random.Random(42)
@@ -84,10 +82,7 @@ def test_kv_native_engine_fuzz(spark):
 
     lines = [rand_line() for _ in range(200)]
     df = spark.createDataFrame([(l,) for l in lines], ["value"])
-    native = {
-        r.value: dict(r.parsed)
-        for r in KvParser(type="raw", engine="native").apply(df).collect()
-    }
+    got = {r.value: dict(r.parsed) for r in KvParser(type="raw").apply(df).collect()}
     expected = {}
     for l in lines:
         s = l.strip()
@@ -97,7 +92,7 @@ def test_kv_native_engine_fuzz(spark):
             expected[l] = oracle.parse_kv(s)
         except oracle.ParseError:
             pass
-    assert native == expected
+    assert got == expected
 
 
 def _cef_expected(lines):
@@ -113,9 +108,9 @@ def _cef_expected(lines):
     return out
 
 
-def _cef_native_rows(spark, lines):
+def _cef_rows(spark, lines):
     df = spark.createDataFrame([(l,) for l in lines], ["value"])
-    rows = KvParser(type="cef", engine="native").apply(df).collect()
+    rows = KvParser(type="cef").apply(df).collect()
     return {
         r.value: {
             "version": r.parsed.version,
@@ -132,7 +127,7 @@ def _cef_native_rows(spark, lines):
 
 
 def test_cef_native_engine_matches_oracle(spark):
-    """Zero-Python CEF path vs oracle on the reference fixture vectors +
+    """Spark CEF path vs oracle on the reference fixture vectors +
     escape/placeholder edge cases (cef_test.go:5-156 semantics)."""
     lines = [
         CEF1,
@@ -149,7 +144,7 @@ def test_cef_native_engine_matches_oracle(spark):
         "notcef|only|three",                        # <7 fields → drop
         "X:0|v|p|1|i|n|5|a=b",                     # bad prefix → drop
     ]
-    assert _cef_native_rows(spark, lines) == _cef_expected(lines)
+    assert _cef_rows(spark, lines) == _cef_expected(lines)
 
 
 def test_cef_native_engine_fuzz(spark):
@@ -163,7 +158,7 @@ def test_cef_native_engine_fuzz(spark):
         return rng.choice(["CEF:0|", "1|", ""]) + core
 
     lines = list({rand_line() for _ in range(250)})
-    assert _cef_native_rows(spark, lines) == _cef_expected(lines)
+    assert _cef_rows(spark, lines) == _cef_expected(lines)
 
 
 def test_cef_parser_spark(spark):
@@ -288,13 +283,12 @@ def test_syslog_rfc5424_nil_sd_keeps_bracket_leading_msg(spark):
 
 def test_cef_version_is_first_colon_segment_both_engines(spark):
     """cef.go:52-61 takes only the segment between the 1st and 2nd
-    colon; non-Atoi bare versions are dropped by both engines."""
+    colon; non-Atoi bare versions are dropped."""
     line = "CEF:0:junk|v|p|1.0|id|name|5|src=1.2.3.4"
     df = spark.createDataFrame([(line,), ("1_2|v|p|1.0|id|name|5|src=a",)], ["value"])
-    for engine in ("pandas", "native"):
-        out = KvParser(type="cef", engine=engine).apply(df).collect()
-        assert len(out) == 1, engine  # the 1_2 version line is dropped
-        assert out[0].parsed.version == "0", engine
+    out = KvParser(type="cef").apply(df).collect()
+    assert len(out) == 1  # the 1_2 version line is dropped
+    assert out[0].parsed.version == "0"
 
 
 def test_json_native_add_is_safe_on_nested_and_null_values(spark):
