@@ -44,15 +44,24 @@ string()`` conversions (portable truncate-toward-zero semantics, see
 engine.go:88-106).
 
 Three backends off one AST:
-- ``to_column``     — Spark Column over a JSON-string column (schema-free
-                      lines, ``get_json_object``) or over real columns;
-- ``to_sql``        — equivalent DuckDB SQL (used by the correctness gate);
-- ``eval_python``   — pure-Python oracle evaluation (pytest truth tables).
+- one compiler core, ``_Compiler``, walks the AST and decides every
+  operand's type once (``_cmp_type``, ``_typed_path``): a literal types
+  its partner, a numeric side makes a comparison numeric, and json-mode
+  text reads try-cast, so a bad value is NULL → non-match, never an
+  ANSI error. Two thin printers supply only primitives:
+  - ``ColumnCompiler``: Spark Column over a JSON-string column
+    (schema-free lines, ``get_json_object``) or over real columns;
+  - ``SqlCompiler``: equivalent DuckDB SQL (the correctness gate);
+- ``eval_python``: an independent pure-Python evaluation that follows
+  cel-go (pytest truth tables). It sees JSON types where the two
+  compilers see text — the pinned divergence in tests/test_cel.py
+  ``JSON_TYPE_TRUTH``.
 """
 
 from __future__ import annotations
 
 import json
+import operator
 import re
 from dataclasses import dataclass
 
@@ -788,13 +797,23 @@ def _validate_map_expr(node, var: str) -> None:
     )
 
 
-def _elem_type(body, sql: bool = False) -> str:
-    """List element type implied by the literals a lambda body compares
-    against (numeric literal anywhere → numeric elements)."""
+def _elem_type(body) -> str:
+    """Neutral element-type tag ('double' | 'string') implied by the
+    literals a lambda body compares against (numeric literal anywhere →
+    numeric elements); each compiler dialect names the type itself."""
     for lit in _body_literals(body):
         if isinstance(lit, (int, float)) and not isinstance(lit, bool):
-            return "DOUBLE" if sql else "double"
-    return "VARCHAR" if sql else "string"
+            return "double"
+    return "string"
+
+
+def _body_literals(node):
+    if isinstance(node, Lit):
+        yield node.value
+    for attr in ("left", "right", "operand", "body"):
+        child = getattr(node, attr, None)
+        if child is not None and not isinstance(child, (str, tuple)):
+            yield from _body_literals(child)
 
 
 def _body_fields(body, var: str) -> dict[str, str] | None:
@@ -887,7 +906,7 @@ def parse_rule(rule: str):
 
 
 # ---------------------------------------------------------------------------
-# Backend 1: Spark Column
+# Compiler core: one traversal and one typing pass, two dialect printers
 # ---------------------------------------------------------------------------
 
 
@@ -895,13 +914,19 @@ def _json_path(parts: tuple[str, ...]) -> str:
     return "$." + ".".join(parts)
 
 
-class ColumnCompiler:
-    """Compile an AST to a Spark Column.
+class _Compiler:
+    """Walks a rule AST and decides every operand's type; the dialect
+    subclass only prints primitives (``lit``, ``json_text``, ``to_double``,
+    ``cmp``, ``hof`` ...), each a few lines. Neither subclass walks the AST.
 
-    mode='json':    paths under ``event.`` read from a JSON string column
-                    via get_json_object (schema-free lines, reference model).
-    mode='columns': paths under ``event.`` are real DataFrame columns
-                    (structured payloads — fully JVM-native, no JSON parse).
+    mode='json':    paths under ``event.`` read the JSON TEXT of a string
+                    column (schema-free lines, the reference model); the
+                    comparison partner decides how that text is typed
+                    (``_typed_path``). Every string→number read is a
+                    try-cast: a non-numeric value is NULL → non-match,
+                    never an ANSI cast error that kills the job.
+    mode='columns': paths under ``event.`` are real DataFrame columns,
+                    already typed (fully native, no JSON parse).
     """
 
     def __init__(self, mode: str = "json", value_col: str = "value", root: str = "event"):
@@ -911,434 +936,352 @@ class ColumnCompiler:
         self.value_col = value_col
         self.root = root
 
-    # -- helpers ------------------------------------------------------------
+    # -- paths and typing -----------------------------------------------------
 
-    def _raw_path(self, path: Path) -> Column:
+    def _rel(self, path: Path) -> tuple[str, ...]:
         if path.parts[0] != self.root:
             raise CelSyntaxError(f"unknown identifier {path.parts[0]!r}")
-        rel = path.parts[1:]
-        if not rel:
+        if len(path.parts) == 1:
             raise CelSyntaxError("bare 'event' is not addressable")
-        if self.mode == "json":
-            return F.get_json_object(F.col(self.value_col), _json_path(rel))
-        col = F.col(rel[0])
-        for p in rel[1:]:
-            col = col.getField(p)
-        return col
+        return path.parts[1:]
 
-    def _typed_path(self, path: Path, like) -> Column:
-        """Path column cast per the literal it is compared against."""
-        col = self._raw_path(path)
+    def _raw_path(self, path: Path):
+        rel = self._rel(path)
+        return self.json_text(rel) if self.mode == "json" else self.field(rel)
+
+    def _list_arr(self, path: Path, elem):
+        """The list field as a typed array. ``elem`` is a neutral type
+        tag ('double' | 'string') or ``{field: tag}`` for object
+        elements; each dialect maps tags to its own type names."""
+        rel = self._rel(path)
+        return self.json_array(rel, elem) if self.mode == "json" else self.field(rel)
+
+    def _typed_path(self, path: Path, like):
+        """A path read typed by the literal (or numeric side) it meets:
+        json text compares to 'true' for a bool partner and try-casts to
+        double for a numeric one."""
+        raw = self._raw_path(path)
         if self.mode == "columns":
-            return col
+            return raw
         if isinstance(like, bool):
-            return col == F.lit("true")
+            return self.cmp("==", raw, self.lit("true"))
         if isinstance(like, (int, float)):
-            return col.cast("double")
-        return col
+            return self.to_double(raw)
+        return raw
 
-    def _operand(self, node, like=None) -> Column:
+    @staticmethod
+    def _cmp_type(left, right):
+        """THE comparison-operand typing rule, the one place it lives.
+
+        A literal side types the other side (the right literal first; any
+        literal counts, so 0, 0.0, false and "" type their partner like
+        any other value). Without a literal, a numeric side (arithmetic,
+        int()/double(), size()) makes the comparison numeric. Otherwise
+        the sides compare untyped."""
+        for side in (right, left):
+            if isinstance(side, Lit):
+                return side.value
+        for side in (left, right):
+            if (
+                isinstance(side, Arith)
+                or (isinstance(side, Conv) and side.fn in ("int", "double"))
+                or (isinstance(side, StrFn) and side.fn == "size")
+            ):
+                return 1.0
+        return None
+
+    def _operand(self, node, like=None):
         if isinstance(node, Lit):
-            if isinstance(node.value, bool) and self.mode == "json":
-                return F.lit(node.value)
-            return F.lit(node.value)
+            return self.lit(node.value)
         if isinstance(node, Path):
             return self._typed_path(node, like)
         if isinstance(node, StrFn) and node.fn == "size":
-            return self._strfn(node)
+            return self._size(node)
         if isinstance(node, Arith):
             return self._arith(node)
         if isinstance(node, Conv):
             return self._conv(node)
         raise CelSyntaxError(f"unsupported operand {node!r}")
 
-    def _conv(self, node: Conv) -> Column:
-        inner = node.operand
-        if isinstance(inner, Conv):
-            col = self._conv(inner)
-        elif isinstance(inner, Lit):
-            col = F.lit(inner.value)
-        elif isinstance(inner, Path):
-            col = self._raw_path(inner)
-        elif isinstance(inner, Arith):
-            col = self._arith(inner)
-        else:
-            raise CelSyntaxError(f"unsupported {node.fn}() operand {inner!r}")
-        as_num = col.try_cast("double")
+    def _conv(self, node: Conv):
+        """int()/double()/string(): the operand as double, int truncates
+        toward zero; unparseable → NULL → non-match (see ``Conv``)."""
+        num = self.to_double(self._operand(node.operand))
         if node.fn == "double":
-            return as_num
-        # double→bigint try_cast truncates toward zero (DuckDB twin uses
-        # TRUNC because its CAST rounds); unparseable → NULL → non-match
-        as_int = as_num.try_cast("bigint")
-        return as_int if node.fn == "int" else as_int.cast("string")
+            return num
+        as_int = self.to_int(num)
+        return as_int if node.fn == "int" else self.to_text(as_int)
 
-    def _arith(self, node: Arith) -> Column:
-        """Arithmetic subexpression: paths are numeric by context."""
-        def num(n) -> Column:
-            if isinstance(n, Arith):
-                return self._arith(n)
-            if isinstance(n, Lit):
-                if not isinstance(n.value, (int, float)) or isinstance(n.value, bool):
-                    raise CelSyntaxError(f"non-numeric literal in arithmetic: {n.value!r}")
-                return F.lit(n.value)
-            if isinstance(n, Path):
-                return self._typed_path(n, 1.0)  # numeric cast
-            if isinstance(n, StrFn) and n.fn == "size":
-                return self._strfn(n)
-            if isinstance(n, Conv) and n.fn in ("int", "double"):
-                return self._conv(n)
-            raise CelSyntaxError(f"unsupported arithmetic operand {n!r}")
-
-        left, right = num(node.left), num(node.right)
-        if node.op == "+":
-            return left + right
-        if node.op == "-":
-            return left - right
-        if node.op == "*":
-            return left * right
-        if node.op == "/":
-            # try_divide: /0 yields NULL (→ non-match) like DuckDB and the
-            # Python error-as-non-match path, instead of an ANSI-mode
-            # SparkArithmeticException killing the whole job
-            return F.try_divide(left, right)
-        if node.op == "%":
-            return F.try_mod(left, right)
-        raise CelSyntaxError(f"unknown arithmetic op {node.op!r}")
-
-    def _lit_of(self, node):
-        return node.value if isinstance(node, Lit) else None
-
-    def _time_side(self, node) -> Column:
-        """One side of a time comparison as epoch/interval SECONDS.
-        Paths parse as timestamps (try_to_timestamp → NULL on a
-        malformed field → comparison NULL → non-match, the standard
-        error convention); literals were resolved at config time."""
-        if isinstance(node, TsLit):
-            return F.lit(node.epoch)
-        if isinstance(node, DurLit):
-            return F.lit(node.seconds)
-        if isinstance(node, Path):
-            # cast("string") first: a real timestamp column (columns
-            # mode) round-trips; a JSON string field passes through
-            return F.try_to_timestamp(
-                self._raw_path(node).cast("string")
-            ).cast("double")
+    def _num(self, node, bound=None):
+        """An arithmetic operand: numeric by context. ``bound`` is
+        ``(var, element)`` inside a map() expression."""
+        if bound and isinstance(node, Path) and node.parts == (bound[0],):
+            return bound[1]
         if isinstance(node, Arith):
-            left = self._time_side(node.left)
-            right = self._time_side(node.right)
-            return left + right if node.op == "+" else left - right
+            return self._arith(node, bound)
+        if isinstance(node, Lit) and (
+            not isinstance(node.value, (int, float)) or isinstance(node.value, bool)
+        ):
+            raise CelSyntaxError(f"non-numeric literal in arithmetic: {node.value!r}")
+        if isinstance(node, Conv) and node.fn == "string":
+            raise CelSyntaxError(f"unsupported arithmetic operand {node!r}")
+        return self._operand(node, 1.0)
+
+    def _arith(self, node: Arith, bound=None):
+        return self.arith(node.op, self._num(node.left, bound), self._num(node.right, bound))
+
+    def _time_side(self, node):
+        """One side of a time comparison as epoch/interval SECONDS. A
+        malformed field parses to NULL → non-match; literals were
+        resolved at config time."""
+        if isinstance(node, TsLit):
+            return self.lit(node.epoch)
+        if isinstance(node, DurLit):
+            return self.lit(node.seconds)
+        if isinstance(node, Path):
+            return self.epoch(self._raw_path(node))
+        if isinstance(node, Arith):
+            return self.arith(node.op, self._time_side(node.left), self._time_side(node.right))
         raise CelSyntaxError(f"operand {node!r} cannot appear in a time comparison")
 
-    # -- node dispatch --------------------------------------------------------
+    def _size(self, node: StrFn):
+        if isinstance(node.path, (ListFilter, ListMap)):
+            return self.list_len(self._list_expr(node.path))
+        raw = self._raw_path(node.path)
+        if self.mode == "columns":
+            return self.length(raw)
+        # CEL size() is overloaded: element count for lists, char count
+        # for strings. A json-mode path is raw text either way, so
+        # dispatch on the array shape (the Python oracle's len() counts
+        # list elements). Corner: a STRING value that starts with '[' but
+        # is invalid JSON sizes as NULL → non-match.
+        return self.when(
+            self.strfn("matches", raw, r"^\s*\["),
+            self.json_array_length(raw),
+            self.length(raw),
+        )
 
-    def compile(self, node) -> Column:
+    # -- list macros ----------------------------------------------------------
+
+    def _macro(self, kind: str, path: Path, var: str, body):
+        """exists/forall/exists_one/filter over the list: scalar elements
+        typed from the body's literals, or objects when the body reads
+        fields of the bound variable."""
+        fields = _body_fields(body, var)
+        arr = self._list_arr(path, fields or _elem_type(body))
+        return self.hof(kind, arr, var, lambda x: self._lambda_body(body, var, x, fields))
+
+    def _list_expr(self, node):
+        """A list-valued macro (filter()/map()) as an array."""
+        if isinstance(node, ListFilter):
+            return self._macro("filter", node.path, node.var, node.body)
+        if isinstance(node, ListMap):
+            arr = self._list_arr(node.path, "double")
+            return self.hof(
+                "transform", arr, node.var, lambda x: self._num(node.expr, (node.var, x))
+            )
+        raise CelSyntaxError(f"not a list expression: {node!r}")
+
+    def _lambda_body(self, node, var: str, x, fields: dict | None):
+        """A macro body with ``var`` bound to element ``x`` (the subset
+        ``_validate_exists_body`` admits)."""
+
+        def elem(path: Path):
+            if path.parts[0] != var or len(path.parts) > 2:
+                raise CelSyntaxError("unsupported exists() body")
+            if len(path.parts) == 1:
+                return x
+            f = path.parts[1]
+            return self.elem_field(x, f, (fields or {}).get(f))
+
+        if isinstance(node, Cmp):
+            left, right = (
+                self.lit(s.value) if isinstance(s, Lit) else elem(s)
+                for s in (node.left, node.right)
+            )
+            return self.cmp(node.op, left, right)
+        if isinstance(node, (And, Or)):
+            left = self._lambda_body(node.left, var, x, fields)
+            right = self._lambda_body(node.right, var, x, fields)
+            return self.and_(left, right) if isinstance(node, And) else self.or_(left, right)
+        if isinstance(node, StrFn) and isinstance(node.path, Path) and node.fn != "size":
+            return self.strfn(node.fn, elem(node.path), node.arg.value)
+        if isinstance(node, Has):
+            return self.is_not_null(elem(node.path))
+        raise CelSyntaxError("unsupported exists() body")
+
+    # -- boolean dispatch -----------------------------------------------------
+
+    def compile(self, node):
         if isinstance(node, Lit):
             if isinstance(node.value, bool):
-                return F.lit(node.value)
+                return self.lit(node.value)
             raise CelSyntaxError("non-boolean rule result")
         if isinstance(node, Or):
-            return self.compile(node.left) | self.compile(node.right)
+            return self.or_(self.compile(node.left), self.compile(node.right))
         if isinstance(node, And):
-            return self.compile(node.left) & self.compile(node.right)
+            return self.and_(self.compile(node.left), self.compile(node.right))
         if isinstance(node, Not):
-            return ~self.compile(node.operand)
+            return self.not_(self.compile(node.operand))
         if isinstance(node, Cmp):
             if _contains_time(node.left) or _contains_time(node.right):
-                # time comparison: both sides as epoch/interval seconds
-                left = self._time_side(node.left)
-                right = self._time_side(node.right)
-                op = node.op
+                left, right = self._time_side(node.left), self._time_side(node.right)
             else:
-                like = self._lit_of(node.right) or self._lit_of(node.left)
-                if like is None and (
-                    isinstance(node.left, Arith) or isinstance(node.right, Arith)
-                ):
-                    like = 1.0  # arithmetic side → compare numerically
-                if like is None:
-                    # a numeric conversion side types the other side
-                    for side in (node.left, node.right):
-                        if isinstance(side, Conv) and side.fn in ("int", "double"):
-                            like = 1.0
-                left = self._operand(node.left, like)
-                right = self._operand(node.right, like)
-                if isinstance(node.left, Lit) and isinstance(node.right, Path):
-                    right = self._typed_path(node.right, self._lit_of(node.left))
-                op = node.op
-                if isinstance(node.right, Lit) and isinstance(node.right.value, bool) and self.mode == "json":
-                    # json mode: bool path compiled to (col == 'true'), compare to lit
-                    left = self._typed_path(node.left, True) if isinstance(node.left, Path) else left
-            if op == "==":
-                return left == right
-            if op == "!=":
-                return left != right
-            if op == "<":
-                return left < right
-            if op == "<=":
-                return left <= right
-            if op == ">":
-                return left > right
-            if op == ">=":
-                return left >= right
+                like = self._cmp_type(node.left, node.right)
+                left, right = self._operand(node.left, like), self._operand(node.right, like)
+            return self.cmp(node.op, left, right)
         if isinstance(node, Has):
-            return self._raw_path(node.path).isNotNull()
+            return self.is_not_null(self._raw_path(node.path))
         if isinstance(node, InList):
             like = node.items[0] if node.items else None
-            return self._operand(node.operand, like).isin(node.items)
+            return self.isin(self._operand(node.operand, like), node.items)
         if isinstance(node, InField):
-            elem = (
-                "double"
-                if isinstance(node.needle.value, (int, float))
-                and not isinstance(node.needle.value, bool)
-                else "string"
-            )
+            needle = node.needle.value
+            num = isinstance(needle, (int, float)) and not isinstance(needle, bool)
             if isinstance(node.path, (ListFilter, ListMap)):
                 arr = self._list_expr(node.path)
-            elif self.mode == "json":
-                arr = F.from_json(self._raw_path(node.path), f"array<{elem}>")
             else:
-                arr = self._raw_path(node.path)
-            needle = (
-                float(node.needle.value) if elem == "double" else node.needle.value
-            )
+                arr = self._list_arr(node.path, "double" if num else "string")
             # missing/null list → FALSE (error-as-non-match convention)
-            return F.coalesce(
-                F.array_contains(arr, F.lit(needle)), F.lit(False)
+            return self.coalesce_false(
+                self.array_contains(arr, self.lit(float(needle) if num else needle))
             )
         if isinstance(node, StrFn):
             if node.fn == "size":
                 raise CelSyntaxError("size() must appear inside a comparison")
-            return self._strfn(node)
-        if isinstance(node, Exists):
-            return self._exists(node)
-        if isinstance(node, ForAll):
-            return self._forall(node)
-        if isinstance(node, ExistsOne):
-            flt = ListFilter(node.path, node.var, node.body)
-            return F.coalesce(
-                F.size(self._list_expr(flt)) == F.lit(1), F.lit(False)
-            )
+            return self.strfn(node.fn, self._raw_path(node.path), node.arg.value)
+        if isinstance(node, (Exists, ForAll, ExistsOne)):
+            # missing/null list → FALSE; all() over [] is vacuously TRUE
+            kind = {Exists: "exists", ForAll: "forall", ExistsOne: "exists_one"}[type(node)]
+            return self.coalesce_false(self._macro(kind, node.path, node.var, node.body))
         if isinstance(node, Ternary):
-            cond = F.coalesce(self.compile(node.cond), F.lit(False))
-            return F.when(cond, self.compile(node.then)).otherwise(
-                self.compile(node.els)
+            return self.when(
+                self.coalesce_false(self.compile(node.cond)),
+                self.compile(node.then),
+                self.compile(node.els),
             )
         if isinstance(node, Path):
-            # bare boolean path
-            return self._typed_path(node, True)
+            return self._typed_path(node, True)  # bare boolean path
         raise CelSyntaxError(f"cannot compile node {node!r}")
 
-    def _strfn(self, node: StrFn) -> Column:
-        if isinstance(node.path, (ListFilter, ListMap)):
-            if node.fn != "size":
-                raise CelSyntaxError(f"{node.fn}() not supported on list expressions")
-            return F.size(self._list_expr(node.path))
-        col = self._raw_path(node.path)
-        if node.fn == "startsWith":
-            return col.startswith(node.arg.value)
-        if node.fn == "endsWith":
-            return col.endswith(node.arg.value)
-        if node.fn == "contains":
-            return col.contains(node.arg.value)
-        if node.fn == "matches":
-            # CEL matches() is an unanchored RE2 search; rlike is the
-            # unanchored Java-regex equivalent (dialects agree on the
-            # portable subset — no lookbehind/named-class exotica)
-            return col.rlike(node.arg.value)
-        if node.fn == "size":
-            if self.mode == "json":
-                # CEL size() is overloaded: element count for lists,
-                # char count for strings. A JSON-mode path is a raw
-                # string either way, so dispatch on the array shape —
-                # matching the Python oracle's len() (which counts list
-                # elements; plain length(raw) silently counted the
-                # characters of '["a","b"]'). Corner: a STRING field
-                # whose value itself starts with '[' but is invalid
-                # JSON sizes as NULL → non-match (Python counts chars).
-                return F.when(
-                    col.rlike(r"^\s*\["), F.json_array_length(col)
-                ).otherwise(F.length(col))
-            return F.length(col)
-        raise CelSyntaxError(node.fn)
 
-    def _list_arr(self, path: Path, elem_type: str) -> Column:
-        """The list field as a typed array column (json mode parses)."""
-        if self.mode == "json":
-            return F.from_json(self._raw_path(path), f"array<{elem_type}>")
-        return self._raw_path(path)
-
-    def _macro_arr(self, path: Path, body, var: str) -> Column:
-        """The macro's list as a typed array: scalar elements typed from
-        body literals, or array<struct<...>> when the body reads fields
-        of the bound var (from_json ignores extra JSON object keys)."""
-        fields = _body_fields(body, var)
-        if fields:
-            schema = (
-                "struct<"
-                + ",".join(f"{f}:{t}" for f, t in sorted(fields.items()))
-                + ">"
-            )
-            return self._list_arr(path, schema)
-        return self._list_arr(path, _elem_type(body))
-
-    def _list_expr(self, node) -> Column:
-        """Compile a list-valued macro (filter()/map()) to an array Column."""
-        if isinstance(node, ListFilter):
-            arr = self._macro_arr(node.path, node.body, node.var)
-            return F.filter(
-                arr, lambda x: _compile_lambda_body(node.body, node.var, x, self)
-            )
-        if isinstance(node, ListMap):
-            arr = self._list_arr(node.path, "double")
-            return F.transform(
-                arr, lambda x: _map_expr_column(node.expr, node.var, x)
-            )
-        raise CelSyntaxError(f"not a list expression: {node!r}")
-
-    def _exists(self, node: Exists) -> Column:
-        # element type inferred from literals in the body
-        arr = self._macro_arr(node.path, node.body, node.var)
-        var = node.var
-
-        def body_fn(x: Column) -> Column:
-            return _compile_lambda_body(node.body, var, x, self)
-
-        return F.coalesce(F.exists(arr, body_fn), F.lit(False))
-
-    def _forall(self, node: ForAll) -> Column:
-        arr = self._macro_arr(node.path, node.body, node.var)
-        var = node.var
-
-        def body_fn(x: Column) -> Column:
-            return _compile_lambda_body(node.body, var, x, self)
-
-        # missing/null list → FALSE (the error-as-non-match convention);
-        # empty list → TRUE (cel-go all() over [] is vacuously true)
-        return F.coalesce(F.forall(arr, body_fn), F.lit(False))
+_COL_CMP = {
+    "==": operator.eq, "!=": operator.ne, "<": operator.lt,
+    "<=": operator.le, ">": operator.gt, ">=": operator.ge,
+}
+#: try_divide/try_mod: /0 and %0 are NULL (→ non-match), like DuckDB and
+#: the Python error path, instead of an ANSI error killing the whole job
+_COL_ARITH = {
+    "+": operator.add, "-": operator.sub, "*": operator.mul,
+    "/": F.try_divide, "%": F.try_mod,
+}
+_COL_HOF = {"exists": F.exists, "forall": F.forall, "filter": F.filter, "transform": F.transform}
 
 
-def _body_literals(node):
-    if isinstance(node, Lit):
-        yield node.value
-    for attr in ("left", "right", "operand", "body"):
-        child = getattr(node, attr, None)
-        if child is not None and not isinstance(child, (str, tuple)):
-            yield from _body_literals(child)
+class ColumnCompiler(_Compiler):
+    """Compile an AST to a Spark Column (json text via get_json_object,
+    lists via from_json; neutral type tags are Spark's own names)."""
 
+    def lit(self, value):
+        return F.lit(value)
 
-def _compile_lambda_body(node, var: str, x: Column, outer: ColumnCompiler) -> Column:
-    """Compile an exists() body where ``var`` is bound to element x."""
-    if isinstance(node, Cmp):
-        def side(n):
-            if isinstance(n, Path) and n.parts == (var,):
-                return x
-            if (
-                isinstance(n, Path)
-                and n.parts[0] == var
-                and len(n.parts) == 2
-            ):
-                return x.getField(n.parts[1])  # struct element field
-            if isinstance(n, Lit):
-                return F.lit(n.value)
-            raise CelSyntaxError("exists() body must compare the bound variable to a literal")
-        left, right = side(node.left), side(node.right)
+    def json_text(self, rel):
+        return F.get_json_object(F.col(self.value_col), _json_path(rel))
+
+    def field(self, rel):
+        col = F.col(rel[0])
+        for p in rel[1:]:
+            col = col.getField(p)
+        return col
+
+    def json_array(self, rel, elem):
+        if isinstance(elem, dict):  # from_json ignores extra object keys
+            elem = "struct<" + ",".join(f"{f}:{t}" for f, t in sorted(elem.items())) + ">"
+        return F.from_json(self.json_text(rel), f"array<{elem}>")
+
+    def to_double(self, x):
+        return x.try_cast("double")
+
+    def to_int(self, x):
+        return x.try_cast("bigint")  # double→bigint truncates toward zero
+
+    def to_text(self, x):
+        return x.cast("string")
+
+    def epoch(self, x):
+        # cast("string") first: a real timestamp column (columns mode)
+        # round-trips; a JSON string field passes through
+        return F.try_to_timestamp(x.cast("string")).cast("double")
+
+    def cmp(self, op, left, right):
+        return _COL_CMP[op](left, right)
+
+    def and_(self, left, right):
+        return left & right
+
+    def or_(self, left, right):
+        return left | right
+
+    def not_(self, x):
+        return ~x
+
+    def coalesce_false(self, x):
+        return F.coalesce(x, F.lit(False))
+
+    def is_not_null(self, x):
+        return x.isNotNull()
+
+    def isin(self, x, items):
+        return x.isin(items)
+
+    def when(self, cond, then, els):
+        return F.when(cond, then).otherwise(els)
+
+    def arith(self, op, left, right):
+        return _COL_ARITH[op](left, right)
+
+    def strfn(self, fn, x, arg):
+        # matches(): CEL's unanchored RE2 search; rlike is the unanchored
+        # Java-regex twin (dialects agree on the portable subset)
         return {
-            "==": left == right,
-            "!=": left != right,
-            "<": left < right,
-            "<=": left <= right,
-            ">": left > right,
-            ">=": left >= right,
-        }[node.op]
-    if isinstance(node, Or):
-        return _compile_lambda_body(node.left, var, x, outer) | _compile_lambda_body(
-            node.right, var, x, outer
-        )
-    if isinstance(node, And):
-        return _compile_lambda_body(node.left, var, x, outer) & _compile_lambda_body(
-            node.right, var, x, outer
-        )
-    if (
-        isinstance(node, StrFn)
-        and isinstance(node.path, Path)
-        and node.path.parts[0] == var
-        and len(node.path.parts) <= 2
-    ):
-        tgt = x if len(node.path.parts) == 1 else x.getField(node.path.parts[1])
-        if node.fn == "startsWith":
-            return tgt.startswith(node.arg.value)
-        if node.fn == "endsWith":
-            return tgt.endswith(node.arg.value)
-        if node.fn == "contains":
-            return tgt.contains(node.arg.value)
-        if node.fn == "matches":
-            return tgt.rlike(node.arg.value)
-    if (
-        isinstance(node, Has)
-        and node.path.parts[0] == var
-        and len(node.path.parts) == 2
-    ):
-        return x.getField(node.path.parts[1]).isNotNull()
-    raise CelSyntaxError("unsupported exists() body")
+            "startsWith": x.startswith, "endsWith": x.endswith,
+            "contains": x.contains, "matches": x.rlike,
+        }[fn](arg)
+
+    def length(self, x):
+        return F.length(x)
+
+    def json_array_length(self, x):
+        return F.json_array_length(x)
+
+    def list_len(self, arr):
+        return F.size(arr)
+
+    def array_contains(self, arr, value):
+        return F.array_contains(arr, value)
+
+    def hof(self, kind, arr, var, body):
+        if kind == "exists_one":
+            return F.size(F.filter(arr, body)) == F.lit(1)
+        return _COL_HOF[kind](arr, body)
+
+    def elem_field(self, x, field, tag):
+        return x.getField(field)  # from_json already typed the struct
 
 
-def _map_expr_column(node, var: str, x: Column) -> Column:
-    """Compile a map() transform expression with ``var`` bound to x."""
-    if isinstance(node, Path) and node.parts == (var,):
-        return x
-    if isinstance(node, Lit):
-        return F.lit(node.value)
-    if isinstance(node, Arith):
-        left = _map_expr_column(node.left, var, x)
-        right = _map_expr_column(node.right, var, x)
-        if node.op == "+":
-            return left + right
-        if node.op == "-":
-            return left - right
-        if node.op == "*":
-            return left * right
-        if node.op == "/":
-            # NULL element on /0 (matches DuckDB and the Python backend's
-            # None element) — never an ANSI runtime error
-            return F.try_divide(left, right)
-        if node.op == "%":
-            return F.try_mod(left, right)
-    raise CelSyntaxError(f"unsupported map() expression {node!r}")
+_SQL_OPS = {"==": "=", "!=": "<>"}
+_SQL_TYPES = {"double": "DOUBLE", "string": "VARCHAR"}
+_SQL_STRFN = {
+    "startsWith": "starts_with", "endsWith": "ends_with",
+    "contains": "contains", "matches": "regexp_matches",
+}
 
 
-# ---------------------------------------------------------------------------
-# Backend 2: DuckDB SQL (oracle)
-# ---------------------------------------------------------------------------
-
-
-class SqlCompiler:
+class SqlCompiler(_Compiler):
     """Compile the same AST to a DuckDB boolean SQL expression, for the
     driver's side-by-side correctness gate."""
 
-    def __init__(self, mode: str = "json", value_col: str = "value", root: str = "event"):
-        self.mode = mode
-        self.value_col = value_col
-        self.root = root
-
-    def _raw_path(self, path: Path) -> str:
-        rel = path.parts[1:]
-        if path.parts[0] != self.root or not rel:
-            raise CelSyntaxError(f"bad path {path.parts}")
-        if self.mode == "json":
-            return f"json_extract_string({self.value_col}, '$.{'.'.join(rel)}')"
-        return ".".join(rel)
-
-    def _typed_path(self, path: Path, like) -> str:
-        raw = self._raw_path(path)
-        if self.mode == "columns":
-            return raw
-        if isinstance(like, bool):
-            return f"({raw} = 'true')"
-        if isinstance(like, (int, float)):
-            return f"TRY_CAST({raw} AS DOUBLE)"
-        return raw
-
-    @staticmethod
-    def _lit(value) -> str:
+    def lit(self, value):
         if value is None:
             return "NULL"
         if isinstance(value, bool):
@@ -1348,299 +1291,99 @@ class SqlCompiler:
         escaped = str(value).replace("'", "''")
         return f"'{escaped}'"
 
-    def compile(self, node) -> str:
-        if isinstance(node, Lit):
-            return self._lit(node.value)
-        if isinstance(node, Or):
-            return f"({self.compile(node.left)} OR {self.compile(node.right)})"
-        if isinstance(node, And):
-            return f"({self.compile(node.left)} AND {self.compile(node.right)})"
-        if isinstance(node, Not):
-            # NULL must propagate (NOT NULL → NULL → non-match at the
-            # rule-level COALESCE) — coalescing here would turn an
-            # errored operand into a MATCH, diverging from the Column
-            # and Python backends' error-as-non-match convention
-            return f"(NOT {self.compile(node.operand)})"
-        if isinstance(node, Cmp):
-            if _contains_time(node.left) or _contains_time(node.right):
-                left = self._sql_time_side(node.left)
-                right = self._sql_time_side(node.right)
-                op = {"==": "=", "!=": "<>"}.get(node.op, node.op)
-                return f"({left} {op} {right})"
-            like = (
-                node.right.value
-                if isinstance(node.right, Lit)
-                else node.left.value
-                if isinstance(node.left, Lit)
-                else None
-            )
-            if like is None and (
-                isinstance(node.left, Arith) or isinstance(node.right, Arith)
-            ):
-                like = 1.0  # arithmetic side → compare numerically
-            if like is None:
-                for side in (node.left, node.right):
-                    if isinstance(side, Conv) and side.fn in ("int", "double"):
-                        like = 1.0
-            left = (
-                self._typed_path(node.left, like)
-                if isinstance(node.left, Path)
-                else self._operand_sql(node.left)
-            )
-            right = (
-                self._typed_path(node.right, like)
-                if isinstance(node.right, Path)
-                else self._operand_sql(node.right)
-            )
-            op = {"==": "=", "!=": "<>"}.get(node.op, node.op)
-            return f"({left} {op} {right})"
-        if isinstance(node, Has):
-            return f"({self._raw_path(node.path)} IS NOT NULL)"
-        if isinstance(node, InList):
-            items = ", ".join(self._lit(v) for v in node.items)
-            like = node.items[0] if node.items else None
-            # operand may be a literal ('k' in {'k': 1}) or expression,
-            # not only a path — mirror ColumnCompiler._operand
-            operand = (
-                self._typed_path(node.operand, like)
-                if isinstance(node.operand, Path)
-                else self._operand_sql(node.operand)
-            )
-            return f"({operand} IN ({items}))"
-        if isinstance(node, InField):
-            is_num = isinstance(node.needle.value, (int, float)) and not isinstance(
-                node.needle.value, bool
-            )
-            elem = "DOUBLE" if is_num else "VARCHAR"
-            if isinstance(node.path, (ListFilter, ListMap)):
-                arr = self._sql_list_expr(node.path)
-            elif self.mode == "json":
-                arr = (
-                    f"TRY_CAST(json_extract({self.value_col}, "
-                    f"'$.{'.'.join(node.path.parts[1:])}') AS {elem}[])"
-                )
-            else:
-                arr = self._raw_path(node.path)
-            needle = self._lit(
-                float(node.needle.value) if is_num else node.needle.value
-            )
-            return f"COALESCE(list_contains({arr}, {needle}), FALSE)"
-        if isinstance(node, StrFn):
-            if node.fn == "size":
-                return self._sql_size(node)
-            raw = self._raw_path(node.path)
-            if node.fn == "startsWith":
-                return f"starts_with({raw}, {self._lit(node.arg.value)})"
-            if node.fn == "endsWith":
-                return f"ends_with({raw}, {self._lit(node.arg.value)})"
-            if node.fn == "contains":
-                return f"contains({raw}, {self._lit(node.arg.value)})"
-            if node.fn == "matches":
-                return f"regexp_matches({raw}, {self._lit(node.arg.value)})"
-        if isinstance(node, Exists):
-            arr, fields = self._sql_macro_arr(node.path, node.body, node.var)
-            body = self._sql_lambda_body(node.body, node.var, fields)
-            return (
-                f"COALESCE(len(list_filter({arr}, {node.var} -> {body})) > 0, FALSE)"
-            )
-        if isinstance(node, ForAll):
-            arr, fields = self._sql_macro_arr(node.path, node.body, node.var)
-            body = self._sql_lambda_body(node.body, node.var, fields)
-            # an element whose body is NULL counts as a violation — same
-            # outcome Spark's forall gives (NULL → COALESCE FALSE)
-            return (
-                f"COALESCE(len(list_filter({arr}, "
-                f"{node.var} -> NOT COALESCE({body}, FALSE))) = 0, FALSE)"
-            )
-        if isinstance(node, ExistsOne):
-            flt = ListFilter(node.path, node.var, node.body)
-            return f"COALESCE(len({self._sql_list_expr(flt)}) = 1, FALSE)"
-        if isinstance(node, Ternary):
-            cond = self.compile(node.cond)
-            return (
-                f"(CASE WHEN COALESCE({cond}, FALSE) "
-                f"THEN {self.compile(node.then)} "
-                f"ELSE {self.compile(node.els)} END)"
-            )
-        if isinstance(node, Path):
-            return self._typed_path(node, True)
-        raise CelSyntaxError(f"cannot compile node {node!r}")
+    def json_text(self, rel):
+        return f"json_extract_string({self.value_col}, '{_json_path(rel)}')"
 
-    def _operand_sql(self, node) -> str:
-        if isinstance(node, Lit):
-            return self._lit(node.value)
-        if isinstance(node, StrFn) and node.fn == "size":
-            return self._sql_size(node)
-        if isinstance(node, Arith):
-            return self._arith_sql(node)
-        if isinstance(node, Conv):
-            return self._conv_sql(node)
-        raise CelSyntaxError(f"unsupported operand {node!r}")
+    def field(self, rel):
+        return ".".join(rel)
 
-    def _conv_sql(self, node: Conv) -> str:
-        inner = node.operand
-        if isinstance(inner, Conv):
-            x = self._conv_sql(inner)
-        elif isinstance(inner, Lit):
-            x = self._lit(inner.value)
-        elif isinstance(inner, Path):
-            x = self._raw_path(inner)
-        elif isinstance(inner, Arith):
-            x = self._arith_sql(inner)
-        else:
-            raise CelSyntaxError(f"unsupported {node.fn}() operand {inner!r}")
-        as_num = f"TRY_CAST({x} AS DOUBLE)"
-        if node.fn == "double":
-            return as_num
-        # TRUNC: DuckDB CAST(double AS BIGINT) rounds, Spark truncates
-        as_int = f"TRY_CAST(TRUNC({as_num}) AS BIGINT)"
-        if node.fn == "int":
-            return as_int
-        return f"CAST({as_int} AS VARCHAR)"
+    def json_array(self, rel, elem):
+        # object elements stay JSON values; elem_field reads them
+        sql_type = "JSON" if isinstance(elem, dict) else _SQL_TYPES[elem]
+        return f"TRY_CAST(json_extract({self.value_col}, '{_json_path(rel)}') AS {sql_type}[])"
 
-    def _sql_time_side(self, node) -> str:
-        """Mirror of ColumnCompiler._time_side. DuckDB's naive-TIMESTAMP
-        cast converts explicit offsets to the UTC instant and treats
-        offset-less strings as UTC, independent of the host TimeZone
-        setting (probed) — matching Spark's UTC session zone here."""
-        if isinstance(node, TsLit):
-            return repr(node.epoch)
-        if isinstance(node, DurLit):
-            return repr(node.seconds)
-        if isinstance(node, Path):
-            return f"epoch(TRY_CAST({self._raw_path(node)} AS TIMESTAMP))"
-        if isinstance(node, Arith):
-            left = self._sql_time_side(node.left)
-            right = self._sql_time_side(node.right)
-            return f"({left} {node.op} {right})"
-        raise CelSyntaxError(f"operand {node!r} cannot appear in a time comparison")
+    def to_double(self, x):
+        return f"TRY_CAST({x} AS DOUBLE)"
 
-    def _arith_sql(self, node: Arith) -> str:
-        def num(n) -> str:
-            if isinstance(n, Arith):
-                return self._arith_sql(n)
-            if isinstance(n, Lit):
-                if not isinstance(n.value, (int, float)) or isinstance(n.value, bool):
-                    raise CelSyntaxError(f"non-numeric literal in arithmetic: {n.value!r}")
-                return self._lit(n.value)
-            if isinstance(n, Path):
-                return self._typed_path(n, 1.0)
-            if isinstance(n, StrFn) and n.fn == "size":
-                return self._sql_size(n)
-            if isinstance(n, Conv) and n.fn in ("int", "double"):
-                return self._conv_sql(n)
-            raise CelSyntaxError(f"unsupported arithmetic operand {n!r}")
+    def to_int(self, x):
+        return f"TRY_CAST(TRUNC({x}) AS BIGINT)"  # DuckDB's CAST rounds
 
-        return f"({num(node.left)} {node.op} {num(node.right)})"
+    def to_text(self, x):
+        return f"CAST({x} AS VARCHAR)"
 
-    def _sql_size(self, node: StrFn) -> str:
-        """size() — list length over a filter()/map() expression, string
-        length over a plain path (mirrors ColumnCompiler._strfn)."""
-        if isinstance(node.path, (ListFilter, ListMap)):
-            return f"len({self._sql_list_expr(node.path)})"
-        raw = self._raw_path(node.path)
-        if self.mode == "json":
-            # list-vs-string dispatch, mirroring ColumnCompiler._strfn
-            return (
-                f"(CASE WHEN regexp_matches({raw}, '^\\s*\\[') "
-                f"THEN json_array_length(TRY_CAST({raw} AS JSON)) "
-                f"ELSE length({raw}) END)"
-            )
-        return f"length({raw})"
+    def epoch(self, x):
+        # the naive-TIMESTAMP cast takes explicit offsets to the UTC
+        # instant and offset-less strings as UTC, whatever the host
+        # TimeZone (probed) — matching Spark's UTC session zone here
+        return f"epoch(TRY_CAST({x} AS TIMESTAMP))"
 
-    def _sql_list_arr(self, path: Path, elem_type: str) -> str:
-        """The list field as a typed DuckDB array (json mode parses)."""
-        if self.mode == "json":
-            return (
-                f"TRY_CAST(json_extract({self.value_col}, "
-                f"'$.{'.'.join(path.parts[1:])}') AS {elem_type}[])"
-            )
-        return self._raw_path(path)
+    def cmp(self, op, left, right):
+        return f"({left} {_SQL_OPS.get(op, op)} {right})"
 
-    def _sql_macro_arr(self, path: Path, body, var: str) -> tuple[str, dict | None]:
-        """(array SQL, struct fields-or-None) for a macro list. Struct
-        mode keeps elements as JSON values (json mode) — field reads
-        happen per-element in the lambda body."""
-        fields = _body_fields(body, var)
-        if fields:
-            return self._sql_list_arr(path, "JSON"), fields
-        return self._sql_list_arr(path, _elem_type(body, sql=True)), None
+    def and_(self, left, right):
+        return f"({left} AND {right})"
 
-    def _sql_list_expr(self, node) -> str:
-        """Compile a list-valued macro (filter()/map()) to a DuckDB list."""
-        if isinstance(node, ListFilter):
-            arr, fields = self._sql_macro_arr(node.path, node.body, node.var)
-            body = self._sql_lambda_body(node.body, node.var, fields)
-            return f"list_filter({arr}, {node.var} -> {body})"
-        if isinstance(node, ListMap):
-            arr = self._sql_list_arr(node.path, "DOUBLE")
-            expr = self._sql_map_expr(node.expr, node.var)
-            return f"list_transform({arr}, {node.var} -> {expr})"
-        raise CelSyntaxError(f"not a list expression: {node!r}")
+    def or_(self, left, right):
+        return f"({left} OR {right})"
 
-    def _sql_map_expr(self, node, var: str) -> str:
-        if isinstance(node, Path) and node.parts == (var,):
-            return var
-        if isinstance(node, Lit):
-            return self._lit(node.value)
-        if isinstance(node, Arith):
-            left = self._sql_map_expr(node.left, var)
-            right = self._sql_map_expr(node.right, var)
-            return f"({left} {node.op} {right})"
-        raise CelSyntaxError(f"unsupported map() expression {node!r}")
+    def not_(self, x):
+        # NULL must propagate (NOT NULL → NULL → non-match at the
+        # rule-level COALESCE); coalescing here would turn an errored
+        # operand into a MATCH
+        return f"(NOT {x})"
 
-    def _sql_lambda_body(self, node, var: str, fields: dict | None = None) -> str:
-        def field_ref(f: str) -> str:
-            if self.mode == "json":
-                # struct-mode elements are JSON values; read the field
-                # per element with the body-implied type
-                if (fields or {}).get(f) == "double":
-                    return f"TRY_CAST(json_extract({var}, '$.{f}') AS DOUBLE)"
-                return f"json_extract_string({var}, '$.{f}')"
-            return f"{var}.{f}"
+    def coalesce_false(self, x):
+        return f"COALESCE({x}, FALSE)"
 
-        if isinstance(node, Cmp):
-            def side(n):
-                if isinstance(n, Path) and n.parts == (var,):
-                    return var
-                if (
-                    isinstance(n, Path)
-                    and n.parts[0] == var
-                    and len(n.parts) == 2
-                ):
-                    return field_ref(n.parts[1])
-                if isinstance(n, Lit):
-                    return self._lit(n.value)
-                raise CelSyntaxError("unsupported exists() body")
-            op = {"==": "=", "!=": "<>"}.get(node.op, node.op)
-            return f"({side(node.left)} {op} {side(node.right)})"
-        if isinstance(node, Or):
-            return f"({self._sql_lambda_body(node.left, var, fields)} OR {self._sql_lambda_body(node.right, var, fields)})"
-        if isinstance(node, And):
-            return f"({self._sql_lambda_body(node.left, var, fields)} AND {self._sql_lambda_body(node.right, var, fields)})"
-        if (
-            isinstance(node, StrFn)
-            and isinstance(node.path, Path)
-            and node.path.parts[0] == var
-            and len(node.path.parts) <= 2
-        ):
-            tgt = var if len(node.path.parts) == 1 else field_ref(node.path.parts[1])
-            lit = self._lit(node.arg.value)
-            if node.fn == "startsWith":
-                return f"starts_with({tgt}, {lit})"
-            if node.fn == "endsWith":
-                return f"ends_with({tgt}, {lit})"
-            if node.fn == "contains":
-                return f"contains({tgt}, {lit})"
-            if node.fn == "matches":
-                return f"regexp_matches({tgt}, {lit})"
-        if (
-            isinstance(node, Has)
-            and node.path.parts[0] == var
-            and len(node.path.parts) == 2
-        ):
-            return f"({field_ref(node.path.parts[1])} IS NOT NULL)"
-        raise CelSyntaxError("unsupported exists() body")
+    def is_not_null(self, x):
+        return f"({x} IS NOT NULL)"
+
+    def isin(self, x, items):
+        return f"({x} IN ({', '.join(self.lit(v) for v in items)}))"
+
+    def when(self, cond, then, els):
+        return f"(CASE WHEN {cond} THEN {then} ELSE {els} END)"
+
+    def arith(self, op, left, right):
+        return f"({left} {op} {right})"
+
+    def strfn(self, fn, x, arg):
+        return f"{_SQL_STRFN[fn]}({x}, {self.lit(arg)})"
+
+    def length(self, x):
+        return f"length({x})"
+
+    def json_array_length(self, x):
+        return f"json_array_length(TRY_CAST({x} AS JSON))"
+
+    def list_len(self, arr):
+        return f"len({arr})"
+
+    def array_contains(self, arr, value):
+        return f"list_contains({arr}, {value})"
+
+    def hof(self, kind, arr, var, body):
+        pred = body(var)
+        if kind == "transform":
+            return f"list_transform({arr}, {var} -> {pred})"
+        if kind == "forall":
+            # an element whose body is NULL counts as a violation — the
+            # outcome Spark's forall gives
+            pred = f"NOT COALESCE({pred}, FALSE)"
+        kept = f"list_filter({arr}, {var} -> {pred})"
+        return {
+            "filter": kept,
+            "exists": f"len({kept}) > 0",
+            "exists_one": f"len({kept}) = 1",
+            "forall": f"len({kept}) = 0",
+        }[kind]
+
+    def elem_field(self, x, field, tag):
+        if self.mode == "columns":
+            return f"{x}.{field}"
+        if tag == "double":
+            return self.to_double(f"json_extract({x}, '$.{field}')")
+        return f"json_extract_string({x}, '$.{field}')"
 
 
 # ---------------------------------------------------------------------------
@@ -1659,7 +1402,7 @@ def _py_resolve(event: dict, path: Path):
 
 
 def _py_conv(node: Conv, event: dict):
-    """Mirror of ColumnCompiler._conv / SqlCompiler._conv_sql: value as
+    """Mirror of the compilers' ``_Compiler._conv``: value as
     double, int/string truncate toward zero; failures → CelEvalError →
     non-match (matching try_cast NULL on the other backends)."""
     import math

@@ -2,6 +2,7 @@
 (internal/processor/cel/engine_test.go:11-91), verified across all three
 backends: Spark Column, DuckDB SQL, and the pure-Python oracle."""
 
+import itertools
 import json
 
 import duckdb
@@ -600,3 +601,130 @@ def test_has_duckdb_backend(rule):
         ).fetchone()[0]
         got.append(bool(val))
     assert got == HAS_TRUTH[rule], rule
+
+
+def _duckdb_kept(pred: str, events: list[str]) -> set[str]:
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (value VARCHAR)")
+    con.executemany("INSERT INTO t VALUES (?)", [(e,) for e in events])
+    return {r[0] for r in con.execute(f"SELECT value FROM t WHERE {pred}").fetchall()}
+
+
+def _spark_kept(spark, rule: str, events: list[str]) -> set[str]:
+    df = spark.createDataFrame([(e,) for e in events], ["value"])
+    filt = C.CelFilter(rules=[rule], action="accept", mode="json")
+    return {r.value for r in filt.apply(df).collect()}
+
+
+# ---------------------------------------------------------------------------
+# json-mode operand typing: non-numeric values and zero-valued literals
+# ---------------------------------------------------------------------------
+
+TYPING_EVENTS = [
+    '{"code": "abc", "tags": ["a", "b"]}',
+    '{"code": 0, "tags": []}',
+    '{"code": 0.0}',
+    '{"code": 5, "tags": [1, 2, 3, 4, 5]}',
+]
+
+TYPING_TRUTH = {
+    # a non-numeric value read as a number is NULL → non-match on every
+    # backend; a plain cast raises CAST_INVALID_INPUT under ANSI mode and
+    # kills the whole job
+    "event.code == 5": [False, False, False, True],
+    "event.code + 1 > 0": [False, True, True, True],
+    # zero-valued literals type the path numerically like any literal;
+    # left as text, '0.0' compared to 0 is ANSI-cast to BIGINT and raises
+    "event.code == 0": [False, True, True, False],
+    "event.code > 0": [False, False, False, True],
+    "0.0 <= event.code": [False, True, True, True],
+    "event.code in [0, 5]": [False, True, True, True],
+    # a size() side makes the comparison numeric too
+    "event.code == event.tags.size()": [False, True, False, True],
+}
+
+
+@pytest.mark.parametrize("rule", list(TYPING_TRUTH))
+def test_typing_python_oracle(rule):
+    ast = C.parse_rule(rule)
+    got = [C.rule_detection_python(e, [ast]) for e in TYPING_EVENTS]
+    assert got == TYPING_TRUTH[rule], rule
+
+
+@pytest.mark.parametrize("rule", list(TYPING_TRUTH))
+def test_typing_spark_backend(spark, rule):
+    expected = {e for e, m in zip(TYPING_EVENTS, TYPING_TRUTH[rule]) if m}
+    assert _spark_kept(spark, rule, TYPING_EVENTS) == expected, rule
+
+
+@pytest.mark.parametrize("rule", list(TYPING_TRUTH))
+def test_typing_duckdb_backend(rule):
+    pred = C.CelFilter(rules=[rule], action="accept", mode="json").sql_predicate()
+    expected = {e for e, m in zip(TYPING_EVENTS, TYPING_TRUTH[rule]) if m}
+    assert _duckdb_kept(pred, TYPING_EVENTS) == expected, rule
+
+
+# ---------------------------------------------------------------------------
+# no bad JSON value kills the job: every TRUTH rule over events whose
+# code/status/data hold each awkward JSON value (or are missing)
+# ---------------------------------------------------------------------------
+
+_BAD_VALUES = ['"abc"', "null", '{"a": 1}', "[1]", "true", None]  # None: key missing
+
+BAD_EVENTS = [
+    "{" + ", ".join(f'"{k}": {v}' for k, v in zip(("code", "status", "data"), combo) if v) + "}"
+    for combo in itertools.product(_BAD_VALUES, repeat=3)
+]
+
+
+@pytest.mark.parametrize("rule", list(TRUTH))
+def test_bad_json_values_never_kill_the_job(spark, rule):
+    # Spark must not raise (ANSI mode), and must agree with DuckDB on
+    # every event; Python is not compared — it sees JSON types (below)
+    pred = C.CelFilter(rules=[rule], action="accept", mode="json").sql_predicate()
+    assert _spark_kept(spark, rule, BAD_EVENTS) == _duckdb_kept(pred, BAD_EVENTS), rule
+
+
+# ---------------------------------------------------------------------------
+# JSON-type divergence, PINNED: the Spark and DuckDB backends read json
+# fields as TEXT (get_json_object / json_extract_string), so they cannot
+# see quoting or JSON type — "0" compares as the number 0, "1e3" as 1000,
+# and the number 5 as the string "5". The Python oracle follows cel-go,
+# where each of these is a type error → non-match. Each witness below is
+# True on Spark/DuckDB and False on Python; the last event is a control
+# on which all three agree.
+# ---------------------------------------------------------------------------
+
+JSON_TYPE_EVENTS = [
+    '{"code": "0"}',
+    '{"code": "1e3"}',
+    '{"status": 5}',
+    '{"code": 0, "status": "ok"}',
+]
+
+# rule → (Python expectation, Spark and DuckDB expectation)
+JSON_TYPE_TRUTH = {
+    "event.code == 0": ([False, False, False, True], [True, False, False, True]),
+    "event.code > 1": ([False, False, False, False], [False, True, False, False]),
+    '!(event.status == "zzz")': ([False, False, False, True], [False, False, True, True]),
+}
+
+
+@pytest.mark.parametrize("rule", list(JSON_TYPE_TRUTH))
+def test_json_type_divergence_python_oracle(rule):
+    ast = C.parse_rule(rule)
+    got = [C.rule_detection_python(e, [ast]) for e in JSON_TYPE_EVENTS]
+    assert got == JSON_TYPE_TRUTH[rule][0], rule
+
+
+@pytest.mark.parametrize("rule", list(JSON_TYPE_TRUTH))
+def test_json_type_divergence_spark_backend(spark, rule):
+    expected = {e for e, m in zip(JSON_TYPE_EVENTS, JSON_TYPE_TRUTH[rule][1]) if m}
+    assert _spark_kept(spark, rule, JSON_TYPE_EVENTS) == expected, rule
+
+
+@pytest.mark.parametrize("rule", list(JSON_TYPE_TRUTH))
+def test_json_type_divergence_duckdb_backend(rule):
+    pred = C.CelFilter(rules=[rule], action="accept", mode="json").sql_predicate()
+    expected = {e for e, m in zip(JSON_TYPE_EVENTS, JSON_TYPE_TRUTH[rule][1]) if m}
+    assert _duckdb_kept(pred, JSON_TYPE_EVENTS) == expected, rule
