@@ -8,7 +8,7 @@ row carries the per-route match sums, so per-sink counts (sum over
 categories) and the category rollup come from a single map + one tiny
 shuffle.
 
-Used by bench.py (throughput + scaling evidence) and by
+Used by bench.py (the sweep and the ``scaling`` subcommand) and by
 tests/test_plans_scale.py (physical-plan assertions: exactly one
 exchange, broadcast-only joins, html-only-in-scan).
 """
