@@ -51,10 +51,19 @@ class Catalog:
         the crash happened between the renames — restore the backup so
         the old table stays readable (the compacted copy in
         ``.compact_tmp``, if complete, is re-derivable and is swept by
-        the next compact())."""
+        the next compact()).
+
+        A reader can race a live compact(): if the writer publishes
+        ``path`` between the existence check and the rename, the rename
+        fails, and the table is whole again — a lost race counts as
+        healed instead of failing a pure read."""
         backup = path + ".compact_old"
         if not os.path.exists(path) and os.path.exists(backup):
-            os.rename(backup, path)
+            try:
+                os.rename(backup, path)
+            except OSError:
+                if not os.path.exists(path):
+                    raise
 
     def append(self, df: DataFrame, name: str) -> None:
         if _iceberg_available(self.spark, name):

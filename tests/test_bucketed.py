@@ -108,3 +108,36 @@ def test_compact_crash_recovery(spark, tmp_path):
     assert not os.path.exists(path + ".compact_tmp")
     assert not os.path.exists(path + ".compact_old")
     assert cat.read_table("db.r").count() == 200
+
+
+def test_recover_compaction_lost_race_counts_as_healed(tmp_path, monkeypatch):
+    """A reader healing a compaction window can lose the race to the
+    writer, which publishes the table path first: the heal rename then
+    fails (the target now exists), and the read must go on, not crash.
+    A failed rename with the table still missing is a real error."""
+    import errno
+    import os
+
+    import pytest
+
+    from collector_spark.catalog import Catalog
+
+    path = str(tmp_path / "t")
+    os.makedirs(path + ".compact_old")
+
+    def writer_wins(src, dst):
+        os.makedirs(dst)  # the writer's rename(tmp, path) landed first
+        raise OSError(errno.ENOTEMPTY, "Directory not empty", dst)
+
+    monkeypatch.setattr(os, "rename", writer_wins)
+    Catalog._recover_compaction(path)
+    assert os.path.isdir(path)
+
+    os.rmdir(path)
+
+    def rename_fails(src, dst):
+        raise OSError(errno.EACCES, "Permission denied", dst)
+
+    monkeypatch.setattr(os, "rename", rename_fails)
+    with pytest.raises(OSError):
+        Catalog._recover_compaction(path)
