@@ -3,14 +3,15 @@
 
 Usage:
     python bench.py           # query sweep + the north-star pages pipeline
-    python bench.py scaling   # local[8] vs local[32] → BENCH/BASELINE.md
+    python bench.py scaling   # local[CPUS/4] vs local[CPUS] → BENCH/BASELINE.md
     python bench.py fanout    # multi-sink Pipeline.run_batch → BENCH/FANOUT.md
     python bench.py spot      # top-10 queries at SF_DIR and at the SF1 upsample
 
 Environment: ``SPARK_GRAFT_SF_DIR`` (input tables), ``SPARK_GRAFT_CPUS``
-(local[N] for the sweep, fanout and spot), ``SPARK_GRAFT_PAGES_N`` (pages
-table size) and ``SPARK_GRAFT_SF1`` (the upsampled directory ``spot``
-compares against, built by tools/upsample_sf.py).
+(local[N] for the sweep, fanout and spot; ``scaling`` runs N/4 vs N),
+``SPARK_GRAFT_PAGES_N`` (pages table size) and ``SPARK_GRAFT_SF1`` (the
+upsampled directory ``spot`` compares against, built by
+tools/upsample_sf.py).
 
 Each command writes its full JSON to ``BENCH/last_<command>.json`` and
 prints ONE headline line (≤1 KB) on stdout:
@@ -44,6 +45,8 @@ sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F
 
+import __spark_entry__ as entry_mod
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 SF1_DIR = os.environ.get("SPARK_GRAFT_SF1", "/tmp/sf1")
@@ -51,91 +54,14 @@ SEED = 42
 BENCH_DIR = os.path.join(REPO, "BENCH")
 HEADLINE_KEYS = ("metric", "value", "unit", "value_normalized", "calibration_factor")
 
-BENCH_QUERIES = [
-    "pipeline_parse_route_agg",
-    "cel_filter_accept",
-    "cel_filter_time",
-    "json_mutate",
-    "syslog_strip",
-    "kv_roundtrip",
-    "cef_roundtrip",
-    "enrich_broadcast_agg",
-    "agg_pricing_summary",
-    "window_top_orders",
-    "event_window_agg",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "ann_cosine_topk",
-    "token_count_agg",
-    "quality_score",
-    "lang_id",
-    "asof_join",
-    "sessionize",
-    "dedup_ngram_jaccard",
-    "join_shuffle_agg",
-    "ann_lsh_topk",
-    "ann_ivf_topk",
-    "ann_ivf_kmeans_topk",
-    "dedup_connected_components",
-    "embedding_near_dup",
-    "doc_length_quantiles",
-    "pivot_event_counts",
-    "cube_counts",
-    "running_total",
-    "multimodal_features",
-    "top_revenue_orders",
-    "late_shipment_priority",
-    "small_qty_revenue",
-    "contamination_check",
-    "dup_span_profile",
-    "dedup_span_removal",
-    "salient_terms",
-    "vocab_topk",
-    "unigram_logprob",
-    "token_budget_select",
-    "corpus_shuffle_order",
-    "order_count_histogram",
-    # round-4 additions
-    "grok_access_log",
-    "csv_roundtrip",
-    "multiline_merge",
-    "pseudonymize_users",
-    "encode_tokens",
-    "cel_filter_conv",
-    "cel_filter_struct_macro",
-    "returned_item_customers",
-    "large_volume_customers",
-    "rolling_7day_revenue",
-    "profile_columns",
-    "funnel_conversion",
-    "retention_cohorts",
-    "bigram_logprob",
-    "event_rate_anomaly",
-    "bloom_contamination",
-]
+BENCH_QUERIES = [name for name, q in entry_mod.QUERIES.items() if q.bench]
 
 #: sf1 spot-bench (round-4 VERDICT #8): the top-10 headline queries at
 #: SF_DIR and at its deterministic upsample SF1_DIR. per_row_ratio =
 #: sf1_sec / (scale * sf01_sec); linear scaling => ~1.0 (fixed job
 #: overhead makes big-input ratios come in UNDER 1). The bar is <= 1.5
 #: per query, else the complexity cliff gets named and fixed.
-SPOT_QUERIES = [
-    # parse family (Arrow pandas-UDF primaries + native grok)
-    "cef_roundtrip",
-    "kv_roundtrip",
-    "grok_access_log",
-    "json_mutate",
-    # CEL (struct-macro JSON parse was a named cliff candidate)
-    "cel_filter_struct_macro",
-    # dedup family
-    "dedup_minhash_lsh",
-    "dedup_connected_components",
-    "dedup_span_removal",
-    # ANN + corpus join
-    "ann_ivf_kmeans_topk",
-    "contamination_check",
-]
+SPOT_QUERIES = [name for name, q in entry_mod.QUERIES.items() if q.spot]
 
 
 # fixed pure-JVM CPU workload (range → xxhash64 → sum; no IO, no data
@@ -162,10 +88,11 @@ BUS_BUF_MB = 64
 #: sweep bus calibration: fixed total copies split over CPUS processes
 BUS_CALIBRATION_COPIES = 240
 
-#: scaling protocol: levels alternate across fresh JVMs (32,8,32,8,...)
-#: and each level takes its best wall time, so slow host windows cannot
-#: bias one level
-SCALE_LEVELS = (8, 32)
+#: scaling protocol: an N -> 4N pair on the host the bench is given;
+#: levels alternate across fresh JVMs (wide, narrow, wide, ...) and each
+#: level takes its best wall time, so slow host windows cannot bias one
+#: level
+SCALE_LEVELS = (CPUS // 4, CPUS)
 SCALE_ROUNDS = 2
 #: fixed total work of the scaling run's two raw-process controls
 CPU_CONTROL_HASHES = 48_000_000
@@ -339,13 +266,10 @@ def _bus_calibrate() -> float:
 
 
 def sweep() -> dict:
-    import __spark_entry__ as entry_mod
-
     # pages-table size scales with sf (sf0.1 → 40k pages, 3 log lines each)
     sf = float(SF_DIR.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in SF_DIR else 0.1
     n_pages = pages_n(max(int(400_000 * sf), 200))
     spark = session(CPUS)
-    queries = entry_mod.queries()
     timings: dict[str, float] = {}
 
     pages_path = ensure_pages(spark, n_pages)
@@ -366,7 +290,7 @@ def sweep() -> dict:
     timings["pages_pipeline"] = round(pages_sec, 3)
 
     for name in BENCH_QUERIES:
-        timings[name] = time_query(spark, queries[name], SF_DIR)
+        timings[name] = time_query(spark, entry_mod.QUERIES[name].build, SF_DIR)
 
     total = round(sum(timings.values()), 3)
     calibration_post = _calibrate(spark)
@@ -459,16 +383,23 @@ def scaling_level(cpus: int, n_pages: int) -> dict:
     }
 
 
+def _wide_docs_per_sec(run: dict) -> str:
+    """A history row's docs/s at its wider level (keys name the level)."""
+    wide = max(int(k.rsplit("_", 1)[1]) for k in run if k.startswith("docs_per_sec_"))
+    return f"{run[f'docs_per_sec_{wide}']:,.0f} @{wide}"
+
+
 def scaling() -> dict:
     """Scaling-efficiency evidence for the north rule's two-cluster-size
     criterion (no real cluster in this sandbox): the SAME pages pipeline
-    on the SAME input at local[8] and local[32], plus scaling efficiency.
+    on the SAME input at local[CPUS/4] and local[CPUS], plus scaling
+    efficiency.
 
     Two honesty mechanisms, both reported:
 
     1. CPU CONTROL: this single host reduces per-core frequency as more
        cores go busy (turbo at low occupancy), so even EMBARRASSINGLY
-       PARALLEL raw-process work cannot reach 4x from 8->32 workers
+       PARALLEL raw-process work cannot reach 4x from N->4N workers
        here. A multiprocessing sha256 control measures that hardware
        ceiling; the pipeline's speedup is reported both raw and
        normalized by the control ("of the speedup the hardware offers,
@@ -479,15 +410,18 @@ def scaling() -> dict:
 
     2. INTERLEAVED REPS: see SCALE_LEVELS.
     """
+    lo, hi = SCALE_LEVELS
+    if CPUS < 4 or CPUS % 4:
+        raise SystemExit(f"scaling needs SPARK_GRAFT_CPUS = 4N, got {CPUS}")
     # big enough that the parallel region dominates fixed job overhead
     # (~1 s of driver/scheduling per pipeline run): ~22 s wall at 8 cores
     n_pages = pages_n(1_600_000)
 
     ctrl = {w: pool_probe(_sha256_work, CPU_CONTROL_HASHES, w, 5) for w in SCALE_LEVELS}
-    ctrl["speedup"] = ctrl[8] / ctrl[32]
+    ctrl["speedup"] = ctrl[lo] / ctrl[hi]
     bw = {w: pool_probe(_copy_work, BUS_CONTROL_COPIES, w, 3) for w in SCALE_LEVELS}
-    bw["speedup"] = bw[8] / bw[32]
-    bw["gbps_32"] = BUS_CONTROL_COPIES * BUS_BUF_MB * 2 / 1024 / bw[32]
+    bw["speedup"] = bw[lo] / bw[hi]
+    gbps = BUS_CONTROL_COPIES * BUS_BUF_MB * 2 / 1024 / bw[hi]
 
     runs = []
     spawn = multiprocessing.get_context("spawn")
@@ -512,23 +446,23 @@ def scaling() -> dict:
     best = {c: min(r["sec"] for cc, r in runs if cc == c) for c in SCALE_LEVELS}
     dbest = {c: min(r["dedup"]["sec"] for cc, r in runs if cc == c) for c in SCALE_LEVELS}
 
-    tp8 = n_pages / best[8]
-    tp32 = n_pages / best[32]
-    speedup = tp32 / tp8
+    tp_lo = n_pages / best[lo]
+    tp_hi = n_pages / best[hi]
+    speedup = tp_hi / tp_lo
     eff_raw = speedup / 4.0
     eff_norm = speedup / ctrl["speedup"] if ctrl["speedup"] > 0 else 0.0
-    d_speedup = dbest[8] / dbest[32]
+    d_speedup = dbest[lo] / dbest[hi]
     d_eff_norm = d_speedup / ctrl["speedup"] if ctrl["speedup"] > 0 else 0.0
     # the dedup workload is shuffle-bound → its honest single-box ceiling
     # is the measured memory-bus speedup, not the CPU control's
     d_eff_bw = d_speedup / bw["speedup"] if bw["speedup"] > 0 else 0.0
 
     result = {
-        "metric": "scaling_efficiency_local8_to_local32",
+        "metric": f"scaling_efficiency_local{lo}_to_local{hi}",
         "value": round(eff_norm, 3),
         "unit": "ratio",
-        "docs_per_sec_8": round(tp8, 1),
-        "docs_per_sec_32": round(tp32, 1),
+        f"docs_per_sec_{lo}": round(tp_lo, 1),
+        f"docs_per_sec_{hi}": round(tp_hi, 1),
         "speedup_4x_cores": round(speedup, 2),
         "eff_raw_vs_4x": round(eff_raw, 3),
         "cpu_control_speedup": round(ctrl["speedup"], 2),
@@ -543,7 +477,7 @@ def scaling() -> dict:
         "dedup_eff_normalized": round(d_eff_norm, 3),
         "dedup_pairs_equal": True,
         "bw_control_speedup": round(bw["speedup"], 2),
-        "bw_gbps_at_32": round(bw["gbps_32"], 1),
+        f"bw_gbps_at_{hi}": round(gbps, 1),
         "dedup_eff_vs_bw_ceiling": round(d_eff_bw, 3),
     }
     # append to the run history FIRST: single-box windows swing 2-4x
@@ -559,7 +493,7 @@ def scaling() -> dict:
                 history.append(json.loads(line))
     hist_rows = "\n".join(
         f"| {h['speedup_4x_cores']:.2f}x | {h['cpu_control_speedup']:.2f}x | "
-        f"{h['eff_normalized_to_hw']:.3f} | {h['docs_per_sec_32']:,.0f} | "
+        f"{h['eff_normalized_to_hw']:.3f} | {_wide_docs_per_sec(h)} | "
         f"{h.get('dedup_speedup', 0):.2f}x | {h.get('bw_control_speedup') or '—'} | "
         f"{h.get('dedup_eff_vs_bw_ceiling') or '—'} |"
         for h in history
@@ -573,14 +507,14 @@ North-rule criterion: throughput scaling efficiency >= 0.8 between N and
 4N executors. Sandbox substitution (no real cluster): the SAME pages
 pipeline (parse -> enrich -> route -> aggregate over the deterministic
 synthetic Common-Crawl-style table, {n_pages:,} pages / {n_pages * 3:,}
-log lines, 128 input partitions) on the SAME cached input, local[8] vs
-local[32], fresh JVM per level, levels interleaved across {SCALE_ROUNDS}
+log lines, 128 input partitions) on the SAME cached input, local[{lo}] vs
+local[{hi}], fresh JVM per level, levels interleaved across {SCALE_ROUNDS}
 rounds, best wall time per level.
 
 | parallelism | wall (s) | docs/sec |
 |---|---|---|
-| local[8]  | {best[8]:.2f} | {tp8:,.1f} |
-| local[32] | {best[32]:.2f} | {tp32:,.1f} |
+| local[{lo}] | {best[lo]:.2f} | {tp_lo:,.1f} |
+| local[{hi}] | {best[hi]:.2f} | {tp_hi:,.1f} |
 
 - pipeline speedup at 4x cores: **{speedup:.2f}x**
 - raw efficiency vs ideal 4x: **{eff_raw:.3f}**
@@ -590,16 +524,16 @@ rounds, best wall time per level.
 ## Hardware ceiling (CPU control)
 
 This host reduces per-core frequency as occupancy rises, so even
-embarrassingly parallel raw-process work cannot reach 4x from 8 -> 32
+embarrassingly parallel raw-process work cannot reach 4x from {lo} -> {hi}
 workers. Control: fixed-total sha256 across N raw Python processes
 (no JVM, no shuffle, no shared state):
 
 | workers | wall (s) |
 |---|---|
-| 8  | {ctrl[8]:.2f} |
-| 32 | {ctrl[32]:.2f} |
+| {lo} | {ctrl[lo]:.2f} |
+| {hi} | {ctrl[hi]:.2f} |
 
-- hardware speedup ceiling 8 -> 32: **{ctrl['speedup']:.2f}x**
+- hardware speedup ceiling {lo} -> {hi}: **{ctrl['speedup']:.2f}x**
 - **normalized efficiency = pipeline speedup / hardware ceiling =
   {speedup:.2f} / {ctrl['speedup']:.2f} = {eff_norm:.3f}** (target >= 0.8)
 
@@ -619,11 +553,11 @@ of 64 MB numpy buffer copies — far past LLC) across N raw processes:
 
 | workers | wall (s) |
 |---|---|
-| 8  | {bw[8]:.2f} |
-| 32 | {bw[32]:.2f} |
+| {lo} | {bw[lo]:.2f} |
+| {hi} | {bw[hi]:.2f} |
 
-- memory-bus speedup ceiling 8 -> 32: **{bw['speedup']:.2f}x**
-  (measured bus throughput at 32 workers: {bw['gbps_32']:.1f} GB/s)
+- memory-bus speedup ceiling {lo} -> {hi}: **{bw['speedup']:.2f}x**
+  (measured bus throughput at {hi} workers: {gbps:.1f} GB/s)
 
 The sha256 CPU control's working set is register-resident, so it only
 captures the frequency ceiling; this control measures the bus. A
@@ -637,10 +571,10 @@ bucket grouping -> signature verify), same interleaved best-of protocol:
 
 | parallelism | wall (s) | docs/sec |
 |---|---|---|
-| local[8]  | {dbest[8]:.2f} | {n_docs / dbest[8]:,.1f} |
-| local[32] | {dbest[32]:.2f} | {n_docs / dbest[32]:,.1f} |
+| local[{lo}] | {dbest[lo]:.2f} | {n_docs / dbest[lo]:,.1f} |
+| local[{hi}] | {dbest[hi]:.2f} | {n_docs / dbest[hi]:,.1f} |
 
-- speedup 8 -> 32: **{d_speedup:.2f}x**
+- speedup {lo} -> {hi}: **{d_speedup:.2f}x**
 - vs CPU ceiling: **{d_eff_norm:.3f}**; vs measured MEMORY-BUS ceiling
   (the binding resource for a shuffle-bound job on one box):
   **{d_eff_bw:.3f}**
@@ -668,20 +602,20 @@ itself varies (frequency governor state), so the normalized figure
 moves with the window even when the job's raw speedup is stable —
 the BAND is the honest evidence, best = **{best_eff:.3f}**:
 
-| flagship speedup | cpu ctrl | normalized | docs/s @32 | dedup speedup | bw ctrl | dedup/bw |
+| flagship speedup | cpu ctrl | normalized | docs/s @wide | dedup speedup | bw ctrl | dedup/bw |
 |---|---|---|---|---|---|---|
 {hist_rows}
 
 The flagship job streams ~2 GB of strings per run, so it is PARTLY
 bus-bound: its true single-box ceiling sits between the pure-bus
-control (~{bw['speedup']:.2f}x — saturated at 8 workers) and the
+control (~{bw['speedup']:.2f}x) and the
 pure-CPU control ({ctrl['speedup']:.2f}x). A raw ~2.0-2.2x speedup
 against that mixed envelope is the hardware being used, not the job
 failing to parallelize; on a real N -> 4N fleet both resources
 multiply by 4.
 
-Reproduce: `python bench.py scaling` (env `SPARK_GRAFT_SF_DIR`,
-`SPARK_GRAFT_PAGES_N`).
+Reproduce: `python bench.py scaling` (env `SPARK_GRAFT_CPUS`,
+`SPARK_GRAFT_SF_DIR`, `SPARK_GRAFT_PAGES_N`).
 """
         )
     return result
@@ -784,10 +718,7 @@ Reproduce: `python bench.py fanout` (env `SPARK_GRAFT_PAGES_N`,
 def spot() -> dict:
     """SPOT_QUERIES at SF_DIR and at SF1_DIR. The scale is the ratio of
     the two directories' events.parquet row counts."""
-    import __spark_entry__ as entry_mod
-
     spark = session(CPUS)
-    queries = entry_mod.queries()
     scale = (
         spark.read.parquet(os.path.join(SF1_DIR, "events.parquet")).count()
         / spark.read.parquet(os.path.join(SF_DIR, "events.parquet")).count()
@@ -796,7 +727,7 @@ def spot() -> dict:
     out = {}
     for name in SPOT_QUERIES:
         secs = {
-            label: time_query(spark, queries[name], sf_dir)
+            label: time_query(spark, entry_mod.QUERIES[name].build, sf_dir)
             for label, sf_dir in (("sf01", SF_DIR), ("sf1", SF1_DIR))
         }
         ratio = round(secs["sf1"] / (scale * secs["sf01"]), 3)

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from collector_spark.datagen import lookup_dfs
 from collector_spark.operators.cel import CelFilter
-from collector_spark.operators.enrich import url_domain, url_tld
+from collector_spark.operators.enrich import enrich_pages
 from collector_spark.operators.extract import HtmlExtractor
 from collector_spark.operators.json_mutate import JsonMutator
 from collector_spark.operators.router import Route, Router
@@ -45,12 +45,7 @@ def build_pages_agg(spark: SparkSession, pages: DataFrame, seed: int = 42) -> Da
     lines = JsonMutator(
         add=[{"key": "pipeline", "value": "bench"}], engine="native"
     ).apply(lines)
-    enriched = (
-        lines.withColumn("domain", url_domain(F.col("url")))
-        .withColumn("tld", url_tld(F.col("url")))
-        .join(F.broadcast(lookups["domain_map"]), "domain", "left")
-        .join(F.broadcast(lookups["tld_map"]), "tld", "left")
-    )
+    enriched = enrich_pages(lines, {k: lookups[k] for k in ("domain_map", "tld_map")})
     router = Router(ROUTES)
     aggs = [
         F.sum(col.cast("long")).alias(name) for name, col in router._route_cols()

@@ -1,15 +1,20 @@
-"""bench.py's timing core and headline, without Spark."""
+"""bench.py's timing core and headline, and the query table it reads,
+without Spark."""
 
 from __future__ import annotations
 
+import glob
 import json
 import os
+import re
 import sys
 
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
+import __spark_entry__ as entry_mod  # noqa: E402
 import bench  # noqa: E402
 
 
@@ -75,3 +80,27 @@ def test_check_sinks_rejects_counts_that_do_not_partition():
     bench.check_sinks({"ok": 2, "errors": 1, "all": 3})
     with pytest.raises(SystemExit):
         bench.check_sinks({"ok": 2, "errors": 1, "all": 4})
+
+
+def test_query_table_green_follows_correctness_artifacts():
+    """Each row's ``green`` is 0 or the newest CORRECTNESS round whose
+    gate passed that query; the driver window (first 50 of ``queries()``)
+    holds every row staler than the newest round; the bench lists nest
+    inside the table."""
+    passed: dict[str, int] = {}
+    for path in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")):
+        rnd = int(re.search(r"CORRECTNESS_r(\d+)\.json$", path).group(1))
+        with open(path) as f:
+            for name, res in json.load(f).items():
+                if res["rows_match"] and res["schema_match"] and res["hash_match"]:
+                    passed[name] = max(passed.get(name, 0), rnd)
+    newest = max(passed.values())
+    for name, q in entry_mod.QUERIES.items():
+        assert q.green in (0, passed.get(name)), f"{name}: green {q.green}"
+
+    window = set(list(entry_mod.queries())[:50])
+    stale = {name for name, q in entry_mod.QUERIES.items() if q.green < newest}
+    assert stale <= window, sorted(stale - window)
+
+    assert set(bench.SPOT_QUERIES) <= set(bench.BENCH_QUERIES) <= set(entry_mod.queries())
+    assert (len(bench.SPOT_QUERIES), len(bench.BENCH_QUERIES)) == (10, 60)

@@ -21,6 +21,8 @@ CROSS_JOIN_OK = {
 }
 
 QUERIES = entry_mod.queries()
+# a renamed query must not silently lose its cross-join assertion
+assert CROSS_JOIN_OK <= set(QUERIES)
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
