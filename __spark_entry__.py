@@ -2849,7 +2849,7 @@ QUERIES: dict[str, Query] = {
         q_rolling_7day_revenue, _SQL_ROLLING_REV, 4, bench=True
     ),
     "cel_filter_struct_macro": Query(
-        q_cel_filter_struct_macro, _SQL_CEL_STRUCT_MACRO, 4, bench=True, spot=True
+        q_cel_filter_struct_macro, _SQL_CEL_STRUCT_MACRO, 0, bench=True, spot=True
     ),
     "funnel_conversion": Query(q_funnel_conversion, _SQL_FUNNEL, 4, bench=True),
     "retention_cohorts": Query(q_retention_cohorts, _SQL_RETENTION, 4, bench=True),
@@ -2857,11 +2857,11 @@ QUERIES: dict[str, Query] = {
     "csv_roundtrip": Query(q_csv_roundtrip, _SQL_CSV_ROUNDTRIP, 0, bench=True),
     "pseudonymize_users": Query(q_pseudonymize_users, _sql_pseudonymize, 4, bench=True),
     "multiline_merge": Query(q_multiline_merge, _SQL_MULTILINE, 4, bench=True),
-    "cel_filter_conv": Query(q_cel_filter_conv, _SQL_CEL_CONV, 4, bench=True),
+    "cel_filter_conv": Query(q_cel_filter_conv, _SQL_CEL_CONV, 0, bench=True),
     "grok_access_log": Query(
         q_grok_access_log, _sql_grok_access_log, 0, bench=True, spot=True
     ),
-    "json_mutate": Query(q_json_mutate, _SQL_JSON_MUTATE, 4, bench=True, spot=True),
+    "json_mutate": Query(q_json_mutate, _SQL_JSON_MUTATE, 0, bench=True, spot=True),
     "syslog_strip": Query(q_syslog_strip, _SQL_SYSLOG_STRIP, 4, bench=True),
     "kv_roundtrip": Query(q_kv_roundtrip, _SQL_KV_ROUNDTRIP, 4, bench=True, spot=True),
     "cef_roundtrip": Query(

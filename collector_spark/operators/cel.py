@@ -50,7 +50,8 @@ Three backends off one AST:
   text reads try-cast, so a bad value is NULL → non-match, never an
   ANSI error. Two thin printers supply only primitives:
   - ``ColumnCompiler``: Spark Column over a JSON-string column
-    (schema-free lines, ``get_json_object``) or over real columns;
+    (schema-free lines, read from its VARIANT companion column, parsed
+    once per line by ``with_variant``) or over real columns;
   - ``SqlCompiler``: equivalent DuckDB SQL (the correctness gate);
 - ``eval_python``: an independent pure-Python evaluation that follows
   cel-go (pytest truth tables). It sees JSON types where the two
@@ -906,6 +907,45 @@ def parse_rule(rule: str):
 
 
 # ---------------------------------------------------------------------------
+# The VARIANT companion of a JSON value column: each value version is
+# parsed once, and every json-mode reader reads the parse
+# ---------------------------------------------------------------------------
+
+
+def variant_col(value_col: str = "value") -> str:
+    """Name of the VARIANT companion column of ``value_col``."""
+    return f"_{value_col}_variant"
+
+
+def with_variant(df: DataFrame, value_col: str = "value") -> DataFrame:
+    """``df`` plus ``try_parse_json(value_col)`` as its VARIANT companion
+    column, unless that column is already there. The only way the column
+    is added; while present it is the parse of the current ``value_col``
+    (a non-JSON or duplicate-key line parses to NULL).
+
+    The parse is the only output of a Generate, not a ``withColumn``:
+    FilterExec does no subexpression elimination, and Catalyst pushes a
+    filter through a projected alias by inlining it, so N reads of a
+    projected parse inside one filter would parse the line N times."""
+    name = variant_col(value_col)
+    if name in df.columns:
+        return df
+    parsed = F.try_parse_json(F.col(value_col)).alias(name)
+    return df.select("*", F.inline(F.array(F.struct(parsed))))
+
+
+def rederive_variant(received: DataFrame, out: DataFrame, value_col: str = "value") -> DataFrame:
+    """For a stage that rewrote ``value_col`` of ``received`` into ``out``:
+    the companion parse of the old value is stale, so drop it, and parse
+    the new value when the stage received a companion (a downstream
+    reader expects one). ``Pipeline`` calls this after every stage that
+    does not set ``keeps_variant = True``."""
+    name = variant_col(value_col)
+    out = out.drop(name)
+    return with_variant(out, value_col) if name in received.columns else out
+
+
+# ---------------------------------------------------------------------------
 # Compiler core: one traversal and one typing pass, two dialect printers
 # ---------------------------------------------------------------------------
 
@@ -1179,14 +1219,17 @@ _COL_HOF = {"exists": F.exists, "forall": F.forall, "filter": F.filter, "transfo
 
 
 class ColumnCompiler(_Compiler):
-    """Compile an AST to a Spark Column (json text via get_json_object,
-    lists via from_json; neutral type tags are Spark's own names)."""
+    """Compile an AST to a Spark Column. In json mode a path reads its
+    text from the value's VARIANT companion (``with_variant``; the caller
+    adds it) and a list parses that text with from_json; neutral type
+    tags are Spark's own names."""
 
     def lit(self, value):
         return F.lit(value)
 
     def json_text(self, rel):
-        return F.get_json_object(F.col(self.value_col), _json_path(rel))
+        parsed = F.col(variant_col(self.value_col))
+        return F.try_variant_get(parsed, _json_path(rel), "string")
 
     def field(self, rel):
         col = F.col(rel[0])
@@ -1753,6 +1796,10 @@ class CelFilter:
         action: 'accept' (keep matches) | 'reject' (keep non-matches)
     """
 
+    # only trims spaces off the value, which leaves its parse unchanged,
+    # so Pipeline need not re-derive the VARIANT companion after it
+    keeps_variant = True
+
     def __init__(
         self,
         rules: list[str],
@@ -1790,11 +1837,12 @@ class CelFilter:
         quarantine/dead-letter path (Pipeline.run_batch)."""
         valid = F.lit(True)
         if self.mode == "json":
-            # empty / non-JSON lines are non-matches (cel.go:56-70)
-            df = df.withColumn(self.value_col, F.trim(F.col(self.value_col)))
-            valid = (F.length(self.value_col) > 0) & F.try_parse_json(
-                F.col(self.value_col)
-            ).isNotNull()
+            # empty / non-JSON lines are non-matches (cel.go:56-70): their
+            # parse is NULL. Trimming spaces does not change the parse, so
+            # a received companion stays fresh.
+            vc = self.value_col
+            df = with_variant(df.withColumn(vc, F.trim(F.col(vc))), vc)
+            valid = F.col(variant_col(vc)).isNotNull()
         pred = self.predicate()
         keep = pred if self.action == "accept" else ~pred
         return df, valid & F.coalesce(keep, F.lit(False))

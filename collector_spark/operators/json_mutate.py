@@ -4,22 +4,33 @@ Reference: internal/processor/json/json.go:16-35,88-130 (gjson/sjson
 dotted-path surgery; non-JSON lines dropped; replace fires only when the
 current value equals the expected one).
 
-Two execution strategies, picked per call site:
+Three execution strategies, picked per call site:
 
-- ``mutate_json_udf`` — schema-free JSON string lines: one vectorized
-  pandas UDF per Arrow batch running the shared oracle implementation
-  (collector_spark.oracle.json_mutate), so parity with pytest's oracle is
-  by construction. This is the general path (any dotted key, any payload).
+- ``engine='pandas'`` (default) — schema-free JSON string lines: one
+  vectorized pandas UDF per Arrow batch running the shared oracle
+  implementation (collector_spark.oracle.json_mutate), so parity with
+  pytest's oracle is by construction. This is the general path (any
+  dotted key, any payload) and the quarantine path.
 
-- ``JsonMutator(mode='columns')`` — structured payloads: compiles the
-  same action list to native ``withColumn`` / ``drop`` /
-  ``when().otherwise()`` Catalyst expressions. Zero Python per row; use
-  whenever the schema is known (it is, for the pages/events tables).
+- ``engine='native'`` — top-level add only, as Catalyst string surgery
+  on compact object lines. Validity, key presence and the nested-value
+  guard read the line's VARIANT companion (``cel.with_variant``), so
+  the line is parsed once however many keys are added.
+
+- ``mode='columns'`` — structured payloads: compiles the same action
+  list to native ``withColumn`` / ``drop`` / ``when().otherwise()``
+  Catalyst expressions. Zero Python per row; use whenever the schema is
+  known (it is, for the pages/events tables).
+
+Both json-mode engines rewrite ``value``: a VARIANT companion they
+received is re-derived over the new value (``cel.rederive_variant``).
 """
 
 from __future__ import annotations
 
 import functools
+import json
+import re
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -27,6 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from collector_spark import oracle
+from collector_spark.operators.cel import rederive_variant, variant_col, with_variant
 
 
 def make_mutate_udf(add: list[dict], remove: list[dict], replace: list[dict]):
@@ -55,6 +67,10 @@ class JsonMutator:
         replace: [{key, value, new_value}]  set only when current == value
     """
 
+    # both json-mode engines re-derive a received VARIANT companion over
+    # the value they wrote (the native add reads it for its own guards)
+    keeps_variant = True
+
     def __init__(
         self,
         add: list[dict] | None = None,
@@ -82,6 +98,9 @@ class JsonMutator:
                 "engine='native' supports only top-level add actions; "
                 "use engine='pandas' for remove/replace/nested keys"
             )
+        if engine == "native":
+            for a in self.add:
+                _key_path(a["key"])  # config-time: the key must be addressable
         self.mode = mode
         self.value_col = value_col
         self.engine = engine
@@ -112,53 +131,54 @@ class JsonMutator:
         udf = make_mutate_udf(self.add, self.remove, self.replace)
         out = df.withColumn(self.value_col, udf(F.col(self.value_col)))
         # non-JSON → None → quarantined (json.go:88-99)
-        return out, F.col(self.value_col).isNotNull()
+        return rederive_variant(df, out, self.value_col), F.col(self.value_col).isNotNull()
 
     def _apply_native(self, df: DataFrame) -> DataFrame:
         """Top-level add on compact JSON object lines as pure Catalyst
         string surgery (sjson appends before the closing brace exactly
-        like this). Requirements, enforced at plan build + runtime:
-        only objects survive (non-JSON / non-object lines are dropped,
-        matching the reference), and keys being added must not already
-        exist (checked per row; pre-existing keys fall back to a
-        replace-style set via the same append after a delete is NOT
-        supported natively — such rows keep their old value dropped by
-        the guard below going through the slow path is the correct
-        choice; for the pipelines in this repo added keys are new)."""
-        col = F.trim(F.col(self.value_col))
-        out = df.withColumn(self.value_col, col).filter(
-            (F.length(col) > 0)
-            & F.try_parse_json(col).isNotNull()
-            & col.startswith("{")
-        )
-        import json as _json
-        import re as _re
-
+        like this). Only objects survive (non-JSON / non-object lines
+        are dropped, matching the reference). A key already present is
+        overwritten in place when its value is a scalar and the key
+        text occurs once in the line; otherwise the row is left
+        unchanged (documented native-engine limitation — engine='pandas'
+        implements full sjson.Set semantics)."""
+        vc = self.value_col
+        # trimming spaces does not change the parse, so a received
+        # companion stays fresh for the reads below
+        out = with_variant(df.withColumn(vc, F.trim(F.col(vc))), vc)
+        parsed = F.col(variant_col(vc))
+        out = out.filter(parsed.isNotNull() & F.col(vc).startswith("{"))
+        seen: set[str] = set()
         for a in self.add:
-            frag = _json.dumps({a["key"]: a["value"]}, separators=(",", ":"))[1:-1]
+            key = a["key"]
+            if key in seen:  # a repeated key reads the value an earlier add wrote
+                out = with_variant(out.drop(variant_col(vc)), vc)
+            seen.add(key)
+            frag = json.dumps({key: a["value"]}, separators=(",", ":"))[1:-1]
             # regex-ESCAPED form of the json-escaped key: a key like
             # 'a+b' or 'f(x' must match literally, not as regex syntax
-            key_re = _re.escape(_json.dumps(a["key"])[1:-1])
-            val_json = _json.dumps(a["value"], separators=(",", ":"))
-            v = F.col(self.value_col)
+            key_re = re.escape(json.dumps(key)[1:-1])
+            val_json = json.dumps(a["value"], separators=(",", ":"))
+            v = F.col(vc)
             appended = F.when(
                 F.regexp_like(v, F.lit(r"^\{\s*\}$")),
                 F.concat(F.lit("{"), F.lit(frag), F.lit("}")),
             ).otherwise(
                 F.concat(
-                    F.expr(
-                        f"substring({self.value_col}, 1, length({self.value_col}) - 1)"
-                    ),
+                    F.expr(f"substring({vc}, 1, length({vc}) - 1)"),
                     F.lit(","),
                     F.lit(frag),
                     F.lit("}"),
                 )
             )
-            # sjson.Set semantics: existing key is OVERWRITTEN (true
-            # key-presence test via json_object_keys — get_json_object
-            # can't tell {"k":null} from a missing key, and the null
-            # case must overwrite, not append a duplicate key).
-            exists = F.array_contains(F.json_object_keys(v), a["key"])
+            # sjson.Set semantics: an existing key is OVERWRITTEN, a null
+            # one too (presence, not value, decides: appending would
+            # duplicate the key)
+            path = _key_path(key)
+            exists = F.try_variant_get(parsed, path, "variant").isNotNull()
+            nested_val = F.coalesce(
+                F.try_variant_get(parsed, path, "string").rlike(r"^[\[{]"), F.lit(False)
+            )
             pattern = f'("{key_re}"\\s*:\\s*)("(?:[^"\\\\]|\\\\.)*"|[^,}}\\]]+)'
             replacement = "$1" + val_json.replace("\\", "\\\\").replace("$", "\\$")
             replaced = F.regexp_replace(v, pattern, replacement)
@@ -166,20 +186,14 @@ class JsonMutator:
             # when the key's value is a scalar and the key string occurs
             # exactly once in the line. A nested-object value or a
             # same-named key inside a nested object would be silently
-            # corrupted; such rows are left UNCHANGED here (documented
-            # native-engine limitation — engine='pandas' implements full
-            # sjson.Set semantics).
-            nested_val = F.coalesce(
-                F.get_json_object(v, f"$.{a['key']}").rlike(r"^[\[{]"),
-                F.lit(False),
-            )
+            # corrupted; such rows are left UNCHANGED.
             ambiguous = F.size(F.split(v, f'"{key_re}"\\s*:')) > 2
             safe = exists & ~nested_val & ~ambiguous
             out = out.withColumn(
-                self.value_col,
+                vc,
                 F.when(safe, replaced).when(exists, v).otherwise(appended),
             )
-        return out
+        return rederive_variant(df, out, vc)
 
     def _apply_columns(self, df: DataFrame) -> DataFrame:
         """Native-columns strategy: dotted keys are struct fields; only
@@ -200,3 +214,17 @@ class JsonMutator:
                 ),
             )
         return df
+
+
+def _key_path(key: str) -> str:
+    """Bracket-quoted variant path of a top-level key (any text: ``-``,
+    spaces, ``.`` and ``'`` included); a key holding both quote kinds
+    has no such path."""
+    if "'" not in key:
+        return f"$['{key}']"
+    if '"' not in key:
+        return f'$["{key}"]'
+    raise ValueError(
+        f"engine='native' cannot address key {key!r} (both quote kinds); "
+        "use engine='pandas'"
+    )

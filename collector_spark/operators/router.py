@@ -26,7 +26,13 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from collector_spark.operators.cel import CelFilter, ColumnCompiler, SqlCompiler, parse_rule
+from collector_spark.operators.cel import (
+    ColumnCompiler,
+    SqlCompiler,
+    parse_rule,
+    variant_col,
+    with_variant,
+)
 
 
 @dataclass
@@ -56,6 +62,11 @@ class Router:
     with_routes()   → adds an array<string> ``routes`` column (matched sinks)
     split()         → {sink_name: filtered DataFrame view} of one parent
     sink_counts()   → DataFrame (sink, cnt) per-sink aggregate counts
+
+    In json mode the predicates read the value's VARIANT companion; each
+    of the three adds it first unless the frame carries it already, and
+    the frames with_routes() and split() return never carry it (a sink
+    writes the value text only).
     """
 
     def __init__(self, routes: list[Route], mode: str = "json", value_col: str = "value"):
@@ -79,19 +90,29 @@ class Router:
         self.value_col = value_col
 
     def _route_cols(self) -> list[tuple[str, Column]]:
+        """(name, match) per route; a json-mode match reads the frame's
+        VARIANT companion (see ``_parsed``)."""
         return [(r.name, r.column(self.mode, self.value_col)) for r in self.routes]
 
+    def _parsed(self, df: DataFrame) -> DataFrame:
+        if self.mode == "json" and any(r.predicate is not None for r in self.routes):
+            return with_variant(df, self.value_col)
+        return df
+
     def with_routes(self, df: DataFrame, out_col: str = "routes") -> DataFrame:
+        df = self._parsed(df)
         pairs = self._route_cols()
         arr = F.array_compact(
             F.array(*[F.when(c, F.lit(n)) for n, c in pairs])
         )
-        return df.withColumn(out_col, arr)
+        return df.withColumn(out_col, arr).drop(variant_col(self.value_col))
 
     def split(self, df: DataFrame) -> dict[str, DataFrame]:
         """N filtered views of ``df``, one per route (write each to its
         sink). Persist ``df`` first so the views share one computation."""
-        return {name: df.filter(col) for name, col in self._route_cols()}
+        df = self._parsed(df)
+        parsed = variant_col(self.value_col)
+        return {name: df.filter(col).drop(parsed) for name, col in self._route_cols()}
 
     def sink_counts(self, df: DataFrame) -> DataFrame:
         """Per-sink aggregate counts (the reference's per-output written
@@ -104,7 +125,7 @@ class Router:
             F.coalesce(F.sum(col.cast("long")), F.lit(0)).alias(name)
             for name, col in self._route_cols()
         ]
-        wide = df.agg(*aggs)
+        wide = self._parsed(df).agg(*aggs)
         # unpivot to (sink, cnt); names are backtick-quoted identifiers
         # (validated at __init__, but e.g. a reserved word still needs
         # quoting inside selectExpr)

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from collector_spark.checkpoint import BatchRecord, Manifest
+from collector_spark.operators.cel import rederive_variant
 from collector_spark.operators.router import Route, Router
 from collector_spark.registry import make_processor, make_sink
 from collector_spark.sources.sources import make_source
@@ -142,6 +143,16 @@ class Pipeline:
 
     # -- plan construction ---------------------------------------------------
 
+    def _fresh(self, stage, received: DataFrame, out: DataFrame) -> DataFrame:
+        """``out`` of ``stage``, whose VARIANT companion of the value, if
+        any, is the parse of the current value. A stage may rewrite the
+        value (any plugin may), so the companion is re-derived after it
+        unless its class sets ``keeps_variant = True`` (CelFilter,
+        JsonMutator)."""
+        if getattr(stage, "keeps_variant", False):
+            return out
+        return rederive_variant(received, out, self.config.value_col)
+
     def transform(
         self, df: DataFrame, observations: dict[str, Observation] | None = None
     ) -> DataFrame:
@@ -152,7 +163,7 @@ class Pipeline:
         per-processor Rotate() counts, manager.go:160) — no extra jobs.
         """
         for i, (kind, stage) in enumerate(self.stages):
-            df = stage.apply(df)
+            df = self._fresh(stage, df, stage.apply(df))
             if observations is not None:
                 name = f"stage_{i}_{kind}"
                 obs = Observation(name)
@@ -178,7 +189,8 @@ class Pipeline:
         df = df.withColumn("_orig", F.col(vc))
         ok_cols: list[tuple[str, str]] = []
         for i, (kind, stage) in enumerate(self.stages):
-            df, keep = stage.tag(df)
+            out, keep = stage.tag(df)
+            df = self._fresh(stage, df, out)
             name = f"stage_{i}_{kind}"
             ok_col = f"_ok_{i}"
             df = df.withColumn(

@@ -6,7 +6,10 @@ the scan stage) → CEL filter → JSON mutate (native add) → broadcast
 enrich (domain/tld lookups) → ONE aggregation pass whose per-category
 row carries the per-route match sums, so per-sink counts (sum over
 categories) and the category rollup come from a single map + one tiny
-shuffle.
+shuffle. Each JSON line is parsed twice, once per value version: the
+CEL filter and the json add read the parse of the extracted line, the
+route sums the parse of the mutated one, which the json add re-derives
+(``cel.rederive_variant``).
 
 Used by bench.py (the sweep and the ``scaling`` subcommand) and by
 tests/test_plans_scale.py (physical-plan assertions: exactly one

@@ -68,10 +68,28 @@ def test_pages_job_plan_shape(spark, pages_path):
     assert len(shuffles) <= 1, shuffles
     cols = scan_read_schema(df)
     assert set(cols) <= {"url", "html"}, cols
+    # each line is parsed once per value version (extracted, then after
+    # the json add), and no reader re-parses the text
+    assert plan.count("get_json_object") == 0
+    assert plan.count("jsonObjectKeys") == 0
+    assert plan.count("parseJson") == 2
+    # behind a Generate, never inside a Filter (no subexpression
+    # elimination there: N reads would be N parses)
+    assert not [l for l in plan.splitlines() if "Filter" in l and "parseJson" in l]
 
     counts_ok = {r["category"]: r for r in df.collect()}
     # one JSON status line per page survives the startswith+CEL filters
     assert sum(r["all"] for r in counts_ok.values()) == 256
+
+
+def test_route_agg_parses_each_line_once(spark, sf_dir):
+    """Three json-mode route predicates over one line read one parse."""
+    from __spark_entry__ import q_pipeline_parse_route_agg
+    from collector_spark.plans.inspect import executed_plan
+
+    plan = executed_plan(q_pipeline_parse_route_agg(spark, sf_dir))
+    assert plan.count("parseJson") == 1
+    assert plan.count("get_json_object") == 0
 
 
 def test_lsh_topk_plan_no_cartesian_and_keyed_joins(spark):
