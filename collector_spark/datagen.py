@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from collector_spark import oracle
+from collector_spark.session import driver_frame
 
 N_DOMAINS = 1000
 ZIPF_S = 1.2
@@ -236,9 +237,26 @@ def tld_map_rows() -> list[dict]:
     return [{"tld": t, "country": c} for t, c in TLD_COUNTRY.items()]
 
 
+def _strings(*names: str) -> T.StructType:
+    return T.StructType([T.StructField(n, T.StringType()) for n in names])
+
+
+#: dim schemas: alphabetical column order, all nullable, as dict-row
+#: inference gave them
+LOOKUP_SCHEMAS = {
+    "lang_map": _strings("lang", "lang_family", "lang_name"),
+    "domain_map": _strings("category", "domain").add("reputation", T.LongType()),
+    "tld_map": _strings("country", "tld"),
+}
+
+
 def lookup_dfs(spark: SparkSession, seed: int = 42) -> dict[str, DataFrame]:
+    rows = {
+        "lang_map": lang_map_rows(),
+        "domain_map": domain_map_rows(seed),
+        "tld_map": tld_map_rows(),
+    }
     return {
-        "lang_map": spark.createDataFrame(lang_map_rows()),
-        "domain_map": spark.createDataFrame(domain_map_rows(seed)),
-        "tld_map": spark.createDataFrame(tld_map_rows()),
+        name: driver_frame(spark, schema, *([r[c] for r in rows[name]] for c in schema.names))
+        for name, schema in LOOKUP_SCHEMAS.items()
     }

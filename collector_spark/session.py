@@ -8,8 +8,21 @@ Arrow, skew-join handling are cluster-relevant, not local-only hacks).
 from __future__ import annotations
 
 import os
+import re
+from typing import Sequence
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import StructType
+
+
+#: Arrow bytes up to which Spark plans a ``pyarrow.Table`` handed to it
+#: as a LocalRelation; a larger table becomes an RDD of Arrow batches. A
+#: LocalRelation Java-serializes its rows into every task that scans it
+#: and Catalyst walks its data while planning, so past a few MB it loses
+#: to the RDD (a 45 MB tick: ~1 s more per scan).
+LOCAL_RELATION_BYTES = 2 * 1024 * 1024
 
 
 def get_spark(
@@ -56,9 +69,58 @@ def get_spark(
         # duplicate kv keys: last one wins, like a dict insert loop
         # (reference parseKeyValue, kv.go:130-136)
         .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
+        # driver_frame's LocalRelation must stay a relation: this rule
+        # would evaluate the stages above it (syslog's Project/Filter) on
+        # the driver at optimization time, interpreted and on one thread
+        .config(
+            "spark.sql.optimizer.excludedRules",
+            "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation",
+        )
+        .config(
+            "spark.sql.execution.arrow.localRelationThreshold", str(LOCAL_RELATION_BYTES)
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+_SURROGATE = re.compile("[\ud800-\udfff]")
+
+
+def driver_frame(
+    spark: SparkSession, schema: StructType, *columns: Sequence
+) -> DataFrame:
+    """The one way driver-side values enter Spark: one sequence per field
+    of ``schema``, shipped as a ``pyarrow.Table``.
+
+    Up to ``LOCAL_RELATION_BYTES`` the frame plans as a LocalRelation (a
+    LocalTableScan), above it as an RDD of Arrow batches decoded in the
+    JVM; either way no job that scans it starts a Python worker.
+    ``createDataFrame(<list>)`` pickles the rows into a PythonRDD instead,
+    and every job over that pays a Python pass per partition. A lone
+    surrogate in a string becomes U+FFFD, as the list path's JVM
+    unpickler makes it (pyarrow refuses to encode one)."""
+
+    def array(values: Sequence, field):
+        typ = to_arrow_type(field.dataType)
+        try:
+            return pa.array(values, typ)
+        except UnicodeEncodeError:
+            return pa.array(
+                [_SURROGATE.sub("\ufffd", v) if isinstance(v, str) else v for v in values],
+                typ,
+            )
+
+    table = pa.Table.from_arrays(
+        [array(values, field) for values, field in zip(columns, schema.fields, strict=True)],
+        names=schema.names,
+    )
+    df = spark.createDataFrame(table, schema)
+    if table.nbytes > LOCAL_RELATION_BYTES:
+        # the RDD has one partition per 10k-row Arrow batch: a 45 MB tick
+        # would run its pandas-UDF stage as 39 small tasks, not one per core
+        df = df.coalesce(spark.sparkContext.defaultParallelism)
+    return df

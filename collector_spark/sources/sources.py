@@ -28,12 +28,22 @@ import re as _re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from collector_spark.session import driver_frame
 
 #: edge whitespace stripped from input lines — one explicit class used by
 #: BOTH the driver path and the spill path (str.strip() is broader than
 #: F.trim, so the same line used to yield different values depending on
 #: which path its tail took). \n is excluded: lines are already split.
 _WS_EDGE = _re.compile(r"^[ \t\x0B\f\r]+|[ \t\x0B\f\r]+$")
+
+LINES_SCHEMA = T.StructType([T.StructField("value", T.StringType())])
+
+
+def lines_frame(spark: SparkSession, lines: list[str]) -> DataFrame:
+    """A batch of driver-side lines as a ``value string`` frame."""
+    return driver_frame(spark, LINES_SCHEMA, lines)
 
 
 class FileSource:
@@ -44,7 +54,8 @@ class FileSource:
     when a file shrank (read.go:30-36).
 
     Memory contract: small tails (≤ ``max_driver_bytes``) are read
-    driver-side and parallelized (they're the common steady-state tick).
+    driver-side and handed to Spark as Arrow (``lines_frame``; they're
+    the common steady-state tick).
     LARGER tails never materialize on the driver — they are stream-copied
     in bounded chunks to a local spill file (the reference's own
     TmpWriter architecture, pkg/core/tmp_writer.go) and read back with
@@ -172,7 +183,7 @@ class FileSource:
                 state.pop(fpath, None)
                 self._pending_deletes.append((fpath, size))
         self._pending_spills.extend(spilled)
-        df = spark.createDataFrame([(l,) for l in lines] or [], "value: string")
+        df = lines_frame(spark, lines)
         if spilled:
             # same edge-whitespace class as the driver path (F.trim strips
             # spaces only — a tab-padded line would survive here but not
@@ -483,9 +494,9 @@ class HttpPollerSource:
                     break
         except Exception:
             # window failed → cursor unchanged, rows dropped (retry next tick)
-            df = spark.createDataFrame([], "value: string")
+            df = lines_frame(spark, [])
             return df, dict(state or {"last_ts": start})
-        df = spark.createDataFrame([(l,) for l in items] or [], "value: string")
+        df = lines_frame(spark, items)
         return df, {"last_ts": end}
 
 
@@ -538,7 +549,7 @@ class QueuePollerSource:
             if len(batch) < self.max_messages:
                 break
         self._pending_receipts.extend(receipts)
-        df = spark.createDataFrame([(l,) for l in lines] or [], "value: string")
+        df = lines_frame(spark, lines)
         new_state = dict(state or {})
         new_state["polled"] = new_state.get("polled", 0) + len(lines)
         return df, new_state

@@ -30,6 +30,7 @@ import threading
 from pyspark.sql import DataFrame, SparkSession
 
 from collector_spark import oracle
+from collector_spark.sources.sources import lines_frame
 
 FORMATS = ("automatic", "RFC3164", "RFC5424", "RFC6587", "raw")
 
@@ -262,7 +263,7 @@ class SyslogListenerSource:
             # to deliberately restart.
             self.start()
         msgs = self.drain()
-        df = spark.createDataFrame([(m,) for m in msgs] or [], "value: string")
+        df = lines_frame(spark, msgs)
         new_state = dict(state or {})
         new_state["received"] = new_state.get("received", 0) + len(msgs)
         return df, new_state

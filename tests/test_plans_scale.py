@@ -76,6 +76,9 @@ def test_pages_job_plan_shape(spark, pages_path):
     # behind a Generate, never inside a Filter (no subexpression
     # elimination there: N reads would be N parses)
     assert not [l for l in plan.splitlines() if "Filter" in l and "parseJson" in l]
+    # the lookup dims are Arrow local relations: no pickled PythonRDD, so
+    # no Python worker in any job of the plan
+    assert "Scan ExistingRDD" not in plan
 
     counts_ok = {r["category"]: r for r in df.collect()}
     # one JSON status line per page survives the startswith+CEL filters

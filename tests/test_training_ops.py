@@ -608,7 +608,7 @@ def test_profile_columns_exact_counts_one_pass(spark):
     assert out == {"id": (4, 0, 3), "s": (4, 1, 2)}
     # one scan: a single relation read in the plan (no per-column union)
     plan = executed_plan(profile_columns(df))
-    assert plan.count("Scan ExistingRDD") <= 1 or plan.count("LocalTableScan") <= 1
+    assert plan.count("Scan ExistingRDD") + plan.count("LocalTableScan") == 1
 
 
 def test_funnel_counts_ordered_steps(spark):
