@@ -20,11 +20,24 @@ This package re-expresses the same semantics Spark-first:
 
 __version__ = "0.1.0"
 
-from collector_spark.session import get_spark  # noqa: F401
-from collector_spark.collector import Collector  # noqa: F401
-from collector_spark.pipeline import (  # noqa: F401
-    Pipeline,
-    PipelineConfig,
-    SinkSpec,
-    load_instances,
-)
+import importlib
+
+# Exported lazily (PEP 562): importing the package must not import
+# pyspark, because the worker daemon entry module
+# (collector_spark.python_daemon) cleans the path pyspark loads from.
+_EXPORTS = {
+    "get_spark": "collector_spark.session",
+    "Collector": "collector_spark.collector",
+    "Pipeline": "collector_spark.pipeline",
+    "PipelineConfig": "collector_spark.pipeline",
+    "SinkSpec": "collector_spark.pipeline",
+    "load_instances": "collector_spark.pipeline",
+}
+
+
+def __getattr__(name: str):
+    if name not in _EXPORTS:
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    value = getattr(importlib.import_module(_EXPORTS[name]), name)
+    globals()[name] = value
+    return value

@@ -24,6 +24,11 @@ from pyspark.sql.types import StructType
 #: to the RDD (a 45 MB tick: ~1 s more per scan).
 LOCAL_RELATION_BYTES = 2 * 1024 * 1024
 
+#: Local masters start their Python worker daemon through this module:
+#: it takes Spark's pyspark.zip and jars off the workers' path so they
+#: import the installed pyspark (see its docstring).
+DAEMON_MODULE = "collector_spark.python_daemon"
+
 
 def get_spark(
     app_name: str = "collector_spark",
@@ -31,14 +36,28 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a SparkSession.
+    """Build (or reuse) a SparkSession with ``spark_conf``'s settings."""
+    master = master or os.environ.get("SPARK_GRAFT_MASTER") or "local[*]"
+    builder = SparkSession.builder.master(master).appName(app_name)
+    for k, v in spark_conf(master, shuffle_partitions, extra_conf).items():
+        builder = builder.config(k, v)
+    spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    return spark
+
+
+def spark_conf(
+    master: str,
+    shuffle_partitions: int | None = None,
+    extra_conf: dict[str, str] | None = None,
+) -> dict[str, str]:
+    """The session settings for ``master``; ``extra_conf`` wins.
 
     Defaults follow the scale playbook: AQE on (runtime coalesce + skew
     join), Arrow on (all custom per-row logic is pandas-UDF based), UTC
     session timezone, shuffle partitions sized to cores not the 200
     default.
     """
-    master = master or os.environ.get("SPARK_GRAFT_MASTER") or "local[*]"
     cores = os.cpu_count() or 8
     if shuffle_partitions is None:
         if master.startswith("local[") and master[6:-1].isdigit():
@@ -46,45 +65,43 @@ def get_spark(
         else:
             shuffle_partitions = max(cores, 8)
 
-    builder = (
-        SparkSession.builder.master(master)
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+    conf = {
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+        "spark.ui.enabled": "false",
+        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
         # throughput batch engine: ParallelGC beats G1 decisively on
         # allocation-heavy string/regex work at high thread counts
         # (measured 4-10x on this class of hardware); pause times are
         # irrelevant for batch. Applied to BOTH driver (== executor in
         # local mode) and executors (cluster submit).
-        .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")
-        .config("spark.executor.extraJavaOptions", "-XX:+UseParallelGC")
+        "spark.driver.extraJavaOptions": "-XX:+UseParallelGC",
+        "spark.executor.extraJavaOptions": "-XX:+UseParallelGC",
         # duplicate kv keys: last one wins, like a dict insert loop
         # (reference parseKeyValue, kv.go:130-136)
-        .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
+        "spark.sql.mapKeyDedupPolicy": "LAST_WIN",
         # driver_frame's LocalRelation must stay a relation: this rule
         # would evaluate the stages above it (syslog's Project/Filter) on
         # the driver at optimization time, interpreted and on one thread
-        .config(
-            "spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation",
+        "spark.sql.optimizer.excludedRules": (
+            "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation"
+        ),
+        "spark.sql.execution.arrow.localRelationThreshold": str(LOCAL_RELATION_BYTES),
+    }
+    if master == "local" or master.startswith("local["):
+        # the package root goes on the workers' path, so that the daemon
+        # module (and every UDF) imports from any working directory
+        conf["spark.python.daemon.module"] = DAEMON_MODULE
+        conf["spark.executorEnv.PYTHONPATH"] = os.path.dirname(
+            os.path.dirname(os.path.abspath(__file__))
         )
-        .config(
-            "spark.sql.execution.arrow.localRelationThreshold", str(LOCAL_RELATION_BYTES)
-        )
-    )
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    return spark
+    return {**conf, **(extra_conf or {})}
 
 
 _SURROGATE = re.compile("[\ud800-\udfff]")
