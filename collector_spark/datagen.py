@@ -250,7 +250,10 @@ LOOKUP_SCHEMAS = {
 }
 
 
-def lookup_dfs(spark: SparkSession, seed: int = 42) -> dict[str, DataFrame]:
+def lookup_dfs(
+    spark: SparkSession, seed: int = 42, names: tuple[str, ...] | None = None
+) -> dict[str, DataFrame]:
+    """The lookup dims by name: all of them, or only ``names``."""
     rows = {
         "lang_map": lang_map_rows(),
         "domain_map": domain_map_rows(seed),
@@ -259,4 +262,5 @@ def lookup_dfs(spark: SparkSession, seed: int = 42) -> dict[str, DataFrame]:
     return {
         name: driver_frame(spark, schema, *([r[c] for r in rows[name]] for c in schema.names))
         for name, schema in LOOKUP_SCHEMAS.items()
+        if names is None or name in names
     }

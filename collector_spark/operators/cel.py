@@ -61,6 +61,7 @@ Three backends off one AST:
 
 from __future__ import annotations
 
+import functools
 import json
 import operator
 import re
@@ -927,11 +928,35 @@ def with_variant(df: DataFrame, value_col: str = "value") -> DataFrame:
     FilterExec does no subexpression elimination, and Catalyst pushes a
     filter through a projected alias by inlining it, so N reads of a
     projected parse inside one filter would parse the line N times."""
-    name = variant_col(value_col)
-    if name in df.columns:
+    if variant_col(value_col) in df.columns:
         return df
-    parsed = F.try_parse_json(F.col(value_col)).alias(name)
-    return df.select("*", F.inline(F.array(F.struct(parsed))))
+    return _add_variant(df, value_col)
+
+
+@functools.cache
+def _variant_generator(value_col: str) -> Column:
+    """The Generate that adds ``value_col``'s companion. A Column is
+    plan-free (each use gets fresh expression ids), so one per value
+    column serves every frame; built on first use, since building needs
+    a live session."""
+    parsed = F.try_parse_json(F.col(value_col)).alias(variant_col(value_col))
+    return F.inline(F.array(F.struct(parsed)))
+
+
+def _add_variant(df: DataFrame, value_col: str, keep: list[str] | None = None) -> DataFrame:
+    """``df``'s columns ``keep`` (all by default) plus a fresh companion."""
+    gen = _variant_generator(value_col)
+    if keep is None:
+        return df.select("*", gen)
+    return df.select(*(F.col("`" + c.replace("`", "``") + "`") for c in keep), gen)
+
+
+def reparse_variant(df: DataFrame, value_col: str = "value") -> DataFrame:
+    """``df`` with its companion replaced by the parse of the current
+    ``value_col``, in one projection (not a drop and a select: each is
+    one more eagerly analysed frame)."""
+    name = variant_col(value_col)
+    return _add_variant(df, value_col, [c for c in df.columns if c != name])
 
 
 def rederive_variant(received: DataFrame, out: DataFrame, value_col: str = "value") -> DataFrame:
@@ -939,10 +964,12 @@ def rederive_variant(received: DataFrame, out: DataFrame, value_col: str = "valu
     the companion parse of the old value is stale, so drop it, and parse
     the new value when the stage received a companion (a downstream
     reader expects one). ``Pipeline`` calls this after every stage that
-    does not set ``keeps_variant = True``."""
+    does not set ``keeps_variant = True``. Without a companion on either
+    frame it returns ``out`` itself."""
     name = variant_col(value_col)
-    out = out.drop(name)
-    return with_variant(out, value_col) if name in received.columns else out
+    if name in received.columns:
+        return reparse_variant(out, value_col)
+    return out.drop(name) if name in out.columns else out
 
 
 # ---------------------------------------------------------------------------
@@ -1815,37 +1842,53 @@ class CelFilter:
         self.mode = mode
         self.value_col = value_col
         self.asts = [parse_rule(r) for r in rules]  # config-time validation
-        self._compiler = ColumnCompiler(mode=mode, value_col=value_col)
+
+    @functools.cached_property
+    def _predicate(self) -> Column:
+        compiler = ColumnCompiler(mode=self.mode, value_col=self.value_col)
+        pred = None
+        for ast in self.asts:
+            col = F.coalesce(compiler.compile(ast).cast("boolean"), F.lit(False))
+            pred = col if pred is None else (pred | col)
+        return pred
 
     def predicate(self) -> Column:
         """OR over all rules; eval errors → non-match handled by null
-        semantics + coalesce(False)."""
-        pred = None
-        for ast in self.asts:
-            col = F.coalesce(
-                self._compiler.compile(ast).cast("boolean"), F.lit(False)
-            )
-            pred = col if pred is None else (pred | col)
-        return pred
+        semantics + coalesce(False). Compiled on first use, then reused."""
+        return self._predicate
+
+    @functools.cached_property
+    def _tag_columns(self) -> tuple[dict[str, Column], Column]:
+        pred = self._predicate
+        keep = F.coalesce(pred if self.action == "accept" else ~pred, F.lit(False))
+        if self.mode != "json":
+            return {}, keep
+        # empty / non-JSON lines are non-matches (cel.go:56-70): their
+        # parse is NULL
+        vc = self.value_col
+        valid = F.col(variant_col(vc)).isNotNull()
+        return {vc: F.trim(F.col(vc))}, valid & keep
 
     def apply(self, df: DataFrame) -> DataFrame:
         df, keep = self.tag(df)
         return df.filter(keep)
 
+    def tag_columns(self, df: DataFrame) -> tuple[DataFrame, dict[str, Column], Column]:
+        """``tag`` as (frame, rewrites, keep): ``tag(df)`` is
+        ``(frame.withColumns(rewrites), keep)``, so ``Pipeline`` can add
+        its own columns to the same projection. In json mode the frame
+        carries the VARIANT companion; trimming spaces does not change
+        the parse, so it is parsed before the trim and stays fresh."""
+        if self.mode == "json":
+            df = with_variant(df, self.value_col)
+        rewrites, keep = self._tag_columns
+        return df, rewrites, keep
+
     def tag(self, df: DataFrame) -> tuple[DataFrame, Column]:
         """Non-dropping variant: returns (df, keep boolean) for the
         quarantine/dead-letter path (Pipeline.run_batch)."""
-        valid = F.lit(True)
-        if self.mode == "json":
-            # empty / non-JSON lines are non-matches (cel.go:56-70): their
-            # parse is NULL. Trimming spaces does not change the parse, so
-            # a received companion stays fresh.
-            vc = self.value_col
-            df = with_variant(df.withColumn(vc, F.trim(F.col(vc))), vc)
-            valid = F.col(variant_col(vc)).isNotNull()
-        pred = self.predicate()
-        keep = pred if self.action == "accept" else ~pred
-        return df, valid & F.coalesce(keep, F.lit(False))
+        df, rewrites, keep = self.tag_columns(df)
+        return (df.withColumns(rewrites) if rewrites else df), keep
 
     def sql_predicate(self) -> str:
         """DuckDB boolean expression equivalent to predicate()."""

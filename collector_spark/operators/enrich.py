@@ -18,6 +18,8 @@ Scale notes:
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -32,6 +34,13 @@ def url_domain(col: Column) -> Column:
 def url_tld(col: Column) -> Column:
     """Last dot-label of the host."""
     return F.element_at(F.split(url_domain(col), r"\."), -1)
+
+
+@functools.cache
+def _url_parts() -> dict[str, Column]:
+    """domain and tld of ``url``, compiled once."""
+    url = F.col("url")
+    return {"domain": url_domain(url), "tld": url_tld(url)}
 
 
 DOMAIN_SQL = "regexp_extract({col}, '^[a-z]+://([^/:?#]+)', 1)"
@@ -60,10 +69,7 @@ def enrich_pages(df: DataFrame, lookups: dict[str, DataFrame]) -> DataFrame:
     All three joins are broadcast; Catalyst collapses them into one stage
     with no shuffle of the fact table.
     """
-    out = (
-        df.withColumn("domain", url_domain(F.col("url")))
-        .withColumn("tld", url_tld(F.col("url")))
-    )
+    out = df.withColumns(_url_parts())
     if "domain_map" in lookups:
         out = out.join(F.broadcast(lookups["domain_map"]), on="domain", how="left")
     if "tld_map" in lookups:

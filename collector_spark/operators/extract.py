@@ -18,6 +18,8 @@ Scale notes:
 
 from __future__ import annotations
 
+import functools
+
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -88,17 +90,29 @@ def native_extract_text_col(html_col: Column) -> Column:
 def native_log_lines(df: DataFrame, html_col: str = "html", keep_cols: tuple[str, ...] = ("url",)) -> DataFrame:
     """extract_log_lines as native expressions: pre-block regex → explode
     → per-line trim/drop-empty/unescape. Matches oracle.extract_log_lines
-    per line."""
-    cols = [F.col(c) for c in keep_cols]
-    s = F.col(html_col).cast("string")
-    blocks = F.regexp_extract_all(s, F.lit(_PRE_RE_JAVA), 1)
+    per line. (Catalyst pushes the drop-empty filter below the trim
+    projection by inlining it, so filtering the trimmed ``_raw`` first
+    plans the same.)"""
+    cols, blocks, lines, non_empty, value = _log_line_columns(html_col, tuple(keep_cols))
     return (
-        df.select(*cols, F.explode(blocks).alias("_block"))
-        .select(*cols, F.explode(F.split(F.col("_block"), "\n")).alias("_raw"))
-        .withColumn("value", F.trim(F.col("_raw")))
-        .filter(F.length("value") > 0)
-        .withColumn("value", unescape_entities_col(F.col("value")))
-        .drop("_raw", "_block")
+        df.select(*cols, blocks)
+        .select(*cols, lines)
+        .filter(non_empty)
+        .select(*cols, value)
+    )
+
+
+@functools.cache
+def _log_line_columns(html_col: str, keep_cols: tuple[str, ...]) -> tuple:
+    """native_log_lines' Columns, compiled once per (html_col, keep_cols)."""
+    blocks = F.regexp_extract_all(F.col(html_col).cast("string"), F.lit(_PRE_RE_JAVA), 1)
+    trimmed = F.trim(F.col("_raw"))
+    return (
+        [F.col(c) for c in keep_cols],
+        F.explode(blocks).alias("_block"),
+        F.explode(F.split(F.col("_block"), "\n")).alias("_raw"),
+        F.length(trimmed) > 0,
+        unescape_entities_col(trimmed).alias("value"),
     )
 
 

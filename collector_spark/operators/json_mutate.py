@@ -33,12 +33,17 @@ import json
 import re
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from collector_spark import oracle
-from collector_spark.operators.cel import rederive_variant, variant_col, with_variant
+from collector_spark.operators.cel import (
+    rederive_variant,
+    reparse_variant,
+    variant_col,
+    with_variant,
+)
 
 
 def make_mutate_udf(add: list[dict], remove: list[dict], replace: list[dict]):
@@ -122,44 +127,42 @@ class JsonMutator:
         df, keep = self.tag(df)
         return df.filter(keep)
 
-    def tag(self, df: DataFrame) -> tuple[DataFrame, "F.Column"]:
+    @functools.cached_property
+    def _tag_columns(self) -> tuple[Column, Column]:
+        """(rewrite, keep) of the oracle-UDF engine, built once: the
+        pandas UDF and its JVM function are made on first use only."""
+        udf = make_mutate_udf(self.add, self.remove, self.replace)
+        return udf(F.col(self.value_col)), F.col(self.value_col).isNotNull()
+
+    def tag(self, df: DataFrame) -> tuple[DataFrame, Column]:
         """Non-dropping variant for the quarantine path (always the
         oracle-UDF engine — the native fast path interleaves its own
         validity filter with string surgery)."""
         if self.mode == "columns":
             return self._apply_columns(df), F.lit(True)
-        udf = make_mutate_udf(self.add, self.remove, self.replace)
-        out = df.withColumn(self.value_col, udf(F.col(self.value_col)))
+        rewrite, keep = self._tag_columns
+        out = df.withColumn(self.value_col, rewrite)
         # non-JSON → None → quarantined (json.go:88-99)
-        return rederive_variant(df, out, self.value_col), F.col(self.value_col).isNotNull()
+        return rederive_variant(df, out, self.value_col), keep
 
-    def _apply_native(self, df: DataFrame) -> DataFrame:
-        """Top-level add on compact JSON object lines as pure Catalyst
-        string surgery (sjson appends before the closing brace exactly
-        like this). Only objects survive (non-JSON / non-object lines
-        are dropped, matching the reference). A key already present is
-        overwritten in place when its value is a scalar and the key
-        text occurs once in the line; otherwise the row is left
-        unchanged (documented native-engine limitation — engine='pandas'
-        implements full sjson.Set semantics)."""
+    @functools.cached_property
+    def _native_columns(self) -> tuple[Column, Column, list[tuple[bool, Column]]]:
+        """(trim, object-line test, [(re-parse first?, rewrite)] per add)
+        of the native engine, compiled once."""
         vc = self.value_col
-        # trimming spaces does not change the parse, so a received
-        # companion stays fresh for the reads below
-        out = with_variant(df.withColumn(vc, F.trim(F.col(vc))), vc)
         parsed = F.col(variant_col(vc))
-        out = out.filter(parsed.isNotNull() & F.col(vc).startswith("{"))
+        v = F.col(vc)
+        adds = []
         seen: set[str] = set()
         for a in self.add:
             key = a["key"]
-            if key in seen:  # a repeated key reads the value an earlier add wrote
-                out = with_variant(out.drop(variant_col(vc)), vc)
+            repeat = key in seen  # reads the value an earlier add wrote
             seen.add(key)
             frag = json.dumps({key: a["value"]}, separators=(",", ":"))[1:-1]
             # regex-ESCAPED form of the json-escaped key: a key like
             # 'a+b' or 'f(x' must match literally, not as regex syntax
             key_re = re.escape(json.dumps(key)[1:-1])
             val_json = json.dumps(a["value"], separators=(",", ":"))
-            v = F.col(vc)
             appended = F.when(
                 F.regexp_like(v, F.lit(r"^\{\s*\}$")),
                 F.concat(F.lit("{"), F.lit(frag), F.lit("}")),
@@ -189,10 +192,28 @@ class JsonMutator:
             # corrupted; such rows are left UNCHANGED.
             ambiguous = F.size(F.split(v, f'"{key_re}"\\s*:')) > 2
             safe = exists & ~nested_val & ~ambiguous
-            out = out.withColumn(
-                vc,
-                F.when(safe, replaced).when(exists, v).otherwise(appended),
-            )
+            adds.append((repeat, F.when(safe, replaced).when(exists, v).otherwise(appended)))
+        return F.trim(v), parsed.isNotNull() & v.startswith("{"), adds
+
+    def _apply_native(self, df: DataFrame) -> DataFrame:
+        """Top-level add on compact JSON object lines as pure Catalyst
+        string surgery (sjson appends before the closing brace exactly
+        like this). Only objects survive (non-JSON / non-object lines
+        are dropped, matching the reference). A key already present is
+        overwritten in place when its value is a scalar and the key
+        text occurs once in the line; otherwise the row is left
+        unchanged (documented native-engine limitation — engine='pandas'
+        implements full sjson.Set semantics)."""
+        vc = self.value_col
+        trim, is_object, adds = self._native_columns
+        # trimming spaces does not change the parse, so a received
+        # companion stays fresh for the reads below
+        out = with_variant(df.withColumn(vc, trim), vc)
+        out = out.filter(is_object)
+        for repeat, rewrite in adds:
+            if repeat:
+                out = reparse_variant(out, vc)
+            out = out.withColumn(vc, rewrite)
         return rederive_variant(df, out, vc)
 
     def _apply_columns(self, df: DataFrame) -> DataFrame:

@@ -19,6 +19,8 @@ per-row Java regex chains do not vectorize.
 
 from __future__ import annotations
 
+from functools import cached_property
+
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -112,23 +114,31 @@ class KvParser:
         self.value_col = value_col
         self.as_json = as_json
 
+    @cached_property
+    def _tag_columns(self) -> tuple[dict[str, Column], Column]:
+        col = F.col(self.value_col)
+        if self.as_json:
+            udf = kv_json_udf if self.type == "raw" else cef_json_udf
+            return {self.value_col: udf(col)}, F.col(self.value_col).isNotNull()
+        if self.type == "raw":
+            return {"parsed": kv_parse_udf(col)}, F.col("parsed").isNotNull()
+        # all-NULL struct marks a parse failure (version is never null
+        # on success — it is validated as 'CEF:<v>' or an integer)
+        return {"parsed": cef_parse_udf(col)}, F.col("parsed.version").isNotNull()
+
     def apply(self, df: DataFrame) -> DataFrame:
         df, keep = self.tag(df)
         return df.filter(keep)
+
+    def tag_columns(self, df: DataFrame) -> tuple[DataFrame, dict[str, Column], Column]:
+        """``tag`` as (frame, rewrites, keep): ``tag(df)`` is
+        ``(frame.withColumns(rewrites), keep)``. Compiled once."""
+        rewrites, keep = self._tag_columns
+        return df, rewrites, keep
 
     def tag(self, df: DataFrame) -> tuple[DataFrame, Column]:
         """Non-dropping variant for the quarantine path: adds the parse
         output and returns the parse-success boolean instead of
         filtering."""
-        col = F.col(self.value_col)
-        if self.as_json:
-            udf = kv_json_udf if self.type == "raw" else cef_json_udf
-            out = df.withColumn(self.value_col, udf(col))
-            return out, F.col(self.value_col).isNotNull()
-        if self.type == "raw":
-            out = df.withColumn("parsed", kv_parse_udf(col))
-            return out, F.col("parsed").isNotNull()
-        out = df.withColumn("parsed", cef_parse_udf(col))
-        # all-NULL struct marks a parse failure (version is never null
-        # on success — it is validated as 'CEF:<v>' or an integer)
-        return out, F.col("parsed.version").isNotNull()
+        df, rewrites, keep = self.tag_columns(df)
+        return df.withColumns(rewrites), keep

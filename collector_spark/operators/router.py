@@ -21,7 +21,8 @@ Physical strategy (scale):
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass
+from functools import cached_property
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -89,10 +90,15 @@ class Router:
         self.mode = mode
         self.value_col = value_col
 
+    @cached_property
+    def _compiled(self) -> list[tuple[str, Column]]:
+        return [(r.name, r.column(self.mode, self.value_col)) for r in self.routes]
+
     def _route_cols(self) -> list[tuple[str, Column]]:
         """(name, match) per route; a json-mode match reads the frame's
-        VARIANT companion (see ``_parsed``)."""
-        return [(r.name, r.column(self.mode, self.value_col)) for r in self.routes]
+        VARIANT companion (see ``_parsed``). Compiled on first use, then
+        reused."""
+        return self._compiled
 
     def _parsed(self, df: DataFrame) -> DataFrame:
         if self.mode == "json" and any(r.predicate is not None for r in self.routes):
@@ -112,7 +118,13 @@ class Router:
         sink). Persist ``df`` first so the views share one computation."""
         df = self._parsed(df)
         parsed = variant_col(self.value_col)
-        return {name: df.filter(col).drop(parsed) for name, col in self._route_cols()}
+        carries_parsed = parsed in df.columns
+        views = {}
+        for r, (name, col) in zip(self.routes, self._route_cols()):
+            # a route without a predicate views the parent unfiltered
+            view = df if r.predicate is None else df.filter(col)
+            views[name] = view.drop(parsed) if carries_parsed else view
+        return views
 
     def sink_counts(self, df: DataFrame) -> DataFrame:
         """Per-sink aggregate counts (the reference's per-output written

@@ -12,6 +12,8 @@ byte-level parity on the reference's fixture vectors
 
 from __future__ import annotations
 
+from functools import cached_property
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -58,23 +60,33 @@ class SyslogParser:
         self.type = type
         self.value_col = value_col
 
+    @cached_property
+    def _columns(self) -> tuple[Column, Column, Column | None, Column]:
+        """(non-empty, rewrite, parsed, keep), compiled once; ``parsed``
+        is None in raw mode. Each test reads the value of the frame it
+        is evaluated on: ``apply`` tests non-empty before the rewrite,
+        while ``keep`` is evaluated on the frame ``tag`` returns."""
+        trimmed = F.trim(F.col(self.value_col))
+        nonempty = F.length(trimmed) > 0
+        parsed = None if self.type == "raw" else F.col(self.value_col).isNotNull()
+        keep = nonempty if parsed is None else nonempty & parsed
+        return nonempty, _MODES[self.type](trimmed), parsed, keep
+
     def apply(self, df: DataFrame) -> DataFrame:
-        col = F.trim(F.col(self.value_col))
-        df = df.filter(F.length(col) > 0)
-        out = df.withColumn(self.value_col, _MODES[self.type](col))
-        if self.type != "raw":
-            out = out.filter(F.col(self.value_col).isNotNull())
-        return out
+        nonempty, rewrite, parsed, _ = self._columns
+        out = df.filter(nonempty).withColumn(self.value_col, rewrite)
+        return out if parsed is None else out.filter(parsed)
+
+    def tag_columns(self, df: DataFrame) -> tuple[DataFrame, dict[str, Column], Column]:
+        """``tag`` as (frame, rewrites, keep): ``tag(df)`` is
+        ``(frame.withColumns(rewrites), keep)``."""
+        _, rewrite, _, keep = self._columns
+        return df, {self.value_col: rewrite}, keep
 
     def tag(self, df: DataFrame) -> tuple[DataFrame, Column]:
         """Non-dropping variant for the quarantine path."""
-        trimmed = F.trim(F.col(self.value_col))
-        nonempty = F.length(trimmed) > 0
-        out = df.withColumn(self.value_col, _MODES[self.type](trimmed))
-        keep = nonempty
-        if self.type != "raw":
-            keep = keep & F.col(self.value_col).isNotNull()
-        return out, keep
+        df, rewrites, keep = self.tag_columns(df)
+        return df.withColumns(rewrites), keep
 
     def sql_expr(self, col: str = "value") -> str:
         """Equivalent DuckDB expression for the oracle gate."""

@@ -11,8 +11,9 @@ Spark mapping:
   columns pruned, codegen fused);
 - fan-out = one persisted DataFrame + N filtered sink writes (the router);
 - per-stage surviving counts (the reference's per-processor Rotate()
-  counts, manager.go:160) come from ``df.observe`` metrics — measured on
-  the SAME pass, no extra jobs;
+  counts, manager.go:160) and the kept rows per partition id (the
+  lineage) come from ``df.observe`` metrics on the parent — measured on
+  the SAME pass, no extra jobs: a batch runs one Spark job per sink;
 - commit = manifest record written AFTER all sinks (at-least-once with
   idempotent replay; see collector_spark.checkpoint).
 """
@@ -21,11 +22,11 @@ from __future__ import annotations
 
 import json
 import os
-import uuid
 from dataclasses import dataclass, field
+from functools import cached_property
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from collector_spark.checkpoint import BatchRecord, Manifest
@@ -86,6 +87,42 @@ class PipelineConfig:
         return cfg
 
 
+# the parent's helper columns (dropped before any sink) and the lineage
+# metrics; a batch with more partitions than the histogram has bins
+# would get merged bins, which _partition_counts rejects
+_ORIG, _FAIL, _PID = "_orig", "_fail_stage", "_pid"
+_LINEAGE, _KEPT = "_partitions", "_kept"
+_MAX_PARTITIONS = 1 << 16
+
+
+def _observed(obs: Observation) -> dict:
+    """``obs.get``, or no metrics when Spark completed the Observation
+    with an empty row: it does when the first action's plan over an
+    empty parent was optimized down to an empty relation (a ``groupBy``
+    or ``mapInArrow`` over an empty batch), and pyspark cannot convert
+    that row. No metric then means no row."""
+    if obs._jo is not None and obs._jo.getRow().length() == 0:
+        return {}
+    return obs.get
+
+
+def _partition_counts(observed: dict) -> dict[str, int]:
+    """Kept rows per partition id (``str(pid)``; partitions keeping no
+    row are absent) from the parent's lineage metrics. Each id lives in
+    one task, so the histogram's bins are exact counts; their sum must
+    be the kept-row count."""
+    counts: dict[str, int] = {}
+    for b in observed.get(_LINEAGE) or []:
+        pid = str(int(b.x))
+        counts[pid] = counts.get(pid, 0) + int(b.y)
+    kept = observed.get(_KEPT, 0)
+    if sum(counts.values()) != kept:
+        raise RuntimeError(
+            f"partition lineage counts {sum(counts.values())} rows, the parent kept {kept}"
+        )
+    return counts
+
+
 class Pipeline:
     """Composable pipeline; library-embedding style mirrors
     pkg/collector/collector.go:30-64 (collector.New → Register* → Start).
@@ -140,8 +177,69 @@ class Pipeline:
         self.manifest = (
             Manifest(state_dir, config.instance_id) if state_dir else None
         )
+        self._failure_cols: dict[int, tuple[Column, Column]] = {}
 
     # -- plan construction ---------------------------------------------------
+    #
+    # Every config-only Column below is built on first use and reused by
+    # every batch (a Column is plan-free: each use gets fresh expression
+    # ids); only the frames and the Observations are new per batch.
+
+    @cached_property
+    def _stage_names(self) -> list[str]:
+        return [f"stage_{i}_{kind}" for i, (kind, _) in enumerate(self.stages)]
+
+    @cached_property
+    def _stage_counts(self) -> list[Column]:
+        return [F.count(F.lit(1)).alias(name) for name in self._stage_names]
+
+    @cached_property
+    def _lineage(self) -> tuple[Column, list[Column]]:
+        """(partition-id projection, plain-mode lineage aggregates). The
+        id is projected, not aggregated directly: the expression is
+        nondeterministic, which an observed aggregate may not hold."""
+        pid = F.spark_partition_id().alias(_PID)
+        return pid, [
+            F.histogram_numeric(F.col(_PID), F.lit(_MAX_PARTITIONS)).alias(_LINEAGE),
+            F.count(F.lit(1)).alias(_KEPT),
+        ]
+
+    @cached_property
+    def _tagged_columns(self) -> dict:
+        """The quarantine path's config-only Columns."""
+        vc = self.config.value_col
+        fail = F.col(_FAIL)
+        kept = fail.isNull()
+        names = self._stage_names
+        # a row passed stage i when no stage up to i is its first failure
+        counts = [
+            F.count(F.when(kept | ~fail.isin(names[: i + 1]), 1)).alias(name)
+            for i, name in enumerate(names)
+        ]
+        return {
+            "start": {_ORIG: F.col(vc), _FAIL: F.lit(None).cast("string")},
+            "kept": kept,
+            "failed": fail.isNotNull(),
+            "dead_letter": [F.col(_ORIG).alias(vc), fail.alias("fail_stage")],
+            "metrics": counts + [
+                F.histogram_numeric(F.when(kept, F.col(_PID)), F.lit(_MAX_PARTITIONS)).alias(_LINEAGE),
+                F.count(F.when(kept, 1)).alias(_KEPT),
+            ],
+        }
+
+    def _first_failure(self, i: int, keep: Column) -> Column:
+        """``_fail_stage`` after stage ``i``, whose rows pass where
+        ``keep`` holds: the earlier failure, else this stage's name.
+        Reused while the stage hands back the same ``keep`` (the
+        built-in stages compile it once)."""
+        cached = self._failure_cols.get(i)
+        if cached is None or cached[0] is not keep:
+            failed = F.when(
+                ~F.coalesce(keep.cast("boolean"), F.lit(False)),
+                F.lit(self._stage_names[i]),
+            )
+            self._failure_cols[i] = cached = (keep, F.coalesce(F.col(_FAIL), failed))
+        return cached[1]
 
     def _fresh(self, stage, received: DataFrame, out: DataFrame) -> DataFrame:
         """``out`` of ``stage``, whose VARIANT companion of the value, if
@@ -165,9 +263,9 @@ class Pipeline:
         for i, (kind, stage) in enumerate(self.stages):
             df = self._fresh(stage, df, stage.apply(df))
             if observations is not None:
-                name = f"stage_{i}_{kind}"
+                name = self._stage_names[i]
                 obs = Observation(name)
-                df = df.observe(obs, F.count(F.lit(1)).alias(name))
+                df = df.observe(obs, self._stage_counts[i])
                 observations[name] = obs
         return df
 
@@ -182,38 +280,35 @@ class Pipeline:
         plus ``fail_stage`` — the dead-letter record replacing the
         reference's silent drops (manager.go:166-169).
 
-        ``observations`` is filled as in transform(): one Observation on
-        the parent counts, per stage, the rows that passed it and every
-        stage before it, so the counts equal the filtering path's."""
-        vc = self.config.value_col
-        df = df.withColumn("_orig", F.col(vc))
-        ok_cols: list[tuple[str, str]] = []
-        for i, (kind, stage) in enumerate(self.stages):
-            out, keep = stage.tag(df)
+        ``observations`` is filled as in transform(), plus the partition
+        lineage: one Observation on the parent counts, per stage, the
+        rows that passed it and every stage before it, so the counts
+        equal the filtering path's, and holds the kept rows per
+        partition id (``_LINEAGE``).
+
+        Each stage's tagging is one projection when the stage has
+        ``tag_columns`` (the built-ins do); the parent's own per-stage
+        columns (the original value, then the first failure so far) ride
+        in that projection instead of adding one each."""
+        cols = self._tagged_columns
+        pending = cols["start"]
+        for i, (_, stage) in enumerate(self.stages):
+            split = getattr(stage, "tag_columns", None)
+            if split is not None:
+                frame, rewrites, keep = split(df)
+                out = frame.withColumns({**pending, **rewrites})
+            else:
+                out, keep = stage.tag(df.withColumns(pending))
             df = self._fresh(stage, df, out)
-            name = f"stage_{i}_{kind}"
-            ok_col = f"_ok_{i}"
-            df = df.withColumn(
-                ok_col, F.coalesce(keep.cast("boolean"), F.lit(False))
-            )
-            ok_cols.append((ok_col, name))
-        fail = F.lit(None).cast("string")
-        for ok_col, name in reversed(ok_cols):
-            fail = F.when(~F.col(ok_col), F.lit(name)).otherwise(fail)
-        tagged = df.withColumn("_fail_stage", fail)
-        if observations is not None and ok_cols:
+            pending = {_FAIL: self._first_failure(i, keep)}
+        tagged = df.withColumns({**pending, _PID: self._lineage[0]})
+        if observations is not None:
             obs = Observation("stages")
-            passed, counts = F.lit(True), []
-            for ok_col, name in ok_cols:
-                passed = passed & F.col(ok_col)
-                counts.append(F.count(F.when(passed, 1)).alias(name))
+            tagged = tagged.observe(obs, *cols["metrics"])
+            for name in self._stage_names + [_LINEAGE]:
                 observations[name] = obs
-            tagged = tagged.observe(obs, *counts)
-        helper_cols = ["_orig", "_fail_stage"] + [c for c, _ in ok_cols]
-        kept = tagged.filter(F.col("_fail_stage").isNull()).drop(*helper_cols)
-        quarantined = tagged.filter(F.col("_fail_stage").isNotNull()).select(
-            F.col("_orig").alias(vc), F.col("_fail_stage").alias("fail_stage")
-        )
+        kept = tagged.filter(cols["kept"]).drop(_ORIG, _FAIL, _PID)
+        quarantined = tagged.filter(cols["failed"]).select(*cols["dead_letter"])
         return tagged, kept, quarantined
 
     # -- execution -----------------------------------------------------------
@@ -258,14 +353,21 @@ class Pipeline:
     def _run_batch_inner(
         self, df: DataFrame, batch_id: int, source_state: dict | None
     ) -> BatchRecord:
-        """One persisted parent, then every sink write, the lineage job
-        and the commit. Plain mode filters stage by stage (later stages
-        never run on dropped rows); quarantine mode tags every row in one
-        pass and adds the dead-letter write (original value + first
-        failing stage) for the rows the filters would have dropped."""
+        """One persisted parent, then every sink write and the commit.
+        Plain mode filters stage by stage (later stages never run on
+        dropped rows); quarantine mode tags every row in one pass and
+        adds the dead-letter write (original value + first failing
+        stage) for the rows the filters would have dropped. The per-stage
+        counts and the kept rows per partition (the lineage) are
+        Observations on the parent, so the first write measures them:
+        the batch runs one Spark job per sink and no other."""
         observations: dict[str, Observation] = {}
         if self.quarantine_sink is None:
-            parent = out = self.transform(df, observations=observations)
+            pid, lineage = self._lineage
+            obs = Observation("lineage")
+            parent = self.transform(df, observations).select("*", pid).observe(obs, *lineage)
+            observations[_LINEAGE] = obs
+            out = parent.drop(_PID)
             dead_letter = []
         else:
             parent, out, quarantined = self.transform_tagged(df, observations)
@@ -292,21 +394,15 @@ class Pipeline:
                         per_sink_empty[name] = metrics["empty"]
                     if metrics.get("retries"):
                         per_sink_retry[name] = metrics["retries"]
-                # per-partition lineage over the persisted parent (cheap:
-                # no recompute, one count per cached partition)
-                partition_counts = {
-                    str(r.pid): r.rows
-                    for r in out.groupBy(F.spark_partition_id().alias("pid"))
-                    .agg(F.count(F.lit(1)).alias("rows"))
-                    .collect()
-                }
             finally:
                 parent.unpersist()
-            # only read after a write ran: Observation.get blocks on a
-            # plan that never executed
-            per_stage = {
-                name: int(obs.get[name]) for name, obs in observations.items()
-            }
+            # only read after a write ran: Observation.get blocks until
+            # a DataFrame action over the parent has finished
+            observed: dict = {}
+            for obs in {id(o): o for o in observations.values()}.values():
+                observed.update(_observed(obs))
+            per_stage = {name: int(observed.get(name, 0)) for name in self._stage_names}
+            partition_counts = _partition_counts(observed)
         record = BatchRecord(
             batch_id=batch_id,
             source_state=source_state or {},

@@ -18,7 +18,9 @@ exchange, broadcast-only joins, html-only-in-scan).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import functools
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from collector_spark.datagen import lookup_dfs
@@ -34,26 +36,30 @@ ROUTES = [
     Route("all", None),
 ]
 
+# One instance of each operator serves every batch: each compiles its
+# Columns on first use (they need a live session) and reuses them, so a
+# batch's plan build pays for its frames, not for rebuilding expressions.
+_EXTRACT = HtmlExtractor(engine="native")
+_CEL = CelFilter(rules=["event.code == 200 || event.code >= 400"], action="accept")
+_JSON_ADD = JsonMutator(add=[{"key": "pipeline", "value": "bench"}], engine="native")
+_ROUTER = Router(ROUTES)
+_DIMS = ("domain_map", "tld_map")
+
+
+@functools.cache
+def _pages_columns() -> tuple[Column, list[Column]]:
+    """(JSON-line test, per-route match sums), compiled once."""
+    sums = [F.sum(col.cast("long")).alias(name) for name, col in _ROUTER._route_cols()]
+    return F.col("value").startswith("{"), sums
+
 
 def build_pages_agg(spark: SparkSession, pages: DataFrame, seed: int = 42) -> DataFrame:
     """(category, ok, errors, all) — one row per category."""
-    lookups = lookup_dfs(spark, seed)
-    ex = HtmlExtractor(engine="native")
-    lines = ex.log_lines(pages, keep_cols=("url",)).filter(
-        F.col("value").startswith("{")
-    )
-    lines = CelFilter(
-        rules=["event.code == 200 || event.code >= 400"], action="accept"
-    ).apply(lines)
-    lines = JsonMutator(
-        add=[{"key": "pipeline", "value": "bench"}], engine="native"
-    ).apply(lines)
-    enriched = enrich_pages(lines, {k: lookups[k] for k in ("domain_map", "tld_map")})
-    router = Router(ROUTES)
-    aggs = [
-        F.sum(col.cast("long")).alias(name) for name, col in router._route_cols()
-    ]
-    return enriched.groupBy("category").agg(*aggs)
+    is_json, sums = _pages_columns()
+    lines = _EXTRACT.log_lines(pages, keep_cols=("url",)).filter(is_json)
+    lines = _JSON_ADD.apply(_CEL.apply(lines))
+    enriched = enrich_pages(lines, lookup_dfs(spark, seed, _DIMS))
+    return enriched.groupBy("category").agg(*sums)
 
 
 def run_pages_pipeline(spark: SparkSession, pages_path: str, seed: int = 42) -> dict:

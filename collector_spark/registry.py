@@ -39,6 +39,16 @@ def register_processor(name: str, factory: Callable) -> None:
 
 
 def register_sink(name: str, factory: Callable) -> None:
+    """A sink factory returns an object with ``write(df, batch_id) -> int``
+    (rows written); it may set ``last_metrics = {"written", "empty",
+    "retries"}``. ``write`` must consume ``df`` through a DataFrame action
+    (a write, ``collect``, ``mapInArrow(...).collect()``, ...), never
+    through ``df.rdd``: the batch's per-stage counts and partition
+    lineage are Observations on the frame's parent, and an Observation
+    fires only on a DataFrame action; after the writes ``Pipeline``
+    waits for them. The built-in HTTP-family sinks run their
+    per-partition senders through one ``mapInArrow`` action for this
+    reason."""
     SINK_REGISTRY[name] = factory
 
 

@@ -3,10 +3,13 @@
 These mirror the reference's http / log_analytics / pubsub outputs
 (internal/output/http/http.go:61-123, log_analytics/log_analytics.go:
 69-153, pubsub/pubsub.go:60-122). The per-partition POST loop runs on
-executors via ``foreachPartition``; chunking uses the bfp-equivalent
-``chunk_lines``. The actual network call is injected (``poster``) so the
-sandbox tests the batching/signing plumbing with a fake, and a real
-deployment passes a requests.Session-based poster.
+executors inside one DataFrame action (``_send_partitions``: one
+``mapInArrow`` pass yielding each partition's written/empty/retries
+tallies, summed on the driver), never through ``.rdd``: the batch's
+Observations fire only on a DataFrame action. Chunking uses the
+bfp-equivalent ``chunk_lines``. The actual network call is injected
+(``poster``) so the sandbox tests the batching/signing plumbing with a
+fake, and a real deployment passes a requests.Session-based poster.
 """
 
 from __future__ import annotations
@@ -36,26 +39,54 @@ def _default_poster(url: str, body: bytes, headers: dict) -> int:
     return resp.status_code
 
 
+_TALLIES = ("written", "empty", "retries")
+
+
+def _send_partitions(df: DataFrame, value_col: str, send) -> dict[str, int]:
+    """Run ``send(pid, lines) -> (written, empty, retries)`` once per
+    partition of ``df``'s ``value_col`` (as text) in ONE DataFrame action,
+    and sum the tallies on the driver. ``lines`` iterates the partition's
+    values in order; ``pid`` is the partition id."""
+
+    def per_partition(batches):
+        import pyarrow as pa
+        from pyspark import TaskContext
+
+        ctx = TaskContext.get()
+        pid = ctx.partitionId() if ctx else 0
+        lines = (v for batch in batches for v in batch.column(0).to_pylist())
+        tallies = send(pid, lines)
+        yield pa.RecordBatch.from_pydict(
+            {name: [n] for name, n in zip(_TALLIES, tallies)},
+            schema=pa.schema([(name, pa.int64()) for name in _TALLIES]),
+        )
+
+    rows = (
+        df.select(F.col(value_col).cast("string"))
+        .mapInArrow(per_partition, ", ".join(f"{n} long" for n in _TALLIES))
+        .collect()
+    )
+    return {name: sum(r[name] for r in rows) for name in _TALLIES}
+
+
 def post_with_retries(
-    poster, url: str, body: bytes, headers: dict,
-    attempts: int, wait: float, retries_acc=None,
-):
+    poster, url: str, body: bytes, headers: dict, attempts: int, wait: float
+) -> int:
     """Bounded retry around one POST — the reference's 3-attempt loop in
     its HTTP-family outputs (internal/output/log_analytics/
     log_analytics.go:186, s3/s3.go:38, integrations/msgraph/client.go:48).
-    Re-raises the last error once ``attempts`` are exhausted; every retry
-    (attempt beyond the first) is tallied into ``retries_acc`` so the
-    batch manifest can surface per-sink retry counts."""
+    Returns the number of retries (attempts beyond the first) it took,
+    so the batch manifest can surface per-sink retry counts; re-raises
+    the last error once ``attempts`` are exhausted."""
     import time as _time
 
     if attempts < 1:  # a silent no-post then `raise None` otherwise
         raise ValueError(f"attempts must be >= 1, got {attempts}")
     last_err = None
     for attempt in range(attempts):
-        if attempt and retries_acc is not None:
-            retries_acc.add(1)
         try:
-            return poster(url, body, headers)
+            poster(url, body, headers)
+            return attempt
         except Exception as e:  # noqa: BLE001 — any transport error retries
             last_err = e
             if attempt + 1 < attempts and wait > 0:
@@ -117,23 +148,16 @@ class HttpSink:
         max_bytes, as_json, poster = self.max_bytes, self.as_json, self.poster
         as_multi_part = self.as_multi_part
         part_base = f"batch_{batch_id if batch_id is not None else 0}"
-
-        count = df.sparkSession.sparkContext.accumulator(0)
-        empty = df.sparkSession.sparkContext.accumulator(0)
-        retries = df.sparkSession.sparkContext.accumulator(0)
         attempts, wait = self.retry_attempts, self.retry_wait
 
-        def send(partition) -> None:
+        def send(pid, partition):
             import hashlib
 
-            from pyspark import TaskContext
-
-            pid = TaskContext.get().partitionId() if TaskContext.get() else 0
+            count = empty = retries = 0
             lines = []
-            for row in partition:
-                v = row[0]
+            for v in partition:
                 if v is None or not str(v).strip():
-                    empty.add(1)  # per-output empty-line diagnostic
+                    empty += 1  # per-output empty-line diagnostic
                     continue
                 lines.append(str(v).strip())
             for part_no, chunk in enumerate(chunk_lines(lines, max_bytes), start=1):
@@ -156,16 +180,12 @@ class HttpSink:
                 else:
                     body = "\n".join(chunk).encode("utf-8")
                     hdrs = dict(headers)
-                post_with_retries(poster, url, body, hdrs, attempts, wait, retries)
-                count.add(len(chunk))
+                retries += post_with_retries(poster, url, body, hdrs, attempts, wait)
+                count += len(chunk)
+            return count, empty, retries
 
-        df.select(F.col(self.value_col).cast("string")).foreachPartition(send)
-        self.last_metrics = {
-            "written": count.value,
-            "empty": empty.value,
-            "retries": retries.value,
-        }
-        return count.value
+        self.last_metrics = _send_partitions(df, self.value_col, send)
+        return self.last_metrics["written"]
 
 
 class LogAnalyticsSink:
@@ -221,30 +241,26 @@ class LogAnalyticsSink:
         poster = self.poster
         headers_for = self._headers
         max_buffer = self.MAX_BUFFER
-        count = df.sparkSession.sparkContext.accumulator(0)
-        empty = df.sparkSession.sparkContext.accumulator(0)
-        retries = df.sparkSession.sparkContext.accumulator(0)
         attempts, wait = self.retry_attempts, self.retry_wait
 
-        def send(partition) -> None:
+        def send(pid, partition):
+            count = empty = retries = 0
             entries: list = []
             size = 0
 
             def flush() -> None:
-                nonlocal entries, size
+                nonlocal entries, size, retries
                 if not entries:
                     return
                 body = json.dumps(entries).encode("utf-8")
-                post_with_retries(
-                    poster, url, body, headers_for(len(body)),
-                    attempts, wait, retries,
+                retries += post_with_retries(
+                    poster, url, body, headers_for(len(body)), attempts, wait
                 )
                 entries, size = [], 0
 
-            for row in partition:
-                v = row[0]
+            for v in partition:
                 if v is None or not str(v).strip():
-                    empty.add(1)  # per-output empty-line diagnostic
+                    empty += 1  # per-output empty-line diagnostic
                     continue
                 line = str(v).strip()
                 try:
@@ -255,16 +271,12 @@ class LogAnalyticsSink:
                 size += len(line)
                 if size >= max_buffer:
                     flush()
-                count.add(1)
+                count += 1
             flush()
+            return count, empty, retries
 
-        df.select(F.col(self.value_col).cast("string")).foreachPartition(send)
-        self.last_metrics = {
-            "written": count.value,
-            "empty": empty.value,
-            "retries": retries.value,
-        }
-        return count.value
+        self.last_metrics = _send_partitions(df, self.value_col, send)
+        return self.last_metrics["written"]
 
 
 def _default_publisher(topic_path: str, data: bytes) -> None:
@@ -282,10 +294,11 @@ def _default_publisher(topic_path: str, data: bytes) -> None:
 
 
 class PubSubSink:
-    """GCP Pub/Sub publisher (pubsub.go:60-122): per-row publish via
-    foreachPartition, ack-per-message. Semantics mirror the reference:
-    empty lines skipped (tallied), a failed publish is logged-and-skipped
-    (the line is NOT counted) and the batch continues — pubsub.go:96-119.
+    """GCP Pub/Sub publisher (pubsub.go:60-122): per-row publish inside
+    one DataFrame action (``_send_partitions``), ack-per-message.
+    Semantics mirror the reference: empty lines skipped (tallied), a
+    failed publish is logged-and-skipped (the line is NOT counted) and
+    the batch continues — pubsub.go:96-119.
 
     ``publisher(topic_path, data_bytes)`` is injected (same seam as the
     HTTP ``poster``); raise to signal a failed publish."""
@@ -313,22 +326,21 @@ class PubSubSink:
 
     def write(self, df: DataFrame, batch_id: int | None = None) -> int:
         topic_path, publisher = self.topic_path, self.publisher
-        count = df.sparkSession.sparkContext.accumulator(0)
-        empty = df.sparkSession.sparkContext.accumulator(0)
 
-        def send(partition) -> None:
-            for row in partition:
-                v = row[0]
+        def send(pid, partition):
+            count, empty = 0, 0
+            for v in partition:
                 line = str(v).strip() if v is not None else ""
                 if not line:
-                    empty.add(1)  # pubsub.go:96-99
+                    empty += 1  # pubsub.go:96-99
                     continue
                 try:
                     publisher(topic_path, line.encode("utf-8"))
                 except Exception:  # noqa: BLE001 — pubsub.go:107-110
                     continue
-                count.add(1)
+                count += 1
+            return count, empty, 0
 
-        df.select(F.col(self.value_col).cast("string")).foreachPartition(send)
-        self.last_metrics = {"written": count.value, "empty": empty.value}
-        return count.value
+        tallies = _send_partitions(df, self.value_col, send)
+        self.last_metrics = {"written": tallies["written"], "empty": tallies["empty"]}
+        return tallies["written"]

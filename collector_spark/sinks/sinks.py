@@ -13,7 +13,8 @@ Mapping from the reference's outputs (internal/app/builtin.go:46-57):
 |                       | option("compression"); gcs composite append →   |
 |                       | append-mode parts under one object prefix       |
 | kafka / pubsub / http | KafkaSink (format("kafka"), gated: no broker in |
-|                       | sandbox) / foreachPartition HTTP poster stub    |
+|                       | sandbox) / per-partition HTTP poster in one     |
+|                       | DataFrame action (http_sinks.py)                |
 | log_analytics         | signed-HTTP poster (HMAC util in functions/),   |
 |                       | gated behind network availability               |
 
@@ -26,40 +27,59 @@ the guarantee the reference aims for with state-after-outputs commit
 
 from __future__ import annotations
 
+import functools
 import os
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from collector_spark.oracle import variable_replace
 
 
-def _non_empty():
-    # built lazily: Column construction needs an active SparkSession.
-    # Whitespace CLASS, not F.trim (spaces only): a tab/CR-only value is
-    # EMPTY, matching the reference's TrimSpace'd lines
-    # (pkg/core/tmp_writer.go:54-56) and the FileSource edge-trim class
-    return F.coalesce(
+@functools.cache
+def _line_columns() -> tuple[Column, Column, Column]:
+    """(non-empty test, written counter, empty counter) over ``value``.
+    Built on first use (Column construction needs an active
+    SparkSession), then shared by every sink and batch: a Column is
+    plan-free. Whitespace CLASS, not F.trim (spaces only): a
+    tab/CR-only value is EMPTY, matching the reference's TrimSpace'd
+    lines (pkg/core/tmp_writer.go:54-56) and the FileSource edge-trim
+    class."""
+    non_empty = F.coalesce(
         F.length(F.regexp_replace(F.col("value"), r"^\s+|\s+$", "")) > 0,
         F.lit(False),
     )
-
-
-def _observe_lines(out: DataFrame) -> tuple[DataFrame, Observation]:
-    """Attach written/empty counters to the write-side plan so the write
-    action itself produces the counts — no second read of the target, no
-    second compute of the upstream (round-1 count-back cost: every sink
-    write re-read or re-ran its input; at 100 TB that doubles sink IO).
-    The empty-line tally mirrors the reference's diagnostic count
-    (internal/output/log_analytics/log_analytics.go:133-135)."""
-    obs = Observation()
-    out = out.observe(
-        obs,
-        F.count(F.when(_non_empty(), 1)).alias("written"),
-        F.count(F.when(~_non_empty(), 1)).alias("empty"),
+    return (
+        non_empty,
+        F.count(F.when(non_empty, 1)).alias("written"),
+        F.count(F.when(~non_empty, 1)).alias("empty"),
     )
-    return out, obs
+
+
+@functools.cache
+def _value_text(value_col: str) -> Column:
+    return F.col(value_col).cast("string").alias("value")
+
+
+@functools.cache
+def _row_count() -> Column:
+    return F.count(F.lit(1)).alias("written")
+
+
+def _observed_lines(df: DataFrame, value_col: str) -> tuple[DataFrame, Observation]:
+    """``df``'s ``value_col`` as the non-empty ``value`` lines a text
+    sink writes, with written/empty counters attached to the write-side
+    plan, so the write action itself produces the counts — no second
+    read of the target, no second compute of the upstream (round-1
+    count-back cost: every sink write re-read or re-ran its input; at
+    100 TB that doubles sink IO). The empty-line tally mirrors the
+    reference's diagnostic count
+    (internal/output/log_analytics/log_analytics.go:133-135)."""
+    non_empty, written, empty = _line_columns()
+    obs = Observation()
+    out = df.select(_value_text(value_col)).observe(obs, written, empty)
+    return out.filter(non_empty), obs
 
 
 def _templated(path: str, ts: datetime | None = None, uuid: str | None = None) -> str:
@@ -111,7 +131,7 @@ class ParquetSink(_BaseSink):
     def write(self, df: DataFrame, batch_id: int | None = None) -> int:
         target = self.target(batch_id)
         obs = Observation()
-        df = df.observe(obs, F.count(F.lit(1)).alias("written"))
+        df = df.observe(obs, _row_count())
         w = df.write.mode("overwrite")
         if self.max_records:
             w = w.option("maxRecordsPerFile", str(self.max_records))
@@ -137,9 +157,7 @@ class FileSink(_BaseSink):
 
     def write(self, df: DataFrame, batch_id: int | None = None) -> int:
         target = self.target(batch_id)
-        out = df.select(F.col(self.value_col).cast("string").alias("value"))
-        out, obs = _observe_lines(out)
-        out = out.filter(_non_empty())  # tmp_writer.go:54-56
+        out, obs = _observed_lines(df, self.value_col)  # tmp_writer.go:54-56
         w = out.write.mode("overwrite")
         if self.max_records:
             w = w.option("maxRecordsPerFile", str(self.max_records))
@@ -204,9 +222,7 @@ class KafkaSink:
         return opts
 
     def write(self, df: DataFrame, batch_id: int | None = None) -> int:
-        out = df.select(F.col(self.value_col).cast("string").alias("value"))
-        out, obs = _observe_lines(out)
-        out = out.filter(_non_empty())  # kafka.go:86-90
+        out, obs = _observed_lines(df, self.value_col)  # kafka.go:86-90
         # append: producing is inherently append-only (the real kafka
         # connector ignores the mode; Python Data Sources require it)
         out.write.format(self.fmt).mode("append").options(
@@ -266,9 +282,7 @@ class GcsSink(FileSink):
         else:
             final = None
             mode = "append"
-        out = df.select(F.col(self.value_col).cast("string").alias("value"))
-        out, obs = _observe_lines(out)
-        out = out.filter(_non_empty())
+        out, obs = _observed_lines(df, self.value_col)
         w = out.write.mode(mode)
         if self.max_records:
             w = w.option("maxRecordsPerFile", str(self.max_records))
