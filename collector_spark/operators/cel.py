@@ -70,6 +70,8 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from collector_spark.operators.stage import Processor, variant_col, with_variant
+
 
 class CelSyntaxError(ValueError):
     """Invalid rule — rejected at plan-build time."""
@@ -905,71 +907,6 @@ def parse_rule(rule: str):
     _reject_bare_list_exprs(ast)
     _validate_time_usage(ast)
     return ast
-
-
-# ---------------------------------------------------------------------------
-# The VARIANT companion of a JSON value column: each value version is
-# parsed once, and every json-mode reader reads the parse
-# ---------------------------------------------------------------------------
-
-
-def variant_col(value_col: str = "value") -> str:
-    """Name of the VARIANT companion column of ``value_col``."""
-    return f"_{value_col}_variant"
-
-
-def with_variant(df: DataFrame, value_col: str = "value") -> DataFrame:
-    """``df`` plus ``try_parse_json(value_col)`` as its VARIANT companion
-    column, unless that column is already there. The only way the column
-    is added; while present it is the parse of the current ``value_col``
-    (a non-JSON or duplicate-key line parses to NULL).
-
-    The parse is the only output of a Generate, not a ``withColumn``:
-    FilterExec does no subexpression elimination, and Catalyst pushes a
-    filter through a projected alias by inlining it, so N reads of a
-    projected parse inside one filter would parse the line N times."""
-    if variant_col(value_col) in df.columns:
-        return df
-    return _add_variant(df, value_col)
-
-
-@functools.cache
-def _variant_generator(value_col: str) -> Column:
-    """The Generate that adds ``value_col``'s companion. A Column is
-    plan-free (each use gets fresh expression ids), so one per value
-    column serves every frame; built on first use, since building needs
-    a live session."""
-    parsed = F.try_parse_json(F.col(value_col)).alias(variant_col(value_col))
-    return F.inline(F.array(F.struct(parsed)))
-
-
-def _add_variant(df: DataFrame, value_col: str, keep: list[str] | None = None) -> DataFrame:
-    """``df``'s columns ``keep`` (all by default) plus a fresh companion."""
-    gen = _variant_generator(value_col)
-    if keep is None:
-        return df.select("*", gen)
-    return df.select(*(F.col("`" + c.replace("`", "``") + "`") for c in keep), gen)
-
-
-def reparse_variant(df: DataFrame, value_col: str = "value") -> DataFrame:
-    """``df`` with its companion replaced by the parse of the current
-    ``value_col``, in one projection (not a drop and a select: each is
-    one more eagerly analysed frame)."""
-    name = variant_col(value_col)
-    return _add_variant(df, value_col, [c for c in df.columns if c != name])
-
-
-def rederive_variant(received: DataFrame, out: DataFrame, value_col: str = "value") -> DataFrame:
-    """For a stage that rewrote ``value_col`` of ``received`` into ``out``:
-    the companion parse of the old value is stale, so drop it, and parse
-    the new value when the stage received a companion (a downstream
-    reader expects one). ``Pipeline`` calls this after every stage that
-    does not set ``keeps_variant = True``. Without a companion on either
-    frame it returns ``out`` itself."""
-    name = variant_col(value_col)
-    if name in received.columns:
-        return reparse_variant(out, value_col)
-    return out.drop(name) if name in out.columns else out
 
 
 # ---------------------------------------------------------------------------
@@ -1815,7 +1752,7 @@ def rule_detection_python(line: str, rules: list) -> bool:
 # ---------------------------------------------------------------------------
 
 
-class CelFilter:
+class CelFilter(Processor):
     """The `cel` processor as a DataFrame transform.
 
     config mirrors the reference (cel.go:14-17):
@@ -1824,7 +1761,7 @@ class CelFilter:
     """
 
     # only trims spaces off the value, which leaves its parse unchanged,
-    # so Pipeline need not re-derive the VARIANT companion after it
+    # so the VARIANT companion need not be re-derived after it
     keeps_variant = True
 
     def __init__(
@@ -1845,17 +1782,14 @@ class CelFilter:
 
     @functools.cached_property
     def _predicate(self) -> Column:
+        """OR over all rules; eval errors → non-match handled by null
+        semantics + coalesce(False). Compiled on first use, then reused."""
         compiler = ColumnCompiler(mode=self.mode, value_col=self.value_col)
         pred = None
         for ast in self.asts:
             col = F.coalesce(compiler.compile(ast).cast("boolean"), F.lit(False))
             pred = col if pred is None else (pred | col)
         return pred
-
-    def predicate(self) -> Column:
-        """OR over all rules; eval errors → non-match handled by null
-        semantics + coalesce(False). Compiled on first use, then reused."""
-        return self._predicate
 
     @functools.cached_property
     def _tag_columns(self) -> tuple[dict[str, Column], Column]:
@@ -1869,29 +1803,17 @@ class CelFilter:
         valid = F.col(variant_col(vc)).isNotNull()
         return {vc: F.trim(F.col(vc))}, valid & keep
 
-    def apply(self, df: DataFrame) -> DataFrame:
-        df, keep = self.tag(df)
-        return df.filter(keep)
-
     def tag_columns(self, df: DataFrame) -> tuple[DataFrame, dict[str, Column], Column]:
-        """``tag`` as (frame, rewrites, keep): ``tag(df)`` is
-        ``(frame.withColumns(rewrites), keep)``, so ``Pipeline`` can add
-        its own columns to the same projection. In json mode the frame
-        carries the VARIANT companion; trimming spaces does not change
-        the parse, so it is parsed before the trim and stays fresh."""
+        """In json mode the frame carries the VARIANT companion; trimming
+        spaces does not change the parse, so it is parsed before the trim
+        and stays fresh."""
         if self.mode == "json":
             df = with_variant(df, self.value_col)
         rewrites, keep = self._tag_columns
         return df, rewrites, keep
 
-    def tag(self, df: DataFrame) -> tuple[DataFrame, Column]:
-        """Non-dropping variant: returns (df, keep boolean) for the
-        quarantine/dead-letter path (Pipeline.run_batch)."""
-        df, rewrites, keep = self.tag_columns(df)
-        return (df.withColumns(rewrites) if rewrites else df), keep
-
     def sql_predicate(self) -> str:
-        """DuckDB boolean expression equivalent to predicate()."""
+        """DuckDB boolean expression equivalent to ``_predicate``."""
         sql = SqlCompiler(mode=self.mode, value_col=self.value_col)
         parts = [f"COALESCE({sql.compile(ast)}, FALSE)" for ast in self.asts]
         joined = " OR ".join(parts)

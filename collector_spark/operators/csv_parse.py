@@ -12,8 +12,12 @@ half-null rows.
 
 from __future__ import annotations
 
+from functools import cached_property
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from collector_spark.operators.stage import Processor, bind
 
 __all__ = ["csv_extract", "CsvParser"]
 
@@ -109,10 +113,11 @@ def csv_extract(
     )
 
 
-class CsvParser:
+class CsvParser(Processor):
     """Pipeline processor: ``{"kind": "csv", "schema": ..., "sep": ...}``
     — delimited lines in, JSON objects out (the kv/syslog/grok line
-    model), malformed lines dropped."""
+    model), malformed lines dropped; in quarantine mode they are the
+    dead letters."""
 
     def __init__(
         self,
@@ -129,31 +134,18 @@ class CsvParser:
         self.escape = escape
         self.value_col = value_col
 
-    def apply(self, df: DataFrame) -> DataFrame:
-        parsed = _parsed(
-            F.col(self.value_col), self.schema, self.sep, self.quote, self.escape
-        )
-        keep = [c for c in df.columns if c != self.value_col]
-        return (
-            df.withColumn("_p", parsed)
-            .filter(F.col("_p._corrupt").isNull())
-            .select(
-                *keep,
-                F.to_json(
-                    F.struct(*[F.col(f"_p.{f}").alias(f) for f in self.fields])
-                ).alias(self.value_col),
-            )
-        )
+    @cached_property
+    def _tag_columns(self) -> tuple[dict[str, Column], Column]:
+        """(rewrites, keep), compiled once: the value becomes the record's
+        JSON object, or NULL when the line is malformed. The parse is
+        bound once per row (``bind``), not repeated per field."""
+        value = F.col(self.value_col)
+        parsed = _parsed(value, self.schema, self.sep, self.quote, self.escape)
 
-    def rejects(self, df: DataFrame) -> DataFrame:
-        """Dead-letter complement of apply(): malformed lines with a
-        reason column (see GrokParser.rejects)."""
-        parsed = _parsed(
-            F.col(self.value_col), self.schema, self.sep, self.quote, self.escape
-        )
-        return (
-            df.withColumn("_p", parsed)
-            .filter(F.col("_p._corrupt").isNotNull())
-            .drop("_p")
-            .withColumn("reject_reason", F.lit("csv_malformed"))
-        )
+        def to_json(p: Column) -> Column:
+            return F.when(p["_corrupt"].isNull(), F.to_json(p.dropFields("_corrupt")))
+
+        return {self.value_col: bind(parsed, to_json)}, value.isNotNull()
+
+    def tag_columns(self, df: DataFrame) -> tuple[DataFrame, dict[str, Column], Column]:
+        return (df, *self._tag_columns)

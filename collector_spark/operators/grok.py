@@ -6,11 +6,12 @@ north rule names "grok/regex parse" as the pipeline's first stage. This
 operator supplies the general named-pattern form: a grok expression
 compiles at config time into a single anchored Java/RE2-portable regex,
 and extraction runs as ``regexp_replace`` into a ``\\x01``-delimited
-group string plus one ``split``, MATERIALIZED as its own projection so
-the regex runs once per row however many fields the pattern binds
-(measured: inlining the tree into every field column cost n_fields×
-— neither CollapseProject nor codegen subexpression elimination merged
-the copies; see _grok_project).
+group string plus one ``split``, evaluated once per row however many
+fields the pattern binds: ``grok_extract`` materializes it as its own
+projection, the processor binds it inside its one rewrite
+(``stage.bind``). Inlining the tree into every field column cost
+n_fields× — codegen subexpression elimination does not merge the
+copies; see grok_extract.
 
 Portability contract: the compiled regex stays inside the same
 dialect-portable subset the CEL ``matches()`` validator enforces (no
@@ -22,19 +23,22 @@ grok's "_grokparsefailure drop" convention and the reference's
 drop-line-on-parse-failure behavior (kv.go:50-60); ``False`` keeps
 them with all-NULL fields.
 
-Lines containing raw ``\\x01`` bytes are treated as REJECTS with their
-own reason (``grok_binary_line``): match detection splits the replaced
-string on ``\\x01``, so such a line could otherwise false-match (or a
-matched capture containing the marker would shift every following
-field). The guard is a cheap ``contains`` pre-filter, not a regex.
+Lines containing raw ``\\x01`` bytes count as unmatched: match
+detection splits the replaced string on ``\\x01``, so such a line could
+otherwise false-match (or a matched capture containing the marker would
+shift every following field). The guard is a cheap ``contains`` test,
+not a regex.
 """
 
 from __future__ import annotations
 
 import re
+from functools import cached_property
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from collector_spark.operators.stage import Processor, bind
 
 
 class GrokError(ValueError):
@@ -135,45 +139,28 @@ def compile_grok(
 _PARTS = "_grok_parts"
 
 
-def _grok_project(
-    df: DataFrame,
-    value_col: str,
-    regex: str,
-    fields: list[str],
-    types: dict[str, str],
-) -> tuple[DataFrame, list[Column], Column]:
-    """(df + parts column, extracted field columns, matched flag) off
-    ONE regex execution: the anchored pattern rewrites the line to its
-    marker-joined capture groups; an unmatched line passes through
-    regexp_replace unchanged and yields the wrong part count.
+def _parts(value: Column, regex: str, n: int) -> Column:
+    """The line rewritten by the anchored pattern to its ``n``
+    marker-joined capture groups, split: an unmatched line passes
+    through ``regexp_replace`` unchanged and yields the wrong part
+    count."""
+    repl = _MARKER.join(f"${i + 1}" for i in range(n))
+    return F.split(F.regexp_replace(value, f"^{regex}$", repl), _MARKER)
 
-    The parts array is MATERIALIZED as its own projection first —
-    Catalyst's CollapseProject keeps a non-cheap expression that is
-    referenced more than once in a separate project, so the regex runs
-    once per row. Inlining the replace/split tree into every field
-    column measured n_fields× the cost (codegen subexpression
-    elimination did NOT merge the copies: 2.8 s vs 1.0 s for 8 fields
-    over 100k rows)."""
-    anchored = f"^{regex}$"
-    repl = _MARKER.join(f"${i + 1}" for i in range(len(fields)))
-    parts = F.split(F.regexp_replace(F.col(value_col), anchored, repl), _MARKER)
-    tmp = df.withColumn(_PARTS, parts)
-    # marker-bearing lines can false-match the part count (or shift
-    # fields when a capture contains \x01) — treat them as unmatched
-    # here; rejects() labels them with their own reason
-    clean = ~F.col(value_col).contains(_MARKER)
-    if len(fields) == 1:
-        # a 1-field split count can't distinguish match from pass-through
-        matched = clean & F.col(value_col).rlike(anchored)
-    else:
-        matched = clean & (F.size(F.col(_PARTS)) == F.lit(len(fields)))
-    cols = []
-    for i, name in enumerate(fields):
-        c = F.when(matched, F.col(_PARTS)[i]).otherwise(F.lit(None))
-        if types[name] != "string":
-            c = c.try_cast(types[name])
-        cols.append(c.alias(name))
-    return tmp, cols, matched
+
+def _fields(
+    value: Column, parts: Column, regex: str, fields: list[str], types: dict[str, str]
+) -> tuple[Column, list[Column]]:
+    """(matched, one typed column per field) off the parts array. A
+    marker-bearing line can false-match the part count (or shift fields
+    when a capture contains \\x01), so it counts as unmatched."""
+    # a 1-field split count can't distinguish match from pass-through
+    hit = value.rlike(f"^{regex}$") if len(fields) == 1 else F.size(parts) == len(fields)
+    cols = [
+        parts[i] if types[name] == "string" else parts[i].try_cast(types[name])
+        for i, name in enumerate(fields)
+    ]
+    return ~value.contains(_MARKER) & hit, cols
 
 
 def grok_extract(
@@ -185,23 +172,36 @@ def grok_extract(
 ) -> DataFrame:
     """Append one typed column per grok field. ``drop_unmatched=True``
     filters lines the pattern rejects (reference drop-on-parse-failure,
-    kv.go:50-60); ``False`` keeps them with NULL fields."""
+    kv.go:50-60); ``False`` keeps them with NULL fields.
+
+    The parts array is MATERIALIZED as its own projection first —
+    Catalyst's CollapseProject keeps a non-cheap expression that is
+    referenced more than once in a separate project, so the regex runs
+    once per row. Inlining the replace/split tree into every field
+    column measured n_fields× the cost (codegen subexpression
+    elimination did NOT merge the copies: 2.8 s vs 1.0 s for 8 fields
+    over 100k rows)."""
     regex, fields, types = compile_grok(pattern, extra_patterns)
     clash = set(fields) & set(df.columns)
     if clash:
         raise GrokError(f"grok fields collide with existing columns: {sorted(clash)}")
     if _PARTS in df.columns:
         raise GrokError(f"{_PARTS!r} is a reserved column name")
-    tmp, cols, matched = _grok_project(df, value_col, regex, fields, types)
+    value = F.col(value_col)
+    tmp = df.withColumn(_PARTS, _parts(value, regex, len(fields)))
+    matched, cols = _fields(value, F.col(_PARTS), regex, fields, types)
     if drop_unmatched:
         tmp = tmp.filter(matched)
-    return tmp.select(*df.columns, *cols)
+    return tmp.select(
+        *df.columns, *(F.when(matched, c).alias(name) for name, c in zip(fields, cols))
+    )
 
 
-class GrokParser:
+class GrokParser(Processor):
     """Pipeline processor: ``{"kind": "grok", "pattern": ...}`` — lines
     in, JSON objects of the extracted fields out (the kv/syslog
-    processor line model), unmatched lines dropped."""
+    processor line model), unmatched lines dropped; in quarantine mode
+    they are the dead letters."""
 
     def __init__(
         self,
@@ -212,29 +212,21 @@ class GrokParser:
         self.value_col = value_col
         self.regex, self.fields, self.types = compile_grok(pattern, extra_patterns)
 
-    def apply(self, df: DataFrame) -> DataFrame:
-        tmp, cols, matched = _grok_project(
-            df, self.value_col, self.regex, self.fields, self.types
-        )
-        keep = [c for c in df.columns if c != self.value_col]
-        return tmp.filter(matched).select(
-            *keep, F.to_json(F.struct(*cols)).alias(self.value_col)
-        )
+    @cached_property
+    def _tag_columns(self) -> tuple[dict[str, Column], Column]:
+        """(rewrites, keep), compiled once: the value becomes the fields'
+        JSON object, or NULL when the pattern does not match. The parts
+        array is bound once per row (``bind``), so the regex runs once
+        however many fields the pattern has."""
+        value = F.col(self.value_col)
 
-    def rejects(self, df: DataFrame) -> DataFrame:
-        """Dead-letter complement of apply(): the lines the pattern
-        rejected, with a reason column — route these to a DLQ sink
-        instead of silently dropping them (at 100 TB, 0.1% silent loss
-        is a billion rows nobody can audit)."""
-        tmp, _, matched = _grok_project(
-            df, self.value_col, self.regex, self.fields, self.types
-        )
-        reason = F.when(
-            F.coalesce(F.col(self.value_col).contains(_MARKER), F.lit(False)),
-            F.lit("grok_binary_line"),
-        ).otherwise(F.lit("grok_no_match"))
-        return (
-            tmp.filter(~F.coalesce(matched, F.lit(False)))
-            .select(*df.columns)
-            .withColumn("reject_reason", reason)
-        )
+        def to_json(parts: Column) -> Column:
+            matched, cols = _fields(value, parts, self.regex, self.fields, self.types)
+            named = (c.alias(f) for f, c in zip(self.fields, cols))
+            return F.when(matched, F.to_json(F.struct(*named)))
+
+        rewrite = bind(_parts(value, self.regex, len(self.fields)), to_json)
+        return {self.value_col: rewrite}, value.isNotNull()
+
+    def tag_columns(self, df: DataFrame) -> tuple[DataFrame, dict[str, Column], Column]:
+        return (df, *self._tag_columns)

@@ -14,8 +14,9 @@ Three execution strategies, picked per call site:
 
 - ``engine='native'`` — top-level add only, as Catalyst string surgery
   on compact object lines. Validity, key presence and the nested-value
-  guard read the line's VARIANT companion (``cel.with_variant``), so
-  the line is parsed once however many keys are added.
+  guard read the line's VARIANT companion (``stage.with_variant``), so
+  the line is parsed once however many keys are added. Quarantine mode
+  runs the oracle engine in its place (see ``JsonMutator.apply``).
 
 - ``mode='columns'`` — structured payloads: compiles the same action
   list to native ``withColumn`` / ``drop`` / ``when().otherwise()``
@@ -23,7 +24,7 @@ Three execution strategies, picked per call site:
   known (it is, for the pages/events tables).
 
 Both json-mode engines rewrite ``value``: a VARIANT companion they
-received is re-derived over the new value (``cel.rederive_variant``).
+received is re-derived over the new value (``stage.rederive_variant``).
 """
 
 from __future__ import annotations
@@ -38,7 +39,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from collector_spark import oracle
-from collector_spark.operators.cel import (
+from collector_spark.operators.stage import (
+    Processor,
     rederive_variant,
     reparse_variant,
     variant_col,
@@ -63,7 +65,7 @@ def make_mutate_udf(add: list[dict], remove: list[dict], replace: list[dict]):
     return F.pandas_udf(_mutate, T.StringType())
 
 
-class JsonMutator:
+class JsonMutator(Processor):
     """json processor as a DataFrame transform.
 
     config mirrors the reference (json.go:16-35):
@@ -71,10 +73,6 @@ class JsonMutator:
         remove:  [{key}]                 delete if present
         replace: [{key, value, new_value}]  set only when current == value
     """
-
-    # both json-mode engines re-derive a received VARIANT companion over
-    # the value they wrote (the native add reads it for its own guards)
-    keeps_variant = True
 
     def __init__(
         self,
@@ -119,31 +117,22 @@ class JsonMutator:
             if "key" not in r or "value" not in r or "new_value" not in r:
                 raise ValueError(f"replace action needs key+value+new_value: {r}")
 
-    def apply(self, df: DataFrame) -> DataFrame:
-        if self.mode == "columns":
-            return self._apply_columns(df)
-        if self.engine == "native":
-            return self._apply_native(df)
-        df, keep = self.tag(df)
-        return df.filter(keep)
-
     @functools.cached_property
-    def _tag_columns(self) -> tuple[Column, Column]:
-        """(rewrite, keep) of the oracle-UDF engine, built once: the
-        pandas UDF and its JVM function are made on first use only."""
-        udf = make_mutate_udf(self.add, self.remove, self.replace)
-        return udf(F.col(self.value_col)), F.col(self.value_col).isNotNull()
-
-    def tag(self, df: DataFrame) -> tuple[DataFrame, Column]:
-        """Non-dropping variant for the quarantine path (always the
-        oracle-UDF engine — the native fast path interleaves its own
-        validity filter with string surgery)."""
+    def _tag_columns(self) -> tuple[dict[str, Column], Column]:
+        """(rewrites, keep), built once: in json mode those of the
+        oracle-UDF engine, whose pandas UDF and JVM function are made on
+        first use only."""
         if self.mode == "columns":
-            return self._apply_columns(df), F.lit(True)
-        rewrite, keep = self._tag_columns
-        out = df.withColumn(self.value_col, rewrite)
-        # non-JSON → None → quarantined (json.go:88-99)
-        return rederive_variant(df, out, self.value_col), keep
+            return {}, F.lit(True)
+        vc = self.value_col
+        udf = make_mutate_udf(self.add, self.remove, self.replace)
+        # non-JSON → None → dropped (json.go:88-99)
+        return {vc: udf(F.col(vc))}, F.col(vc).isNotNull()
+
+    def tag_columns(self, df: DataFrame) -> tuple[DataFrame, dict[str, Column], Column]:
+        """Both engines tag through the oracle UDF (see ``apply``)."""
+        rewrites, keep = self._tag_columns
+        return (self._apply_columns(df) if self.mode == "columns" else df), rewrites, keep
 
     @functools.cached_property
     def _native_columns(self) -> tuple[Column, Column, list[tuple[bool, Column]]]:
@@ -195,15 +184,23 @@ class JsonMutator:
             adds.append((repeat, F.when(safe, replaced).when(exists, v).otherwise(appended)))
         return F.trim(v), parsed.isNotNull() & v.startswith("{"), adds
 
-    def _apply_native(self, df: DataFrame) -> DataFrame:
-        """Top-level add on compact JSON object lines as pure Catalyst
-        string surgery (sjson appends before the closing brace exactly
-        like this). Only objects survive (non-JSON / non-object lines
-        are dropped, matching the reference). A key already present is
-        overwritten in place when its value is a scalar and the key
-        text occurs once in the line; otherwise the row is left
-        unchanged (documented native-engine limitation — engine='pandas'
-        implements full sjson.Set semantics)."""
+    def apply(self, df: DataFrame) -> DataFrame:
+        """The one plain mode not derived from ``tag_columns``:
+        ``engine='native'``, a top-level add on compact JSON object lines
+        as Catalyst string surgery (sjson appends before the closing
+        brace exactly like this); non-object lines are dropped. A key
+        already present is overwritten in place when its value is a
+        scalar and the key text occurs once in the line, else the row is
+        left unchanged (engine='pandas' has full sjson.Set semantics).
+
+        Its object-line filter must run before the surgery. Folded into
+        the rewrite, Catalyst pushes ``IsNotNull(CASE WHEN ...)`` through
+        the alias, so the whole surgery (``try_variant_get`` x2,
+        ``RLIKE``, ``split``, ``regexp_replace``) runs in both Filter and
+        Project; tested after the rewrite, ``{"a":1x`` becomes the valid
+        ``{"a":1,"k":"v"}``. So quarantine mode runs the oracle engine."""
+        if self.engine != "native" or self.mode != "json":
+            return super().apply(df)
         vc = self.value_col
         trim, is_object, adds = self._native_columns
         # trimming spaces does not change the parse, so a received

@@ -9,8 +9,8 @@ Output model: instead of the reference's re-serialized JSON line we emit a
 typed StructType — columnar, prunable, and exactly what the reference's
 JSON encodes (kv: map<string,string>; cef: 7 header fields + extensions
 map). ``as_json=True`` reproduces the reference's JSON-line output for
-byte-level parity tests. Parse failures yield NULL structs which the
-``apply`` step filters out (reference drops such lines, kv.go:66-79).
+byte-level parity tests. Parse failures yield NULL structs, and the
+stage drops those rows (reference drops such lines, kv.go:66-79).
 
 This is the only kv/cef implementation: a pure-Catalyst regex chain
 measured about 2.5x slower than these Arrow UDFs at sf0.1, because
@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from collector_spark import oracle
+from collector_spark.operators.stage import Processor
 
 CEF_SCHEMA = T.StructType(
     [
@@ -72,8 +73,8 @@ _CEF_NULL_ROW = {c: None for c in _CEF_COLS}
 
 def _parse_cef_frame(s: pd.Series) -> pd.DataFrame:
     """StructType pandas UDFs return a DataFrame (one column per field).
-    Unparseable rows become all-NULL structs; apply() filters them on the
-    non-nullable ``version`` field."""
+    Unparseable rows become all-NULL structs; the stage drops them on the
+    ``version`` field, which a parsed row always sets."""
     one = _per_row(oracle.parse_cef, _CEF_NULL_ROW)
     return pd.DataFrame([one(v) for v in s], columns=_CEF_COLS)
 
@@ -92,14 +93,14 @@ kv_json_udf = F.pandas_udf(_kv_json_series, T.StringType())
 cef_json_udf = F.pandas_udf(_cef_json_series, T.StringType())
 
 
-class KvParser:
+class KvParser(Processor):
     """kv processor: type='raw' (k=v pairs) or 'cef'.
 
-    apply() drops unparseable rows (reference logs + skips) and adds a
-    ``parsed`` struct/map column; with as_json=True it instead rewrites
-    ``value`` with the compact JSON the reference would emit. Every row
-    goes through the shared-oracle pandas UDF, so the output is
-    byte-identical to oracle.parse_kv / parse_cef by construction.
+    Unparseable rows are dropped (reference logs + skips); a kept row
+    gains a ``parsed`` struct/map column, or with as_json=True has its
+    ``value`` rewritten to the compact JSON the reference would emit.
+    Every row goes through the shared-oracle pandas UDF, so the output
+    is byte-identical to oracle.parse_kv / parse_cef by construction.
     """
 
     def __init__(
@@ -126,19 +127,5 @@ class KvParser:
         # on success — it is validated as 'CEF:<v>' or an integer)
         return {"parsed": cef_parse_udf(col)}, F.col("parsed.version").isNotNull()
 
-    def apply(self, df: DataFrame) -> DataFrame:
-        df, keep = self.tag(df)
-        return df.filter(keep)
-
     def tag_columns(self, df: DataFrame) -> tuple[DataFrame, dict[str, Column], Column]:
-        """``tag`` as (frame, rewrites, keep): ``tag(df)`` is
-        ``(frame.withColumns(rewrites), keep)``. Compiled once."""
-        rewrites, keep = self._tag_columns
-        return df, rewrites, keep
-
-    def tag(self, df: DataFrame) -> tuple[DataFrame, Column]:
-        """Non-dropping variant for the quarantine path: adds the parse
-        output and returns the parse-success boolean instead of
-        filtering."""
-        df, rewrites, keep = self.tag_columns(df)
-        return df.withColumns(rewrites), keep
+        return (df, *self._tag_columns)

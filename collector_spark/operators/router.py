@@ -27,13 +27,8 @@ from functools import cached_property
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from collector_spark.operators.cel import (
-    ColumnCompiler,
-    SqlCompiler,
-    parse_rule,
-    variant_col,
-    with_variant,
-)
+from collector_spark.operators.cel import ColumnCompiler, parse_rule
+from collector_spark.operators.stage import variant_col, with_variant
 
 
 @dataclass
@@ -49,12 +44,6 @@ class Route:
         ast = parse_rule(self.predicate)
         compiler = ColumnCompiler(mode=mode, value_col=value_col)
         return F.coalesce(compiler.compile(ast).cast("boolean"), F.lit(False))
-
-    def sql(self, mode: str = "json", value_col: str = "value") -> str:
-        if self.predicate is None:
-            return "TRUE"
-        ast = parse_rule(self.predicate)
-        return f"COALESCE({SqlCompiler(mode=mode, value_col=value_col).compile(ast)}, FALSE)"
 
 
 class Router:
@@ -145,13 +134,3 @@ class Router:
         return wide.selectExpr(
             f"stack({len(self.routes)}, {pairs}) as (sink, cnt)"
         )
-
-    def sink_counts_sql(self, from_clause: str) -> str:
-        """DuckDB equivalent of sink_counts() for the oracle gate."""
-        selects = []
-        for r in self.routes:
-            pred = r.sql(self.mode, self.value_col)
-            selects.append(
-                f"SELECT '{r.name}' AS sink, COALESCE(SUM(CASE WHEN {pred} THEN 1 ELSE 0 END), 0) AS cnt FROM {from_clause}"
-            )
-        return " UNION ALL ".join(selects)

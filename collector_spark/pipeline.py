@@ -30,8 +30,8 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from collector_spark.checkpoint import BatchRecord, Manifest
-from collector_spark.operators.cel import rederive_variant
 from collector_spark.operators.router import Route, Router
+from collector_spark.operators.stage import Processor, fresh
 from collector_spark.registry import make_processor, make_sink
 from collector_spark.sources.sources import make_source
 
@@ -166,11 +166,11 @@ class Pipeline:
             q = dict(config.quarantine)
             self.quarantine_sink = make_sink(q.pop("kind"), **q)
             missing = [
-                kind for kind, st in self.stages if not hasattr(st, "tag")
+                kind for kind, st in self.stages if not hasattr(st, "tag_columns")
             ]
             if missing:
                 raise ValueError(
-                    f"quarantine mode needs tag() on every stage; missing: {missing}"
+                    f"quarantine mode needs tag_columns() on every stage; missing: {missing}"
                 )
         else:
             self.quarantine_sink = None
@@ -241,16 +241,6 @@ class Pipeline:
             self._failure_cols[i] = cached = (keep, F.coalesce(F.col(_FAIL), failed))
         return cached[1]
 
-    def _fresh(self, stage, received: DataFrame, out: DataFrame) -> DataFrame:
-        """``out`` of ``stage``, whose VARIANT companion of the value, if
-        any, is the parse of the current value. A stage may rewrite the
-        value (any plugin may), so the companion is re-derived after it
-        unless its class sets ``keeps_variant = True`` (CelFilter,
-        JsonMutator)."""
-        if getattr(stage, "keeps_variant", False):
-            return out
-        return rederive_variant(received, out, self.config.value_col)
-
     def transform(
         self, df: DataFrame, observations: dict[str, Observation] | None = None
     ) -> DataFrame:
@@ -260,8 +250,11 @@ class Pipeline:
         stage measuring surviving rows ON THE SAME PASS (the reference's
         per-processor Rotate() counts, manager.go:160) — no extra jobs.
         """
+        vc = self.config.value_col
         for i, (kind, stage) in enumerate(self.stages):
-            df = self._fresh(stage, df, stage.apply(df))
+            out = stage.apply(df)
+            # a built-in's apply keeps the VARIANT companion fresh itself
+            df = out if isinstance(stage, Processor) else fresh(stage, df, out, vc)
             if observations is not None:
                 name = self._stage_names[i]
                 obs = Observation(name)
@@ -286,20 +279,17 @@ class Pipeline:
         equal the filtering path's, and holds the kept rows per
         partition id (``_LINEAGE``).
 
-        Each stage's tagging is one projection when the stage has
-        ``tag_columns`` (the built-ins do); the parent's own per-stage
+        Each stage's tagging is one projection of its ``tag_columns``
+        (see ``stage.Processor``): the rows plain mode filters on ``keep``
+        are the rows tagged as failing here. The parent's own per-stage
         columns (the original value, then the first failure so far) ride
         in that projection instead of adding one each."""
         cols = self._tagged_columns
         pending = cols["start"]
         for i, (_, stage) in enumerate(self.stages):
-            split = getattr(stage, "tag_columns", None)
-            if split is not None:
-                frame, rewrites, keep = split(df)
-                out = frame.withColumns({**pending, **rewrites})
-            else:
-                out, keep = stage.tag(df.withColumns(pending))
-            df = self._fresh(stage, df, out)
+            frame, rewrites, keep = stage.tag_columns(df)
+            out = frame.withColumns({**pending, **rewrites})
+            df = fresh(stage, df, out, self.config.value_col)
             pending = {_FAIL: self._first_failure(i, keep)}
         tagged = df.withColumns({**pending, _PID: self._lineage[0]})
         if observations is not None:

@@ -9,7 +9,7 @@ categories) and the category rollup come from a single map + one tiny
 shuffle. Each JSON line is parsed twice, once per value version: the
 CEL filter and the json add read the parse of the extracted line, the
 route sums the parse of the mutated one, which the json add re-derives
-(``cel.rederive_variant``).
+(``stage.rederive_variant``).
 
 Used by bench.py (the sweep and the ``scaling`` subcommand) and by
 tests/test_plans_scale.py (physical-plan assertions: exactly one

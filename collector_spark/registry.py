@@ -4,9 +4,10 @@ Mirrors the reference's handler maps
 (/root/reference/pkg/collector/collector.go:14-21,197-231): users register
 custom inputs/processors/outputs by name; configs reference them by name.
 Here a "processor" factory returns an object with
-``apply(DataFrame) -> DataFrame``; a sink has ``write(df, batch_id) -> int``.
-A processor may rewrite the value freely: ``Pipeline`` re-derives the
-value's VARIANT companion (``cel.rederive_variant``) after every stage
+``apply(DataFrame) -> DataFrame``, all plain mode needs; quarantine mode
+needs ``tag_columns`` (``operators.stage.Processor``). A sink has
+``write(df, batch_id) -> int``. A processor may rewrite the value freely: ``Pipeline`` re-derives the
+value's VARIANT companion (``stage.rederive_variant``) after every stage
 whose class does not set ``keeps_variant = True``, so later json-mode
 readers never see the parse of a value as it was before the rewrite.
 """

@@ -54,18 +54,29 @@ def test_csv_processor_config_validation():
         make_processor("csv", schema="a array<int>, b string")  # flat only
 
 
-def test_csv_rejects_dead_letter(spark):
-    from collector_spark.operators.csv_parse import CsvParser
+def test_csv_rejects_dead_letter(spark, tmp_path):
+    """In quarantine mode the kept rows and the dead letters partition
+    the input exactly; a malformed line comes back as a dead letter with
+    its original value and the csv stage's name."""
+    from collector_spark.pipeline import Pipeline, PipelineConfig, SinkSpec
 
-    df = spark.createDataFrame(
-        [("1,a,2.0",), ("zz",), ("x,y,z",)], ["value"]
+    lines = ["1,a,2.0", "zz", "x,y,z"]
+    config = PipelineConfig(
+        instance_id="csv_q",
+        processors=[{"kind": "csv", "schema": "event_id bigint, kind string, v double"}],
+        sinks=[SinkSpec("out", "parquet", None, {"path": str(tmp_path / "out")})],
+        quarantine={"kind": "parquet", "path": str(tmp_path / "q")},
     )
-    proc = CsvParser("event_id bigint, kind string, v double")
-    kept = proc.apply(df).count()
-    rej = proc.rejects(df)
-    assert kept == 1 and rej.count() == 2
-    assert {r.reject_reason for r in rej.collect()} == {"csv_malformed"}
-    assert {r.value for r in rej.collect()} == {"zz", "x,y,z"}
+    df = spark.createDataFrame([(l,) for l in lines], ["value"])
+    record = Pipeline(config).run_batch(df, batch_id=0)
+    assert record.per_sink_counts == {"out": 1, "__quarantine__": 2}
+    kept = spark.read.parquet(str(tmp_path / "out" / "batch_id=0")).collect()
+    assert [json.loads(r.value) for r in kept] == [{"event_id": 1, "kind": "a", "v": 2.0}]
+    dead = spark.read.parquet(str(tmp_path / "q" / "batch_id=0")).collect()
+    assert {r.value: r.fail_stage for r in dead} == {
+        "zz": "stage_0_csv",
+        "x,y,z": "stage_0_csv",
+    }
 
 
 def test_csv_quoting_roundtrip_random(spark):

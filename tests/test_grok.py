@@ -115,25 +115,39 @@ def test_grok_processor_config_validation():
         make_processor("grok", pattern="%{NOSUCH:x}")  # config-time reject
 
 
+def _quarantine_run(spark, tmp_path, pattern, lines):
+    """One batch through a grok stage with a parquet quarantine sink:
+    (kept values, {dead-letter value: fail_stage})."""
+    from collector_spark.pipeline import Pipeline, PipelineConfig, SinkSpec
+
+    config = PipelineConfig(
+        instance_id="grok_q",
+        processors=[{"kind": "grok", "pattern": pattern}],
+        sinks=[SinkSpec("out", "parquet", None, {"path": str(tmp_path / "out")})],
+        quarantine={"kind": "parquet", "path": str(tmp_path / "q")},
+    )
+    df = spark.createDataFrame([(l,) for l in lines], ["value"])
+    record = Pipeline(config).run_batch(df, batch_id=0)
+    kept = [r.value for r in spark.read.parquet(str(tmp_path / "out" / "batch_id=0")).collect()]
+    dead = spark.read.parquet(str(tmp_path / "q" / "batch_id=0")).collect()
+    assert record.per_sink_counts == {"out": len(kept), "__quarantine__": len(dead)}
+    return kept, {r.value: r.fail_stage for r in dead}
+
+
 def test_grok_rejects_dead_letter(spark, tmp_path):
-    """apply() + rejects() partition the input exactly — nothing is
-    silently lost; the DLQ rows carry the reason and route to a sink."""
-    from collector_spark.sinks.sinks import FileSink
-
-    df = spark.createDataFrame([(l,) for l in LINES], ["value"])
-    proc = G.GrokParser(ACCESS)
-    kept = proc.apply(df).count()
-    rej = proc.rejects(df)
-    assert kept + rej.count() == len(LINES)
-    assert {r.reject_reason for r in rej.collect()} == {"grok_no_match"}
-    sink = FileSink(path=str(tmp_path / "dlq"))
-    assert sink.write(rej.select("value"), batch_id=0) == rej.count()
+    """In quarantine mode the kept rows and the dead letters partition
+    the input exactly — nothing is silently lost; a dead letter carries
+    its original line and the grok stage's name."""
+    kept, dead = _quarantine_run(spark, tmp_path, ACCESS, LINES)
+    assert len(kept) + len(dead) == len(LINES)
+    assert [json.loads(v)["user"] for v in kept] == ["alice"]
+    assert dead == {LINES[1]: "stage_0_grok", LINES[2]: "stage_0_grok"}
 
 
-def test_grok_marker_bearing_line_is_rejected_not_false_matched(spark):
+def test_grok_marker_bearing_line_is_rejected_not_false_matched(spark, tmp_path):
     """A line containing raw \\x01 bytes must never false-match (the
-    match test counts \\x01-delimited parts) — it is a reject with its
-    own reason, and apply()+rejects() still partition the input."""
+    match test counts \\x01-delimited parts) — in quarantine mode it is a
+    dead letter with its original value."""
     two_field = "%{WORD:a} %{WORD:b}"
     # crafted: unmatched by the pattern but contains exactly one \x01,
     # which would previously satisfy the 2-part count check
@@ -146,8 +160,9 @@ def test_grok_marker_bearing_line_is_rejected_not_false_matched(spark):
 
     proc = G.GrokParser(two_field)
     assert proc.apply(df).count() == 1
-    rej = {r.value: r.reject_reason for r in proc.rejects(df).collect()}
-    assert rej == {evil: "grok_binary_line"}
+    kept, dead = _quarantine_run(spark, tmp_path, two_field, [evil, ok])
+    assert [json.loads(v) for v in kept] == [{"a": "hello", "b": "world"}]
+    assert dead == {evil: "stage_0_grok"}
 
     # a MATCHED line whose capture carries \x01 would shift all later
     # fields — also a reject, not garbage output
@@ -155,3 +170,4 @@ def test_grok_marker_bearing_line_is_rejected_not_false_matched(spark):
     df2 = spark.createDataFrame([(shifty,)], ["value"])
     out2 = G.grok_extract(df2, "%{NOTSPACE:x} %{WORD:y}")
     assert out2.count() == 0
+    assert G.GrokParser("%{NOTSPACE:x} %{WORD:y}").apply(df2).count() == 0

@@ -281,6 +281,33 @@ def test_syslog_rfc5424_nil_sd_keeps_bracket_leading_msg(spark):
     assert got == ["[warn] disk full", "hello world"]
 
 
+def test_syslog_drops_a_line_whose_msg_is_empty(spark):
+    """A line whose MSG comes out empty or blank is dropped, as the
+    reference's temp writer drops a line that is empty once trimmed
+    (tmp_writer.go:54-56): ``apply`` drops it, and quarantine mode
+    dead-letters it at the syslog stage, so both modes keep the same
+    rows."""
+    from collector_spark.pipeline import Pipeline, PipelineConfig
+
+    header = "<34>1 2003-10-11T22:14:15.003Z host app 123 ID47 - "
+    cases = {"raw": (["<13>", "<13>   "], "<13>hello"), "rfc5424": ([header], header + "hello")}
+    for mode, (empty, line) in cases.items():
+        df = spark.createDataFrame([(l,) for l in [*empty, line]], ["value"])
+        assert [r.value for r in SyslogParser(mode).apply(df).collect()] == ["hello"]
+
+        pipe = Pipeline(
+            PipelineConfig(
+                instance_id=f"syslog_{mode}",
+                processors=[{"kind": "syslog", "type": mode}],
+                quarantine={"kind": "parquet", "path": "/nonexistent/q"},
+            )
+        )
+        _, kept, quarantined = pipe.transform_tagged(df)
+        assert [r.value for r in kept.collect()] == ["hello"]
+        dead = sorted((r.value, r.fail_stage) for r in quarantined.collect())
+        assert dead == sorted((l, "stage_0_syslog") for l in empty)
+
+
 def test_cef_version_is_first_colon_segment_both_engines(spark):
     """cef.go:52-61 takes only the segment between the 1st and 2nd
     colon; non-Atoi bare versions are dropped."""

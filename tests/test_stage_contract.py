@@ -1,0 +1,148 @@
+"""One stage contract: every built-in processor defines ``tag_columns``
+only, and plain mode and quarantine mode are derived from it, so the two
+modes keep, drop and count the same rows.
+
+The property test runs random 1-3-stage chains over random line corpora
+through ``Pipeline.run_batch`` twice, without and with a quarantine
+sink: the routed counts, the per-stage counts and the kept rows agree,
+and the dead letters are exactly the inputs plain mode drops."""
+
+from collections import Counter
+
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
+
+from collector_spark.operators.json_mutate import JsonMutator
+from collector_spark.pipeline import Pipeline, PipelineConfig, SinkSpec
+from collector_spark.registry import PROCESSOR_REGISTRY
+
+
+def test_builtins_define_only_tag_columns():
+    """``apply`` comes from the base class; the native json add is the
+    one override."""
+    for kind, cls in PROCESSOR_REGISTRY.items():
+        if not cls.__module__.startswith("collector_spark."):
+            continue  # a test's plugin
+        assert "tag_columns" in vars(cls), kind
+        assert "tag" not in vars(cls), kind
+        assert ("apply" in vars(cls)) == (cls is JsonMutator), kind
+
+
+STAGES = [
+    {"kind": "syslog", "type": "raw"},
+    {"kind": "syslog", "type": "rfc3164"},
+    {"kind": "syslog", "type": "rfc5424"},
+    {"kind": "kv", "type": "raw", "as_json": True},
+    {"kind": "kv", "type": "raw"},
+    {"kind": "kv", "type": "cef", "as_json": True},
+    {"kind": "kv", "type": "cef"},
+    {"kind": "cel", "rules": ["event.code == 200", "has(event.level)"]},
+    {"kind": "cel", "rules": ["event.code >= 400"], "action": "reject"},
+    {"kind": "json", "add": [{"key": "env", "value": "prod"}]},
+    {
+        "kind": "json",
+        "remove": [{"key": "msg"}],
+        "replace": [{"key": "code", "value": 200, "new_value": 201}],
+    },
+    {"kind": "grok", "pattern": "%{WORD:level}: %{GREEDYDATA:msg}"},
+    {"kind": "grok", "pattern": "%{INT:code}"},
+    {"kind": "csv", "schema": "code int, msg string"},
+]
+
+LINES = [
+    "",
+    "   ",
+    "<13>",
+    "<13>   ",
+    "<13>hello",
+    "<13>code=200 level=info",
+    "<13>ERROR: disk full",
+    "<13>200,ok",
+    "<34>Jan  1 00:00:00 host code=200 msg=up",
+    "<34>Jan  1 00:00:00 host ",
+    "<34>Jan  1 00:00:00 host CEF:0|v|p|1|id|name|5|code=200",
+    "<34>1 2003-10-11T22:14:15.003Z host app 123 ID47 - WARN: x",
+    "<34>1 2003-10-11T22:14:15.003Z host app 123 ID47 - ",
+    "<34>1 2003-10-11T22:14:15.003Z host app 123 ID47 - {\"code\": 200}",
+    "CEF:0|v|p|1|id|name|5|code=500 level=warn",
+    "CEF:broken",
+    "code=200 level=info",
+    "=broken line=",
+    '{"code": 200, "msg": "ok"}',
+    '{"code": 500}',
+    '{"level": "info"}',
+    '{"a":1x',
+    "[1, 2]",
+    "not json at all",
+    "ERROR: disk full",
+    "200",
+    "200,ok",
+    '"unterminated,x',
+    "x,y,z",
+    "no-space\x01tail",
+]
+
+_CORPUS = st.lists(
+    st.one_of(
+        st.sampled_from(LINES),
+        st.text(alphabet="<>13 =,:{}\"|aCEF0", max_size=12),
+    ),
+    max_size=10,
+)
+_CHAIN = st.lists(st.sampled_from(STAGES), min_size=1, max_size=3)
+
+
+class CollectSink:
+    """Collects the rows of its view (a DataFrame action, so the
+    parent's Observations fire)."""
+
+    def __init__(self):
+        self.rows = []
+
+    def write(self, df, batch_id=None):
+        self.rows = df.collect()
+        return len(self.rows)
+
+
+def _run(spark, chain, lines, quarantine):
+    config = PipelineConfig(
+        instance_id="contract",
+        processors=chain,
+        sinks=[SinkSpec("out", "file", None, {"path": "/nonexistent/out"})],
+        quarantine={"kind": "parquet", "path": "/nonexistent/q"} if quarantine else None,
+    )
+    pipe = Pipeline(config)
+    out = pipe.sinks["out"] = CollectSink()
+    dead = CollectSink()
+    if quarantine:
+        pipe.quarantine_sink = dead
+    df = spark.createDataFrame(list(enumerate(lines)), "id long, value string")
+    record = pipe.run_batch(df, batch_id=0)
+    kept = Counter((r.id, r.value) for r in out.rows)
+    return record, kept, Counter(r.value for r in dead.rows)
+
+
+@settings(
+    max_examples=30,
+    deadline=None,
+    derandomize=True,
+    database=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
+)
+@given(chain=_CHAIN, lines=_CORPUS)
+# a line whose MSG strips to empty: plain mode once kept it as ""
+@example(chain=[STAGES[0]], lines=["<13>", "<13>hello"])
+@example(chain=[STAGES[2], STAGES[11]], lines=[LINES[11], LINES[12], "<34>1 x"])
+@example(chain=[STAGES[13], STAGES[7]], lines=["200,ok", "x,y,z", '{"a":1x', ""])
+def test_plain_and_quarantine_modes_agree(spark, chain, lines):
+    plain, plain_kept, _ = _run(spark, chain, lines, quarantine=False)
+    tagged, tagged_kept, dead = _run(spark, chain, lines, quarantine=True)
+
+    counts = dict(tagged.per_sink_counts)
+    assert counts.pop("__quarantine__", 0) == sum(dead.values())
+    assert plain.per_sink_counts == counts
+    assert plain.per_stage_counts == tagged.per_stage_counts
+    assert plain_kept == tagged_kept
+    kept_ids = {i for i, _ in plain_kept}
+    dropped = Counter(v for i, v in enumerate(lines) if i not in kept_ids)
+    assert dropped == dead

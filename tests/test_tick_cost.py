@@ -244,12 +244,11 @@ DAEMON_CONFIG = {
 }
 
 
-def test_tick_plan_build_budget(spark):
-    """The quarantine tick's plan (tag every stage, observe, split into
-    kept/dead-letter, route) built a second time on a fresh frame: the
-    operators' Columns are compiled once, and the parent's bookkeeping
-    columns ride in the stages' own projections."""
-    pipe = Pipeline(PipelineConfig.from_dict(DAEMON_CONFIG))
+def _second_tick_build(spark, config: dict) -> _PlanBuildCounter:
+    """Counts the second build of a quarantine tick's plan (tag every
+    stage, observe, split into kept/dead-letter, route) on a fresh
+    frame."""
+    pipe = Pipeline(PipelineConfig.from_dict(config))
 
     def build(df):
         _, kept, quarantined = pipe.transform_tagged(df, {})
@@ -260,6 +259,30 @@ def test_tick_plan_build_budget(spark):
     with _PlanBuildCounter(spark) as counter:
         built = build(fresh)
     assert built[0]["events"].columns == ["value"]
+    return counter
+
+
+def test_tick_plan_build_budget(spark):
+    """The operators' Columns are compiled once, and the parent's
+    bookkeeping columns ride in the stages' own projections."""
+    counter = _second_tick_build(spark, DAEMON_CONFIG)
+    assert counter.round_trips <= 200, counter.round_trips
+    assert counter.analysed <= 12, counter.analysed
+
+
+@pytest.mark.parametrize(
+    "stage",
+    [
+        {"kind": "grok", "pattern": "%{WORD:level}: %{GREEDYDATA:msg}"},
+        {"kind": "csv", "schema": "code int, msg string"},
+    ],
+    ids=["grok", "csv"],
+)
+def test_parse_stage_quarantine_plan_build_budget(spark, stage):
+    """grok and csv tag in quarantine mode within the daemon tick's
+    budget: their rewrite and keep are compiled once, so the second
+    build reuses them."""
+    counter = _second_tick_build(spark, {**DAEMON_CONFIG, "processors": [stage]})
     assert counter.round_trips <= 200, counter.round_trips
     assert counter.analysed <= 12, counter.analysed
 
