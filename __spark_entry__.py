@@ -639,7 +639,7 @@ _SQL_SYSLOG_STRIP = """
 SELECT doc_id, value
 FROM (SELECT doc_id,
              regexp_replace('<' || CAST(doc_id % 192 AS VARCHAR) || '>' || text,
-                            '^<([0-9]{1,3})>', '') AS value
+                            '^<([0-9]+)>', '') AS value
       FROM documents)
 WHERE length(trim(value)) > 0
 """

@@ -20,15 +20,17 @@ from pyspark.sql import functions as F
 from collector_spark.operators.stage import Processor
 
 # Keep in sync with collector_spark.oracle semantics.
-_PRI = r"^<([0-9]{1,3})>"
+# raw mode strips any all-digit PRI (oracle._PRI_RE, syslog.go:96-99)
+_PRI = r"^<([0-9]+)>"
+# the RFC modes take a PRI of 1-3 digits worth at most 191, zero
+# padding allowed (<013>), as the oracle's int(pri) > 191 check does
+_RFC_PRI = r"^<(?:[0-9]{1,2}|0[0-9]{2}|1[0-8][0-9]|19[01])>"
 # RFC3164: <PRI>Mmm dd hh:mm:ss host MSG   (day may be space-padded)
-_RFC3164_MSG = r"^<[0-9]{1,3}>[A-Z][a-z]{2} [ 0-9][0-9] [0-9]{2}:[0-9]{2}:[0-9]{2} \S+ (.*)$"
+_RFC3164_MSG = _RFC_PRI + r"[A-Z][a-z]{2} [ 0-9][0-9] [0-9]{2}:[0-9]{2}:[0-9]{2} \S+ (.*)$"
 # RFC5424: <PRI>VER TS HOST APP PROCID MSGID SD MSG ; SD is '-' XOR
 # adjacent [..] groups (exclusive — mixing let a '-' swallow a
 # '[...]'-leading MSG head as fake SD; oracle._RFC5424_RE matches)
-_RFC5424_MSG = (
-    r"^<[0-9]{1,3}>[1-9][0-9]{0,2} \S+ \S+ \S+ \S+ \S+ (?:-|(?:\[[^\]]*\])+) (.*)$"
-)
+_RFC5424_MSG = _RFC_PRI + r"[1-9][0-9]{0,2} \S+ \S+ \S+ \S+ \S+ (?:-|(?:\[[^\]]*\])+) (.*)$"
 
 
 #: the MSG pattern of each RFC mode; raw mode strips the PRI only

@@ -9,11 +9,14 @@ Spark mapping:
   DataFrame→DataFrame transforms (Catalyst then optimizes the whole
   chain as one plan — filters get pushed past parses where legal,
   columns pruned, codegen fused);
-- fan-out = one persisted DataFrame + N filtered sink writes (the router);
+- fan-out = N filtered sink writes of one parent (the router), which
+  is persisted only when more than one Spark job reads it;
 - per-stage surviving counts (the reference's per-processor Rotate()
   counts, manager.go:160) and the kept rows per partition id (the
   lineage) come from ``df.observe`` metrics on the parent — measured on
-  the SAME pass, no extra jobs: a batch runs one Spark job per sink;
+  the SAME pass, no extra jobs. So do a small batch's dead letters
+  (quarantine mode, input a LocalRelation): the driver writes them, and
+  a tick with one events sink runs one Spark job;
 - commit = manifest record written AFTER all sinks (at-least-once with
   idempotent replay; see collector_spark.checkpoint).
 """
@@ -33,6 +36,7 @@ from collector_spark.checkpoint import BatchRecord, Manifest
 from collector_spark.operators.router import Route, Router
 from collector_spark.operators.stage import Processor, fresh
 from collector_spark.registry import make_processor, make_sink
+from collector_spark.session import arrow_table
 from collector_spark.sources.sources import make_source
 
 
@@ -87,11 +91,13 @@ class PipelineConfig:
         return cfg
 
 
-# the parent's helper columns (dropped before any sink) and the lineage
-# metrics; a batch with more partitions than the histogram has bins
-# would get merged bins, which _partition_counts rejects
+# the parent's helper columns (dropped before any sink), the lineage
+# metrics and the dead letters' metric; a batch with more partitions
+# than the histogram has bins would get merged bins, which
+# _partition_counts rejects
 _ORIG, _FAIL, _PID = "_orig", "_fail_stage", "_pid"
-_LINEAGE, _KEPT = "_partitions", "_kept"
+_LINEAGE, _KEPT, _DEAD = "_partitions", "_kept", "_dead_letters"
+_QUARANTINE = "__quarantine__"
 _MAX_PARTITIONS = 1 << 16
 
 
@@ -216,15 +222,19 @@ class Pipeline:
             F.count(F.when(kept | ~fail.isin(names[: i + 1]), 1)).alias(name)
             for i, name in enumerate(names)
         ]
+        failed = fail.isNotNull()
+        dead_letter = [F.col(_ORIG).alias(vc), fail.alias("fail_stage")]
         return {
             "start": {_ORIG: F.col(vc), _FAIL: F.lit(None).cast("string")},
             "kept": kept,
-            "failed": fail.isNotNull(),
-            "dead_letter": [F.col(_ORIG).alias(vc), fail.alias("fail_stage")],
+            "failed": failed,
+            "dead_letter": dead_letter,
             "metrics": counts + [
                 F.histogram_numeric(F.when(kept, F.col(_PID)), F.lit(_MAX_PARTITIONS)).alias(_LINEAGE),
                 F.count(F.when(kept, 1)).alias(_KEPT),
             ],
+            # collect_list skips the NULLs of the kept rows
+            "observed_dead_letters": F.collect_list(F.when(failed, F.struct(*dead_letter))).alias(_DEAD),
         }
 
     def _first_failure(self, i: int, keep: Column) -> Column:
@@ -263,7 +273,10 @@ class Pipeline:
         return df
 
     def transform_tagged(
-        self, df: DataFrame, observations: dict[str, Observation] | None = None
+        self,
+        df: DataFrame,
+        observations: dict[str, Observation] | None = None,
+        observe_dead_letters: bool = False,
     ) -> tuple[DataFrame, DataFrame, DataFrame]:
         """Quarantine variant of transform(): every stage TAGS instead of
         filters; a row's first failing stage is recorded. Returns
@@ -277,7 +290,9 @@ class Pipeline:
         lineage: one Observation on the parent counts, per stage, the
         rows that passed it and every stage before it, so the counts
         equal the filtering path's, and holds the kept rows per
-        partition id (``_LINEAGE``).
+        partition id (``_LINEAGE``). With ``observe_dead_letters`` it
+        also holds the dead-letter rows (``_DEAD``): only for a batch the
+        driver could hold, as every dead letter is a copy of an input row.
 
         Each stage's tagging is one projection of its ``tag_columns``
         (see ``stage.Processor``): the rows plain mode filters on ``keep``
@@ -293,9 +308,12 @@ class Pipeline:
             pending = {_FAIL: self._first_failure(i, keep)}
         tagged = df.withColumns({**pending, _PID: self._lineage[0]})
         if observations is not None:
+            metrics, names = cols["metrics"], self._stage_names + [_LINEAGE]
+            if observe_dead_letters:
+                metrics, names = metrics + [cols["observed_dead_letters"]], names + [_DEAD]
             obs = Observation("stages")
-            tagged = tagged.observe(obs, *cols["metrics"])
-            for name in self._stage_names + [_LINEAGE]:
+            tagged = tagged.observe(obs, *metrics)
+            for name in names:
                 observations[name] = obs
         kept = tagged.filter(cols["kept"]).drop(_ORIG, _FAIL, _PID)
         quarantined = tagged.filter(cols["failed"]).select(*cols["dead_letter"])
@@ -343,15 +361,23 @@ class Pipeline:
     def _run_batch_inner(
         self, df: DataFrame, batch_id: int, source_state: dict | None
     ) -> BatchRecord:
-        """One persisted parent, then every sink write and the commit.
-        Plain mode filters stage by stage (later stages never run on
-        dropped rows); quarantine mode tags every row in one pass and
-        adds the dead-letter write (original value + first failing
-        stage) for the rows the filters would have dropped. The per-stage
-        counts and the kept rows per partition (the lineage) are
-        Observations on the parent, so the first write measures them:
-        the batch runs one Spark job per sink and no other."""
+        """The sink writes, then the commit. Plain mode filters stage by
+        stage (later stages never run on dropped rows); quarantine mode
+        tags every row in one pass and adds the dead-letter write
+        (original value + first failing stage) for the rows the filters
+        would have dropped. The per-stage counts and the kept rows per
+        partition (the lineage) are Observations on the parent, so the
+        first write measures them: the batch runs no job besides its
+        writes.
+
+        A small batch's dead letters ride the same Observation when the
+        input is a LocalRelation (its rows, and so every dead letter,
+        already fit on the driver) and the quarantine sink ``takes_rows``:
+        the driver writes them after the routed writes, and a tick with
+        one sink runs one Spark job. The parent is persisted only when
+        more than one Spark job reads it."""
         observations: dict[str, Observation] = {}
+        dead_rows = False
         if self.quarantine_sink is None:
             pid, lineage = self._lineage
             obs = Observation("lineage")
@@ -360,8 +386,13 @@ class Pipeline:
             out = parent.drop(_PID)
             dead_letter = []
         else:
-            parent, out, quarantined = self.transform_tagged(df, observations)
-            dead_letter = [("__quarantine__", self.quarantine_sink, quarantined)]
+            dead_rows = (
+                self.router is not None
+                and getattr(self.quarantine_sink, "takes_rows", False)
+                and df.isLocal()
+            )
+            parent, out, quarantined = self.transform_tagged(df, observations, dead_rows)
+            dead_letter = [] if dead_rows else [(_QUARANTINE, self.quarantine_sink, quarantined)]
         routed = (
             [(name, self.sinks[name], view) for name, view in self.router.split(out).items()]
             if self.router is not None
@@ -374,18 +405,25 @@ class Pipeline:
         per_sink_retry: dict[str, int] = {}
         partition_counts: dict[str, int] = {}
         per_stage: dict[str, int] = {}
+
+        def wrote(name, sink, written):
+            per_sink[name] = written
+            metrics = getattr(sink, "last_metrics", None) or {}
+            if metrics.get("empty"):
+                per_sink_empty[name] = metrics["empty"]
+            if metrics.get("retries"):
+                per_sink_retry[name] = metrics["retries"]
+
         if targets:
-            parent.persist(StorageLevel.MEMORY_AND_DISK)
+            shared = len(targets) > 1
+            if shared:
+                parent.persist(StorageLevel.MEMORY_AND_DISK)
             try:
                 for name, sink, view in targets:
-                    per_sink[name] = sink.write(view, batch_id=batch_id)
-                    metrics = getattr(sink, "last_metrics", None) or {}
-                    if metrics.get("empty"):
-                        per_sink_empty[name] = metrics["empty"]
-                    if metrics.get("retries"):
-                        per_sink_retry[name] = metrics["retries"]
+                    wrote(name, sink, sink.write(view, batch_id=batch_id))
             finally:
-                parent.unpersist()
+                if shared:
+                    parent.unpersist()
             # only read after a write ran: Observation.get blocks until
             # a DataFrame action over the parent has finished
             observed: dict = {}
@@ -393,6 +431,11 @@ class Pipeline:
                 observed.update(_observed(obs))
             per_stage = {name: int(observed.get(name, 0)) for name in self._stage_names}
             partition_counts = _partition_counts(observed)
+            if dead_rows:
+                rows = observed.get(_DEAD) or []
+                table = arrow_table(quarantined.schema, [r[0] for r in rows], [r[1] for r in rows])
+                sink = self.quarantine_sink
+                wrote(_QUARANTINE, sink, sink.write_rows(table, batch_id=batch_id))
         record = BatchRecord(
             batch_id=batch_id,
             source_state=source_state or {},

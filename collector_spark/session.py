@@ -107,19 +107,11 @@ def spark_conf(
 _SURROGATE = re.compile("[\ud800-\udfff]")
 
 
-def driver_frame(
-    spark: SparkSession, schema: StructType, *columns: Sequence
-) -> DataFrame:
-    """The one way driver-side values enter Spark: one sequence per field
-    of ``schema``, shipped as a ``pyarrow.Table``.
-
-    Up to ``LOCAL_RELATION_BYTES`` the frame plans as a LocalRelation (a
-    LocalTableScan), above it as an RDD of Arrow batches decoded in the
-    JVM; either way no job that scans it starts a Python worker.
-    ``createDataFrame(<list>)`` pickles the rows into a PythonRDD instead,
-    and every job over that pays a Python pass per partition. A lone
-    surrogate in a string becomes U+FFFD, as the list path's JVM
-    unpickler makes it (pyarrow refuses to encode one)."""
+def arrow_table(schema: StructType, *columns: Sequence) -> pa.Table:
+    """One sequence per field of ``schema`` as a ``pyarrow.Table`` of the
+    Arrow types Spark maps the fields to. A lone surrogate in a string
+    becomes U+FFFD, as the JVM unpickler makes it (pyarrow refuses to
+    encode one)."""
 
     def array(values: Sequence, field):
         typ = to_arrow_type(field.dataType)
@@ -131,10 +123,24 @@ def driver_frame(
                 typ,
             )
 
-    table = pa.Table.from_arrays(
+    return pa.Table.from_arrays(
         [array(values, field) for values, field in zip(columns, schema.fields, strict=True)],
         names=schema.names,
     )
+
+
+def driver_frame(
+    spark: SparkSession, schema: StructType, *columns: Sequence
+) -> DataFrame:
+    """The one way driver-side values enter Spark: one sequence per field
+    of ``schema``, shipped as an ``arrow_table``.
+
+    Up to ``LOCAL_RELATION_BYTES`` the frame plans as a LocalRelation (a
+    LocalTableScan), above it as an RDD of Arrow batches decoded in the
+    JVM; either way no job that scans it starts a Python worker.
+    ``createDataFrame(<list>)`` pickles the rows into a PythonRDD instead,
+    and every job over that pays a Python pass per partition."""
+    table = arrow_table(schema, *columns)
     df = spark.createDataFrame(table, schema)
     if table.nbytes > LOCAL_RELATION_BYTES:
         # the RDD has one partition per 10k-row Arrow batch: a 45 MB tick

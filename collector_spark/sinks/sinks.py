@@ -29,8 +29,13 @@ from __future__ import annotations
 
 import functools
 import os
+import shutil
+import uuid
 from datetime import datetime, timezone
+from urllib.parse import urlparse
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
@@ -141,6 +146,60 @@ class ParquetSink(_BaseSink):
         written = int(obs.get["written"])
         self.last_metrics = {"written": written, "empty": 0}
         return written
+
+    @property
+    def takes_rows(self) -> bool:
+        """Whether ``write_rows`` may write this sink: one file per batch
+        on the driver's local filesystem (no scheme, or ``file:``)."""
+        scheme = urlparse(self.path).scheme
+        return scheme in ("", "file") and not (self.partition_by or self.max_records)
+
+    def write_rows(self, table: pa.Table, batch_id: int | None = None) -> int:
+        """Write driver-side rows where ``write`` would write them as a
+        frame, as Spark lays them out: ``_SUCCESS`` plus one
+        ``part-00000-<uuid>-c000.snappy.parquet``, replacing the batch's
+        directory. Only when ``takes_rows``. For a handful of rows this
+        saves a Spark job (0.25-0.36 s a daemon tick on 4 vCPUs).
+
+        The files go to a hidden sibling directory (Spark's reader skips
+        names starting with ``.``) that is then renamed over the target,
+        so a crash never leaves a readable partial batch."""
+        final = _local(self.target(batch_id))
+        root, name = os.path.split(final.rstrip(os.sep))
+        tmp = os.path.join(root, f".{name}-{uuid.uuid4().hex}.tmp")
+        os.makedirs(tmp)
+        try:
+            pq.write_table(
+                table,
+                os.path.join(tmp, f"part-00000-{uuid.uuid4()}-c000.snappy.parquet"),
+                compression="snappy",
+            )
+            open(os.path.join(tmp, "_SUCCESS"), "wb").close()
+            _replace_dir(tmp, final)
+        except BaseException:
+            shutil.rmtree(tmp, ignore_errors=True)
+            raise
+        self.last_metrics = {"written": table.num_rows, "empty": 0}
+        return table.num_rows
+
+
+def _local(path: str) -> str:
+    """``path`` on the local filesystem: a ``file:`` URL's path."""
+    url = urlparse(path)
+    return url.path if url.scheme == "file" else path
+
+
+def _replace_dir(tmp: str, final: str) -> None:
+    """Put directory ``tmp`` in the place of ``final`` by rename. An old
+    ``final`` is first renamed to a hidden name, then deleted; between
+    the two renames the batch reads as absent, never as partial."""
+    old = f"{tmp}.old"
+    replaced = os.path.isdir(final)
+    if replaced:
+        os.rename(final, old)
+    os.rename(tmp, final)
+    if replaced:
+        shutil.rmtree(old)
 
 
 class FileSink(_BaseSink):

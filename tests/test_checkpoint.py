@@ -1,8 +1,8 @@
 """Manifest commit path: an append-only JSON-lines log read once per
 handle. Pins the torn-tail rule, rollback of a failed append, the O(1)
 commit structure (no re-parse, no rewrite), agreement between the
-writer's in-memory view and a fresh reader, and the first two rows of
-the tick crash-point matrix on a file-source pipeline."""
+writer's in-memory view and a fresh reader, and four rows of the tick
+crash-point matrix on a file-source pipeline with a quarantine sink."""
 
 import errno
 import json
@@ -153,34 +153,47 @@ def test_fresh_handle_agrees_with_writer_after_replay(tmp_path):
 
 
 def test_tick_crash_points_converge_to_exactly_once(spark, tmp_path, monkeypatch):
-    """Crash-point matrix, first two rows, on a file-source pipeline:
+    """Crash-point matrix on a file-source pipeline whose malformed lines
+    go to a parquet quarantine the driver writes:
     (1) the sinks wrote but the commit failed → the next tick reuses the
     batch id and offset and overwrites, so ``batch_id=N`` holds each line
-    once; (2) the commit landed but the source ack failed → the next tick
-    moves on to N+1 and no row is duplicated."""
+    once; (2) the events write ran, the dead-letter write did not;
+    (3) the dead letters sit in the writer's hidden temp directory, not
+    yet renamed into place (as a killed writer leaves it) → a read skips
+    it, and the rerun publishes the batch; (4) the commit landed but the
+    source ack failed → the next tick moves on to N+1 and no row is
+    duplicated."""
     from collector_spark.pipeline import Pipeline, PipelineConfig, SinkSpec
+    from collector_spark.sinks import sinks
 
     log = tmp_path / "app.log"
     out = tmp_path / "out"
+    quarantine = tmp_path / "q"
     state = str(tmp_path / "state")
 
     def append(ids):
         with open(log, "a") as f:
-            f.writelines(json.dumps({"i": i}) + "\n" for i in ids)
+            f.writelines(json.dumps({"i": i}) + f"\nbad {i}\n" for i in ids)
 
     def rows(batch_id):
         df = spark.read.parquet(str(out / f"batch_id={batch_id}"))
         return sorted(json.loads(r.value)["i"] for r in df.collect())
 
+    def dead_letters():
+        """Every quarantined line, read from the sink's root."""
+        return sorted(int(r.value.split()[1]) for r in spark.read.parquet(str(quarantine)).collect())
+
     pipe = Pipeline(
         PipelineConfig(
             instance_id="crash",
             input={"kind": "file", "path": str(tmp_path / "*.log")},
-            processors=[],
+            processors=[{"kind": "cel", "rules": ["has(event.i)"]}],
             sinks=[SinkSpec("out", "parquet", None, {"path": str(out)})],
+            quarantine={"kind": "parquet", "path": str(quarantine)},
         ),
         state_dir=state,
     )
+    assert pipe.quarantine_sink.takes_rows
     append(range(3))
     assert pipe.run_tick(spark).batch_id == 0
     offset0 = pipe.manifest.last_state()
@@ -195,17 +208,55 @@ def test_tick_crash_points_converge_to_exactly_once(spark, tmp_path, monkeypatch
         patch.setattr(pipe.manifest, "commit", crash_before_commit)
         with pytest.raises(RuntimeError, match="before commit"):
             pipe.run_tick(spark)
-    assert rows(1) == [3, 4, 5]  # the sink did write
+    assert rows(1) == [3, 4, 5]  # the sinks did write
+    assert dead_letters() == list(range(6))
     for m in (pipe.manifest, Manifest(state, "crash")):
         assert not m.committed(1)
         assert m.last_state() == offset0
     r1 = pipe.run_tick(spark)
     assert r1.batch_id == 1
-    assert r1.per_sink_counts == {"out": 3}
+    assert r1.per_sink_counts == {"out": 3, "__quarantine__": 3}
     assert rows(1) == [3, 4, 5]
+    assert dead_letters() == list(range(6))
 
-    # (2) commit landed, source ack fails
+    # (2) events written, the driver's dead-letter write never starts
     append(range(6, 8))
+
+    def crash_before_write_rows(table, batch_id=None):
+        raise RuntimeError("crash before write_rows")
+
+    with monkeypatch.context() as patch:
+        patch.setattr(pipe.quarantine_sink, "write_rows", crash_before_write_rows)
+        with pytest.raises(RuntimeError, match="before write_rows"):
+            pipe.run_tick(spark)
+    assert rows(2) == [6, 7]
+    assert dead_letters() == list(range(6))
+    assert not Manifest(state, "crash").committed(2)
+    assert pipe.run_tick(spark).per_sink_counts == {"out": 2, "__quarantine__": 2}
+    assert rows(2) == [6, 7]
+    assert dead_letters() == list(range(8))
+
+    # (3) the temp directory is written, the rename never runs, and the
+    # writer's own clean-up never runs either (a killed process)
+    append(range(8, 10))
+
+    def crash_before_rename(tmp, final):
+        raise RuntimeError("crash before rename")
+
+    with monkeypatch.context() as patch:
+        patch.setattr(sinks, "_replace_dir", crash_before_rename)
+        patch.setattr(sinks.shutil, "rmtree", lambda *a, **k: None)
+        with pytest.raises(RuntimeError, match="before rename"):
+            pipe.run_tick(spark)
+    hidden = [n for n in os.listdir(quarantine) if n.startswith(".")]
+    assert len(hidden) == 1 and os.listdir(quarantine / hidden[0])  # the leftover
+    assert dead_letters() == list(range(8))  # not read
+    assert pipe.run_tick(spark).per_sink_counts == {"out": 2, "__quarantine__": 2}
+    assert rows(3) == [8, 9]
+    assert dead_letters() == list(range(10))
+
+    # (4) commit landed, source ack fails
+    append(range(10, 12))
 
     def crash_before_ack(success):
         raise RuntimeError("crash before ack")
@@ -214,13 +265,14 @@ def test_tick_crash_points_converge_to_exactly_once(spark, tmp_path, monkeypatch
         patch.setattr(pipe.source, "commit_read", crash_before_ack)
         with pytest.raises(RuntimeError, match="before ack"):
             pipe.run_tick(spark)
-    assert Manifest(state, "crash").last_batch_id() == 2
-    append(range(8, 10))
-    r3 = pipe.run_tick(spark)
-    assert r3.batch_id == 3
-    assert rows(3) == [8, 9]
-    everything = [i for b in range(4) for i in rows(b)]
-    assert sorted(everything) == list(range(10))
+    assert Manifest(state, "crash").last_batch_id() == 4
+    append(range(12, 14))
+    r5 = pipe.run_tick(spark)
+    assert r5.batch_id == 5
+    assert rows(5) == [12, 13]
+    everything = [i for b in range(6) for i in rows(b)]
+    assert sorted(everything) == list(range(14))
+    assert dead_letters() == list(range(14))
 
 
 def test_writer_refuses_a_log_that_shrank(tmp_path):

@@ -158,6 +158,32 @@ def test_quarantine_file_tick_plan(spark, tmp_path):
     record = pipe.run_tick(spark)
     assert record.per_sink_counts == {"events": 1, "__quarantine__": 2}
 
+    # the same tick with a quarantine sink the driver cannot write (a
+    # rotation option) takes Spark's write and agrees on every count
+    spark_write = Pipeline(
+        PipelineConfig(
+            **{
+                **vars(pipe.config),
+                "quarantine": {
+                    "kind": "parquet",
+                    "path": f"{out}/quarantine_spark",
+                    "max_records_per_file": 100,
+                },
+            }
+        ),
+        state_dir=str(tmp_path / "state_spark"),
+    )
+    assert pipe.quarantine_sink.takes_rows and not spark_write.quarantine_sink.takes_rows
+    again = spark_write.run_tick(spark)
+    for field in ("per_sink_counts", "per_stage_counts", "partition_counts"):
+        assert getattr(record, field) == getattr(again, field), field
+    for path in ("quarantine", "quarantine_spark"):
+        dead = spark.read.parquet(f"{out}/{path}").collect()
+        assert sorted((r.value, r.fail_stage) for r in dead) == [
+            ("<134>Apr 13 10:23:02 host2 not a cef body seq=2", "stage_1_kv"),
+            ("garbled line seq=3", "stage_0_syslog"),
+        ]
+
 
 def test_driver_frame_is_the_only_create_dataframe():
     """No other code under collector_spark/ builds a frame from driver

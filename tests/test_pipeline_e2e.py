@@ -15,6 +15,7 @@ from collector_spark.operators.extract import HtmlExtractor
 from collector_spark.operators.router import Route, Router
 from collector_spark.pipeline import Pipeline, PipelineConfig, SinkSpec
 from collector_spark.sinks.sinks import make_sink
+from collector_spark.sources.sources import lines_frame
 
 
 def test_router_multi_match_and_counts(spark):
@@ -177,6 +178,28 @@ def test_quarantine_dead_letter_path(spark, tmp_path):
     assert plain_record.per_stage_counts == record.per_stage_counts
     assert sum(record.partition_counts.values()) == 2
     assert sum(plain_record.partition_counts.values()) == 2
+
+    # the list above is a pickled RDD, so its dead letters took Spark's
+    # write; over a LocalRelation the driver writes them, and a sink
+    # with a rotation option keeps Spark's write: all three agree
+    local = lines_frame(spark, lines)
+    runs = []
+    for name, extra in (("driver", {}), ("spark", {"max_records_per_file": 100})):
+        cfg = PipelineConfig(
+            instance_id=f"q_{name}",
+            processors=config.processors,
+            sinks=[SinkSpec("out", "parquet", None, {"path": str(tmp_path / f"out_{name}")})],
+            quarantine={"kind": "parquet", "path": str(tmp_path / f"quar_{name}"), **extra},
+        )
+        r = Pipeline(cfg).run_batch(local, batch_id=0)
+        dead = spark.read.parquet(str(tmp_path / f"quar_{name}" / "batch_id=0")).collect()
+        assert {d.value: d.fail_stage for d in dead} == got
+        assert (r.per_sink_counts, r.per_stage_counts) == (
+            record.per_sink_counts,
+            record.per_stage_counts,
+        )
+        runs.append(r.partition_counts)
+    assert runs[0] == runs[1]
 
 
 def test_quarantine_second_stage_failure(spark, tmp_path):

@@ -281,6 +281,56 @@ def test_syslog_rfc5424_nil_sd_keeps_bracket_leading_msg(spark):
     assert got == ["[warn] disk full", "hello world"]
 
 
+PRIS = ["0", "00", "013", "13", "099", "189", "191", "192", "200", "999", "0191", "1234"]
+
+
+def test_syslog_rfc_pri_range_matches_oracle(spark):
+    """The RFC modes take a PRI of 1-3 digits worth at most 191, zero
+    padding allowed (``<013>``), exactly as the oracle does."""
+    bodies = {
+        "rfc3164": ("Jan  1 00:00:00 host hello", oracle.syslog_rfc3164),
+        "rfc5424": ("1 2003-10-11T22:14:15.003Z host app 123 ID47 - hello", oracle.syslog_rfc5424),
+    }
+    for mode, (body, parse) in bodies.items():
+        lines = [f"<{pri}>{body}" for pri in PRIS]
+        df = spark.createDataFrame(list(enumerate(lines)), "id long, value string")
+        got = {r.id: r.value for r in SyslogParser(mode).apply(df).collect()}
+        want = {}
+        for i, line in enumerate(lines):
+            try:
+                want[i] = parse(line)
+            except oracle.ParseError:
+                pass
+        assert got == want, mode
+        assert sorted(PRIS[i] for i in got) == ["0", "00", "013", "099", "13", "189", "191"]
+
+
+def test_syslog_raw_strips_any_all_digit_pri(spark):
+    lines = [f"<{pri}>x" for pri in PRIS] + ["<>x", "<1a>x", "<12345678901234567890>x"]
+    df = spark.createDataFrame(list(enumerate(lines)), "id long, value string")
+    got = {r.id: r.value for r in SyslogParser("raw").apply(df).collect()}
+    assert got == {i: oracle.syslog_raw(l) for i, l in enumerate(lines)}
+    assert got[PRIS.index("1234")] == "x"
+
+
+def test_syslog_pri_over_191_is_dropped_or_quarantined(spark):
+    from collector_spark.pipeline import Pipeline, PipelineConfig
+
+    bad, good = "<999>Jan  1 00:00:00 host hello", "<13>Jan  1 00:00:00 host hi"
+    df = spark.createDataFrame([(bad,), (good,)], ["value"])
+    assert [r.value for r in SyslogParser("rfc3164").apply(df).collect()] == ["hi"]
+    pipe = Pipeline(
+        PipelineConfig(
+            instance_id="pri",
+            processors=[{"kind": "syslog", "type": "rfc3164"}],
+            quarantine={"kind": "parquet", "path": "/nonexistent/q"},
+        )
+    )
+    _, kept, quarantined = pipe.transform_tagged(df)
+    assert [r.value for r in kept.collect()] == ["hi"]
+    assert [(r.value, r.fail_stage) for r in quarantined.collect()] == [(bad, "stage_0_syslog")]
+
+
 def test_syslog_drops_a_line_whose_msg_is_empty(spark):
     """A line whose MSG comes out empty or blank is dropped, as the
     reference's temp writer drops a line that is empty once trimmed

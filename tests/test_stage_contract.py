@@ -5,16 +5,23 @@ modes keep, drop and count the same rows.
 The property test runs random 1-3-stage chains over random line corpora
 through ``Pipeline.run_batch`` twice, without and with a quarantine
 sink: the routed counts, the per-stage counts and the kept rows agree,
-and the dead letters are exactly the inputs plain mode drops."""
+and the dead letters are exactly the inputs plain mode drops. Its
+parquet variant writes the dead letters to a parquet quarantine sink
+both ways (by the driver, off the events write's Observation, and by
+Spark) and reads them back."""
 
+import os
+import tempfile
 from collections import Counter
 
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from collector_spark.operators.json_mutate import JsonMutator
 from collector_spark.pipeline import Pipeline, PipelineConfig, SinkSpec
 from collector_spark.registry import PROCESSOR_REGISTRY
+from collector_spark.session import driver_frame
 
 
 def test_builtins_define_only_tag_columns():
@@ -146,3 +153,54 @@ def test_plain_and_quarantine_modes_agree(spark, chain, lines):
     kept_ids = {i for i, _ in plain_kept}
     dropped = Counter(v for i, v in enumerate(lines) if i not in kept_ids)
     assert dropped == dead
+
+
+ID_LINES = StructType([StructField("id", LongType()), StructField("value", StringType())])
+
+
+def _run_parquet(spark, chain, lines, root, **quarantine):
+    """``_run`` with a parquet quarantine sink at ``root`` over a
+    LocalRelation; the dead letters are read back."""
+    config = PipelineConfig(
+        instance_id="contract_parquet",
+        processors=chain,
+        sinks=[SinkSpec("out", "file", None, {"path": "/nonexistent/out"})],
+        quarantine={"kind": "parquet", "path": root, **quarantine},
+    )
+    pipe = Pipeline(config)
+    out = pipe.sinks["out"] = CollectSink()
+    df = driver_frame(spark, ID_LINES, list(range(len(lines))), lines)
+    record = pipe.run_batch(df, batch_id=0)
+    dead = spark.read.parquet(f"{root}/batch_id=0").collect()
+    return record, Counter((r.id, r.value) for r in out.rows), Counter(r.value for r in dead)
+
+
+@settings(
+    max_examples=15,
+    deadline=None,
+    derandomize=True,
+    database=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
+)
+@given(chain=_CHAIN, lines=_CORPUS)
+@example(chain=[STAGES[1], STAGES[5]], lines=LINES[8:14])
+def test_parquet_dead_letters_agree_on_both_write_paths(spark, chain, lines):
+    plain, plain_kept, _ = _run(spark, chain, lines, quarantine=False)
+    with tempfile.TemporaryDirectory() as root:
+        one = _run_parquet(spark, chain, lines, f"{root}/driver")
+        # a rotation option keeps the sink's Spark write
+        two = _run_parquet(spark, chain, lines, f"{root}/spark", max_records_per_file=1 << 20)
+        # the driver's writer leaves no checksum files, Spark's does
+        assert not any(n.endswith(".crc") for n in os.listdir(f"{root}/driver/batch_id=0"))
+
+    (record, kept, dead), (record2, kept2, dead2) = one, two
+    for field in ("per_sink_counts", "per_stage_counts", "partition_counts"):
+        assert getattr(record, field) == getattr(record2, field), field
+    assert (kept, dead) == (kept2, dead2)
+    counts = dict(record.per_sink_counts)
+    assert counts.pop("__quarantine__") == sum(dead.values())
+    assert plain.per_sink_counts == counts
+    assert plain.per_stage_counts == record.per_stage_counts
+    assert plain_kept == kept
+    kept_ids = {i for i, _ in kept}
+    assert dead == Counter(v for i, v in enumerate(lines) if i not in kept_ids)

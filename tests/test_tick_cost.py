@@ -3,8 +3,12 @@ plan build.
 
 - Partition lineage is measured on the write pass: the kept rows per
   partition id come from the parent's Observation, and equal a
-  ``groupBy(spark_partition_id())`` over the persisted parent.
-- A quarantine-mode tick runs exactly one Spark job per write.
+  ``groupBy(spark_partition_id())`` over the parent.
+- A quarantine-mode tick of a small tail runs exactly one Spark job: the
+  dead letters ride the events write's Observation and the driver
+  writes them. A tail over ``LOCAL_RELATION_BYTES``, or a quarantine
+  sink that cannot take driver rows, runs one job per write, with the
+  same counts. The parent is persisted only for more than one job.
 - Every sink write is a DataFrame action, so the Observations fire with
   the HTTP-family sinks as the only sink.
 - A batch's plan build reuses the operators' compiled Columns: py4j
@@ -21,12 +25,15 @@ from pyspark.sql.classic.dataframe import DataFrame
 
 from collector_spark import datagen
 from collector_spark.pipeline import Pipeline, PipelineConfig, SinkSpec
+from collector_spark.session import LOCAL_RELATION_BYTES
+from collector_spark.sources.sources import lines_frame
 from collector_spark.plans.pages_job import build_pages_agg
 
 
 class LineageProbe:
-    """Sink that reads its view's rows per partition id: the parent is
-    persisted while it writes, so this is the lineage over the cache."""
+    """Sink that reads its view's rows per partition id (over the cache
+    when the parent is persisted, else recomputed: the partitioning is
+    the same)."""
 
     def __init__(self):
         self.reference = None
@@ -75,38 +82,127 @@ def test_lineage_matches_groupby_over_persisted_parent(spark, tmp_path, quaranti
         assert record.partition_counts == {"0": 10, "2": 10}
 
 
-def test_quarantine_file_tick_runs_two_spark_jobs(spark, tmp_path):
-    """One job per write (the events text sink, the quarantine parquet)
-    and no other: the lineage and the stage counts ride on the first."""
+def _ticker(spark, tmp_path, quarantine_kind: str = "parquet"):
+    """(pipe, tick): a quarantine-mode file-source instance, and a
+    function that appends lines to its log, runs one tick in a job group
+    and returns the record and the group's Spark job count."""
     log = tmp_path / "app.log"
     config = {
         "instance_id": "jobs",
         "input": {"kind": "file", "path": str(log)},
         "processors": [{"kind": "cel", "rules": ["event.code == 200"]}],
         "sinks": [{"name": "events", "kind": "file", "config": {"path": str(tmp_path / "ev")}}],
-        "quarantine": {"kind": "parquet", "path": str(tmp_path / "q")},
+        "quarantine": {"kind": quarantine_kind, "path": str(tmp_path / "q")},
     }
     pipe = Pipeline(PipelineConfig.from_dict(config), state_dir=str(tmp_path / "state"))
     sc = spark.sparkContext
 
-    def append_and_tick(lines, group):
+    def tick(lines, group):
         with open(log, "a") as f:
             f.writelines(line + "\n" for line in lines)
         sc.setJobGroup(group, group)
         try:
-            return pipe.run_tick(spark)
+            record = pipe.run_tick(spark)
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
             sc.setLocalProperty("spark.job.description", None)
+        return record, len(sc.statusTracker().getJobIdsForGroup(group))
 
-    append_and_tick(['{"code": 200}', "not json"], "tick-cost-warm")
-    record = append_and_tick(
-        ['{"code": 200, "i": 1}', '{"code": 500}', '{"code": 200, "i": 2}'], "tick-cost"
-    )
+    return pipe, tick
+
+
+TICK = ['{"code": 200, "i": 1}', '{"code": 500}', '{"code": 200, "i": 2}']
+
+
+def test_quarantine_file_tick_runs_one_spark_job(spark, tmp_path):
+    """The events write is the tick's only job: the lineage, the stage
+    counts and the dead letters ride on it, and the driver writes the
+    dead letters."""
+    pipe, tick = _ticker(spark, tmp_path)
+    tick(['{"code": 200}', "not json"], "tick-cost-warm")
+    record, jobs = tick(TICK, "tick-cost")
     assert record.per_sink_counts == {"events": 2, "__quarantine__": 1}
     assert record.per_stage_counts == {"stage_0_cel": 2}
     assert sum(record.partition_counts.values()) == 2
-    assert len(sc.statusTracker().getJobIdsForGroup("tick-cost")) == 2
+    assert jobs == 1
+    dead = spark.read.parquet(str(tmp_path / "q" / "batch_id=1")).collect()
+    assert [(r.value, r.fail_stage) for r in dead] == [('{"code": 500}', "stage_0_cel")]
+
+
+def test_file_quarantine_sink_keeps_a_job_per_write(spark, tmp_path):
+    """A quarantine sink that cannot take driver rows (a text file sink)
+    keeps its Spark write, with the same counts."""
+    _, fast = _ticker(spark, tmp_path / "fast")
+    _, spark_write = _ticker(spark, tmp_path / "file", quarantine_kind="file")
+    for group in ("warm", "tick"):
+        one, one_jobs = fast(TICK, f"quarantine-parquet-{group}")
+        two, two_jobs = spark_write(TICK, f"quarantine-file-{group}")
+    assert (one_jobs, two_jobs) == (1, 2)
+    assert one.per_sink_counts == two.per_sink_counts == {"events": 2, "__quarantine__": 1}
+    assert one.per_stage_counts == two.per_stage_counts
+    assert one.partition_counts == two.partition_counts
+
+
+def test_tail_over_local_relation_bytes_keeps_a_job_per_write(spark, tmp_path):
+    """A tail over ``LOCAL_RELATION_BYTES`` (but under the source's
+    ``max_driver_bytes``) is not a LocalRelation, so its dead letters
+    take the quarantine sink's Spark write: every malformed line is
+    quarantined."""
+    pad = "x" * 80
+    n = LOCAL_RELATION_BYTES // 80 + 2000
+    lines = [
+        f"bad line {i}" if i % 1000 == 7 else f'{{"code": 200, "i": {i}, "pad": "{pad}"}}'
+        for i in range(n)
+    ]
+    pipe, tick = _ticker(spark, tmp_path)
+    assert sum(len(line) + 1 for line in lines) < pipe.source.max_driver_bytes
+    record, jobs = tick(lines, "tick-cost-big")
+    bad = [line for line in lines if line.startswith("bad")]
+    assert jobs == 2
+    assert record.per_sink_counts == {"events": n - len(bad), "__quarantine__": len(bad)}
+    dead = spark.read.parquet(str(tmp_path / "q" / "batch_id=0")).collect()
+    assert sorted(r.value for r in dead) == sorted(bad)
+    assert {r.fail_stage for r in dead} == {"stage_0_cel"}
+
+
+def _persisted(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+class PersistProbe:
+    """Sink that collects its view, then reads which RDDs are persisted:
+    a persisted parent is built by the first action over it."""
+
+    def __init__(self):
+        self.persisted = None
+
+    def write(self, df, batch_id=None):
+        n = len(df.collect())
+        self.persisted = _persisted(df.sparkSession)
+        return n
+
+
+@pytest.mark.parametrize("sinks", [1, 2])
+def test_parent_is_persisted_only_for_more_than_one_job(spark, tmp_path, sinks):
+    """One Spark job (one routed sink, dead letters written by the
+    driver) persists nothing; two routed sinks share a persisted parent,
+    which the batch unpersists."""
+    config = PipelineConfig(
+        instance_id="persist",
+        processors=[{"kind": "cel", "rules": ["event.code == 200"]}],
+        sinks=[SinkSpec(f"s{i}", "file", None, {"path": "/nonexistent"}) for i in range(sinks)],
+        quarantine={"kind": "parquet", "path": str(tmp_path / "q")},
+    )
+    pipe = Pipeline(config)
+    probes = [PersistProbe() for _ in range(sinks)]
+    pipe.sinks = {f"s{i}": p for i, p in enumerate(probes)}
+    df = lines_frame(spark, TICK)
+    # earlier tests in the shared session may have left RDDs persisted
+    before = _persisted(spark)
+    record = pipe.run_batch(df, batch_id=0)
+    assert record.per_sink_counts == {**{f"s{i}": 2 for i in range(sinks)}, "__quarantine__": 1}
+    assert [len(p.persisted - before) for p in probes] == [sinks - 1] * sinks
+    assert not _persisted(spark) - before
 
 
 def _run_with_timeout(fn, seconds: float = 180):
