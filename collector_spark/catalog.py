@@ -123,9 +123,9 @@ class Catalog:
         self, name: str, target_file_mb: int = 256, partition_col: str | None = None
     ) -> dict:
         """Small-files compaction — the operational follow-up every
-        streaming/batch append sink needs at scale (each micro-batch
-        leaves files; a 100 TB table accumulates millions, and scan
-        planning degrades with file COUNT, not bytes). Rewrites the
+        append sink needs at scale (each batch leaves files; a 100 TB
+        table accumulates millions, and scan planning degrades with
+        file COUNT, not bytes). Rewrites the
         table into ~``target_file_mb`` files; with ``partition_col``
         the rewrite repartitions BY that column so compaction also
         restores partition clustering. With an Iceberg catalog this is

@@ -31,9 +31,8 @@ Log rules:
   sees what the writer has committed when it first loads.
 
 JSON-lines (not parquet) because the manifest is tiny, append-only, and
-driver-side; on a cluster this would be an Iceberg/Delta table or the
-Structured Streaming checkpoint dir — the interface below is the swap
-point.
+driver-side; on a cluster this would be an Iceberg/Delta table — the
+interface below is the swap point.
 """
 
 from __future__ import annotations

@@ -627,7 +627,7 @@ def pack_sequences(
     )
     # id-range buckets: contiguous in id order, so (bucket asc, id asc)
     # is the global id order. One 1-row action for the id span (same
-    # pattern as the streaming watermark max / k-means centroid collect).
+    # pattern as the k-means centroid collect).
     max_id = wc.agg(F.max("_id")).first()[0]
     if max_id is None:  # empty corpus tick → empty result, same schema
         return wc.select(

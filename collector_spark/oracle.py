@@ -236,7 +236,7 @@ _RFC3164_RE = re.compile(
     r"(?P<ts>[A-Z][a-z]{2} [ \d]\d \d{2}:\d{2}:\d{2}) "
     r"(?P<host>\S+) "
     r"(?P<msg>.*)$",
-    re.DOTALL,
+    re.DOTALL | re.ASCII,
 )
 
 # RFC5424: "<PRI>VERSION TS HOST APP PROCID MSGID [SD] MSG"
@@ -249,7 +249,7 @@ _RFC5424_RE = re.compile(
     r"(?P<ts>\S+) (?P<host>\S+) (?P<app>\S+) (?P<procid>\S+) (?P<msgid>\S+)"
     r" (?P<sd>-|(?:\[.*?\])+)"
     r"(?: (?P<msg>.*))?$",
-    re.DOTALL,
+    re.DOTALL | re.ASCII,
 )
 
 

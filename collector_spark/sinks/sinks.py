@@ -163,10 +163,14 @@ class ParquetSink(_BaseSink):
 
         The files go to a hidden sibling directory (Spark's reader skips
         names starting with ``.``) that is then renamed over the target,
-        so a crash never leaves a readable partial batch."""
+        so a crash never leaves a readable partial batch. Both hidden
+        names are fixed per batch, so the batch's rerun clears what a
+        killed writer left."""
         final = _local(self.target(batch_id))
         root, name = os.path.split(final.rstrip(os.sep))
-        tmp = os.path.join(root, f".{name}-{uuid.uuid4().hex}.tmp")
+        tmp = os.path.join(root, f".{name}.tmp")
+        for stale in (tmp, f"{tmp}.old"):
+            shutil.rmtree(stale, ignore_errors=True)
         os.makedirs(tmp)
         try:
             pq.write_table(
@@ -377,7 +381,7 @@ class GcsSink(FileSink):
         # (spurious FS error) must not be swallowed: the temp is gone,
         # so if no winner published the part either, the batch's rows
         # would silently vanish while last_metrics reports them written.
-        # Raise so the streaming engine retries the batch.
+        # Raise so the batch fails uncommitted and its rerun rewrites it.
         if not fs.exists(jfinal):
             raise IOError(
                 f"publish failed: rename {tmp} -> {final} did not succeed "

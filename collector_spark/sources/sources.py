@@ -1,28 +1,29 @@
-"""Batch + streaming sources.
+"""Batch sources: every source ticks through ``read_new(spark, state)
+-> (df, new_state)``, and the manifest commits the state with the batch.
 
 Mapping from the reference's inputs (internal/app/builtin.go:27-35):
 
 | reference input | here                                                   |
 |-----------------|--------------------------------------------------------|
-| file            | FileSource — batch: glob + per-file offset resume      |
+| file            | FileSource — glob + per-file offset resume             |
 |                 | (reference internal/input/file/file.go:58-134,         |
-|                 | read.go:19-62, state.go:8-58); streaming:              |
-|                 | ``readStream.text(dir)`` (exactly-once file tracking   |
-|                 | built into Structured Streaming)                       |
-| syslog          | SocketSource (readStream.format('socket')) — gated,    |
-|                 | no listener infra in sandbox                           |
-| kafka           | KafkaSource (readStream.format('kafka'), headers via   |
-|                 | includeHeaders) — gated, no broker in sandbox          |
-| pubsub / sqs    | same streaming model behind Kafka/files                |
+|                 | read.go:19-62, state.go:8-58)                          |
+| syslog          | SyslogListenerSource (syslog_listener.py) — TCP/UDP    |
+|                 | listener buffering lines between ticks                 |
+| kafka           | KafkaSource — bounded batch read from the committed    |
+|                 | offsets, headers via includeHeaders                    |
+| pubsub / sqs    | QueuePollerSource — receive, ack after the commit      |
 | msgraph         | IncrementalSource — watermark-cursor incremental batch |
 |                 | read (timestamp > last_cursor), the Spark analog of    |
 |                 | msgraph's LastTimestamp window pull                    |
-|                 | (internal/input/msgraph/msgraph.go:90-222)             |
+|                 | (internal/input/msgraph/msgraph.go:90-222);            |
+|                 | HttpPollerSource for the API pull itself               |
 """
 
 from __future__ import annotations
 
 import glob as _glob
+import json
 import os
 import re as _re
 
@@ -68,9 +69,7 @@ class FileSource:
     batch keeps the source file so the un-advanced offset re-reads it
     next tick. Callers driving ``read_new`` directly get the same
     behavior by calling ``commit_read(success)`` themselves (a fallback
-    sweep at the start of the next read also clears stale spills). At
-    cluster scale the idiomatic replacement is ``stream()``'s
-    readStream.text tracking.
+    sweep at the start of the next read also clears stale spills).
     """
 
     _COPY_BUF = 8 * 1024 * 1024
@@ -200,10 +199,6 @@ class FileSource:
             df = df.unionAll(big)
         return df, state
 
-    def stream(self, spark: SparkSession) -> DataFrame:
-        """Structured Streaming variant (exactly-once file tracking)."""
-        return spark.readStream.text(os.path.dirname(self.path) or ".")
-
 
 class IncrementalSource:
     """Watermark-cursor incremental batch read over a timestamped table —
@@ -299,16 +294,24 @@ def merge_kafka_headers(value, headers):
 
 
 class KafkaSource:
-    """readStream.format('kafka'); header injection (include_headers →
-    the reference's @headers JSON merge, kafka.go:182-214) is
-    ``merge_kafka_headers`` above. ``auth_config`` takes the reference's
-    SASL schema (scram_sha_256/512, gssapi_keytab,
+    """Kafka input (reference internal/input/kafka) as a bounded batch
+    read per tick. Header injection (include_headers → the reference's
+    @headers JSON merge, kafka.go:182-214) is ``merge_kafka_headers``
+    above. ``auth_config`` takes the reference's SASL schema
+    (scram_sha_256/512, gssapi_keytab,
     internal/integrations/kafka/auth.go:13-101) and is translated to
     kafka.sasl.* connector options (see sources/kafka_auth.py).
     ``fmt`` is the wire-format seam: 'kafka' in production, a registered
     Python Data Source (tests/fake_kafka.py's in-process broker) in
     offline end-to-end tests — everything else (options, header merge,
-    projection) is the production code path."""
+    projection) is the production code path.
+
+    Known limit: the connector rejects a specific-offsets JSON that does
+    not name every partition of the topic, and the state only names
+    partitions that have held a message, so a partition that never has
+    makes the read fail. Naming them needs the partition ids from the
+    Kafka admin client.
+    """
 
     def __init__(
         self,
@@ -342,30 +345,41 @@ class KafkaSource:
         )
         return opts
 
-    def stream(self, spark: SparkSession) -> DataFrame:
-        reader = spark.readStream.format(self.fmt).options(**self.reader_options())
-        df = reader.load()
+    def read_new(
+        self, spark: SparkSession, state: dict | None
+    ) -> tuple[DataFrame, dict]:
+        """Messages from the committed offsets to the latest ones. The
+        state is the connector's own offsets JSON, ``{topic:
+        {"<partition>": next_offset}}``. One probe job finds each
+        partition's last offset, and the batch is read up to exactly
+        those offsets, so its range is fixed when the tick plans it and
+        a replay after a crash re-reads the same messages."""
+        state = state or {}
+        start = json.dumps(state) if state else "earliest"
+
+        def load(end: str) -> DataFrame:
+            return (
+                spark.read.format(self.fmt)
+                .options(**self.reader_options())
+                .option("startingOffsets", start)
+                .option("endingOffsets", end)
+                .load()
+            )
+
+        # one partition in, so the aggregate plans no exchange: under
+        # adaptive execution an exchange is a Spark job of its own
+        probe = load("latest").coalesce(1).groupBy("topic", "partition")
+        last = probe.agg(F.max("offset")).collect()
+        if not last:
+            return lines_frame(spark, []), state
+        ends = {topic: dict(offsets) for topic, offsets in state.items()}
+        for topic, partition, offset in last:
+            ends.setdefault(topic, {})[str(partition)] = offset + 1
         value = F.col("value").cast("string")
         if self.include_headers:
             # merge @headers into JSON-object payloads (kafka.go:182-214)
             value = merge_kafka_headers(value, F.col("headers"))
-        return df.select(value.alias("value"))
-
-
-class SocketSource:
-    """syslog-over-TCP stand-in: readStream.format('socket')."""
-
-    def __init__(self, address: str = "localhost", port: int = 9999):
-        self.address = address
-        self.port = port
-
-    def stream(self, spark: SparkSession) -> DataFrame:
-        return (
-            spark.readStream.format("socket")
-            .option("host", self.address)
-            .option("port", self.port)
-            .load()
-        )
+        return load(json.dumps(ends)).select(value.alias("value")), ends
 
 
 class OAuthTokenProvider:
@@ -573,7 +587,6 @@ SOURCE_REGISTRY = {
     "file": FileSource,
     "incremental": IncrementalSource,
     "kafka": KafkaSource,
-    "socket": SocketSource,
     "syslog": _syslog_listener,
     "http_poller": HttpPollerSource,
     "msgraph": HttpPollerSource,  # reference name alias

@@ -136,8 +136,6 @@ SOURCE_SCHEMAS: dict[str, dict[str, Spec]] = {
         "group_id": spec(str),
         "include_headers": spec(bool),
     },
-    # internal/input/syslog/syslog.go listener address
-    "socket": {"address": spec(str), "port": spec(int, min_value=1)},
     # internal/input/syslog/syslog.go:20-23 config (flush_frequency maps
     # to the Pipeline tick cadence; port 0 = ephemeral for tests)
     "syslog": {

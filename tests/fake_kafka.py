@@ -7,13 +7,15 @@ enough to drive offset resume, @headers merge, and flush semantics
 through the real KafkaSource/KafkaSink code paths, which only swap the
 wire format name).
 
-Readers expose the Kafka connector's column layout (key/value binary,
-topic, partition, offset, timestamp, headers array<struct<key,value>>).
-The stream reader hands offsets to Spark's checkpoint exactly like the
-real connector, so stop → produce → restart resumes from the committed
-offset. The batch writer appends through task commit messages (rows
-ride the commit message — fine for a test broker) so a write lands
-atomically in commit() on the driver.
+The reader exposes the Kafka connector's column layout (key/value
+binary, topic, partition, offset, timestamp, headers
+array<struct<key,value>>) and honours the connector's batch offset
+options: ``startingOffsets`` and ``endingOffsets``, each ``earliest``,
+``latest`` or a JSON ``{topic: {"<partition>": offset}}`` (-2 earliest,
+-1 latest). Like the connector, it rejects a specific-offsets JSON that
+omits one of the topic's partitions. The writer appends through task
+commit messages (rows ride the commit message — fine for a test broker)
+so a write lands atomically in commit() on the driver.
 """
 
 from __future__ import annotations
@@ -26,7 +28,6 @@ from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
     DataSourceWriter,
-    SimpleDataSourceStreamReader,
     WriterCommitMessage,
 )
 
@@ -60,10 +61,8 @@ def read_topic(broker_dir: str, topic: str) -> list[dict]:
         return [json.loads(line) for line in f if line.strip()]
 
 
-def _rows(broker_dir: str, topic: str, start: int, end: int | None = None):
+def _rows(broker_dir: str, topic: str, start: int, end: int):
     msgs = read_topic(broker_dir, topic)
-    if end is None:
-        end = len(msgs)
     for off in range(start, min(end, len(msgs))):
         m = msgs[off]
         yield (
@@ -77,34 +76,30 @@ def _rows(broker_dir: str, topic: str, start: int, end: int | None = None):
         )
 
 
+def _offset(option: str, topic: str, latest: int) -> int:
+    """One of the connector's offset options, resolved for partition 0."""
+    if option in ("earliest", "latest"):
+        return 0 if option == "earliest" else latest
+    partitions = json.loads(option).get(topic, {})
+    if "0" not in partitions:
+        raise ValueError(
+            "If startingOffsets/endingOffsets contains specific offsets, you must "
+            f"specify all TopicPartitions. Specified: {option} Assigned: {topic}-0"
+        )
+    off = int(partitions["0"])
+    return {-2: 0, -1: latest}.get(off, off)
+
+
 class FakeKafkaBatchReader(DataSourceReader):
     def __init__(self, options):
         self.broker_dir = options["kafka.bootstrap.servers"]
         self.topic = options["subscribe"]
-        self.start = int(options.get("startingOffset", 0))
+        latest = len(read_topic(self.broker_dir, self.topic))
+        self.start = _offset(options.get("startingOffsets", "earliest"), self.topic, latest)
+        self.end = _offset(options.get("endingOffsets", "latest"), self.topic, latest)
 
     def read(self, partition):
-        yield from _rows(self.broker_dir, self.topic, self.start)
-
-
-class FakeKafkaStreamReader(SimpleDataSourceStreamReader):
-    def __init__(self, options):
-        self.broker_dir = options["kafka.bootstrap.servers"]
-        self.topic = options["subscribe"]
-
-    def initialOffset(self):
-        return {"offset": 0}
-
-    def read(self, start):
-        end = len(read_topic(self.broker_dir, self.topic))
-        rows = list(_rows(self.broker_dir, self.topic, start["offset"], end))
-        return iter(rows), {"offset": end}
-
-    def readBetweenOffsets(self, start, end):
-        return iter(_rows(self.broker_dir, self.topic, start["offset"], end["offset"]))
-
-    def commit(self, end):
-        pass
+        yield from _rows(self.broker_dir, self.topic, self.start, self.end)
 
 
 class _Rows(WriterCommitMessage):
@@ -143,9 +138,6 @@ class FakeKafkaDataSource(DataSource):
 
     def reader(self, schema):
         return FakeKafkaBatchReader(self.options)
-
-    def simpleStreamReader(self, schema):
-        return FakeKafkaStreamReader(self.options)
 
     def writer(self, schema, overwrite):
         return FakeKafkaWriter(self.options)

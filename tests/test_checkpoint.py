@@ -160,7 +160,7 @@ def test_tick_crash_points_converge_to_exactly_once(spark, tmp_path, monkeypatch
     once; (2) the events write ran, the dead-letter write did not;
     (3) the dead letters sit in the writer's hidden temp directory, not
     yet renamed into place (as a killed writer leaves it) → a read skips
-    it, and the rerun publishes the batch; (4) the commit landed but the
+    it, and the rerun publishes the batch and clears it; (4) the commit landed but the
     source ack failed → the next tick moves on to N+1 and no row is
     duplicated."""
     from collector_spark.pipeline import Pipeline, PipelineConfig, SinkSpec
@@ -182,6 +182,9 @@ def test_tick_crash_points_converge_to_exactly_once(spark, tmp_path, monkeypatch
     def dead_letters():
         """Every quarantined line, read from the sink's root."""
         return sorted(int(r.value.split()[1]) for r in spark.read.parquet(str(quarantine)).collect())
+
+    def hidden():
+        return [n for n in os.listdir(quarantine) if n.startswith(".")]
 
     pipe = Pipeline(
         PipelineConfig(
@@ -235,6 +238,7 @@ def test_tick_crash_points_converge_to_exactly_once(spark, tmp_path, monkeypatch
     assert pipe.run_tick(spark).per_sink_counts == {"out": 2, "__quarantine__": 2}
     assert rows(2) == [6, 7]
     assert dead_letters() == list(range(8))
+    assert hidden() == []
 
     # (3) the temp directory is written, the rename never runs, and the
     # writer's own clean-up never runs either (a killed process)
@@ -248,12 +252,13 @@ def test_tick_crash_points_converge_to_exactly_once(spark, tmp_path, monkeypatch
         patch.setattr(sinks.shutil, "rmtree", lambda *a, **k: None)
         with pytest.raises(RuntimeError, match="before rename"):
             pipe.run_tick(spark)
-    hidden = [n for n in os.listdir(quarantine) if n.startswith(".")]
-    assert len(hidden) == 1 and os.listdir(quarantine / hidden[0])  # the leftover
+    leftover = hidden()
+    assert len(leftover) == 1 and os.listdir(quarantine / leftover[0])
     assert dead_letters() == list(range(8))  # not read
     assert pipe.run_tick(spark).per_sink_counts == {"out": 2, "__quarantine__": 2}
     assert rows(3) == [8, 9]
     assert dead_letters() == list(range(10))
+    assert hidden() == []  # the rerun cleared the killed writer's leftover
 
     # (4) commit landed, source ack fails
     append(range(10, 12))

@@ -30,7 +30,6 @@ GOOD = {
         "file": {"path": "/tmp/x/*.log", "delete": False},
         "incremental": {"table_path": "/tmp/t", "ts_col": "ts"},
         "kafka": {"brokers": "b:9092", "topic": "t", "include_headers": True},
-        "socket": {"address": "h", "port": 514},
         "http_poller": {"fetcher": _noop, "page_size": 10},
         "msgraph": {"fetcher": _noop},
         "queue": {"receiver": _noop, "max_messages": 5},
@@ -69,7 +68,6 @@ BAD = {
         "file": [{}, {"path": "/x", "delete": "no"}],
         "incremental": [{}],
         "kafka": [{"topic": "t"}, {"brokers": "b", "topic": "t", "topc": "x"}],
-        "socket": [{"port": 0}, {"port": "514"}],
         "http_poller": [{}, {"fetcher": _noop, "page_size": 0}],
         "queue": [{}, {"receiver": _noop, "max_polls": 0}],
     },
@@ -107,6 +105,12 @@ def test_good_config_binds(domain, kind, cfg):
 def test_bad_config_rejected_at_bind_time(domain, kind, cfg):
     with pytest.raises(ValueError):
         _MAKERS[domain](kind, **cfg)
+
+
+def test_socket_source_is_gone():
+    """Syslog input is the ``syslog`` listener; there is no ``socket`` kind."""
+    with pytest.raises(ValueError, match="unknown source 'socket'"):
+        make_source("socket", address="h", port=514)
 
 
 def test_every_builtin_kind_has_a_schema():

@@ -122,6 +122,25 @@ def test_replay_overwrites_a_driver_written_batch(spark, tmp_path):
         assert os.listdir(tmp_path / "q") == ["batch_id=4"]
 
 
+def test_rewrite_clears_a_killed_writers_hidden_directories(tmp_path):
+    """A writer killed before or inside its rename leaves ``.batch_id=N.tmp``
+    or ``.batch_id=N.tmp.old``; the batch's next write removes both and
+    leaves another batch's hidden names alone."""
+    import pyarrow as pa
+
+    from collector_spark.sinks.sinks import ParquetSink
+
+    root = tmp_path / "q"
+    leftovers = [root / ".batch_id=2.tmp", root / ".batch_id=2.tmp.old", root / ".batch_id=9.tmp"]
+    for d in leftovers:
+        d.mkdir(parents=True)
+        (d / "part-00000-x-c000.snappy.parquet").write_bytes(b"partial")
+    table = pa.table({"value": ["a"], "fail_stage": ["s"]})
+    assert ParquetSink(str(root)).write_rows(table, batch_id=2) == 1
+    assert sorted(os.listdir(root)) == [".batch_id=9.tmp", "batch_id=2"]
+    assert _layout(root / "batch_id=2") == (["_SUCCESS", "part"], [])
+
+
 def test_takes_rows_only_for_one_local_file_per_batch(tmp_path):
     """A ``file:`` URL is written at its path; another scheme, a
     partitioned sink or a rotating one keeps Spark's write."""

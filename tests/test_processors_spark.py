@@ -4,6 +4,7 @@ extract stage (byte-identical extracted text per url)."""
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
 from collector_spark import datagen, oracle
@@ -331,6 +332,41 @@ def test_syslog_pri_over_191_is_dropped_or_quarantined(spark):
     assert [(r.value, r.fail_stage) for r in quarantined.collect()] == [(bad, "stage_0_syslog")]
 
 
+def test_syslog_rfc_modes_take_ascii_digits_only(spark):
+    """Digits are ASCII ``[0-9]``, as Go's ``\\d`` is: a PRI, a day or a
+    version holding an Arabic-Indic digit (U+0661 is 1) makes no RFC
+    line, so both modes drop it and the oracle rejects it."""
+    from collector_spark.pipeline import Pipeline, PipelineConfig
+
+    one = "\u0661"
+    header = "1 2003-10-11T22:14:15.003Z host app 123 ID47 - "
+    cases = {
+        "rfc3164": (
+            [f"<{one}3>Jan  1 00:00:00 host hello", f"<13>Jan  {one} 00:00:00 host hello"],
+            "<13>Jan  1 00:00:00 host hi",
+            oracle.syslog_rfc3164,
+        ),
+        "rfc5424": ([f"<{one}3>{header}hello", f"<13>1{one}{header[1:]}hello"], f"<13>{header}hi", oracle.syslog_rfc5424),
+    }
+    for mode, (bad, good, parse) in cases.items():
+        for line in bad:
+            with pytest.raises(oracle.ParseError):
+                parse(line)
+        df = spark.createDataFrame([(l,) for l in [*bad, good]], ["value"])
+        assert [r.value for r in SyslogParser(mode).apply(df).collect()] == ["hi"], mode
+        pipe = Pipeline(
+            PipelineConfig(
+                instance_id=f"ascii_{mode}",
+                processors=[{"kind": "syslog", "type": mode}],
+                quarantine={"kind": "parquet", "path": "/nonexistent/q"},
+            )
+        )
+        _, kept, quarantined = pipe.transform_tagged(df)
+        assert [r.value for r in kept.collect()] == ["hi"], mode
+        dead = sorted((r.value, r.fail_stage) for r in quarantined.collect())
+        assert dead == sorted((l, "stage_0_syslog") for l in bad), mode
+
+
 def test_syslog_drops_a_line_whose_msg_is_empty(spark):
     """A line whose MSG comes out empty or blank is dropped, as the
     reference's temp writer drops a line that is empty once trimmed
@@ -408,8 +444,6 @@ def test_extract_pandas_udf_handles_null_html(spark):
 
 
 def test_router_rejects_sql_breaking_route_names(spark):
-    import pytest
-
     from collector_spark.operators.router import Route, Router
 
     with pytest.raises(ValueError, match="route names"):
