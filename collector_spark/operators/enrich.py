@@ -47,22 +47,6 @@ DOMAIN_SQL = "regexp_extract({col}, '^[a-z]+://([^/:?#]+)', 1)"
 TLD_SQL = "list_extract(string_split(regexp_extract({col}, '^[a-z]+://([^/:?#]+)', 1), '.'), -1)"
 
 
-class LookupEnricher:
-    """Left-join a small lookup table onto the stream, broadcast-side.
-
-    config: {on: fact key column (or expression name created first),
-             lookup: DataFrame, how: 'left' (default)}
-    """
-
-    def __init__(self, lookup: DataFrame, on: str, how: str = "left"):
-        self.lookup = lookup
-        self.on = on
-        self.how = how
-
-    def apply(self, df: DataFrame) -> DataFrame:
-        return df.join(F.broadcast(self.lookup), on=self.on, how=self.how)
-
-
 def enrich_pages(df: DataFrame, lookups: dict[str, DataFrame]) -> DataFrame:
     """Standard pages enrichment: derive domain/tld, join all three dims.
 

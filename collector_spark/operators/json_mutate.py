@@ -4,19 +4,23 @@ Reference: internal/processor/json/json.go:16-35,88-130 (gjson/sjson
 dotted-path surgery; non-JSON lines dropped; replace fires only when the
 current value equals the expected one).
 
-Three execution strategies, picked per call site:
+Three execution strategies, picked per call site. Each is one
+``tag_columns`` (``stage.Processor``), so plain mode and quarantine mode
+run the same engine and keep the same rows:
 
 - ``engine='pandas'`` (default) — schema-free JSON string lines: one
   vectorized pandas UDF per Arrow batch running the shared oracle
   implementation (collector_spark.oracle.json_mutate), so parity with
   pytest's oracle is by construction. This is the general path (any
-  dotted key, any payload) and the quarantine path.
+  dotted key, any payload).
 
 - ``engine='native'`` — top-level add only, as Catalyst string surgery
-  on compact object lines. Validity, key presence and the nested-value
-  guard read the line's VARIANT companion (``stage.with_variant``), so
-  the line is parsed once however many keys are added. Quarantine mode
-  runs the oracle engine in its place (see ``JsonMutator.apply``).
+  on JSON object lines; any other line (array, scalar, ``null``,
+  duplicate key, non-JSON) is rewritten to NULL and dropped. Validity,
+  key presence and the nested-value guard read the line's VARIANT
+  companion (``stage.with_variant``), so the line is parsed once however
+  many keys are added, and the rewrite is one expression, linear in the
+  adds.
 
 - ``mode='columns'`` — structured payloads: compiles the same action
   list to native ``withColumn`` / ``drop`` / ``when().otherwise()``
@@ -24,7 +28,7 @@ Three execution strategies, picked per call site:
   known (it is, for the pages/events tables).
 
 Both json-mode engines rewrite ``value``: a VARIANT companion they
-received is re-derived over the new value (``stage.rederive_variant``).
+received is re-derived over the new value (``stage.fresh``).
 """
 
 from __future__ import annotations
@@ -39,13 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from collector_spark import oracle
-from collector_spark.operators.stage import (
-    Processor,
-    rederive_variant,
-    reparse_variant,
-    variant_col,
-    with_variant,
-)
+from collector_spark.operators.stage import Processor, variant_col, with_variant
 
 
 def make_mutate_udf(add: list[dict], remove: list[dict], replace: list[dict]):
@@ -119,99 +117,76 @@ class JsonMutator(Processor):
 
     @functools.cached_property
     def _tag_columns(self) -> tuple[dict[str, Column], Column]:
-        """(rewrites, keep), built once: in json mode those of the
-        oracle-UDF engine, whose pandas UDF and JVM function are made on
-        first use only."""
+        """(rewrites, keep), built once; the oracle engine's pandas UDF
+        and JVM function are made on first use only. Either json-mode
+        engine rewrites a line it drops to NULL (json.go:88-99)."""
         if self.mode == "columns":
             return {}, F.lit(True)
         vc = self.value_col
-        udf = make_mutate_udf(self.add, self.remove, self.replace)
-        # non-JSON → None → dropped (json.go:88-99)
-        return {vc: udf(F.col(vc))}, F.col(vc).isNotNull()
+        if self.engine == "native":
+            # a Generate output: the pushed ``keep`` filter reads the
+            # column instead of re-running the surgery (see stage.bind)
+            rewrite = F.explode(F.array(self._native_rewrite()))
+        else:
+            rewrite = make_mutate_udf(self.add, self.remove, self.replace)(F.col(vc))
+        return {vc: rewrite}, F.col(vc).isNotNull()
 
     def tag_columns(self, df: DataFrame) -> tuple[DataFrame, dict[str, Column], Column]:
-        """Both engines tag through the oracle UDF (see ``apply``)."""
         rewrites, keep = self._tag_columns
-        return (self._apply_columns(df) if self.mode == "columns" else df), rewrites, keep
+        if self.mode == "columns":
+            df = self._apply_columns(df)
+        elif self.engine == "native":
+            df = with_variant(df, self.value_col)
+        return df, rewrites, keep
 
-    @functools.cached_property
-    def _native_columns(self) -> tuple[Column, Column, list[tuple[bool, Column]]]:
-        """(trim, object-line test, [(re-parse first?, rewrite)] per add)
-        of the native engine, compiled once."""
+    def _native_rewrite(self) -> Column:
+        """The native add of an object line (NULL for any other line) as
+        Catalyst string surgery on the trimmed line, sjson.Set-like:
+        absent keys are appended before the closing brace, and a present
+        key is overwritten in place when its value is a scalar and the
+        key text occurs once in the line; otherwise the line is left
+        unchanged (engine='pandas' has full sjson.Set semantics). Key
+        presence and the nested-value guard read the line's VARIANT
+        companion. Linear in the adds: each reads the received line, so
+        a repeated key collapses to its last value at its first place,
+        which is what the adds in sequence give."""
         vc = self.value_col
-        parsed = F.col(variant_col(vc))
-        v = F.col(vc)
-        adds = []
-        seen: set[str] = set()
-        for a in self.add:
-            key = a["key"]
-            repeat = key in seen  # reads the value an earlier add wrote
-            seen.add(key)
-            frag = json.dumps({key: a["value"]}, separators=(",", ":"))[1:-1]
+        parsed, raw = F.col(variant_col(vc)), F.col(vc)
+        trimmed = F.trim(raw)
+        body = trimmed.substr(F.lit(1), F.length(trimmed) - 1)  # the closing brace cut
+        out, present, tail, frags = body, F.lit(False), [], []
+        for key, value in {a["key"]: a["value"] for a in self.add}.items():
+            frag = json.dumps({key: value}, separators=(",", ":"))[1:-1]
             # regex-ESCAPED form of the json-escaped key: a key like
             # 'a+b' or 'f(x' must match literally, not as regex syntax
             key_re = re.escape(json.dumps(key)[1:-1])
-            val_json = json.dumps(a["value"], separators=(",", ":"))
-            appended = F.when(
-                F.regexp_like(v, F.lit(r"^\{\s*\}$")),
-                F.concat(F.lit("{"), F.lit(frag), F.lit("}")),
-            ).otherwise(
-                F.concat(
-                    F.expr(f"substring({vc}, 1, length({vc}) - 1)"),
-                    F.lit(","),
-                    F.lit(frag),
-                    F.lit("}"),
-                )
-            )
-            # sjson.Set semantics: an existing key is OVERWRITTEN, a null
-            # one too (presence, not value, decides: appending would
-            # duplicate the key)
             path = _key_path(key)
+            # presence, not value, decides (a null key is overwritten too:
+            # appending would duplicate it)
             exists = F.try_variant_get(parsed, path, "variant").isNotNull()
-            nested_val = F.coalesce(
-                F.try_variant_get(parsed, path, "string").rlike(r"^[\[{]"), F.lit(False)
-            )
+            nested = F.try_variant_get(parsed, path, "string").rlike(r"^[\[{]")
+            # the rewrite is GLOBAL and textual: a nested-object value, or
+            # the key text also inside a nested object, would be silently
+            # corrupted, so such a line keeps its value ('$0')
+            ambiguous = F.size(F.split(raw, f'"{key_re}"\\s*:')) > 2
+            safe = exists & ~F.coalesce(nested, F.lit(False)) & ~ambiguous
             pattern = f'("{key_re}"\\s*:\\s*)("(?:[^"\\\\]|\\\\.)*"|[^,}}\\]]+)'
-            replacement = "$1" + val_json.replace("\\", "\\\\").replace("$", "\\$")
-            replaced = F.regexp_replace(v, pattern, replacement)
-            # the regex rewrite is GLOBAL and textual — it is only safe
-            # when the key's value is a scalar and the key string occurs
-            # exactly once in the line. A nested-object value or a
-            # same-named key inside a nested object would be silently
-            # corrupted; such rows are left UNCHANGED.
-            ambiguous = F.size(F.split(v, f'"{key_re}"\\s*:')) > 2
-            safe = exists & ~nested_val & ~ambiguous
-            adds.append((repeat, F.when(safe, replaced).when(exists, v).otherwise(appended)))
-        return F.trim(v), parsed.isNotNull() & v.startswith("{"), adds
-
-    def apply(self, df: DataFrame) -> DataFrame:
-        """The one plain mode not derived from ``tag_columns``:
-        ``engine='native'``, a top-level add on compact JSON object lines
-        as Catalyst string surgery (sjson appends before the closing
-        brace exactly like this); non-object lines are dropped. A key
-        already present is overwritten in place when its value is a
-        scalar and the key text occurs once in the line, else the row is
-        left unchanged (engine='pandas' has full sjson.Set semantics).
-
-        Its object-line filter must run before the surgery. Folded into
-        the rewrite, Catalyst pushes ``IsNotNull(CASE WHEN ...)`` through
-        the alias, so the whole surgery (``try_variant_get`` x2,
-        ``RLIKE``, ``split``, ``regexp_replace``) runs in both Filter and
-        Project; tested after the rewrite, ``{"a":1x`` becomes the valid
-        ``{"a":1,"k":"v"}``. So quarantine mode runs the oracle engine."""
-        if self.engine != "native" or self.mode != "json":
-            return super().apply(df)
-        vc = self.value_col
-        trim, is_object, adds = self._native_columns
-        # trimming spaces does not change the parse, so a received
-        # companion stays fresh for the reads below
-        out = with_variant(df.withColumn(vc, trim), vc)
-        out = out.filter(is_object)
-        for repeat, rewrite in adds:
-            if repeat:
-                out = reparse_variant(out, vc)
-            out = out.withColumn(vc, rewrite)
-        return rederive_variant(df, out, vc)
+            value_json = json.dumps(value, separators=(",", ":"))
+            value_re = value_json.replace("\\", "\\\\").replace("$", "\\$")
+            replacement = F.when(safe, F.lit("$1" + value_re)).otherwise(F.lit("$0"))
+            out = F.regexp_replace(out, F.lit(pattern), replacement)
+            present = present | exists
+            tail.append(F.when(~exists, F.lit("," + frag)))
+            frags.append(frag)
+        appended = ",".join(frags)
+        # a line with none of the keys (the common case) runs no regex;
+        # an object without a '"' is empty
+        rewrite = (
+            F.when(present, F.concat(out, F.concat_ws("", *tail), F.lit("}")))
+            .when(raw.contains('"'), F.concat(body, F.lit("," + appended + "}")))
+            .otherwise(F.lit("{" + appended + "}"))
+        )
+        return F.when(parsed.isNotNull() & F.ltrim(raw).startswith("{"), rewrite)
 
     def _apply_columns(self, df: DataFrame) -> DataFrame:
         """Native-columns strategy: dotted keys are struct fields; only

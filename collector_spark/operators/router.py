@@ -49,14 +49,12 @@ class Route:
 class Router:
     """Fan a DataFrame out to named routes.
 
-    with_routes()   → adds an array<string> ``routes`` column (matched sinks)
     split()         → {sink_name: filtered DataFrame view} of one parent
     sink_counts()   → DataFrame (sink, cnt) per-sink aggregate counts
 
     In json mode the predicates read the value's VARIANT companion; each
-    of the three adds it first unless the frame carries it already, and
-    the frames with_routes() and split() return never carry it (a sink
-    writes the value text only).
+    adds it first unless the frame carries it already, and the views
+    split() returns never carry it (a sink writes the value text only).
     """
 
     def __init__(self, routes: list[Route], mode: str = "json", value_col: str = "value"):
@@ -93,14 +91,6 @@ class Router:
         if self.mode == "json" and any(r.predicate is not None for r in self.routes):
             return with_variant(df, self.value_col)
         return df
-
-    def with_routes(self, df: DataFrame, out_col: str = "routes") -> DataFrame:
-        df = self._parsed(df)
-        pairs = self._route_cols()
-        arr = F.array_compact(
-            F.array(*[F.when(c, F.lit(n)) for n, c in pairs])
-        )
-        return df.withColumn(out_col, arr).drop(variant_col(self.value_col))
 
     def split(self, df: DataFrame) -> dict[str, DataFrame]:
         """N filtered views of ``df``, one per route (write each to its

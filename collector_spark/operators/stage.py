@@ -99,21 +99,14 @@ def _add_variant(df: DataFrame, value_col: str, keep: list[str] | None = None) -
     return df.select(*(F.col("`" + c.replace("`", "``") + "`") for c in keep), gen)
 
 
-def reparse_variant(df: DataFrame, value_col: str = "value") -> DataFrame:
-    """``df`` with its companion replaced by the parse of the current
-    ``value_col``, in one projection (not a drop and a select: each is
-    one more eagerly analysed frame)."""
-    name = variant_col(value_col)
-    return _add_variant(df, value_col, [c for c in df.columns if c != name])
-
-
 def rederive_variant(received: DataFrame, out: DataFrame, value_col: str = "value") -> DataFrame:
     """For a stage that rewrote ``value_col`` of ``received`` into ``out``:
     the companion parse of the old value is stale, so drop it, and parse
     the new value when the stage received a companion (a downstream
-    reader expects one). Without a companion on either frame it returns
-    ``out`` itself."""
+    reader expects one), in one projection (not a drop and a select:
+    each is one more eagerly analysed frame). Without a companion on
+    either frame it returns ``out`` itself."""
     name = variant_col(value_col)
     if name in received.columns:
-        return reparse_variant(out, value_col)
+        return _add_variant(out, value_col, [c for c in out.columns if c != name])
     return out.drop(name) if name in out.columns else out

@@ -11,7 +11,7 @@ pinned against collector_spark.oracle.rolling_fingerprint instead.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -89,35 +89,6 @@ def lang_id_sql(col: str) -> str:
             f"THEN '{lang}' ELSE {expr} END"
         )
     return expr
-
-
-def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Add quality-signal columns: n_chars, n_tokens, mean token length,
-    punctuation ratio, stopword ratio, uppercase ratio."""
-    text = F.col(text_col)
-    toks = tokens_col(text)
-    n_chars = F.length(text)
-    n_tokens = F.size(toks)
-    punct = F.length(F.regexp_replace(text, r"[^.!?,;:]", ""))
-    stop_arr = F.array(*[F.lit(s) for s in STOPWORDS_EN])
-    stops = F.size(F.filter(toks, lambda w: F.array_contains(stop_arr, F.lower(w))))
-    upper = F.length(F.regexp_replace(text, r"[^A-Z]", ""))
-    return (
-        df.withColumn("n_chars_calc", n_chars)
-        .withColumn("n_tokens", n_tokens)
-        .withColumn(
-            "mean_token_len",
-            F.round(
-                F.when(n_tokens > 0, (F.length(F.regexp_replace(text, r"\s+", "")) / n_tokens)).otherwise(
-                    F.lit(0.0)
-                ),
-                4,
-            ),
-        )
-        .withColumn("punct_ratio", F.round(punct / F.greatest(n_chars, F.lit(1)), 4))
-        .withColumn("stopword_ratio", F.round(stops / F.greatest(n_tokens, F.lit(1)), 4))
-        .withColumn("upper_ratio", F.round(upper / F.greatest(n_chars, F.lit(1)), 4))
-    )
 
 
 def quality_score_col(text_col: str = "text") -> Column:

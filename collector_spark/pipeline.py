@@ -326,7 +326,6 @@ class Pipeline:
         df: DataFrame,
         batch_id: int,
         source_state: dict | None = None,
-        skip_if_committed: bool = True,
         on_error: str = "raise",
     ) -> BatchRecord:
         """Process one batch: transform → fan-out writes → commit.
@@ -340,11 +339,7 @@ class Pipeline:
         """
         if on_error not in ("raise", "drop"):
             raise ValueError(on_error)
-        if (
-            skip_if_committed
-            and self.manifest is not None
-            and self.manifest.committed(batch_id)
-        ):
+        if self.manifest is not None and self.manifest.committed(batch_id):
             return BatchRecord(batch_id=batch_id, source_state=source_state or {})
 
         try:

@@ -56,8 +56,8 @@ def register_sink(name: str, factory: Callable) -> None:
 def register_source(name: str, factory: Callable) -> None:
     """Reference RegisterInput (pkg/collector/collector.go:197-207): a
     source factory returns an object with
-    ``read_new(spark, state) -> (DataFrame, state)`` (batch) and/or
-    ``stream(spark) -> DataFrame``."""
+    ``read_new(spark, state) -> (DataFrame, state)``, one batch per
+    tick."""
     SOURCE_REGISTRY[name] = factory
 
 

@@ -59,6 +59,21 @@ def test_native_json_add_numeric_and_dollar_values(spark):
     assert native == expected
 
 
+def test_native_json_add_surgery_runs_once_in_a_generate(spark):
+    """Plain mode filters on the rewritten value: the surgery is a
+    Generate output, so the pushed filter reads the column and never
+    re-runs the string rewrite."""
+    from collector_spark.plans.inspect import executed_plan
+
+    df = spark.createDataFrame([('{"a":1}',), ("[1]",)], "value string")
+    out = JsonMutator(add=[{"key": "k", "value": "v"}], engine="native").apply(df)
+    surgery = [l for l in executed_plan(out).splitlines() if "regexp_replace" in l]
+    assert len(surgery) == 1 and "Generate" in surgery[0], surgery
+    assert "Filter" not in surgery[0]
+    assert surgery[0].count("regexp_replace(") == 1  # one per added key
+    assert [r.value for r in out.collect()] == ['{"a":1,"k":"v"}']
+
+
 def test_native_rejects_unsupported_actions():
     import pytest
 

@@ -371,13 +371,14 @@ def test_tick_plan_build_budget(spark):
     [
         {"kind": "grok", "pattern": "%{WORD:level}: %{GREEDYDATA:msg}"},
         {"kind": "csv", "schema": "code int, msg string"},
+        {"kind": "json", "add": [{"key": "k", "value": "v"}], "engine": "native"},
     ],
-    ids=["grok", "csv"],
+    ids=["grok", "csv", "json_native"],
 )
 def test_parse_stage_quarantine_plan_build_budget(spark, stage):
-    """grok and csv tag in quarantine mode within the daemon tick's
-    budget: their rewrite and keep are compiled once, so the second
-    build reuses them."""
+    """grok, csv and the native json add tag in quarantine mode within
+    the daemon tick's budget: their rewrite and keep are compiled once,
+    so the second build reuses them."""
     counter = _second_tick_build(spark, {**DAEMON_CONFIG, "processors": [stage]})
     assert counter.round_trips <= 200, counter.round_trips
     assert counter.analysed <= 12, counter.analysed

@@ -381,30 +381,6 @@ def test_embedding_near_dup(spark):
     assert (0, 2) not in got
 
 
-def test_quality_features_columns(spark):
-    df = spark.createDataFrame(
-        [(1, "The QUICK fox, really!?")], ["doc_id", "text"]
-    )
-    out = textstats.quality_features(df).collect()[0]
-    assert out.n_tokens == 4
-    assert out.n_chars_calc == 23
-    assert out.punct_ratio > 0
-    assert 0 < out.upper_ratio < 1
-    assert out.stopword_ratio == 0.25  # 'The' of 4 tokens
-
-
-def test_lookup_enricher_broadcast_join(spark):
-    from collector_spark.operators.enrich import LookupEnricher
-    from collector_spark.plans.inspect import has_broadcast_join
-
-    facts = spark.createDataFrame([(1, "a"), (2, "b"), (3, "zz")], ["k", "v"])
-    dim = spark.createDataFrame([("a", "A"), ("b", "B")], ["v", "label"])
-    out = LookupEnricher(dim, on="v").apply(facts)
-    assert has_broadcast_join(out)
-    got = {r.k: r.label for r in out.collect()}
-    assert got == {1: "A", 2: "B", 3: None}  # left join keeps unmatched
-
-
 def test_approx_distinct_profile_error_bound(spark):
     """HLL++ sketch cardinalities stay within ~3x the configured rsd of
     exact counts (probabilistic bound, generous margin for determinism)."""
