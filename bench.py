@@ -46,6 +46,7 @@ sys.path.insert(0, REPO)
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entry_mod
+from collector_spark.session import cache_scope
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -113,12 +114,15 @@ FANOUT_OUT = "/tmp/spark_graft_fanout"
 def best_of(fn, reps: int):
     """Call ``fn`` ``reps`` times; return (minimum wall seconds, last
     result). This host exhibits multi-x wall-clock noise spikes and the
-    first rep pays warmup, so the minimum is the honest steady state."""
+    first rep pays warmup, so the minimum is the honest steady state.
+    Each rep runs in its own ``cache_scope``: it builds the operators'
+    caches afresh, never reads the last rep's, and frees them."""
     best = None
     result = None
     for _ in range(reps):
         t0 = time.perf_counter()
-        result = fn()
+        with cache_scope():
+            result = fn()
         dt = time.perf_counter() - t0
         best = dt if best is None or dt < best else best
     return best, result
@@ -227,9 +231,6 @@ def time_query(spark, fn, sf_dir: str) -> float:
     sec, _ = best_of(
         lambda: fn(spark, sf_dir).write.mode("overwrite").format("noop").save(), 2
     )
-    # operators that persist internals (minhash/ngram/conn-components)
-    # must not let those caches skew later queries
-    spark.catalog.clearCache()
     return round(sec, 3)
 
 

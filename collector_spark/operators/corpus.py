@@ -43,6 +43,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from collector_spark.session import cached
+
 __all__ = [
     "word_ngrams_exploded",
     "contamination_profile",
@@ -253,7 +255,6 @@ def dup_span_profile(
     n: int = 5,
     text_col: str = "text",
     id_col: str = "doc_id",
-    unpersist_into: list | None = None,
 ) -> DataFrame:
     """Per-document share of n-grams that also occur in ANOTHER document.
 
@@ -262,18 +263,14 @@ def dup_span_profile(
     frequency is >= 2. Two gram-keyed shuffles (doc-frequency agg +
     re-join) and one doc-keyed agg; nothing is all-pairs.
 
-    The gram table is persisted (referenced by both the doc-frequency
-    agg and the join probe) and NOT unpersisted here — pass
-    ``unpersist_into=[]`` to receive it and release the cache after the
-    result is materialized (the minhash_lsh_pairs hand-off convention).
+    The gram table is ``cached`` (the doc-frequency agg and the join
+    probe both read it); the caller's ``cache_scope`` releases it.
     """
     t = (
         word_ngrams_exploded(df, n, text_col, id_col, distinct=True)
         .select("_id", _gram_key(F.col("_gram")).alias("_k"))
     )
-    t = t.persist()  # referenced twice below (doc-freq agg, join probe)
-    if unpersist_into is not None:
-        unpersist_into.append(t)
+    t = cached(t)  # referenced twice below (doc-freq agg, join probe)
     dfreq = t.groupBy("_k").agg(F.count(F.lit(1)).alias("_df"))
     per_doc = (
         t.join(dfreq, "_k")
@@ -304,7 +301,6 @@ def remove_duplicated_spans(
     n: int = 5,
     text_col: str = "text",
     id_col: str = "doc_id",
-    unpersist_into: list | None = None,
 ) -> DataFrame:
     """Exact-substring dedup SURGERY: cut every token covered by a word
     n-gram that occurs in >= 2 distinct documents, and reassemble the
@@ -332,17 +328,14 @@ def remove_duplicated_spans(
         F.col(id_col).alias("_id"), _words(text_col).alias("_w")
     )
     # (_id, _pos, _k): gram at 0-based token position _pos covers
-    # tokens [_pos, _pos+n-1]. Persisted: referenced twice (doc-freq agg
+    # tokens [_pos, _pos+n-1]. Cached: referenced twice (doc-freq agg
     # + covered-position probe) and recomputing it would re-scan the
     # text column and re-md5 every gram.
-    grams = base.filter(F.size("_w") >= n).select(
-        "_id", F.posexplode(gram_keys).alias("_pos", "_k")
+    grams = cached(
+        base.filter(F.size("_w") >= n).select(
+            "_id", F.posexplode(gram_keys).alias("_pos", "_k")
+        )
     )
-    grams = grams.persist()
-    # NOT unpersisted here (lazy result) — unpersist_into=[] hands the
-    # persisted frame to the caller for release after materialization
-    if unpersist_into is not None:
-        unpersist_into.append(grams)
     # cross-document frequency: in how many DISTINCT docs does the gram
     # occur (>= 2 → duplicated; same-doc repeats alone don't count)
     dfreq = grams.groupBy("_k").agg(

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from collector_spark import oracle
+from collector_spark.session import cached, cut
 
 
 def _non_blank(text_col: str):
@@ -187,7 +188,6 @@ def minhash_lsh_pairs(
     shingle_n: int = 3,
     seed: int = 42,
     threshold: float = 0.5,
-    unpersist_into: list | None = None,
     assume_unique_texts: bool | None = None,
     _debug_bucket_stats: list | None = None,
 ) -> DataFrame:
@@ -203,12 +203,9 @@ def minhash_lsh_pairs(
     caller already knows (True also skips the collapse machinery
     entirely — the right call directly downstream of exact_dedup).
 
-    Caching contract: the signature + group tables are persisted (each is
-    referenced multiple times by the returned lazy plan). They are NOT
-    unpersisted here; pass ``unpersist_into=[]`` to receive the persisted
-    DataFrames and call ``.unpersist()`` after materializing the
-    result — otherwise the cache lives until the session ends (fine for
-    run-once jobs, a leak for long-lived sessions calling this per batch).
+    The signature and group tables are ``cached`` (the returned lazy
+    plan reads each several times): the caller's ``cache_scope``
+    releases them.
 
     ``_debug_bucket_stats``: test hook — receives the rep-level bucket
     table (band, bh, ids) so tests can pin the max per-task bucket size.
@@ -225,7 +222,6 @@ def minhash_lsh_pairs(
     df = df.filter(_non_blank(text_col))
     has_dups = _detect_dup_texts(df, text_col, assume_unique_texts)
     udf = _make_minhash_udf(num_hashes, shingle_n, seed)
-    from pyspark import StorageLevel
 
     # verify-join shuffle contract (round-4 VERDICT #2): the signature
     # table is cached ALREADY HASH-PARTITIONED on the id, so both verify
@@ -245,11 +241,7 @@ def minhash_lsh_pairs(
         # referenced 3x downstream (banded + both verify joins):
         # materialize ONCE — without this the pandas-UDF stage re-runs
         # per reference and dominates the job
-        sigs = sigs.repartition(n_shuffle, F.col(id_col)).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        if unpersist_into is not None:
-            unpersist_into.append(sigs)
+        sigs = cached(sigs.repartition(n_shuffle, F.col(id_col)))
         annotated = None
     else:
         # EXACT-DUPLICATE COLLAPSE (round-3 VERDICT #3): banding only
@@ -270,17 +262,12 @@ def minhash_lsh_pairs(
         annotated = sigs_all.withColumn(
             "_rep", F.min(id_col).over(w_grp)
         ).withColumn("_k", F.count(F.lit(1)).over(w_grp))
-        annotated = annotated.persist(StorageLevel.MEMORY_AND_DISK)
-        if unpersist_into is not None:
-            unpersist_into.append(annotated)
-        sigs = (
+        annotated = cached(annotated)
+        sigs = cached(
             annotated.filter(F.col(id_col) == F.col("_rep"))
             .select(F.col(id_col), "signature")
             .repartition(n_shuffle, F.col(id_col))
-            .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        if unpersist_into is not None:
-            unpersist_into.append(sigs)
 
     # band hash only buckets (est_jaccard comes from the signatures), so
     # use native xxhash64 over the band's slots — no string concat, no md5
@@ -416,7 +403,6 @@ def ngram_jaccard_pairs(
     id_col: str = "doc_id",
     shingle_n: int = 3,
     threshold: float = 0.5,
-    unpersist_into: list | None = None,
 ) -> DataFrame:
     """Exact Jaccard over word shingles for candidate pairs only (the
     verify stage after LSH; never all-pairs).
@@ -428,8 +414,7 @@ def ngram_jaccard_pairs(
     distinct counts. All shuffles key on ids or (id, shingle) tokens —
     small rows, hash-distributed, skew-free. The token table is
     referenced 3x by the plan (two intersection joins + sizes), so it is
-    persisted once — same caching contract as minhash_lsh_pairs: pass
-    ``unpersist_into=[]`` to release it after materializing."""
+    ``cached`` once, for the caller's ``cache_scope`` to release."""
     # split ONCE per row in a projection — referencing the split result
     # inside the transform() lambda would re-run it per shingle
     # (O(words^2) per doc; Catalyst does not hoist it out of the lambda)
@@ -450,17 +435,13 @@ def ngram_jaccard_pairs(
             )
         )
     )
-    from pyspark import StorageLevel
-
     empty_safe = F.when(
         F.trim(F.col(text_col)) == "", F.array().cast("array<string>")
     ).otherwise(F.split(F.trim(F.col(text_col)), r"\s+"))
     tokens = df.select(
         F.col(id_col).alias("_id"), empty_safe.alias("_w")
     ).select("_id", F.explode(shingles).alias("_sh"))
-    tokens = tokens.persist(StorageLevel.MEMORY_AND_DISK)
-    if unpersist_into is not None:
-        unpersist_into.append(tokens)
+    tokens = cached(tokens)
     sizes = tokens.groupBy("_id").agg(F.count(F.lit(1)).alias("_n"))
 
     cand = candidate_pairs.select("id_a", "id_b")
@@ -524,28 +505,26 @@ def connected_components(
     decrease, so sum(component) is unchanged iff no label moved — which
     costs one tiny aggregate instead of a full old-vs-new join per round.
 
-    Lineage is CUT every round with ``localCheckpoint`` (not just
-    persisted): persist leaves the logical plan growing by two joins per
-    round, and Catalyst re-analysis of that plan is exponential in round
-    count — measured on a 64-node chain, round 3 took 36 s and round 4
-    never finished, while checkpointed rounds stay ~1 s flat. Old
-    checkpoint blocks are freed asynchronously by the ContextCleaner
-    once each superseded round's DataFrame goes out of scope (the same
-    contract GraphX/GraphFrames iterative jobs rely on).
+    Lineage is CUT every round with ``session.cut`` (a local checkpoint,
+    not just a persist): persist leaves the logical plan growing by two
+    joins per round, and Catalyst re-analysis of that plan is
+    exponential in round count — measured on a 64-node chain, round 3
+    took 36 s and round 4 never finished, while checkpointed rounds stay
+    ~1 s flat. The edge cache and every round's checkpoint join the
+    caller's ``cache_scope``, which frees them on exit; the returned
+    labels read the last checkpoint, so consume them inside the scope.
 
     ``stats_into`` (optional dict) receives {"rounds": n} — the executed
     round count, which tests pin at O(log diameter) to guard the
     pointer-jumping property (round-2 VERDICT #7: a regression to plain
     label propagation would silently double the job count per batch).
     """
-    from pyspark import StorageLevel
-
     sym = edges.select(
         F.col(id_a).alias("src"), F.col(id_b).alias("dst")
     ).unionAll(edges.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
     # the edge list is joined every round — compute its (possibly
     # expensive, e.g. LSH-derived) plan once
-    sym = sym.persist(StorageLevel.MEMORY_AND_DISK)
+    sym = cached(sym)
 
     def _checksum(lbls: DataFrame):
         # type-safe change detector: sum of per-row hashes of (id,
@@ -569,11 +548,10 @@ def connected_components(
 
     # init = the first propagation round for free: label(id) =
     # min(id, min neighbor id) in ONE aggregation over the edge list
-    labels = (
+    labels = cut(
         sym.groupBy("src")
         .agg(F.least(F.col("src"), F.min("dst")).alias("component"))
         .select(F.col("src").alias("id"), "component")
-        .localCheckpoint(eager=True)
     )
     prev_sum = _checksum(labels)
     rounds = 0
@@ -597,15 +575,13 @@ def connected_components(
         parents = stepped.select(
             F.col("id").alias("pid"), F.col("component").alias("pcomp")
         )
-        new_labels = (
-            stepped.join(parents, stepped.component == parents.pid, "left")
-            .select(
+        new_labels = cut(  # materialize + CUT lineage
+            stepped.join(parents, stepped.component == parents.pid, "left").select(
                 "id",
                 F.least(
                     F.col("component"), F.coalesce("pcomp", "component")
                 ).alias("component"),
             )
-            .localCheckpoint(eager=True)  # materialize + CUT lineage
         )
         new_sum = _checksum(new_labels)
         labels = new_labels
@@ -614,10 +590,6 @@ def connected_components(
         prev_sum = new_sum
     if stats_into is not None:
         stats_into["rounds"] = rounds
-    sym.unpersist()
-    # NOTE: the returned labels DataFrame is checkpoint-materialized;
-    # its blocks are released by the ContextCleaner when it goes out of
-    # scope (an explicit .unpersist() is a harmless no-op)
     return labels
 
 
@@ -627,20 +599,15 @@ def near_dedup_groups(
     id_col: str = "doc_id",
     id_a: str = "id_a",
     id_b: str = "id_b",
-    unpersist_into: list | None = None,
 ) -> DataFrame:
     """(corpus, near-dup pairs) → (doc_id, representative): every doc maps
     to its component's min id (docs in no pair represent themselves).
     Downstream dedup = keep rows where doc_id == representative.
 
-    Caching contract: connected_components returns a checkpoint-
-    materialized labels table; its blocks are freed by the
-    ContextCleaner once unreferenced. ``unpersist_into=[]`` still
-    receives it for symmetry with minhash_lsh_pairs (the explicit
-    ``.unpersist()`` is a harmless no-op on a checkpointed frame)."""
+    The result reads connected_components' last checkpoint, which the
+    caller's ``cache_scope`` frees with the edge cache and the earlier
+    rounds: consume the result inside that scope."""
     comp = connected_components(pairs, id_a, id_b)
-    if unpersist_into is not None:
-        unpersist_into.append(comp)
     return df.select(F.col(id_col)).join(
         comp, df[id_col] == comp.id, "left"
     ).select(
@@ -720,7 +687,6 @@ def simhash_near_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_hamming: int = 3,
-    unpersist_into: list | None = None,
     assume_unique_texts: bool | None = None,
     _debug_bucket_stats: list | None = None,
 ) -> DataFrame:
@@ -750,8 +716,6 @@ def simhash_near_pairs(
     # whitespace class (see _non_blank — trim misses tabs-only docs)
     df = df.filter(_non_blank(text_col))
     has_dups = _detect_dup_texts(df, text_col, assume_unique_texts)
-    from pyspark import StorageLevel
-
     if not has_dups:
         # unique texts: exactly the pre-collapse plan (fingerprints are
         # carried in-bucket, so no persist is needed — each row is read
@@ -769,9 +733,7 @@ def simhash_near_pairs(
         annotated = fp_all.withColumn(
             "_rep", F.min(id_col).over(w_grp)
         ).withColumn("_k", F.count(F.lit(1)).over(w_grp))
-        annotated = annotated.persist(StorageLevel.MEMORY_AND_DISK)
-        if unpersist_into is not None:
-            unpersist_into.append(annotated)
+        annotated = cached(annotated)
         fp = annotated.filter(F.col(id_col) == F.col("_rep")).select(
             F.col(id_col), "simhash"
         )

@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from collector_spark import oracle
-from collector_spark.operators.stage import Processor, variant_col, with_variant
+from collector_spark.operators.stage import Processor, json_trim, variant_col, with_variant
 
 
 def make_mutate_udf(add: list[dict], remove: list[dict], replace: list[dict]):
@@ -152,7 +152,7 @@ class JsonMutator(Processor):
         which is what the adds in sequence give."""
         vc = self.value_col
         parsed, raw = F.col(variant_col(vc)), F.col(vc)
-        trimmed = F.trim(raw)
+        trimmed = json_trim(raw)
         body = trimmed.substr(F.lit(1), F.length(trimmed) - 1)  # the closing brace cut
         out, present, tail, frags = body, F.lit(False), [], []
         for key, value in {a["key"]: a["value"] for a in self.add}.items():
@@ -186,7 +186,7 @@ class JsonMutator(Processor):
             .when(raw.contains('"'), F.concat(body, F.lit("," + appended + "}")))
             .otherwise(F.lit("{" + appended + "}"))
         )
-        return F.when(parsed.isNotNull() & F.ltrim(raw).startswith("{"), rewrite)
+        return F.when(parsed.isNotNull() & trimmed.startswith("{"), rewrite)
 
     def _apply_columns(self, df: DataFrame) -> DataFrame:
         """Native-columns strategy: dotted keys are struct fields; only

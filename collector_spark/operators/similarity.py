@@ -35,6 +35,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from collector_spark.session import cache_scope, cached
+
 
 def cosine_col(a: Column, b: Column) -> Column:
     """Native cosine similarity between two array<float/double> columns.
@@ -304,15 +306,11 @@ def kmeans_centroids(
     This addresses the random-centroid recall/parallelism bound: refined
     centroids track the data distribution, balancing inverted-list sizes
     (parallelism) and tightening the probe neighborhoods (recall)."""
-    from pyspark import StorageLevel
-
     planes = _centroids(dim, n_centroids, seed)
     # the corpus plan (possibly pandas-UDF-derived) is scanned once per
     # Lloyd iteration — materialize it for the loop's duration
-    vecs = corpus.select(F.col(vec_col).alias("_v")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    try:
+    with cache_scope():
+        vecs = cached(corpus.select(F.col(vec_col).alias("_v")))
         for _ in range(n_iter):
             assign = _make_assign_udf_from(planes, 1)
             assigned = vecs.select(
@@ -328,9 +326,6 @@ def kmeans_centroids(
             norms = np.linalg.norm(new_planes, axis=1, keepdims=True)
             norms[norms == 0] = 1.0
             planes = new_planes / norms
-    finally:
-        # a failed iteration must not leak the cached corpus projection
-        vecs.unpersist()
     return planes
 
 
@@ -432,7 +427,6 @@ def embedding_near_dup_pairs(
     bands: int = 8,
     band_bits: int = 16,
     seed: int = 42,
-    unpersist_into: list | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (id_a < id_b, cosine >=
     threshold) via the same banded sign-sketch candidate generation.
@@ -449,16 +443,11 @@ def embedding_near_dup_pairs(
     materialize a degenerate bucket (e.g. 1M boilerplate vectors ×
     256 B = 256 MB) in ONE aggregation row — the join streams the same
     pair volume without that single-row memory cliff."""
-    from pyspark import StorageLevel
-
     banded = band_explode(df, id_col, vec_col, dim, bands, band_bits, seed)
     # the banded table is BOTH sides of the self-join: without persist
     # the pandas-UDF sketch stage runs twice (CLAUDE.md: a frame
-    # referenced N times recomputes N times). Same unpersist_into
-    # hand-off contract as minhash_lsh_pairs.
-    banded = banded.persist(StorageLevel.MEMORY_AND_DISK)
-    if unpersist_into is not None:
-        unpersist_into.append(banded)
+    # referenced N times recomputes N times)
+    banded = cached(banded)
     l, r = banded.alias("l"), banded.alias("r")
     cand = (
         l.join(

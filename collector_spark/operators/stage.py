@@ -66,6 +66,17 @@ def variant_col(value_col: str = "value") -> str:
     return f"_{value_col}_variant"
 
 
+def json_trim(value: Column) -> Column:
+    """``value`` without JSON whitespace (space, tab, LF, CR) at its ends,
+    so an object line's last character is its closing brace (``F.trim``
+    strips spaces only). A line with a brace at both ends, the common
+    case, runs no regex. The class is written as regex escapes: a raw
+    tab, LF or CR in a literal prints raw and splits a plan line."""
+    return F.when(value.startswith("{") & value.endswith("}"), value).otherwise(
+        F.regexp_extract(value, r"(?s)^[ \t\n\r]*(.*?)[ \t\n\r]*\z", 1)
+    )
+
+
 def with_variant(df: DataFrame, value_col: str = "value") -> DataFrame:
     """``df`` plus ``try_parse_json(value_col)`` as its VARIANT companion
     column, unless that column is already there. The only way the column

@@ -28,7 +28,6 @@ import os
 from dataclasses import dataclass, field
 from functools import cached_property
 
-from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -36,7 +35,7 @@ from collector_spark.checkpoint import BatchRecord, Manifest
 from collector_spark.operators.router import Route, Router
 from collector_spark.operators.stage import Processor, fresh
 from collector_spark.registry import make_processor, make_sink
-from collector_spark.session import arrow_table
+from collector_spark.session import arrow_table, cache_scope, cached
 from collector_spark.sources.sources import make_source
 
 
@@ -410,15 +409,11 @@ class Pipeline:
                 per_sink_retry[name] = metrics["retries"]
 
         if targets:
-            shared = len(targets) > 1
-            if shared:
-                parent.persist(StorageLevel.MEMORY_AND_DISK)
-            try:
+            with cache_scope():
+                if len(targets) > 1:
+                    cached(parent)
                 for name, sink, view in targets:
                     wrote(name, sink, sink.write(view, batch_id=batch_id))
-            finally:
-                if shared:
-                    parent.unpersist()
             # only read after a write ran: Observation.get blocks until
             # a DataFrame action over the parent has finished
             observed: dict = {}

@@ -1,18 +1,1 @@
-"""Physical-plan inspection helpers.
-
-The reference has no optimizer (SURVEY.md §4.1); here Catalyst is the
-optimizer and these helpers let tests ASSERT the scale-critical plan
-properties instead of hoping for them:
-
-- filters/column pruning actually pushed into the parquet scan,
-- small dims joined via BroadcastHashJoin (never SortMergeJoin),
-- no html/binary column read unless the stage needs it.
-"""
-
-from collector_spark.plans.inspect import (  # noqa: F401
-    executed_plan,
-    has_broadcast_join,
-    has_sort_merge_join,
-    pushed_filters,
-    scan_read_schema,
-)
+"""Reusable plan builders: the north-star pages job (``pages_job``)."""

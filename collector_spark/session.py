@@ -9,9 +9,12 @@ from __future__ import annotations
 
 import os
 import re
-from typing import Sequence
+from contextlib import contextmanager
+from contextvars import ContextVar
+from typing import Callable, Iterator, Sequence
 
 import pyarrow as pa
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import StructType
@@ -147,3 +150,45 @@ def driver_frame(
         # would run its pandas-UDF stage as 39 small tasks, not one per core
         df = df.coalesce(spark.sparkContext.defaultParallelism)
     return df
+
+
+
+#: The releases owed by the innermost open ``cache_scope`` (None outside
+#: any); each scope's reset token restores the enclosing one.
+_SCOPE: ContextVar[list[Callable[[], None]] | None] = ContextVar("cache_scope", default=None)
+
+
+@contextmanager
+def cache_scope() -> Iterator[None]:
+    """Own the caches made inside: every frame that ``cached`` or ``cut``
+    returns while this is the innermost scope is released on exit, on an
+    exception too, so a result that reads one is consumed inside. Outside
+    any scope nothing is released."""
+    token = _SCOPE.set(releases := [])
+    try:
+        yield
+    finally:
+        _SCOPE.reset(token)
+        for release in releases:
+            release()
+
+
+def _own(df: DataFrame, release: Callable[[], None]) -> DataFrame:
+    if (releases := _SCOPE.get()) is not None:
+        releases.append(release)
+    return df
+
+
+def cached(df: DataFrame) -> DataFrame:
+    """``df`` persisted at ``MEMORY_AND_DISK``, for a frame that a plan
+    reads more than once; the innermost ``cache_scope`` unpersists it."""
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    return _own(df, df.unpersist)
+
+
+def cut(df: DataFrame) -> DataFrame:
+    """``df`` materialized by an eager ``localCheckpoint``, its lineage
+    cut; the innermost ``cache_scope`` unpersists the RDD behind its
+    ``LogicalRDD``, which ``DataFrame.unpersist`` does not reach."""
+    df = df.localCheckpoint(eager=True)
+    return _own(df, lambda: df._jdf.logicalPlan().rdd().unpersist(False))

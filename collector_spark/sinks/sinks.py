@@ -40,6 +40,7 @@ from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from collector_spark.oracle import variable_replace
+from collector_spark.session import cache_scope, cached
 
 
 @functools.cache
@@ -240,12 +241,10 @@ class ConsoleSink:
     def write(self, df: DataFrame, batch_id: int | None = None) -> int:
         # two actions (show + count) are inherent to a debug sink; persist
         # so the second reads the cache instead of recomputing upstream
-        df = df.persist()
-        try:
+        with cache_scope():
+            df = cached(df)
             df.show(self.num_rows, truncate=False)
             return df.count()
-        finally:
-            df.unpersist()
 
 
 class KafkaSink:

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from collector_spark.operators.stage import json_trim
 from collector_spark.session import driver_frame
 
 #: edge whitespace stripped from input lines — one explicit class used by
@@ -264,7 +265,7 @@ def merge_kafka_headers(value, headers):
     array<struct<key:string,value:binary>> (NULL when the message had
     no headers — merged as the empty object, like Go's empty map).
     """
-    trimmed = F.rtrim(F.ltrim(value))
+    trimmed = json_trim(value)
     is_obj = F.try_parse_json(value).isNotNull() & trimmed.startswith("{")
     is_empty_obj = trimmed.rlike(r"^\{\s*\}$")
     hs = F.coalesce(headers, F.array().cast(

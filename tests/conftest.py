@@ -2,10 +2,11 @@ import os
 import sys
 
 import pytest
+from pyspark import SparkContext
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from collector_spark.session import get_spark
+from collector_spark.session import cache_scope, get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -19,3 +20,20 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+def persisted_rdds() -> set[int]:
+    """Ids of the RDDs the running SparkContext holds persisted."""
+    sc = SparkContext._active_spark_context
+    return set(sc._jsc.getPersistentRDDs().keys()) if sc is not None else set()
+
+
+@pytest.fixture(autouse=True)
+def no_leaked_caches():
+    """Each test runs inside a ``cache_scope``; once it exits, no RDD the
+    test persisted or checkpointed may still be held."""
+    before = persisted_rdds()
+    with cache_scope():
+        yield
+    leaked = persisted_rdds() - before
+    assert not leaked, f"persisted RDDs left behind: {sorted(leaked)}"

@@ -5,7 +5,7 @@ the write-time pre-shuffle that makes repeated big joins affordable."""
 from pyspark.sql import functions as F
 
 from collector_spark.catalog import Catalog
-from collector_spark.plans.inspect import executed_plan
+from tests.plan_inspect import executed_plan
 
 
 def test_bucketed_join_has_no_shuffle(spark, tmp_path):

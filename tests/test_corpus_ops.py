@@ -321,17 +321,51 @@ def test_pack_sequences_empty_corpus_returns_empty(spark):
     assert [f.name for f in out.schema.fields] == ["doc_id", "n_tokens", "bin_id"]
 
 
-def test_dup_span_profile_unpersist_handoff(spark):
-    from collector_spark.operators.corpus import (
-        dup_span_profile,
-        remove_duplicated_spans,
-    )
+def _persisted(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
-    rows = [(1, "a b c d e f"), (2, "a b c d e g")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    for op in (dup_span_profile, remove_duplicated_spans):
-        handoff = []
-        op(df, n=5, unpersist_into=handoff).collect()
-        assert len(handoff) == 1
-        for frame in handoff:
-            frame.unpersist()
+
+@pytest.mark.parametrize(
+    "query",
+    [
+        "dedup_minhash_lsh",
+        "dedup_simhash",
+        "dedup_ngram_jaccard",
+        "dup_span_profile",
+        "dedup_connected_components",
+        "dedup_span_removal",
+        "embedding_near_dup",
+    ],
+)
+def test_gate_query_leaves_no_persisted_rdd(spark, sf_dir, query):
+    """The operators cache and checkpoint inside the caller's
+    cache_scope: once it exits, none of their RDDs is still held."""
+    from __spark_entry__ import QUERIES
+
+    from collector_spark.session import cache_scope
+
+    before = _persisted(spark)
+    with cache_scope():
+        QUERIES[query].build(spark, sf_dir).collect()
+    assert _persisted(spark) == before
+
+
+def test_cache_scope_frees_on_error_and_only_its_own(spark):
+    """A scope releases what was registered while it was innermost, on an
+    exception too, and leaves the enclosing scope's frames held."""
+    from collector_spark.session import cache_scope, cached, cut
+
+    df = spark.range(10)
+    before = _persisted(spark)
+    with cache_scope():
+        outer = cut(df.selectExpr("id * 2 AS y"))
+        held = _persisted(spark)
+        with pytest.raises(ValueError):
+            with cache_scope():
+                cached(df.selectExpr("id + 1 AS z")).count()
+                cut(df.selectExpr("id + 2 AS z"))
+                assert len(_persisted(spark) - held) == 2
+                raise ValueError
+        assert _persisted(spark) == held
+        assert outer.count() == 10
+    assert _persisted(spark) == before

@@ -15,7 +15,6 @@ import pytest
 
 from collector_spark import datagen, session
 from collector_spark.pipeline import Pipeline, PipelineConfig, SinkSpec
-from collector_spark.plans.inspect import executed_plan
 from collector_spark.sources.sources import (
     FileSource,
     HttpPollerSource,
@@ -23,6 +22,7 @@ from collector_spark.sources.sources import (
     lines_frame,
 )
 from collector_spark.sources.syslog_listener import SyslogListenerSource
+from tests.plan_inspect import executed_plan
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 

@@ -52,6 +52,8 @@ MERGE_CASES = [
     ("{}", [("k", "v")]),                                    # empty object payload
     ('{"a":1}', []),                                         # no headers -> empty @headers
     ('  {"pad":1}  ', [("k", "v")]),                         # whitespace-padded object
+    ('{"a":1}\n', [("h", "x")]),                            # JSON whitespace after the brace
+    ('\t{"a":1}\r\n', [("h", "x")]),
     ('{"q":"she said \\"hi\\""}', [("quote", 'say "x"')]),   # escaping both sides
     ("plain text line", [("k", "v")]),                       # not JSON: unchanged
     ("5", [("k", "v")]),                                     # JSON scalar: unchanged

@@ -40,7 +40,7 @@ def test_merge_multiline_drop_orphans(spark):
 def test_merge_multiline_one_shuffle(spark):
     """Scale pin: the whole merge is ONE exchange (the stream-partition
     window and the (stream, record) groupBy share the partitioning)."""
-    from collector_spark.plans.inspect import executed_plan
+    from tests.plan_inspect import executed_plan
 
     plan = executed_plan(merge_multiline(_lines(spark), r"^ERROR"))
     # exactly ONE Exchange: the (stream, record) groupBy piggybacks on

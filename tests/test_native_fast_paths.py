@@ -39,6 +39,10 @@ def test_native_json_add_equals_oracle(spark):
         '{"s":"quoted \\"str\\""}',
         "not json",
         "[1,2,3]",                          # non-object dropped by native path
+        '{"a":1}\t',                       # JSON whitespace after the brace
+        '{"a":1}\n',
+        '{"a":1}\r\n',
+        '\t{"a":1}',
     ]
     add = [{"key": "pipeline", "value": "bench"}]
     df = spark.createDataFrame([(l,) for l in lines], ["value"])
@@ -63,7 +67,7 @@ def test_native_json_add_surgery_runs_once_in_a_generate(spark):
     """Plain mode filters on the rewritten value: the surgery is a
     Generate output, so the pushed filter reads the column and never
     re-runs the string rewrite."""
-    from collector_spark.plans.inspect import executed_plan
+    from tests.plan_inspect import executed_plan
 
     df = spark.createDataFrame([('{"a":1}',), ("[1]",)], "value string")
     out = JsonMutator(add=[{"key": "k", "value": "v"}], engine="native").apply(df)

@@ -9,7 +9,8 @@ from pyspark.sql import functions as F
 
 from collector_spark import datagen
 from collector_spark.operators.enrich import enrich_pages
-from collector_spark.plans import (
+from tests.plan_inspect import (
+    executed_plan,
     has_broadcast_join,
     has_sort_merge_join,
     pushed_filters,
@@ -51,7 +52,6 @@ def test_enrichment_joins_are_broadcast_not_shuffle(spark, pages_path):
 def test_pages_job_plan_shape(spark, pages_path):
     """The north-star one-pass job: broadcast-only joins, exactly one
     exchange (the category groupBy), html+url only in the scan."""
-    from collector_spark.plans.inspect import executed_plan
     from collector_spark.plans.pages_job import build_pages_agg
 
     df = build_pages_agg(spark, spark.read.parquet(pages_path))
@@ -88,7 +88,6 @@ def test_pages_job_plan_shape(spark, pages_path):
 def test_route_agg_parses_each_line_once(spark, sf_dir):
     """Three json-mode route predicates over one line read one parse."""
     from __spark_entry__ import q_pipeline_parse_route_agg
-    from collector_spark.plans.inspect import executed_plan
 
     plan = executed_plan(q_pipeline_parse_route_agg(spark, sf_dir))
     assert plan.count("parseJson") == 1
@@ -99,7 +98,6 @@ def test_lsh_topk_plan_no_cartesian_and_keyed_joins(spark):
     """The wide-band LSH candidate join must be a keyed (band, bv) join —
     never a cartesian product — and the binary explode stays pre-join."""
     from collector_spark.operators.similarity import lsh_topk
-    from collector_spark.plans.inspect import executed_plan
 
     rows = [(i, [float(i % 7), float(i % 3), 1.0, 0.5]) for i in range(50)]
     df = spark.createDataFrame(rows, ["vec_id", "embedding"])
@@ -113,7 +111,6 @@ def test_multimodal_binary_never_shuffled(spark):
     """Media bytes are consumed in the scan-side mapInPandas; no Exchange
     carries the binary column (the 100 TB no-shuffle-binaries contract)."""
     from collector_spark.operators.multimodal import extract_media_features
-    from collector_spark.plans.inspect import executed_plan
 
     df = spark.createDataFrame(
         [(i, bytes([i] * 64)) for i in range(8)], "media_id long, data binary"
@@ -150,6 +147,7 @@ def test_connected_components_round_bound_and_lineage_cut(spark):
     import time
 
     from collector_spark.operators.dedup import connected_components
+    from collector_spark.session import cache_scope
 
     # one long chain 0-1-2-...-63: diameter 63, worst case for CC
     d = 63
@@ -160,8 +158,9 @@ def test_connected_components_round_bound_and_lineage_cut(spark):
     cached_before = jsc.getPersistentRDDs().size()
     stats: dict = {}
     t0 = time.perf_counter()
-    labels = connected_components(edges, stats_into=stats)
-    got = {r.id: r.component for r in labels.collect()}
+    with cache_scope():
+        labels = connected_components(edges, stats_into=stats)
+        got = {r.id: r.component for r in labels.collect()}
     elapsed = time.perf_counter() - t0
     assert got == {i: 0 for i in range(d + 1)}
     # init round gives min(id, neighbors); each loop round ~squares reach
@@ -171,9 +170,8 @@ def test_connected_components_round_bound_and_lineage_cut(spark):
     # ~7 rounds of tiny joins: seconds with lineage cut, unboundable
     # without (generous ceiling absorbs slow host windows)
     assert elapsed < 120, elapsed
-    # explicit caches are balanced; only this run's checkpoint blocks
-    # (freed asynchronously by the ContextCleaner) may remain
-    assert jsc.getPersistentRDDs().size() <= cached_before + stats["rounds"] + 2
+    # the scope freed the edge cache and every round's checkpoint
+    assert jsc.getPersistentRDDs().size() == cached_before
 
 
 def test_events_ts_filter_pushdown(spark, sf_dir):
@@ -190,7 +188,6 @@ def test_top_revenue_orders_plan_shape(spark):
     small side at every sf) and the segment/date filters must reach the
     parquet scans — the properties that keep it one shuffle at 100 TB."""
     from __spark_entry__ import q_top_revenue_orders
-    from collector_spark.plans.inspect import executed_plan
 
     df = q_top_revenue_orders(spark, "/root/testdata/sf0.001")
     plan = executed_plan(df)
@@ -217,7 +214,6 @@ def test_span_removal_plan_no_cartesian_and_pruned_scan(spark):
     to (doc_id, text). The persisted grams table means the gram md5 is
     computed once, not re-derived per consumer."""
     from __spark_entry__ import q_dedup_span_removal
-    from collector_spark.plans.inspect import executed_plan
 
     df = q_dedup_span_removal(spark, "/root/testdata/sf0.001")
     plan = executed_plan(df)
@@ -236,7 +232,6 @@ def test_curation_prefix_sums_are_two_phase(spark):
         deterministic_shuffle,
         token_budget_select,
     )
-    from collector_spark.plans.inspect import executed_plan
 
     rows = [(i, " ".join("w" for _ in range(1 + i % 7))) for i in range(100)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
@@ -259,7 +254,6 @@ def test_unigram_logprob_no_cartesian_totals_broadcast(spark):
     """The (T, V) scalars ride a 1-row broadcast; the token join is a
     keyed hash join — no cartesian product anywhere."""
     from collector_spark.operators.curation import unigram_logprob
-    from collector_spark.plans.inspect import executed_plan
 
     df = spark.createDataFrame(
         [(i, "a b c d" if i % 2 else "a a b") for i in range(20)],
@@ -276,7 +270,6 @@ def test_returned_item_customers_aggregates_before_wide_join(spark):
     must broadcast, and the return-flag/date filters must reach the
     scans — the properties that keep the big shuffle narrow at 100 TB."""
     from __spark_entry__ import q_returned_item_customers
-    from collector_spark.plans.inspect import executed_plan
 
     df = q_returned_item_customers(spark, "/root/testdata/sf0.001")
     plan = executed_plan(df)
@@ -311,7 +304,6 @@ def test_rolling_window_input_is_daily_aggregate(spark):
     because its input is the one-row-per-day aggregate — assert the
     window sits above a HashAggregate (never the raw orders table)."""
     from __spark_entry__ import q_rolling_7day_revenue
-    from collector_spark.plans.inspect import executed_plan
 
     df = q_rolling_7day_revenue(spark, "/root/testdata/sf0.001")
     plan = executed_plan(df)
@@ -326,7 +318,6 @@ def test_grok_extract_stays_jvm_side(spark):
     may appear in the plan (the single-regex-pass claim lives in
     codegen CSE; the no-Python property is what the plan can pin)."""
     from collector_spark.operators.grok import grok_extract
-    from collector_spark.plans.inspect import executed_plan
 
     df = spark.createDataFrame([("a 1",), ("b 2",)], ["value"])
     out = grok_extract(df, "%{WORD:w} %{INT:n}")
@@ -340,7 +331,6 @@ def test_encode_tokens_vocab_broadcasts(spark):
     broadcast — encoding is a map-only stage over the exploded corpus,
     with no shuffle of the (huge) token table."""
     from collector_spark.operators.corpus import encode_tokens
-    from collector_spark.plans.inspect import executed_plan
 
     df = spark.createDataFrame(
         [(1, "a b c"), (2, "a d")], "doc_id long, text string"
@@ -358,7 +348,6 @@ def test_funnel_per_step_aggregation_shape(spark):
     never shuffle raw event rows unaggregated into a window (no Window
     operator at all)."""
     from collector_spark.operators.funnel import funnel_counts
-    from collector_spark.plans.inspect import executed_plan
 
     rows = [(u, f"2024-01-0{1 + (u + s) % 5}", t)
             for u in range(20) for s, t in enumerate(["signup", "activate", "purchase"])]
@@ -380,7 +369,6 @@ def test_retention_single_user_key_join(spark):
     distinct + min both map-side combined, no window over the raw
     stream, no cartesian."""
     from collector_spark.operators.funnel import retention_cohorts
-    from collector_spark.plans.inspect import executed_plan
 
     rows = [(u % 7, f"2024-01-{1 + (u % 21):02d}") for u in range(100)]
     df = spark.createDataFrame(rows, ["user_id", "d"]).select(

@@ -6,7 +6,7 @@ tiny query set)."""
 import pytest
 
 import __spark_entry__ as entry_mod
-from collector_spark.plans.inspect import executed_plan
+from tests.plan_inspect import executed_plan
 
 # intentional cross joins: small broadcast side by construction
 # (brute-force ANN against a tiny query set; 1-row broadcast scalar

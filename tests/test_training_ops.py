@@ -87,17 +87,12 @@ def test_connected_components_chains_and_cliques(spark):
     assert comp == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20}
 
     corpus = spark.createDataFrame([(i,) for i in [1, 2, 3, 4, 10, 11, 20, 21, 99]], ["doc_id"])
-    handles = []
     reps = {
         r.doc_id: r.representative
-        for r in dedup.near_dedup_groups(
-            corpus, edges, unpersist_into=handles
-        ).collect()
+        for r in dedup.near_dedup_groups(corpus, edges).collect()
     }
     assert reps[99] == 99  # no pair → self-representative
     assert reps[4] == 1 and reps[21] == 20
-    assert len(handles) == 1
-    handles[0].unpersist()
 
     # empty pair set → everyone self-represents
     no_edges = spark.createDataFrame([], "id_a long, id_b long")
@@ -574,7 +569,7 @@ def test_pseudonymize_consistent_keyed_and_null_safe(spark):
 
 def test_profile_columns_exact_counts_one_pass(spark):
     from collector_spark.operators.profile import profile_columns
-    from collector_spark.plans.inspect import executed_plan
+    from tests.plan_inspect import executed_plan
 
     df = spark.createDataFrame(
         [(1, "a"), (2, "a"), (3, None), (3, "b")], "id long, s string"

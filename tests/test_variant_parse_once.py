@@ -189,7 +189,7 @@ def test_router_views_carry_no_variant(spark):
 
 
 def test_with_variant_adds_one_generate_only_when_missing(spark):
-    from collector_spark.plans.inspect import executed_plan
+    from tests.plan_inspect import executed_plan
 
     df = spark.createDataFrame([('{"a": 1}',)], "value string")
     once = C.with_variant(C.with_variant(df))
