@@ -9,10 +9,13 @@ generalizes this: each sink has an optional CEL-subset predicate
 a row may match multiple sinks.
 
 Physical strategy (scale):
-- the upstream plan is computed ONCE and persisted, then each sink writes
-  a filtered view — N sinks cost one materialization + N cheap filtered
-  passes, not N recomputations (the reference re-reads its temp file per
-  output, manager.go:190-199, which is the same idea on local disk);
+- each sink writes a filtered view of one parent; the pipeline persists
+  the parent only when more than one Spark job reads it, so N sinks cost
+  one materialization + N cheap filtered passes, not N recomputations
+  (the reference re-reads its temp file per output,
+  manager.go:190-199, which is the same idea on local disk). A batch the
+  driver holds reads every route's match in one projection instead, and
+  the driver filters it per sink;
 - per-sink aggregate counts come from the same pass via ``groupBy`` over
   a routes array (``explode`` of matched sink names), one shuffle of
   (sink, count) partials only — map-side combined, tiny at any scale.
@@ -83,19 +86,21 @@ class Router:
 
     def _route_cols(self) -> list[tuple[str, Column]]:
         """(name, match) per route; a json-mode match reads the frame's
-        VARIANT companion (see ``_parsed``). Compiled on first use, then
+        VARIANT companion (see ``parsed``). Compiled on first use, then
         reused."""
         return self._compiled
 
-    def _parsed(self, df: DataFrame) -> DataFrame:
+    def parsed(self, df: DataFrame) -> DataFrame:
+        """``df`` with the VARIANT companion the json-mode matches read."""
         if self.mode == "json" and any(r.predicate is not None for r in self.routes):
             return with_variant(df, self.value_col)
         return df
 
     def split(self, df: DataFrame) -> dict[str, DataFrame]:
         """N filtered views of ``df``, one per route (write each to its
-        sink). Persist ``df`` first so the views share one computation."""
-        df = self._parsed(df)
+        sink). Each view recomputes ``df`` unless the caller persists it,
+        which pays only when more than one view is written."""
+        df = self.parsed(df)
         parsed = variant_col(self.value_col)
         carries_parsed = parsed in df.columns
         views = {}
@@ -116,7 +121,7 @@ class Router:
             F.coalesce(F.sum(col.cast("long")), F.lit(0)).alias(name)
             for name, col in self._route_cols()
         ]
-        wide = self._parsed(df).agg(*aggs)
+        wide = self.parsed(df).agg(*aggs)
         # unpivot to (sink, cnt); names are backtick-quoted identifiers
         # (validated at __init__, but e.g. a reserved word still needs
         # quoting inside selectExpr)

@@ -11,12 +11,18 @@ Spark mapping:
   columns pruned, codegen fused);
 - fan-out = N filtered sink writes of one parent (the router), which
   is persisted only when more than one Spark job reads it;
+- a small batch (input a LocalRelation) whose every sink takes driver
+  rows runs ONE Spark action instead: ``toArrow()`` of a flag per sink
+  and the columns each sink writes; the driver filters that table per
+  sink and writes it with pyarrow, so no sink pays Spark's write job
+  and file commit;
 - per-stage surviving counts (the reference's per-processor Rotate()
   counts, manager.go:160) and the kept rows per partition id (the
   lineage) come from ``df.observe`` metrics on the parent — measured on
-  the SAME pass, no extra jobs. So do a small batch's dead letters
-  (quarantine mode, input a LocalRelation): the driver writes them, and
-  a tick with one events sink runs one Spark job;
+  the SAME pass, no extra jobs. So do a small batch's dead letters when
+  the quarantine sink takes driver rows but a routed sink does not: the
+  driver writes them, and such a batch with one routed sink runs one
+  Spark job;
 - commit = manifest record written AFTER all sinks (at-least-once with
   idempotent replay; see collector_spark.checkpoint).
 """
@@ -33,7 +39,7 @@ from pyspark.sql import functions as F
 
 from collector_spark.checkpoint import BatchRecord, Manifest
 from collector_spark.operators.router import Route, Router
-from collector_spark.operators.stage import Processor, fresh
+from collector_spark.operators.stage import Processor, fresh, variant_col
 from collector_spark.registry import make_processor, make_sink
 from collector_spark.session import arrow_table, cache_scope, cached
 from collector_spark.sources.sources import make_source
@@ -224,6 +230,7 @@ class Pipeline:
         failed = fail.isNotNull()
         dead_letter = [F.col(_ORIG).alias(vc), fail.alias("fail_stage")]
         return {
+            "dead_letter_of": {vc: _ORIG, "fail_stage": _FAIL},
             "start": {_ORIG: F.col(vc), _FAIL: F.lit(None).cast("string")},
             "kept": kept,
             "failed": failed,
@@ -232,9 +239,25 @@ class Pipeline:
                 F.histogram_numeric(F.when(kept, F.col(_PID)), F.lit(_MAX_PARTITIONS)).alias(_LINEAGE),
                 F.count(F.when(kept, 1)).alias(_KEPT),
             ],
-            # collect_list skips the NULLs of the kept rows
-            "observed_dead_letters": F.collect_list(F.when(failed, F.struct(*dead_letter))).alias(_DEAD),
         }
+
+    @cached_property
+    def _route_flags(self) -> list[tuple[str, Column]]:
+        """(sink, match) per route; in quarantine mode only kept rows
+        match."""
+        routes = self.router._route_cols() if self.router is not None else []
+        if self.quarantine_sink is None:
+            return routes
+        return [(name, self._tagged_columns["kept"] & match) for name, match in routes]
+
+    @cached_property
+    def _dead_letter_rows(self) -> tuple[list[Column], Column]:
+        """The quarantine sink's ``row_columns`` of a dead letter, and
+        the metric that collects them over the failed rows."""
+        cols = self.quarantine_sink.row_columns(self._tagged_columns["dead_letter_of"])
+        fields = [(F.col(c) if isinstance(c, str) else c).alias(n) for n, c in cols.items()]
+        # collect_list skips the NULLs of the kept rows
+        return fields, F.collect_list(F.when(self._tagged_columns["failed"], F.struct(*fields))).alias(_DEAD)
 
     def _first_failure(self, i: int, keep: Column) -> Column:
         """``_fail_stage`` after stage ``i``, whose rows pass where
@@ -309,7 +332,7 @@ class Pipeline:
         if observations is not None:
             metrics, names = cols["metrics"], self._stage_names + [_LINEAGE]
             if observe_dead_letters:
-                metrics, names = metrics + [cols["observed_dead_letters"]], names + [_DEAD]
+                metrics, names = metrics + [self._dead_letter_rows[1]], names + [_DEAD]
             obs = Observation("stages")
             tagged = tagged.observe(obs, *metrics)
             for name in names:
@@ -361,83 +384,99 @@ class Pipeline:
         (original value + first failing stage) for the rows the filters
         would have dropped. The per-stage counts and the kept rows per
         partition (the lineage) are Observations on the parent, so the
-        first write measures them: the batch runs no job besides its
+        first action measures them: the batch runs no job besides its
         writes.
 
-        A small batch's dead letters ride the same Observation when the
-        input is a LocalRelation (its rows, and so every dead letter,
-        already fit on the driver) and the quarantine sink ``takes_rows``:
-        the driver writes them after the routed writes, and a tick with
-        one sink runs one Spark job. The parent is persisted only when
-        more than one Spark job reads it."""
+        When the input is a LocalRelation (at most
+        ``LOCAL_RELATION_BYTES``, so the batch fits on the driver), the
+        driver writes the sinks that ``takes_rows``: if every sink does,
+        the batch runs one Spark action (``_write_rows``); else a
+        quarantine sink that does gets the dead letters from the routed
+        writes' Observation. Every other sink is a Spark write of a
+        filtered view, and the parent is persisted only when more than
+        one Spark job reads it."""
         observations: dict[str, Observation] = {}
-        dead_rows = False
+        sinks = dict(self.sinks)
+        if self.quarantine_sink is not None:
+            sinks[_QUARANTINE] = self.quarantine_sink
+        rows = [name for name, sink in sinks.items() if getattr(sink, "takes_rows", False)]
+        if rows and not df.isLocal():
+            rows = []
+        dead_rows = _QUARANTINE in rows and len(rows) < len(sinks)
         if self.quarantine_sink is None:
             pid, lineage = self._lineage
             obs = Observation("lineage")
             parent = self.transform(df, observations).select("*", pid).observe(obs, *lineage)
             observations[_LINEAGE] = obs
             out = parent.drop(_PID)
-            dead_letter = []
         else:
-            dead_rows = (
-                self.router is not None
-                and getattr(self.quarantine_sink, "takes_rows", False)
-                and df.isLocal()
-            )
             parent, out, quarantined = self.transform_tagged(df, observations, dead_rows)
-            dead_letter = [] if dead_rows else [(_QUARANTINE, self.quarantine_sink, quarantined)]
-        routed = (
-            [(name, self.sinks[name], view) for name, view in self.router.split(out).items()]
-            if self.router is not None
-            else []
-        )
-        targets = routed + dead_letter
 
-        per_sink: dict[str, int] = {}
-        per_sink_empty: dict[str, int] = {}
-        per_sink_retry: dict[str, int] = {}
-        partition_counts: dict[str, int] = {}
-        per_stage: dict[str, int] = {}
+        record = BatchRecord(batch_id=batch_id, source_state=source_state or {})
 
-        def wrote(name, sink, written):
-            per_sink[name] = written
-            metrics = getattr(sink, "last_metrics", None) or {}
+        def wrote(name, written):
+            record.per_sink_counts[name] = written
+            metrics = getattr(sinks[name], "last_metrics", None) or {}
             if metrics.get("empty"):
-                per_sink_empty[name] = metrics["empty"]
+                record.per_sink_empty_counts[name] = metrics["empty"]
             if metrics.get("retries"):
-                per_sink_retry[name] = metrics["retries"]
+                record.per_sink_retry_counts[name] = metrics["retries"]
 
-        if targets:
+        if sinks and len(rows) == len(sinks):
+            self._write_rows(parent, out, sinks, batch_id, wrote)
+        elif sinks:
+            views = self.router.split(out) if self.router is not None else {}
+            if self.quarantine_sink is not None and not dead_rows:
+                views[_QUARANTINE] = quarantined
             with cache_scope():
-                if len(targets) > 1:
+                if len(views) > 1:
                     cached(parent)
-                for name, sink, view in targets:
-                    wrote(name, sink, sink.write(view, batch_id=batch_id))
+                for name, view in views.items():
+                    wrote(name, sinks[name].write(view, batch_id=batch_id))
+        if sinks:
             # only read after a write ran: Observation.get blocks until
             # a DataFrame action over the parent has finished
             observed: dict = {}
             for obs in {id(o): o for o in observations.values()}.values():
                 observed.update(_observed(obs))
-            per_stage = {name: int(observed.get(name, 0)) for name in self._stage_names}
-            partition_counts = _partition_counts(observed)
+            record.per_stage_counts = {name: int(observed.get(name, 0)) for name in self._stage_names}
+            record.partition_counts = _partition_counts(observed)
             if dead_rows:
-                rows = observed.get(_DEAD) or []
-                table = arrow_table(quarantined.schema, [r[0] for r in rows], [r[1] for r in rows])
-                sink = self.quarantine_sink
-                wrote(_QUARANTINE, sink, sink.write_rows(table, batch_id=batch_id))
-        record = BatchRecord(
-            batch_id=batch_id,
-            source_state=source_state or {},
-            per_stage_counts=per_stage,
-            per_sink_counts=per_sink,
-            per_sink_empty_counts=per_sink_empty,
-            per_sink_retry_counts=per_sink_retry,
-            partition_counts=partition_counts,
-        )
+                fields = self._dead_letter_rows[0]
+                dead = observed.get(_DEAD) or []
+                table = arrow_table(parent.select(*fields).schema, *([r[i] for r in dead] for i in range(len(fields))))
+                wrote(_QUARANTINE, self.quarantine_sink.write_rows(table, batch_id=batch_id))
         if self.manifest is not None:
             self.manifest.commit(record)  # AFTER sinks — reference order
         return record
+
+    def _write_rows(self, parent: DataFrame, out: DataFrame, sinks: dict, batch_id: int, wrote) -> None:
+        """The small-batch path: one ``toArrow()`` of a flag per sink and
+        each sink's ``row_columns`` (a kept column once, however many
+        sinks write it), which the parent's Observations ride on; then
+        each sink, dead letters last, writes the rows its flag picks.
+        This skips Spark's write job and its file commit, about a third
+        of a small tick's one job."""
+        vc = variant_col(self.config.value_col)
+        kept = {c: c for c in out.columns if c != vc}
+        targets = [(name, kept, flag) for name, flag in self._route_flags]
+        if self.quarantine_sink is not None:
+            tagged = self._tagged_columns
+            targets.append((_QUARANTINE, tagged["dead_letter_of"], tagged["failed"]))
+        project: dict[str, str | Column] = {}
+        picks: dict[str, dict[str, str]] = {}
+        for name, columns, flag in targets:
+            project[f"_route_{name}"] = flag
+            picks[name] = {}
+            for written, col in sinks[name].row_columns(columns).items():
+                key = col if isinstance(col, str) else f"_{name}_{written}"
+                project.setdefault(key, col)
+                picks[name][key] = written
+        frame = parent if self.router is None else self.router.parsed(parent)
+        table = frame.select(*[c if isinstance(c, str) else c.alias(k) for k, c in project.items()]).toArrow()
+        for name, pick in picks.items():
+            rows = table.filter(table[f"_route_{name}"]).select(list(pick)).rename_columns(list(pick.values()))
+            wrote(name, sinks[name].write_rows(rows, batch_id=batch_id))
 
     def run_tick(self, spark: SparkSession, on_error: str = "raise") -> BatchRecord:
         """One reference daemon tick (internal/input/file/file.go:62-133 →

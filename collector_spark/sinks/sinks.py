@@ -27,7 +27,9 @@ the guarantee the reference aims for with state-after-outputs commit
 
 from __future__ import annotations
 
+import contextlib
 import functools
+import gzip
 import os
 import shutil
 import uuid
@@ -44,23 +46,28 @@ from collector_spark.session import cache_scope, cached
 
 
 @functools.cache
-def _line_columns() -> tuple[Column, Column, Column]:
-    """(non-empty test, written counter, empty counter) over ``value``.
-    Built on first use (Column construction needs an active
-    SparkSession), then shared by every sink and batch: a Column is
-    plan-free. Whitespace CLASS, not F.trim (spaces only): a
+def _line_columns(value_col: str = "value") -> tuple[Column, Column, Column]:
+    """(non-empty test, written counter, empty counter) over
+    ``value_col`` as text. Built on first use (Column construction needs
+    an active SparkSession), then shared by every sink and batch: a
+    Column is plan-free. Whitespace CLASS, not F.trim (spaces only): a
     tab/CR-only value is EMPTY, matching the reference's TrimSpace'd
     lines (pkg/core/tmp_writer.go:54-56) and the FileSource edge-trim
     class."""
-    non_empty = F.coalesce(
-        F.length(F.regexp_replace(F.col("value"), r"^\s+|\s+$", "")) > 0,
-        F.lit(False),
-    )
+    text = F.col(value_col).cast("string")
+    non_empty = F.coalesce(F.length(F.regexp_replace(text, r"^\s+|\s+$", "")) > 0, F.lit(False))
     return (
         non_empty,
         F.count(F.when(non_empty, 1)).alias("written"),
         F.count(F.when(~non_empty, 1)).alias("empty"),
     )
+
+
+@functools.cache
+def _line_text(value_col: str) -> Column:
+    """The line a text sink writes for ``value_col``: its text, NULL
+    where the line is empty (Java's ``\\s``, as ``write`` tests it)."""
+    return F.when(_line_columns(value_col)[0], F.col(value_col).cast("string"))
 
 
 @functools.cache
@@ -100,8 +107,9 @@ class _BaseSink:
     #: metrics of the most recent write(): {"written": n, "empty": m}
     last_metrics: dict | None = None
 
-    def __init__(self, path: str | None = None, **_):
+    def __init__(self, path: str | None = None, max_records_per_file: int = 0, **_):
         self.path = path
+        self.max_records = max_records_per_file
         self._resolved: dict[int, str] = {}
 
     def target(self, batch_id: int | None) -> str:
@@ -123,6 +131,35 @@ class _BaseSink:
             self._resolved[batch_id] = _templated(self.path)
         return os.path.join(self._resolved[batch_id], f"batch_id={batch_id}")
 
+    @property
+    def takes_rows(self) -> bool:
+        """Whether ``write_rows`` may write this sink: one file per batch
+        on the driver's local filesystem (no scheme, or ``file:``)."""
+        return urlparse(self.path).scheme in ("", "file") and not self.max_records
+
+    @contextlib.contextmanager
+    def _staged(self, batch_id: int | None):
+        """A directory to write batch ``batch_id``'s files into, then
+        published with ``_SUCCESS`` over the batch's directory by
+        ``_replace_dir``. It is a hidden sibling (Spark's reader skips
+        names starting with ``.``), removed if the block raises, so a
+        crash never leaves a readable partial batch. Both hidden names
+        are fixed per batch, so the batch's rerun clears what a killed
+        writer left."""
+        final = _local(self.target(batch_id))
+        root, name = os.path.split(final.rstrip(os.sep))
+        tmp = os.path.join(root, f".{name}.tmp")
+        for stale in (tmp, f"{tmp}.old"):
+            shutil.rmtree(stale, ignore_errors=True)
+        os.makedirs(tmp)
+        try:
+            yield tmp
+            open(os.path.join(tmp, "_SUCCESS"), "wb").close()
+            _replace_dir(tmp, final)
+        except BaseException:
+            shutil.rmtree(tmp, ignore_errors=True)
+            raise
+
 
 class ParquetSink(_BaseSink):
     """Columnar sink (the default for Iceberg-style tables; with an
@@ -130,9 +167,8 @@ class ParquetSink(_BaseSink):
     logical schema, see SURVEY.md §7 catalog note)."""
 
     def __init__(self, path: str, partition_by: tuple[str, ...] = (), max_records_per_file: int = 0, **_):
-        super().__init__(path)
+        super().__init__(path, max_records_per_file)
         self.partition_by = tuple(partition_by)
-        self.max_records = max_records_per_file
 
     def write(self, df: DataFrame, batch_id: int | None = None) -> int:
         target = self.target(batch_id)
@@ -150,40 +186,19 @@ class ParquetSink(_BaseSink):
 
     @property
     def takes_rows(self) -> bool:
-        """Whether ``write_rows`` may write this sink: one file per batch
-        on the driver's local filesystem (no scheme, or ``file:``)."""
-        scheme = urlparse(self.path).scheme
-        return scheme in ("", "file") and not (self.partition_by or self.max_records)
+        return super().takes_rows and not self.partition_by
+
+    def row_columns(self, columns: dict[str, str]) -> dict[str, str | Column]:
+        """What ``write_rows`` takes, given ``{name written: column of
+        the frame}``: the columns themselves."""
+        return columns
 
     def write_rows(self, table: pa.Table, batch_id: int | None = None) -> int:
-        """Write driver-side rows where ``write`` would write them as a
-        frame, as Spark lays them out: ``_SUCCESS`` plus one
-        ``part-00000-<uuid>-c000.snappy.parquet``, replacing the batch's
-        directory. Only when ``takes_rows``. For a handful of rows this
-        saves a Spark job (0.25-0.36 s a daemon tick on 4 vCPUs).
-
-        The files go to a hidden sibling directory (Spark's reader skips
-        names starting with ``.``) that is then renamed over the target,
-        so a crash never leaves a readable partial batch. Both hidden
-        names are fixed per batch, so the batch's rerun clears what a
-        killed writer left."""
-        final = _local(self.target(batch_id))
-        root, name = os.path.split(final.rstrip(os.sep))
-        tmp = os.path.join(root, f".{name}.tmp")
-        for stale in (tmp, f"{tmp}.old"):
-            shutil.rmtree(stale, ignore_errors=True)
-        os.makedirs(tmp)
-        try:
-            pq.write_table(
-                table,
-                os.path.join(tmp, f"part-00000-{uuid.uuid4()}-c000.snappy.parquet"),
-                compression="snappy",
-            )
-            open(os.path.join(tmp, "_SUCCESS"), "wb").close()
-            _replace_dir(tmp, final)
-        except BaseException:
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise
+        """Write driver-side rows where and as ``write`` would: one
+        ``part-00000-<uuid>-c000.snappy.parquet``. Only if ``takes_rows``."""
+        with self._staged(batch_id) as tmp:
+            name = f"part-00000-{uuid.uuid4()}-c000.snappy.parquet"
+            pq.write_table(table, os.path.join(tmp, name), compression="snappy")
         self.last_metrics = {"written": table.num_rows, "empty": 0}
         return table.num_rows
 
@@ -214,15 +229,16 @@ class FileSink(_BaseSink):
     internal/output/s3/s3.go:64-111)."""
 
     def __init__(self, path: str, value_col: str = "value", max_records_per_file: int = 0, gzip: bool = False, **_):
-        super().__init__(path)
+        super().__init__(path, max_records_per_file)
         self.value_col = value_col
-        self.max_records = max_records_per_file
         self.gzip = gzip
 
     def write(self, df: DataFrame, batch_id: int | None = None) -> int:
-        target = self.target(batch_id)
+        return self._write_text(df, self.target(batch_id), "overwrite")
+
+    def _write_text(self, df: DataFrame, target: str, mode: str) -> int:
         out, obs = _observed_lines(df, self.value_col)  # tmp_writer.go:54-56
-        w = out.write.mode("overwrite")
+        w = out.write.mode(mode)
         if self.max_records:
             w = w.option("maxRecordsPerFile", str(self.max_records))
         if self.gzip:
@@ -230,6 +246,27 @@ class FileSink(_BaseSink):
         w.text(target)
         self.last_metrics = {k: int(v) for k, v in obs.get.items()}
         return self.last_metrics["written"]
+
+    def row_columns(self, columns: dict[str, str]) -> dict[str, str | Column]:
+        """What ``write_rows`` takes, given ``{name written: column of
+        the frame}``: ``value``, the line of ``value_col``, NULL where
+        it is empty."""
+        return {"value": _line_text(columns.get(self.value_col, self.value_col))}
+
+    def write_rows(self, table: pa.Table, batch_id: int | None = None) -> int:
+        """Write the ``value`` lines of ``table`` (``row_columns``) where
+        and as ``write`` would: each non-NULL line as UTF-8 plus ``\\n``
+        in one ``part-00000-<uuid>-c000.txt`` (``.txt.gz`` with
+        ``gzip``). Only if ``takes_rows``."""
+        lines = table.column("value").drop_null()
+        data = "".join(f"{line}\n" for line in lines.to_pylist()).encode()
+        name = f"part-00000-{uuid.uuid4()}-c000.txt"
+        if self.gzip:
+            data, name = gzip.compress(data), f"{name}.gz"
+        with self._staged(batch_id) as tmp, open(os.path.join(tmp, name), "wb") as f:
+            f.write(data)
+        self.last_metrics = {"written": len(lines), "empty": table.num_rows - len(lines)}
+        return len(lines)
 
 
 class ConsoleSink:
@@ -315,6 +352,10 @@ class GcsSink(FileSink):
         super().__init__(path=f"{scheme}://{bucket}/{path.lstrip('/')}", **kw)
         self.composite = composite
 
+    @property
+    def takes_rows(self) -> bool:
+        return not self.composite and super().takes_rows
+
     def write(self, df: DataFrame, batch_id: int | None = None) -> int:
         if not self.composite:
             return super().write(df, batch_id=batch_id)
@@ -333,28 +374,13 @@ class GcsSink(FileSink):
         # last-wins observably — this mirrors GCS compose's atomicity
         # (gcs.go:97-141).
         target = _templated(self.path)
-        if batch_id is not None:
-            import uuid
-
-            final = os.path.join(target, f"part_batch_id={batch_id}")
-            target = os.path.join(
-                target, f".tick_tmp_{batch_id}_{uuid.uuid4().hex}"
-            )
-            mode = "overwrite"
-        else:
-            final = None
-            mode = "append"
-        out, obs = _observed_lines(df, self.value_col)
-        w = out.write.mode(mode)
-        if self.max_records:
-            w = w.option("maxRecordsPerFile", str(self.max_records))
-        if self.gzip:
-            w = w.option("compression", "gzip")
-        w.text(target)
-        if final is not None:
-            self._publish_by_rename(df.sparkSession, target, final)
-        self.last_metrics = {k: int(v) for k, v in obs.get.items()}
-        return self.last_metrics["written"]
+        if batch_id is None:
+            return self._write_text(df, target, "append")
+        final = os.path.join(target, f"part_batch_id={batch_id}")
+        tmp = os.path.join(target, f".tick_tmp_{batch_id}_{uuid.uuid4().hex}")
+        written = self._write_text(df, tmp, "overwrite")
+        self._publish_by_rename(df.sparkSession, tmp, final)
+        return written
 
     @staticmethod
     def _publish_by_rename(spark, tmp: str, final: str) -> None:

@@ -153,21 +153,24 @@ def test_fresh_handle_agrees_with_writer_after_replay(tmp_path):
 
 
 def test_tick_crash_points_converge_to_exactly_once(spark, tmp_path, monkeypatch):
-    """Crash-point matrix on a file-source pipeline whose malformed lines
-    go to a parquet quarantine the driver writes:
+    """Crash-point matrix on a file-source pipeline whose every sink the
+    driver writes: a parquet sink, a text sink and a parquet quarantine
+    for the malformed lines.
     (1) the sinks wrote but the commit failed → the next tick reuses the
     batch id and offset and overwrites, so ``batch_id=N`` holds each line
-    once; (2) the events write ran, the dead-letter write did not;
-    (3) the dead letters sit in the writer's hidden temp directory, not
-    yet renamed into place (as a killed writer leaves it) → a read skips
-    it, and the rerun publishes the batch and clears it; (4) the commit landed but the
-    source ack failed → the next tick moves on to N+1 and no row is
-    duplicated."""
+    once; (2) the routed driver writes ran, the dead-letter write did
+    not; (3) a writer's files sit in its hidden temp directory, not yet
+    renamed into place (as a killed writer leaves it), for the text sink
+    (3a) and for the routed parquet sink (3b) → a read skips it, and the
+    rerun publishes the batch and clears it; (4) the commit landed but
+    the source ack failed → the next tick moves on to N+1 and no row is
+    duplicated. No hidden ``.batch_id=N.tmp*`` survives a rerun."""
     from collector_spark.pipeline import Pipeline, PipelineConfig, SinkSpec
     from collector_spark.sinks import sinks
 
     log = tmp_path / "app.log"
     out = tmp_path / "out"
+    text = tmp_path / "text"
     quarantine = tmp_path / "q"
     state = str(tmp_path / "state")
 
@@ -176,27 +179,41 @@ def test_tick_crash_points_converge_to_exactly_once(spark, tmp_path, monkeypatch
             f.writelines(json.dumps({"i": i}) + f"\nbad {i}\n" for i in ids)
 
     def rows(batch_id):
+        """The batch's ids in the parquet sink and in the text sink."""
         df = spark.read.parquet(str(out / f"batch_id={batch_id}"))
-        return sorted(json.loads(r.value)["i"] for r in df.collect())
+        ids = sorted(json.loads(r.value)["i"] for r in df.collect())
+        lines = spark.read.text(str(text / f"batch_id={batch_id}")).collect()
+        assert sorted(json.loads(r.value)["i"] for r in lines) == ids
+        return ids
+
+    def everything(root, read):
+        return sorted(
+            json.loads(r.value)["i"] for r in read(str(root)).collect() if r.value.startswith("{")
+        )
 
     def dead_letters():
         """Every quarantined line, read from the sink's root."""
         return sorted(int(r.value.split()[1]) for r in spark.read.parquet(str(quarantine)).collect())
 
-    def hidden():
-        return [n for n in os.listdir(quarantine) if n.startswith(".")]
+    def hidden(root=None):
+        roots = [root] if root else [out, text, quarantine]
+        return [n for r in roots for n in os.listdir(r) if n.startswith(".")]
 
     pipe = Pipeline(
         PipelineConfig(
             instance_id="crash",
             input={"kind": "file", "path": str(tmp_path / "*.log")},
             processors=[{"kind": "cel", "rules": ["has(event.i)"]}],
-            sinks=[SinkSpec("out", "parquet", None, {"path": str(out)})],
+            sinks=[
+                SinkSpec("out", "parquet", None, {"path": str(out)}),
+                SinkSpec("text", "file", None, {"path": str(text)}),
+            ],
             quarantine={"kind": "parquet", "path": str(quarantine)},
         ),
         state_dir=state,
     )
     assert pipe.quarantine_sink.takes_rows
+    assert all(sink.takes_rows for sink in pipe.sinks.values())
     append(range(3))
     assert pipe.run_tick(spark).batch_id == 0
     offset0 = pipe.manifest.last_state()
@@ -218,11 +235,12 @@ def test_tick_crash_points_converge_to_exactly_once(spark, tmp_path, monkeypatch
         assert m.last_state() == offset0
     r1 = pipe.run_tick(spark)
     assert r1.batch_id == 1
-    assert r1.per_sink_counts == {"out": 3, "__quarantine__": 3}
+    assert r1.per_sink_counts == {"out": 3, "text": 3, "__quarantine__": 3}
     assert rows(1) == [3, 4, 5]
     assert dead_letters() == list(range(6))
 
-    # (2) events written, the driver's dead-letter write never starts
+    # (2) routed rows written by the driver, its dead-letter write never
+    # starts
     append(range(6, 8))
 
     def crash_before_write_rows(table, batch_id=None):
@@ -235,33 +253,39 @@ def test_tick_crash_points_converge_to_exactly_once(spark, tmp_path, monkeypatch
     assert rows(2) == [6, 7]
     assert dead_letters() == list(range(6))
     assert not Manifest(state, "crash").committed(2)
-    assert pipe.run_tick(spark).per_sink_counts == {"out": 2, "__quarantine__": 2}
+    assert pipe.run_tick(spark).per_sink_counts == {"out": 2, "text": 2, "__quarantine__": 2}
     assert rows(2) == [6, 7]
     assert dead_letters() == list(range(8))
     assert hidden() == []
 
-    # (3) the temp directory is written, the rename never runs, and the
-    # writer's own clean-up never runs either (a killed process)
-    append(range(8, 10))
+    # (3) one sink's temp directory is written, its rename never runs,
+    # and the writer's own clean-up never runs either (a killed process)
+    publish = sinks._replace_dir
+    for batch_id, root in ((3, text), (4, out)):
+        append(range(2 * batch_id + 2, 2 * batch_id + 4))
 
-    def crash_before_rename(tmp, final):
-        raise RuntimeError("crash before rename")
+        def crash_before_rename(tmp, final, root=root):
+            if final.startswith(str(root)):
+                raise RuntimeError("crash before rename")
+            publish(tmp, final)
 
-    with monkeypatch.context() as patch:
-        patch.setattr(sinks, "_replace_dir", crash_before_rename)
-        patch.setattr(sinks.shutil, "rmtree", lambda *a, **k: None)
-        with pytest.raises(RuntimeError, match="before rename"):
-            pipe.run_tick(spark)
-    leftover = hidden()
-    assert len(leftover) == 1 and os.listdir(quarantine / leftover[0])
-    assert dead_letters() == list(range(8))  # not read
-    assert pipe.run_tick(spark).per_sink_counts == {"out": 2, "__quarantine__": 2}
-    assert rows(3) == [8, 9]
-    assert dead_letters() == list(range(10))
-    assert hidden() == []  # the rerun cleared the killed writer's leftover
+        with monkeypatch.context() as patch:
+            patch.setattr(sinks, "_replace_dir", crash_before_rename)
+            patch.setattr(sinks.shutil, "rmtree", lambda *a, **k: None)
+            with pytest.raises(RuntimeError, match="before rename"):
+                pipe.run_tick(spark)
+        leftover = hidden(root)
+        assert len(leftover) == 1 and os.listdir(root / leftover[0])
+        assert hidden() == leftover
+        assert not (root / f"batch_id={batch_id}").exists()  # not read
+        assert dead_letters() == list(range(2 * batch_id + 2))
+        assert pipe.run_tick(spark).per_sink_counts == {"out": 2, "text": 2, "__quarantine__": 2}
+        assert rows(batch_id) == [2 * batch_id + 2, 2 * batch_id + 3]
+        assert dead_letters() == list(range(2 * batch_id + 4))
+        assert hidden() == []  # the rerun cleared the killed writer's leftover
 
     # (4) commit landed, source ack fails
-    append(range(10, 12))
+    append(range(12, 14))
 
     def crash_before_ack(success):
         raise RuntimeError("crash before ack")
@@ -270,14 +294,15 @@ def test_tick_crash_points_converge_to_exactly_once(spark, tmp_path, monkeypatch
         patch.setattr(pipe.source, "commit_read", crash_before_ack)
         with pytest.raises(RuntimeError, match="before ack"):
             pipe.run_tick(spark)
-    assert Manifest(state, "crash").last_batch_id() == 4
-    append(range(12, 14))
-    r5 = pipe.run_tick(spark)
-    assert r5.batch_id == 5
-    assert rows(5) == [12, 13]
-    everything = [i for b in range(6) for i in rows(b)]
-    assert sorted(everything) == list(range(14))
-    assert dead_letters() == list(range(14))
+    assert Manifest(state, "crash").last_batch_id() == 5
+    append(range(14, 16))
+    r6 = pipe.run_tick(spark)
+    assert r6.batch_id == 6
+    assert rows(6) == [14, 15]
+    assert sorted(i for b in range(7) for i in rows(b)) == list(range(16))
+    assert everything(out, spark.read.parquet) == everything(text, spark.read.text) == list(range(16))
+    assert dead_letters() == list(range(16))
+    assert hidden() == []
 
 
 def test_writer_refuses_a_log_that_shrank(tmp_path):

@@ -8,14 +8,19 @@ sink: the routed counts, the per-stage counts and the kept rows agree,
 and the dead letters are exactly the inputs plain mode drops. Its
 parquet variant writes the dead letters to a parquet quarantine sink
 both ways (by the driver, off the events write's Observation, and by
-Spark) and reads them back."""
+Spark) and reads them back. The route property test sends random
+chains to random route predicates, with and without a quarantine sink,
+by the small-batch path (one ``toArrow()``, the driver writes every
+sink) and by Spark's writers, and compares counts and rows."""
 
+import json
 import os
 import tempfile
 from collections import Counter
 
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from collector_spark.pipeline import Pipeline, PipelineConfig, SinkSpec
@@ -215,3 +220,72 @@ def test_parquet_dead_letters_agree_on_both_write_paths(spark, chain, lines):
     assert plain_kept == kept
     kept_ids = {i for i, _ in kept}
     assert dead == Counter(v for i, v in enumerate(lines) if i not in kept_ids)
+
+
+PREDICATES = [None, "event.code == 200", "event.code >= 400", "has(event.level)", 'event.msg == "ok"']
+_ROUTES = st.lists(
+    st.tuples(st.sampled_from(PREDICATES), st.sampled_from(["parquet", "file"])),
+    min_size=1,
+    max_size=3,
+)
+
+
+def _run_routes(spark, chain, routes, lines, quarantine, root, local):
+    """One batch of ``lines`` through ``chain`` to a sink per route under
+    ``root``, over a LocalRelation (the driver writes every sink) or the
+    same relation behind a no-op filter (Spark writes them); every sink
+    is read back."""
+    config = PipelineConfig(
+        instance_id="routes",
+        processors=chain,
+        sinks=[
+            SinkSpec(f"s{i}", kind, predicate, {"path": f"{root}/s{i}"})
+            for i, (predicate, kind) in enumerate(routes)
+        ],
+        quarantine={"kind": "parquet", "path": f"{root}/q"} if quarantine else None,
+    )
+    df = driver_frame(spark, ID_LINES, list(range(len(lines))), lines)
+    record = Pipeline(config).run_batch(df if local else df.filter(F.lit(True)), batch_id=0)
+    read = {"parquet": spark.read.parquet, "file": spark.read.text}
+    kinds = [kind for _, kind in routes] + (["parquet"] if quarantine else [])
+    names = [f"s{i}" for i in range(len(routes))] + (["q"] if quarantine else [])
+    back = {
+        name: Counter(
+            json.dumps(r.asDict(recursive=True), sort_keys=True, default=str)
+            for r in read[kind](f"{root}/{name}/batch_id=0").collect()
+        )
+        for name, kind in zip(names, kinds)
+    }
+    return record, back
+
+
+@settings(
+    max_examples=12,
+    deadline=None,
+    derandomize=True,
+    database=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
+)
+@given(
+    chain=st.lists(st.sampled_from(STAGES), max_size=2),
+    routes=_ROUTES,
+    lines=_CORPUS,
+    quarantine=st.booleans(),
+)
+@example(chain=[STAGES[4]], routes=[(None, "file"), ("event.code == 200", "parquet")], lines=LINES, quarantine=True)
+def test_driver_and_spark_paths_agree_over_random_routes(spark, chain, routes, lines, quarantine):
+    """The small-batch path (one ``toArrow()``, the driver filters and
+    writes) and the Spark path (one write per sink) give the same
+    per-sink, empty, stage and partition counts and the same rows."""
+    with tempfile.TemporaryDirectory() as root:
+        one, rows = _run_routes(spark, chain, routes, lines, quarantine, f"{root}/driver", True)
+        two, rows2 = _run_routes(spark, chain, routes, lines, quarantine, f"{root}/spark", False)
+        # Spark's writer leaves checksum files, the driver's does not
+        for name in rows:
+            assert not any(n.endswith(".crc") for n in os.listdir(f"{root}/driver/{name}/batch_id=0"))
+            assert any(n.endswith(".crc") for n in os.listdir(f"{root}/spark/{name}/batch_id=0"))
+    for field in ("per_sink_counts", "per_sink_empty_counts", "per_stage_counts", "partition_counts"):
+        assert getattr(one, field) == getattr(two, field), field
+    assert rows == rows2
+    for i in range(len(routes)):
+        assert sum(rows[f"s{i}"].values()) == one.per_sink_counts[f"s{i}"]

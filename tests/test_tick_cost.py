@@ -4,11 +4,12 @@ plan build.
 - Partition lineage is measured on the write pass: the kept rows per
   partition id come from the parent's Observation, and equal a
   ``groupBy(spark_partition_id())`` over the parent.
-- A quarantine-mode tick of a small tail runs exactly one Spark job: the
-  dead letters ride the events write's Observation and the driver
-  writes them. A tail over ``LOCAL_RELATION_BYTES``, or a quarantine
-  sink that cannot take driver rows, runs one job per write, with the
-  same counts. The parent is persisted only for more than one job.
+- A small batch whose every sink takes driver rows runs exactly one
+  Spark job and persists nothing: a quarantine-mode tick with a ``file``
+  events sink and a parquet or ``file`` quarantine sink, and a fan-out
+  to three local sinks. A tail over ``LOCAL_RELATION_BYTES``, or a sink
+  that cannot take driver rows, runs one job per write, with the same
+  counts. The parent is persisted only for more than one job.
 - Every sink write is a DataFrame action, so the Observations fire with
   the HTTP-family sinks as the only sink.
 - A batch's plan build reuses the operators' compiled Columns: py4j
@@ -82,7 +83,7 @@ def test_lineage_matches_groupby_over_persisted_parent(spark, tmp_path, quaranti
         assert record.partition_counts == {"0": 10, "2": 10}
 
 
-def _ticker(spark, tmp_path, quarantine_kind: str = "parquet"):
+def _ticker(spark, tmp_path, **quarantine):
     """(pipe, tick): a quarantine-mode file-source instance, and a
     function that appends lines to its log, runs one tick in a job group
     and returns the record and the group's Spark job count."""
@@ -92,31 +93,36 @@ def _ticker(spark, tmp_path, quarantine_kind: str = "parquet"):
         "input": {"kind": "file", "path": str(log)},
         "processors": [{"kind": "cel", "rules": ["event.code == 200"]}],
         "sinks": [{"name": "events", "kind": "file", "config": {"path": str(tmp_path / "ev")}}],
-        "quarantine": {"kind": quarantine_kind, "path": str(tmp_path / "q")},
+        "quarantine": {"kind": "parquet", "path": str(tmp_path / "q"), **quarantine},
     }
     pipe = Pipeline(PipelineConfig.from_dict(config), state_dir=str(tmp_path / "state"))
-    sc = spark.sparkContext
 
     def tick(lines, group):
         with open(log, "a") as f:
             f.writelines(line + "\n" for line in lines)
-        sc.setJobGroup(group, group)
-        try:
-            record = pipe.run_tick(spark)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-        return record, len(sc.statusTracker().getJobIdsForGroup(group))
+        return _in_group(spark, group, lambda: pipe.run_tick(spark))
 
     return pipe, tick
+
+
+def _in_group(spark, group, fn):
+    """``fn()`` run in a Spark job group, and the group's job count."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        result = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 TICK = ['{"code": 200, "i": 1}', '{"code": 500}', '{"code": 200, "i": 2}']
 
 
 def test_quarantine_file_tick_runs_one_spark_job(spark, tmp_path):
-    """The events write is the tick's only job: the lineage, the stage
-    counts and the dead letters ride on it, and the driver writes the
+    """The tick's only job is one ``toArrow()``: the lineage and the
+    stage counts ride on it, and the driver writes the events and the
     dead letters."""
     pipe, tick = _ticker(spark, tmp_path)
     tick(['{"code": 200}', "not json"], "tick-cost-warm")
@@ -130,17 +136,98 @@ def test_quarantine_file_tick_runs_one_spark_job(spark, tmp_path):
 
 
 def test_file_quarantine_sink_keeps_a_job_per_write(spark, tmp_path):
-    """A quarantine sink that cannot take driver rows (a text file sink)
-    keeps its Spark write, with the same counts."""
+    """A ``file`` quarantine sink takes driver rows too: its tick runs
+    one job. A quarantine sink that cannot take them (a rotating text
+    sink) keeps its Spark write, with the same counts and lines."""
     _, fast = _ticker(spark, tmp_path / "fast")
-    _, spark_write = _ticker(spark, tmp_path / "file", quarantine_kind="file")
+    _, text = _ticker(spark, tmp_path / "text", kind="file")
+    _, spark_write = _ticker(spark, tmp_path / "file", kind="file", max_records_per_file=1000)
     for group in ("warm", "tick"):
         one, one_jobs = fast(TICK, f"quarantine-parquet-{group}")
+        lines, text_jobs = text(TICK, f"quarantine-text-{group}")
         two, two_jobs = spark_write(TICK, f"quarantine-file-{group}")
+    assert text_jobs == 1
     assert (one_jobs, two_jobs) == (1, 2)
-    assert one.per_sink_counts == two.per_sink_counts == {"events": 2, "__quarantine__": 1}
-    assert one.per_stage_counts == two.per_stage_counts
+    for record in (lines, two):
+        assert one.per_sink_counts == record.per_sink_counts == {"events": 2, "__quarantine__": 1}
+        assert one.per_stage_counts == record.per_stage_counts
+        assert one.partition_counts == record.partition_counts
+    by_driver, by_spark = (
+        sorted(spark.read.text(str(tmp_path / d / "q")).collect()) for d in ("text", "file")
+    )
+    assert by_driver == by_spark and [r.value for r in by_driver] == ['{"code": 500}'] * 2
+
+
+def test_small_fanout_batch_runs_one_spark_job(spark, tmp_path):
+    """Three local sinks, two of them predicated parquet sinks and one a
+    catch-all text sink, over a LocalRelation: one Spark job, nothing
+    persisted at any point, and the same rows as Spark's writes."""
+    lines = ['{"code": 200, "i": 1}', '{"code": 500, "i": 2}', '{"code": 404, "i": 3}', "  "]
+
+    def pipe(root, **parquet):
+        sinks = [
+            SinkSpec("ok", "parquet", "event.code == 200", {"path": str(root / "ok"), **parquet}),
+            SinkSpec("errors", "parquet", "event.code >= 400", {"path": str(root / "errors")}),
+            SinkSpec("archive", "file", None, {"path": str(root / "archive")}),
+        ]
+        return Pipeline(PipelineConfig(instance_id="fan", sinks=sinks))
+
+    driver, spark_write = pipe(tmp_path / "driver"), pipe(tmp_path / "spark", max_records_per_file=100)
+    seen = []
+    write_rows = driver.sinks["archive"].write_rows
+    driver.sinks["archive"].write_rows = lambda *a, **k: seen.append(_persisted(spark)) or write_rows(*a, **k)
+    before = _persisted(spark)
+    runs = [
+        _in_group(spark, group, lambda: p.run_batch(lines_frame(spark, lines), batch_id=b))
+        for b, (p, group) in enumerate(((driver, "fanout-warm"), (driver, "fanout"), (spark_write, "fanout-spark")))
+    ]
+    _, (one, one_jobs), (two, two_jobs) = runs
+    assert (one_jobs, two_jobs) == (1, 3)
+    assert [s - before for s in seen] == [set(), set()] and not _persisted(spark) - before
+    assert one.per_sink_counts == two.per_sink_counts == {"ok": 1, "errors": 2, "archive": 3}
+    assert one.per_sink_empty_counts == two.per_sink_empty_counts == {"archive": 1}
     assert one.partition_counts == two.partition_counts
+    for sink, read in (("ok", spark.read.parquet), ("errors", spark.read.parquet), ("archive", spark.read.text)):
+        got = [sorted(read(str(tmp_path / d / sink / f"batch_id={b}")).collect()) for d, b in (("driver", 1), ("spark", 2))]
+        assert got[0] == got[1], sink
+
+
+@pytest.mark.parametrize("kind", ["parquet", "file"])
+def test_mixed_batch_dead_letters_ride_the_routed_write(spark, tmp_path, kind):
+    """A routed sink that takes no driver rows (a rotating text sink)
+    beside a quarantine sink that does: the routed write is the batch's
+    one job, its Observation brings the dead letters, and the driver
+    writes them as Spark's writer does."""
+    lines = ['{"code": 200}', '{"code": 500}', "not json", "  "]
+
+    def pipe(root):
+        return Pipeline(
+            PipelineConfig(
+                instance_id="mixed",
+                processors=[{"kind": "cel", "rules": ["event.code == 200"]}],
+                sinks=[SinkSpec("events", "file", None, {"path": str(root / "ev"), "max_records_per_file": 100})],
+                quarantine={"kind": kind, "path": str(root / "q")},
+            )
+        )
+
+    driver, spark_write = pipe(tmp_path / "driver"), pipe(tmp_path / "spark")
+    batches = (
+        (driver, lines_frame(spark, lines)),
+        (driver, lines_frame(spark, lines)),
+        (spark_write, lines_frame(spark, lines).filter(F.lit(True))),
+    )
+    _, (one, one_jobs), (two, two_jobs) = [
+        _in_group(spark, f"mixed-{kind}-{b}", lambda: p.run_batch(df, batch_id=b))
+        for b, (p, df) in enumerate(batches)
+    ]
+    assert (one_jobs, two_jobs) == (1, 2)
+    dead = {"parquet": 3, "file": 2}[kind]
+    assert one.per_sink_counts == two.per_sink_counts == {"events": 1, "__quarantine__": dead}
+    assert one.per_sink_empty_counts == two.per_sink_empty_counts
+    assert one.per_stage_counts == two.per_stage_counts
+    read = spark.read.parquet if kind == "parquet" else spark.read.text
+    by_driver, by_spark = (sorted(read(str(tmp_path / d / "q" / f"batch_id={b}")).collect()) for d, b in (("driver", 1), ("spark", 2)))
+    assert by_driver == by_spark and len(by_driver) == dead
 
 
 def test_tail_over_local_relation_bytes_keeps_a_job_per_write(spark, tmp_path):
