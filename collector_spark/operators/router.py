@@ -9,13 +9,13 @@ generalizes this: each sink has an optional CEL-subset predicate
 a row may match multiple sinks.
 
 Physical strategy (scale):
-- each sink writes a filtered view of one parent; the pipeline persists
-  the parent only when more than one Spark job reads it, so N sinks cost
-  one materialization + N cheap filtered passes, not N recomputations
-  (the reference re-reads its temp file per output,
-  manager.go:190-199, which is the same idea on local disk). A batch the
-  driver holds reads every route's match in one projection instead, and
-  the driver filters it per sink;
+- each route's match is its sink's flag in the pipeline's one write
+  plan (``Pipeline.views``): a Spark write is a filtered view of one
+  parent, persisted only when two or more Spark writes read it, so N
+  sinks cost one materialization + N cheap filtered passes, not N
+  recomputations (the reference re-reads its temp file per output,
+  manager.go:190-199, the same idea on local disk); the driver filters
+  one Arrow table by the same flags for every sink that takes rows;
 - per-sink aggregate counts come from the same pass via ``groupBy`` over
   a routes array (``explode`` of matched sink names), one shuffle of
   (sink, count) partials only — map-side combined, tiny at any scale.

@@ -9,20 +9,20 @@ Spark mapping:
   DataFrame→DataFrame transforms (Catalyst then optimizes the whole
   chain as one plan — filters get pushed past parses where legal,
   columns pruned, codegen fused);
-- fan-out = N filtered sink writes of one parent (the router), which
-  is persisted only when more than one Spark job reads it;
-- a small batch (input a LocalRelation) whose every sink takes driver
-  rows runs ONE Spark action instead: ``toArrow()`` of a flag per sink
-  and the columns each sink writes; the driver filters that table per
-  sink and writes it with pyarrow, so no sink pays Spark's write job
-  and file commit;
+- fan-out = one write plan: a flag and columns per sink over one
+  parent (``views``). A sink the driver cannot write is a Spark write
+  of its view; the parent is persisted only when two or more Spark
+  writes read it;
+- a small batch (input a LocalRelation) hands every sink that takes
+  driver rows one Arrow table of the flags and the columns those sinks
+  write: the batch's one ``toArrow()`` when every sink takes rows, else
+  a ``collect_list`` Observation riding the Spark writes. The driver
+  filters it per sink and writes with pyarrow, so a small batch runs
+  ``max(1, sinks that cannot take rows)`` Spark jobs;
 - per-stage surviving counts (the reference's per-processor Rotate()
   counts, manager.go:160) and the kept rows per partition id (the
   lineage) come from ``df.observe`` metrics on the parent — measured on
-  the SAME pass, no extra jobs. So do a small batch's dead letters when
-  the quarantine sink takes driver rows but a routed sink does not: the
-  driver writes them, and such a batch with one routed sink runs one
-  Spark job;
+  the SAME pass, no extra jobs;
 - commit = manifest record written AFTER all sinks (at-least-once with
   idempotent replay; see collector_spark.checkpoint).
 """
@@ -32,7 +32,7 @@ from __future__ import annotations
 import json
 import os
 from dataclasses import dataclass, field
-from functools import cached_property
+from functools import cache, cached_property, reduce
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -96,14 +96,21 @@ class PipelineConfig:
         return cfg
 
 
-# the parent's helper columns (dropped before any sink), the lineage
-# metrics and the dead letters' metric; a batch with more partitions
-# than the histogram has bins would get merged bins, which
-# _partition_counts rejects
+# the parent's helper columns (no sink writes them), the lineage
+# metrics and the metric of the rows the driver writes beside Spark's
+# writes; a batch with more partitions than the histogram has bins
+# would get merged bins, which _partition_counts rejects
 _ORIG, _FAIL, _PID = "_orig", "_fail_stage", "_pid"
-_LINEAGE, _KEPT, _DEAD = "_partitions", "_kept", "_dead_letters"
+_LINEAGE, _KEPT, _ROWS = "_partitions", "_kept", "_rows"
 _QUARANTINE = "__quarantine__"
 _MAX_PARTITIONS = 1 << 16
+
+
+@cache
+def _renamed(column: str, name: str) -> Column:
+    """Column ``column`` written as ``name``; built once (a Column is
+    plan-free), then shared by every batch."""
+    return F.col(column).alias(name)
 
 
 def _observed(obs: Observation) -> dict:
@@ -227,14 +234,8 @@ class Pipeline:
             F.count(F.when(kept | ~fail.isin(names[: i + 1]), 1)).alias(name)
             for i, name in enumerate(names)
         ]
-        failed = fail.isNotNull()
-        dead_letter = [F.col(_ORIG).alias(vc), fail.alias("fail_stage")]
         return {
-            "dead_letter_of": {vc: _ORIG, "fail_stage": _FAIL},
             "start": {_ORIG: F.col(vc), _FAIL: F.lit(None).cast("string")},
-            "kept": kept,
-            "failed": failed,
-            "dead_letter": dead_letter,
             "metrics": counts + [
                 F.histogram_numeric(F.when(kept, F.col(_PID)), F.lit(_MAX_PARTITIONS)).alias(_LINEAGE),
                 F.count(F.when(kept, 1)).alias(_KEPT),
@@ -242,22 +243,39 @@ class Pipeline:
         }
 
     @cached_property
-    def _route_flags(self) -> list[tuple[str, Column]]:
-        """(sink, match) per route; in quarantine mode only kept rows
-        match."""
-        routes = self.router._route_cols() if self.router is not None else []
+    def _flags(self) -> dict[str, Column]:
+        """Each sink's flag: its route's match, only on kept rows in
+        quarantine mode, then the dead letters' flag."""
+        routes = dict(self.router._route_cols()) if self.router is not None else {}
         if self.quarantine_sink is None:
             return routes
-        return [(name, self._tagged_columns["kept"] & match) for name, match in routes]
+        kept = F.col(_FAIL).isNull()
+        return {**{name: kept & match for name, match in routes.items()}, _QUARANTINE: ~kept}
 
-    @cached_property
-    def _dead_letter_rows(self) -> tuple[list[Column], Column]:
-        """The quarantine sink's ``row_columns`` of a dead letter, and
-        the metric that collects them over the failed rows."""
-        cols = self.quarantine_sink.row_columns(self._tagged_columns["dead_letter_of"])
-        fields = [(F.col(c) if isinstance(c, str) else c).alias(n) for n, c in cols.items()]
-        # collect_list skips the NULLs of the kept rows
-        return fields, F.collect_list(F.when(self._tagged_columns["failed"], F.struct(*fields))).alias(_DEAD)
+    def _columns(self, parent: DataFrame) -> dict[str, dict[str, str]]:
+        """Each sink's ``{name written: column of parent}``: a route
+        writes the parent's columns but the helpers and the VARIANT
+        companion, the quarantine sink the original value and the first
+        failing stage (the dead-letter record)."""
+        vc = self.config.value_col
+        helpers = {_ORIG, _FAIL, _PID, variant_col(vc)}
+        kept = {c: c for c in parent.columns if c not in helpers}
+        columns = dict.fromkeys(self.sinks, kept)
+        if self.quarantine_sink is not None:
+            columns[_QUARANTINE] = {vc: _ORIG, "fail_stage": _FAIL}
+        return columns
+
+    def views(self, parent: DataFrame, names: list[str] | None = None) -> dict[str, DataFrame]:
+        """What each sink of ``names`` (all by default) writes of
+        ``parent`` (``transform_tagged``'s, or the plain parent):
+        ``parent.filter(flag).select(columns)``. Each view recomputes
+        ``parent`` unless the caller persists it."""
+        frame = parent if self.router is None else self.router.parsed(parent)
+        columns = self._columns(frame)
+        return {
+            name: frame.filter(self._flags[name]).select(*(c if c == w else _renamed(c, w) for w, c in columns[name].items()))
+            for name in (self._flags if names is None else names)
+        }
 
     def _first_failure(self, i: int, keep: Column) -> Column:
         """``_fail_stage`` after stage ``i``, whose rows pass where
@@ -295,26 +313,19 @@ class Pipeline:
         return df
 
     def transform_tagged(
-        self,
-        df: DataFrame,
-        observations: dict[str, Observation] | None = None,
-        observe_dead_letters: bool = False,
-    ) -> tuple[DataFrame, DataFrame, DataFrame]:
+        self, df: DataFrame, observations: dict[str, Observation] | None = None
+    ) -> DataFrame:
         """Quarantine variant of transform(): every stage TAGS instead of
-        filters; a row's first failing stage is recorded. Returns
-        (tagged_parent, kept, quarantined) — kept/quarantined are cheap
-        filtered views of the parent (persist the parent to share the
-        parse work). ``quarantined`` carries the ORIGINAL input value
-        plus ``fail_stage`` — the dead-letter record replacing the
-        reference's silent drops (manager.go:166-169).
+        filters; a row's first failing stage is recorded. Returns the
+        tagged parent; ``views`` picks each sink's rows of it, the dead
+        letters (the ORIGINAL input value plus ``fail_stage``) replacing
+        the reference's silent drops (manager.go:166-169).
 
         ``observations`` is filled as in transform(), plus the partition
         lineage: one Observation on the parent counts, per stage, the
         rows that passed it and every stage before it, so the counts
         equal the filtering path's, and holds the kept rows per
-        partition id (``_LINEAGE``). With ``observe_dead_letters`` it
-        also holds the dead-letter rows (``_DEAD``): only for a batch the
-        driver could hold, as every dead letter is a copy of an input row.
+        partition id (``_LINEAGE``).
 
         Each stage's tagging is one projection of its ``tag_columns``
         (see ``stage.Processor``): the rows plain mode filters on ``keep``
@@ -330,16 +341,11 @@ class Pipeline:
             pending = {_FAIL: self._first_failure(i, keep)}
         tagged = df.withColumns({**pending, _PID: self._lineage[0]})
         if observations is not None:
-            metrics, names = cols["metrics"], self._stage_names + [_LINEAGE]
-            if observe_dead_letters:
-                metrics, names = metrics + [self._dead_letter_rows[1]], names + [_DEAD]
             obs = Observation("stages")
-            tagged = tagged.observe(obs, *metrics)
-            for name in names:
+            tagged = tagged.observe(obs, *cols["metrics"])
+            for name in self._stage_names + [_LINEAGE]:
                 observations[name] = obs
-        kept = tagged.filter(cols["kept"]).drop(_ORIG, _FAIL, _PID)
-        quarantined = tagged.filter(cols["failed"]).select(*cols["dead_letter"])
-        return tagged, kept, quarantined
+        return tagged
 
     # -- execution -----------------------------------------------------------
 
@@ -380,37 +386,28 @@ class Pipeline:
     ) -> BatchRecord:
         """The sink writes, then the commit. Plain mode filters stage by
         stage (later stages never run on dropped rows); quarantine mode
-        tags every row in one pass and adds the dead-letter write
-        (original value + first failing stage) for the rows the filters
-        would have dropped. The per-stage counts and the kept rows per
-        partition (the lineage) are Observations on the parent, so the
-        first action measures them: the batch runs no job besides its
-        writes.
+        tags every row in one pass and adds the dead-letter sink for the
+        rows the filters would have dropped. The per-stage counts and
+        the kept rows per partition (the lineage) are Observations on the
+        parent, so the first action measures them: each Spark write's
+        first action must read all of its view.
 
-        When the input is a LocalRelation (at most
-        ``LOCAL_RELATION_BYTES``, so the batch fits on the driver), the
-        driver writes the sinks that ``takes_rows``: if every sink does,
-        the batch runs one Spark action (``_write_rows``); else a
-        quarantine sink that does gets the dead letters from the routed
-        writes' Observation. Every other sink is a Spark write of a
-        filtered view, and the parent is persisted only when more than
-        one Spark job reads it."""
+        On a LocalRelation (at most ``LOCAL_RELATION_BYTES``) the driver
+        writes every sink that ``takes_rows`` from one Arrow table: the
+        batch's one ``toArrow()``, or a ``collect_list`` Observation on
+        the Spark writes of the other sinks' ``views``. So a small batch
+        runs ``max(1, sinks that cannot take rows)`` Spark jobs."""
         observations: dict[str, Observation] = {}
         sinks = dict(self.sinks)
         if self.quarantine_sink is not None:
             sinks[_QUARANTINE] = self.quarantine_sink
-        rows = [name for name, sink in sinks.items() if getattr(sink, "takes_rows", False)]
-        if rows and not df.isLocal():
-            rows = []
-        dead_rows = _QUARANTINE in rows and len(rows) < len(sinks)
         if self.quarantine_sink is None:
             pid, lineage = self._lineage
             obs = Observation("lineage")
             parent = self.transform(df, observations).select("*", pid).observe(obs, *lineage)
             observations[_LINEAGE] = obs
-            out = parent.drop(_PID)
         else:
-            parent, out, quarantined = self.transform_tagged(df, observations, dead_rows)
+            parent = self.transform_tagged(df, observations)
 
         record = BatchRecord(batch_id=batch_id, source_state=source_state or {})
 
@@ -422,61 +419,59 @@ class Pipeline:
             if metrics.get("retries"):
                 record.per_sink_retry_counts[name] = metrics["retries"]
 
-        if sinks and len(rows) == len(sinks):
-            self._write_rows(parent, out, sinks, batch_id, wrote)
-        elif sinks:
-            views = self.router.split(out) if self.router is not None else {}
-            if self.quarantine_sink is not None and not dead_rows:
-                views[_QUARANTINE] = quarantined
+        if sinks:
+            frame = parent if self.router is None else self.router.parsed(parent)
+            rows = [name for name, sink in sinks.items() if getattr(sink, "takes_rows", False)] if df.isLocal() else []
+            spark_writes = [name for name in sinks if name not in rows]
+            if rows:
+                project, picks = self._row_plan(frame, sinks, rows)
+                if spark_writes:
+                    picked = reduce(Column.__or__, (self._flags[name] for name in rows))
+                    obs = observations[_ROWS] = Observation("rows")
+                    frame = frame.observe(obs, F.collect_list(F.when(picked, F.struct(*project))).alias(_ROWS))
+                else:
+                    table = frame.select(*project).toArrow()
             with cache_scope():
-                if len(views) > 1:
-                    cached(parent)
+                # two or more Spark writes share one materialization, the
+                # row Observation's included
+                views = self.views(cached(frame) if len(spark_writes) > 1 else frame, spark_writes)
                 for name, view in views.items():
                     wrote(name, sinks[name].write(view, batch_id=batch_id))
-        if sinks:
-            # only read after a write ran: Observation.get blocks until
+            # only read after an action ran: Observation.get blocks until
             # a DataFrame action over the parent has finished
             observed: dict = {}
             for obs in {id(o): o for o in observations.values()}.values():
                 observed.update(_observed(obs))
             record.per_stage_counts = {name: int(observed.get(name, 0)) for name in self._stage_names}
             record.partition_counts = _partition_counts(observed)
-            if dead_rows:
-                fields = self._dead_letter_rows[0]
-                dead = observed.get(_DEAD) or []
-                table = arrow_table(parent.select(*fields).schema, *([r[i] for r in dead] for i in range(len(fields))))
-                wrote(_QUARANTINE, self.quarantine_sink.write_rows(table, batch_id=batch_id))
+            if rows and spark_writes:
+                got = observed.get(_ROWS) or []
+                schema = frame.select(*project).schema
+                table = arrow_table(schema, *([r[i] for r in got] for i in range(len(schema))))
+            for name in rows:  # the dead letters last
+                pick = picks[name]
+                chosen = table.filter(table[f"_route_{name}"]).select(list(pick)).rename_columns(list(pick.values()))
+                wrote(name, sinks[name].write_rows(chosen, batch_id=batch_id))
         if self.manifest is not None:
             self.manifest.commit(record)  # AFTER sinks — reference order
         return record
 
-    def _write_rows(self, parent: DataFrame, out: DataFrame, sinks: dict, batch_id: int, wrote) -> None:
-        """The small-batch path: one ``toArrow()`` of a flag per sink and
-        each sink's ``row_columns`` (a kept column once, however many
-        sinks write it), which the parent's Observations ride on; then
-        each sink, dead letters last, writes the rows its flag picks.
-        This skips Spark's write job and its file commit, about a third
-        of a small tick's one job."""
-        vc = variant_col(self.config.value_col)
-        kept = {c: c for c in out.columns if c != vc}
-        targets = [(name, kept, flag) for name, flag in self._route_flags]
-        if self.quarantine_sink is not None:
-            tagged = self._tagged_columns
-            targets.append((_QUARANTINE, tagged["dead_letter_of"], tagged["failed"]))
+    def _row_plan(self, frame: DataFrame, sinks: dict, names: list[str]) -> tuple[list, dict[str, dict[str, str]]]:
+        """The table the driver writes sinks ``names`` from: a flag per
+        sink and each sink's ``row_columns`` (a column of ``frame`` once,
+        however many sinks write it); and per sink, ``{column of the
+        table: name written}``."""
+        columns = self._columns(frame)
         project: dict[str, str | Column] = {}
         picks: dict[str, dict[str, str]] = {}
-        for name, columns, flag in targets:
-            project[f"_route_{name}"] = flag
+        for name in names:
+            project[f"_route_{name}"] = self._flags[name]
             picks[name] = {}
-            for written, col in sinks[name].row_columns(columns).items():
+            for written, col in sinks[name].row_columns(columns[name]).items():
                 key = col if isinstance(col, str) else f"_{name}_{written}"
                 project.setdefault(key, col)
                 picks[name][key] = written
-        frame = parent if self.router is None else self.router.parsed(parent)
-        table = frame.select(*[c if isinstance(c, str) else c.alias(k) for k, c in project.items()]).toArrow()
-        for name, pick in picks.items():
-            rows = table.filter(table[f"_route_{name}"]).select(list(pick)).rename_columns(list(pick.values()))
-            wrote(name, sinks[name].write_rows(rows, batch_id=batch_id))
+        return [c if isinstance(c, str) else c.alias(k) for k, c in project.items()], picks
 
     def run_tick(self, spark: SparkSession, on_error: str = "raise") -> BatchRecord:
         """One reference daemon tick (internal/input/file/file.go:62-133 →

@@ -47,9 +47,12 @@ def register_sink(name: str, factory: Callable) -> None:
     through ``df.rdd``: the batch's per-stage counts and partition
     lineage are Observations on the frame's parent, and an Observation
     fires only on a DataFrame action; after the writes ``Pipeline``
-    waits for them. The built-in HTTP-family sinks run their
-    per-partition senders through one ``mapInArrow`` action for this
-    reason."""
+    waits for them. Its first action must read every row of ``df`` (no
+    ``limit``, ``show`` or ``take`` first): an Observation keeps the
+    metrics of the first action over its frame, and a small batch's
+    driver-written rows ride them too. The built-in HTTP-family sinks
+    run their per-partition senders through one ``mapInArrow`` action
+    for this reason."""
     SINK_REGISTRY[name] = factory
 
 

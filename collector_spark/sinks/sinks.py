@@ -276,12 +276,14 @@ class ConsoleSink:
         self.num_rows = num_rows
 
     def write(self, df: DataFrame, batch_id: int | None = None) -> int:
-        # two actions (show + count) are inherent to a debug sink; persist
-        # so the second reads the cache instead of recomputing upstream
+        # two actions are inherent to a debug sink; persist so show reads
+        # the cache. The count reads every partition first, as the
+        # Observations over df keep the first action's metrics only
         with cache_scope():
             df = cached(df)
+            written = df.count()
             df.show(self.num_rows, truncate=False)
-            return df.count()
+            return written
 
 
 class KafkaSink:

@@ -190,11 +190,7 @@ class FileSource:
             # there, making row values depend on which path the tail took)
             big = (
                 spark.read.text(spilled)
-                .select(
-                    F.regexp_replace(
-                        "value", r"^[ \t\x0B\f\r]+|[ \t\x0B\f\r]+$", ""
-                    ).alias("value")
-                )
+                .select(F.regexp_replace("value", _WS_EDGE.pattern, "").alias("value"))
                 .filter(F.length("value") > 0)
             )
             df = df.unionAll(big)

@@ -148,7 +148,7 @@ def test_quarantine_file_tick_plan(spark, tmp_path):
         state_dir=str(tmp_path / "state"),
     )
     df, _ = pipe.source.read_new(spark, {})
-    tagged = pipe.transform_tagged(df)[0]
+    tagged = pipe.transform_tagged(df)
     plan = executed_plan(tagged)
     assert "ExistingRDD" not in plan
     assert plan.count("ArrowEvalPython") == 1

@@ -315,7 +315,7 @@ def test_syslog_raw_strips_any_all_digit_pri(spark):
 
 
 def test_syslog_pri_over_191_is_dropped_or_quarantined(spark):
-    from collector_spark.pipeline import Pipeline, PipelineConfig
+    from collector_spark.pipeline import Pipeline, PipelineConfig, SinkSpec
 
     bad, good = "<999>Jan  1 00:00:00 host hello", "<13>Jan  1 00:00:00 host hi"
     df = spark.createDataFrame([(bad,), (good,)], ["value"])
@@ -324,10 +324,12 @@ def test_syslog_pri_over_191_is_dropped_or_quarantined(spark):
         PipelineConfig(
             instance_id="pri",
             processors=[{"kind": "syslog", "type": "rfc3164"}],
+            sinks=[SinkSpec("kept", "parquet", None, {"path": "/nonexistent/kept"})],
             quarantine={"kind": "parquet", "path": "/nonexistent/q"},
         )
     )
-    _, kept, quarantined = pipe.transform_tagged(df)
+    views = pipe.views(pipe.transform_tagged(df))
+    kept, quarantined = views["kept"], views["__quarantine__"]
     assert [r.value for r in kept.collect()] == ["hi"]
     assert [(r.value, r.fail_stage) for r in quarantined.collect()] == [(bad, "stage_0_syslog")]
 
@@ -336,7 +338,7 @@ def test_syslog_rfc_modes_take_ascii_digits_only(spark):
     """Digits are ASCII ``[0-9]``, as Go's ``\\d`` is: a PRI, a day or a
     version holding an Arabic-Indic digit (U+0661 is 1) makes no RFC
     line, so both modes drop it and the oracle rejects it."""
-    from collector_spark.pipeline import Pipeline, PipelineConfig
+    from collector_spark.pipeline import Pipeline, PipelineConfig, SinkSpec
 
     one = "\u0661"
     header = "1 2003-10-11T22:14:15.003Z host app 123 ID47 - "
@@ -358,10 +360,12 @@ def test_syslog_rfc_modes_take_ascii_digits_only(spark):
             PipelineConfig(
                 instance_id=f"ascii_{mode}",
                 processors=[{"kind": "syslog", "type": mode}],
+                sinks=[SinkSpec("kept", "parquet", None, {"path": "/nonexistent/kept"})],
                 quarantine={"kind": "parquet", "path": "/nonexistent/q"},
             )
         )
-        _, kept, quarantined = pipe.transform_tagged(df)
+        views = pipe.views(pipe.transform_tagged(df))
+        kept, quarantined = views["kept"], views["__quarantine__"]
         assert [r.value for r in kept.collect()] == ["hi"], mode
         dead = sorted((r.value, r.fail_stage) for r in quarantined.collect())
         assert dead == sorted((l, "stage_0_syslog") for l in bad), mode
@@ -373,7 +377,7 @@ def test_syslog_drops_a_line_whose_msg_is_empty(spark):
     (tmp_writer.go:54-56): ``apply`` drops it, and quarantine mode
     dead-letters it at the syslog stage, so both modes keep the same
     rows."""
-    from collector_spark.pipeline import Pipeline, PipelineConfig
+    from collector_spark.pipeline import Pipeline, PipelineConfig, SinkSpec
 
     header = "<34>1 2003-10-11T22:14:15.003Z host app 123 ID47 - "
     cases = {"raw": (["<13>", "<13>   "], "<13>hello"), "rfc5424": ([header], header + "hello")}
@@ -385,10 +389,12 @@ def test_syslog_drops_a_line_whose_msg_is_empty(spark):
             PipelineConfig(
                 instance_id=f"syslog_{mode}",
                 processors=[{"kind": "syslog", "type": mode}],
+                sinks=[SinkSpec("kept", "parquet", None, {"path": "/nonexistent/kept"})],
                 quarantine={"kind": "parquet", "path": "/nonexistent/q"},
             )
         )
-        _, kept, quarantined = pipe.transform_tagged(df)
+        views = pipe.views(pipe.transform_tagged(df))
+        kept, quarantined = views["kept"], views["__quarantine__"]
         assert [r.value for r in kept.collect()] == ["hello"]
         dead = sorted((r.value, r.fail_stage) for r in quarantined.collect())
         assert dead == sorted((l, "stage_0_syslog") for l in empty)

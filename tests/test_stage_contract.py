@@ -223,8 +223,11 @@ def test_parquet_dead_letters_agree_on_both_write_paths(spark, chain, lines):
 
 
 PREDICATES = [None, "event.code == 200", "event.code >= 400", "has(event.level)", 'event.msg == "ok"']
+# a sink that rotates files cannot take driver rows: a LocalRelation
+# batch then mixes Spark writes with the driver's
+_ROTATION = st.sampled_from([0, 1 << 20])
 _ROUTES = st.lists(
-    st.tuples(st.sampled_from(PREDICATES), st.sampled_from(["parquet", "file"])),
+    st.tuples(st.sampled_from(PREDICATES), st.sampled_from(["parquet", "file"]), _ROTATION),
     min_size=1,
     max_size=3,
 )
@@ -232,31 +235,39 @@ _ROUTES = st.lists(
 
 def _run_routes(spark, chain, routes, lines, quarantine, root, local):
     """One batch of ``lines`` through ``chain`` to a sink per route under
-    ``root``, over a LocalRelation (the driver writes every sink) or the
-    same relation behind a no-op filter (Spark writes them); every sink
-    is read back."""
+    ``root``, and to a parquet quarantine sink unless ``quarantine`` is
+    None (else its rotation), over a LocalRelation (the driver writes
+    every sink that takes rows) or the same relation behind a no-op
+    filter (Spark writes them all); every sink is read back."""
     config = PipelineConfig(
         instance_id="routes",
         processors=chain,
         sinks=[
-            SinkSpec(f"s{i}", kind, predicate, {"path": f"{root}/s{i}"})
-            for i, (predicate, kind) in enumerate(routes)
+            SinkSpec(f"s{i}", kind, predicate, {"path": f"{root}/s{i}", "max_records_per_file": rotation})
+            for i, (predicate, kind, rotation) in enumerate(routes)
         ],
-        quarantine={"kind": "parquet", "path": f"{root}/q"} if quarantine else None,
+        quarantine=(
+            None
+            if quarantine is None
+            else {"kind": "parquet", "path": f"{root}/q", "max_records_per_file": quarantine}
+        ),
     )
     df = driver_frame(spark, ID_LINES, list(range(len(lines))), lines)
     record = Pipeline(config).run_batch(df if local else df.filter(F.lit(True)), batch_id=0)
     read = {"parquet": spark.read.parquet, "file": spark.read.text}
-    kinds = [kind for _, kind in routes] + (["parquet"] if quarantine else [])
-    names = [f"s{i}" for i in range(len(routes))] + (["q"] if quarantine else [])
     back = {
         name: Counter(
             json.dumps(r.asDict(recursive=True), sort_keys=True, default=str)
             for r in read[kind](f"{root}/{name}/batch_id=0").collect()
         )
-        for name, kind in zip(names, kinds)
+        for name, kind in _kinds(routes, quarantine).items()
     }
     return record, back
+
+
+def _kinds(routes, quarantine) -> dict[str, str]:
+    kinds = {f"s{i}": kind for i, (_, kind, _) in enumerate(routes)}
+    return kinds if quarantine is None else {**kinds, "q": "parquet"}
 
 
 @settings(
@@ -270,19 +281,26 @@ def _run_routes(spark, chain, routes, lines, quarantine, root, local):
     chain=st.lists(st.sampled_from(STAGES), max_size=2),
     routes=_ROUTES,
     lines=_CORPUS,
-    quarantine=st.booleans(),
+    quarantine=st.none() | _ROTATION,
 )
-@example(chain=[STAGES[4]], routes=[(None, "file"), ("event.code == 200", "parquet")], lines=LINES, quarantine=True)
+@example(chain=[STAGES[4]], routes=[(None, "file", 0), ("event.code == 200", "parquet", 0)], lines=LINES, quarantine=0)
+@example(chain=[STAGES[4]], routes=[(None, "file", 1 << 20), ("event.code == 200", "parquet", 0)], lines=LINES, quarantine=0)
+@example(chain=[STAGES[4]], routes=[(None, "file", 0), ("has(event.level)", "parquet", 0)], lines=LINES, quarantine=1 << 20)
 def test_driver_and_spark_paths_agree_over_random_routes(spark, chain, routes, lines, quarantine):
-    """The small-batch path (one ``toArrow()``, the driver filters and
-    writes) and the Spark path (one write per sink) give the same
-    per-sink, empty, stage and partition counts and the same rows."""
+    """The small-batch path (the driver filters one Arrow table and
+    writes every sink that takes rows; the rest are Spark writes) and
+    the Spark path (one write per sink) give the same per-sink, empty,
+    stage and partition counts and the same rows."""
+    rotates = {f"s{i}": bool(rotation) for i, (_, _, rotation) in enumerate(routes)}
+    if quarantine is not None:
+        rotates["q"] = bool(quarantine)
     with tempfile.TemporaryDirectory() as root:
         one, rows = _run_routes(spark, chain, routes, lines, quarantine, f"{root}/driver", True)
         two, rows2 = _run_routes(spark, chain, routes, lines, quarantine, f"{root}/spark", False)
         # Spark's writer leaves checksum files, the driver's does not
         for name in rows:
-            assert not any(n.endswith(".crc") for n in os.listdir(f"{root}/driver/{name}/batch_id=0"))
+            crc = any(n.endswith(".crc") for n in os.listdir(f"{root}/driver/{name}/batch_id=0"))
+            assert crc == rotates[name], name
             assert any(n.endswith(".crc") for n in os.listdir(f"{root}/spark/{name}/batch_id=0"))
     for field in ("per_sink_counts", "per_sink_empty_counts", "per_stage_counts", "partition_counts"):
         assert getattr(one, field) == getattr(two, field), field

@@ -17,6 +17,7 @@ plan build.
 """
 
 import gc
+import json
 import os
 import threading
 
@@ -118,6 +119,7 @@ def _in_group(spark, group, fn):
 
 
 TICK = ['{"code": 200, "i": 1}', '{"code": 500}', '{"code": 200, "i": 2}']
+_Q = "__quarantine__"
 
 
 def test_quarantine_file_tick_runs_one_spark_job(spark, tmp_path):
@@ -138,30 +140,39 @@ def test_quarantine_file_tick_runs_one_spark_job(spark, tmp_path):
 def test_file_quarantine_sink_keeps_a_job_per_write(spark, tmp_path):
     """A ``file`` quarantine sink takes driver rows too: its tick runs
     one job. A quarantine sink that cannot take them (a rotating text
-    sink) keeps its Spark write, with the same counts and lines."""
+    sink) is the tick's one job, a Spark write whose Observation brings
+    the events rows. Over a non-local input both sinks are Spark writes,
+    one job each. All agree on the counts and lines."""
     _, fast = _ticker(spark, tmp_path / "fast")
     _, text = _ticker(spark, tmp_path / "text", kind="file")
     _, spark_write = _ticker(spark, tmp_path / "file", kind="file", max_records_per_file=1000)
-    for group in ("warm", "tick"):
+    all_spark, _ = _ticker(spark, tmp_path / "spark", kind="file", max_records_per_file=1000)
+    for b, group in enumerate(("warm", "tick")):
         one, one_jobs = fast(TICK, f"quarantine-parquet-{group}")
         lines, text_jobs = text(TICK, f"quarantine-text-{group}")
         two, two_jobs = spark_write(TICK, f"quarantine-file-{group}")
+        df = lines_frame(spark, TICK).filter(F.lit(True))
+        three, three_jobs = _in_group(spark, f"quarantine-spark-{group}", lambda: all_spark.run_batch(df, batch_id=b))
     assert text_jobs == 1
-    assert (one_jobs, two_jobs) == (1, 2)
-    for record in (lines, two):
+    assert (one_jobs, two_jobs, three_jobs) == (1, 1, 2)
+    for record in (lines, two, three):
         assert one.per_sink_counts == record.per_sink_counts == {"events": 2, "__quarantine__": 1}
         assert one.per_stage_counts == record.per_stage_counts
         assert one.partition_counts == record.partition_counts
-    by_driver, by_spark = (
-        sorted(spark.read.text(str(tmp_path / d / "q")).collect()) for d in ("text", "file")
+    by_driver, by_observation, by_spark = (
+        sorted(spark.read.text(str(tmp_path / d / "q")).collect()) for d in ("text", "file", "spark")
     )
-    assert by_driver == by_spark and [r.value for r in by_driver] == ['{"code": 500}'] * 2
+    assert by_driver == by_observation == by_spark and [r.value for r in by_driver] == ['{"code": 500}'] * 2
+    events = [sorted(spark.read.text(str(tmp_path / d / "ev")).collect()) for d in ("text", "file", "spark")]
+    assert events[0] == events[1] == events[2] and len(events[0]) == 4
 
 
 def test_small_fanout_batch_runs_one_spark_job(spark, tmp_path):
     """Three local sinks, two of them predicated parquet sinks and one a
     catch-all text sink, over a LocalRelation: one Spark job, nothing
-    persisted at any point, and the same rows as Spark's writes."""
+    persisted at any point, and the same rows as Spark's writes. With a
+    rotating ``ok`` sink the batch is still one job, ``ok``'s write;
+    over a non-local input every sink is a Spark write, a job each."""
     lines = ['{"code": 200, "i": 1}', '{"code": 500, "i": 2}', '{"code": 404, "i": 3}', "  "]
 
     def pipe(root, **parquet):
@@ -177,19 +188,124 @@ def test_small_fanout_batch_runs_one_spark_job(spark, tmp_path):
     write_rows = driver.sinks["archive"].write_rows
     driver.sinks["archive"].write_rows = lambda *a, **k: seen.append(_persisted(spark)) or write_rows(*a, **k)
     before = _persisted(spark)
-    runs = [
-        _in_group(spark, group, lambda: p.run_batch(lines_frame(spark, lines), batch_id=b))
-        for b, (p, group) in enumerate(((driver, "fanout-warm"), (driver, "fanout"), (spark_write, "fanout-spark")))
-    ]
-    _, (one, one_jobs), (two, two_jobs) = runs
-    assert (one_jobs, two_jobs) == (1, 3)
+    local = lines_frame(spark, lines)
+    batches = (
+        (driver, "fanout-warm", local),
+        (driver, "fanout", local),
+        (spark_write, "fanout-mixed", local),
+        (spark_write, "fanout-spark", local.filter(F.lit(True))),
+    )
+    runs = [_in_group(spark, group, lambda: p.run_batch(df, batch_id=b)) for b, (p, group, df) in enumerate(batches)]
+    _, (one, one_jobs), (two, two_jobs), (three, three_jobs) = runs
+    assert (one_jobs, two_jobs, three_jobs) == (1, 1, 3)
     assert [s - before for s in seen] == [set(), set()] and not _persisted(spark) - before
-    assert one.per_sink_counts == two.per_sink_counts == {"ok": 1, "errors": 2, "archive": 3}
-    assert one.per_sink_empty_counts == two.per_sink_empty_counts == {"archive": 1}
-    assert one.partition_counts == two.partition_counts
+    for record in (two, three):
+        assert one.per_sink_counts == record.per_sink_counts == {"ok": 1, "errors": 2, "archive": 3}
+        assert one.per_sink_empty_counts == record.per_sink_empty_counts == {"archive": 1}
+        assert one.partition_counts == record.partition_counts
     for sink, read in (("ok", spark.read.parquet), ("errors", spark.read.parquet), ("archive", spark.read.text)):
-        got = [sorted(read(str(tmp_path / d / sink / f"batch_id={b}")).collect()) for d, b in (("driver", 1), ("spark", 2))]
-        assert got[0] == got[1], sink
+        got = [
+            sorted(read(str(tmp_path / d / sink / f"batch_id={b}")).collect())
+            for d, b in (("driver", 1), ("spark", 2), ("spark", 3))
+        ]
+        assert got[0] == got[1] == got[2], sink
+
+
+@pytest.mark.parametrize(
+    "spark_sinks",
+    [(), ("__quarantine__",), ("ok",), ("ok", "archive")],
+    ids=["all_rows", "quarantine", "one_route", "two_routes"],
+)
+def test_small_batch_runs_a_job_per_spark_write(spark, tmp_path, spark_sinks):
+    """The one rule: a LocalRelation batch runs ``max(1, sinks that
+    cannot take rows)`` Spark jobs (here a sink cannot when it rotates),
+    persists the parent only for two or more of them, and leaves nothing
+    persisted. Every mix agrees with an all-Spark run over a non-local
+    input."""
+    lines = ['{"code": 200, "i": 1}', '{"code": 500, "i": 2}', "not json", '{"code": 200, "i": 3}']
+
+    def pipe(root):
+        def at(name):
+            return {"path": str(root / name), "max_records_per_file": 100 if name in spark_sinks else 0}
+
+        return Pipeline(
+            PipelineConfig(
+                instance_id="mix",
+                processors=[{"kind": "cel", "rules": ["has(event.code)"]}],
+                sinks=[SinkSpec("ok", "parquet", "event.code == 200", at("ok")), SinkSpec("archive", "file", None, at("archive"))],
+                quarantine={"kind": "parquet", **at(_Q)},
+            )
+        )
+
+    mixed, all_spark = pipe(tmp_path / "mixed"), pipe(tmp_path / "spark")
+    sinks = {**mixed.sinks, _Q: mixed.quarantine_sink}
+    assert [name for name, sink in sinks.items() if not sink.takes_rows] == list(spark_sinks)
+    before = _persisted(spark)
+    persisted = {}
+
+    def spy(name, write):
+        def call(*args, **kwargs):
+            written = write(*args, **kwargs)
+            persisted[name] = len(_persisted(spark) - before)
+            return written
+
+        return call
+
+    for name, sink in sinks.items():
+        method = "write" if name in spark_sinks else "write_rows"
+        setattr(sink, method, spy(name, getattr(sink, method)))
+    local = lines_frame(spark, lines)
+    mixed.run_batch(local, batch_id=0)  # warm
+    one, jobs = _in_group(spark, "mix-" + "-".join(spark_sinks), lambda: mixed.run_batch(local, batch_id=1))
+    assert jobs == max(1, len(spark_sinks))
+    shared = 1 if len(spark_sinks) >= 2 else 0
+    assert persisted == {name: shared if name in spark_sinks else 0 for name in sinks}
+    assert not _persisted(spark) - before
+    two = all_spark.run_batch(local.filter(F.lit(True)), batch_id=1)
+    for field in ("per_sink_counts", "per_sink_empty_counts", "per_stage_counts", "partition_counts"):
+        assert getattr(one, field) == getattr(two, field), field
+    assert one.per_sink_counts == {"ok": 2, "archive": 3, _Q: 1}
+    for name, read in (("ok", spark.read.parquet), ("archive", spark.read.text), (_Q, spark.read.parquet)):
+        got = [sorted(read(str(tmp_path / d / name / "batch_id=1")).collect()) for d in ("mixed", "spark")]
+        assert got[0] == got[1], name
+
+
+@pytest.mark.parametrize("rotating", [False, True], ids=["stdout", "stdout_and_rotating"])
+def test_stdout_beside_local_sinks_observes_every_partition(spark, tmp_path, capsys, rotating):
+    """A ``stdout`` sink shows only ``num_rows`` rows, which a limit may
+    read from the first partition alone. It still reads all of its view
+    first, so the row Observation that feeds the local sinks, and the
+    stage and lineage counts, hold every partition: the same counts and
+    rows as an all-Spark run. With a rotating sink beside it both Spark
+    writes read one persisted frame."""
+    lines = [json.dumps({"code": 200 if i % 3 else 500, "i": i}) if i % 7 else "not json" for i in range(80)]
+
+    def pipe(root):
+        archive = {"path": str(root / "archive"), "max_records_per_file": 100 if rotating else 0}
+        return Pipeline(
+            PipelineConfig(
+                instance_id="show",
+                processors=[{"kind": "cel", "rules": ["has(event.code)"]}],
+                sinks=[
+                    SinkSpec("show", "stdout", None, {"num_rows": 2}),
+                    SinkSpec("ok", "parquet", "event.code == 200", {"path": str(root / "ok")}),
+                    SinkSpec("archive", "file", None, archive),
+                ],
+                quarantine={"kind": "parquet", "path": str(root / _Q)},
+            )
+        )
+
+    local = lines_frame(spark, lines)
+    assert min(local.groupBy(F.spark_partition_id()).count().toPandas()["count"]) > 3
+    one = pipe(tmp_path / "mixed").run_batch(local, batch_id=0)
+    two = pipe(tmp_path / "spark").run_batch(local.filter(F.lit(True)), batch_id=0)
+    for field in ("per_sink_counts", "per_sink_empty_counts", "per_stage_counts", "partition_counts"):
+        assert getattr(one, field) == getattr(two, field), field
+    assert one.per_sink_counts == {"show": 68, "ok": 45, "archive": 68, _Q: 12}
+    for name, read in (("ok", spark.read.parquet), ("archive", spark.read.text), (_Q, spark.read.parquet)):
+        got = [sorted(read(str(tmp_path / d / name / "batch_id=0")).collect()) for d in ("mixed", "spark")]
+        assert got[0] == got[1], name
+    assert capsys.readouterr().out.count("only showing top 2 rows") == 2
 
 
 @pytest.mark.parametrize("kind", ["parquet", "file"])
@@ -429,28 +545,59 @@ DAEMON_CONFIG = {
 
 def _second_tick_build(spark, config: dict) -> _PlanBuildCounter:
     """Counts the second build of a quarantine tick's plan (tag every
-    stage, observe, split into kept/dead-letter, route) on a fresh
-    frame."""
+    stage, observe, a view per sink) on a fresh frame."""
     pipe = Pipeline(PipelineConfig.from_dict(config))
 
     def build(df):
-        _, kept, quarantined = pipe.transform_tagged(df, {})
-        return pipe.router.split(kept), quarantined
+        return pipe.views(pipe.transform_tagged(df, {}))
 
     build(spark.createDataFrame([("a",)], "value string"))
     fresh = spark.createDataFrame([("b",)], "value string")
     with _PlanBuildCounter(spark) as counter:
         built = build(fresh)
-    assert built[0]["events"].columns == ["value"]
+    assert built["events"].columns == ["value"]
+    assert built["__quarantine__"].columns == ["value", "fail_stage"]
     return counter
 
 
 def test_tick_plan_build_budget(spark):
-    """The operators' Columns are compiled once, and the parent's
-    bookkeeping columns ride in the stages' own projections."""
+    """The operators' Columns are compiled once, the parent's
+    bookkeeping columns ride in the stages' own projections, and a view
+    selects plain names and renames compiled once."""
     counter = _second_tick_build(spark, DAEMON_CONFIG)
-    assert counter.round_trips <= 200, counter.round_trips
+    assert counter.round_trips <= 106, counter.round_trips
     assert counter.analysed <= 12, counter.analysed
+
+
+class _Action(Exception):
+    """Raised in place of a batch's action."""
+
+
+def _no_action(frame):
+    raise _Action
+
+
+def test_tick_build_before_its_action(spark, monkeypatch):
+    """What a small quarantine tick builds up to its one action: the
+    tagged parent and its Observation, and no view, as no sink is a
+    Spark write; then the action's projection of the sinks' flags and
+    row columns."""
+    pipe = Pipeline(PipelineConfig.from_dict(DAEMON_CONFIG))
+    monkeypatch.setattr(DataFrame, "toArrow", _no_action)
+
+    def build(df):
+        with pytest.raises(_Action):
+            pipe.run_batch(df, batch_id=0)
+
+    build(lines_frame(spark, ["a"]))
+    fresh = lines_frame(spark, ["b"])
+    row_plan, before_plan = pipe._row_plan, []
+    with _PlanBuildCounter(spark) as counter:
+        monkeypatch.setattr(pipe, "_row_plan", lambda *a: before_plan.append(counter.analysed) or row_plan(*a))
+        build(fresh)
+    assert before_plan[0] <= 6, before_plan
+    assert counter.analysed <= 7, counter.analysed
+    assert counter.round_trips <= 150, counter.round_trips
 
 
 @pytest.mark.parametrize(

@@ -109,7 +109,7 @@ def test_processor_keeps_received_variant_fresh(spark, kind, i, cfg):
     pipe = _one_stage(kind, cfg)
     outs = [pipe.transform(src)]
     if hasattr(pipe.stages[0][1], "tag_columns"):
-        outs.append(pipe.transform_tagged(src)[0])  # the quarantine path keeps every row
+        outs.append(pipe.transform_tagged(src))  # the quarantine path keeps every row
     for out in outs:
         assert PARSED in out.columns
         assert _stale_rows(out).collect() == []
