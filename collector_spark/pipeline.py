@@ -271,10 +271,14 @@ class Pipeline:
         ``parent.filter(flag).select(columns)``. Each view recomputes
         ``parent`` unless the caller persists it."""
         frame = parent if self.router is None else self.router.parsed(parent)
-        columns = self._columns(frame)
+        return self._views(frame, self._columns(frame), self._flags if names is None else names)
+
+    def _views(self, frame: DataFrame, columns: dict[str, dict[str, str]], names) -> dict[str, DataFrame]:
+        """``views`` of a ``frame`` the router has parsed, given its
+        ``_columns``."""
         return {
             name: frame.filter(self._flags[name]).select(*(c if c == w else _renamed(c, w) for w, c in columns[name].items()))
-            for name in (self._flags if names is None else names)
+            for name in names
         }
 
     def _first_failure(self, i: int, keep: Column) -> Column:
@@ -421,10 +425,11 @@ class Pipeline:
 
         if sinks:
             frame = parent if self.router is None else self.router.parsed(parent)
+            columns = self._columns(frame)  # one schema fetch per batch
             rows = [name for name, sink in sinks.items() if getattr(sink, "takes_rows", False)] if df.isLocal() else []
             spark_writes = [name for name in sinks if name not in rows]
             if rows:
-                project, picks = self._row_plan(frame, sinks, rows)
+                project, picks = self._row_plan(columns, sinks, rows)
                 if spark_writes:
                     picked = reduce(Column.__or__, (self._flags[name] for name in rows))
                     obs = observations[_ROWS] = Observation("rows")
@@ -434,7 +439,7 @@ class Pipeline:
             with cache_scope():
                 # two or more Spark writes share one materialization, the
                 # row Observation's included
-                views = self.views(cached(frame) if len(spark_writes) > 1 else frame, spark_writes)
+                views = self._views(cached(frame) if len(spark_writes) > 1 else frame, columns, spark_writes)
                 for name, view in views.items():
                     wrote(name, sinks[name].write(view, batch_id=batch_id))
             # only read after an action ran: Observation.get blocks until
@@ -456,12 +461,13 @@ class Pipeline:
             self.manifest.commit(record)  # AFTER sinks — reference order
         return record
 
-    def _row_plan(self, frame: DataFrame, sinks: dict, names: list[str]) -> tuple[list, dict[str, dict[str, str]]]:
-        """The table the driver writes sinks ``names`` from: a flag per
-        sink and each sink's ``row_columns`` (a column of ``frame`` once,
-        however many sinks write it); and per sink, ``{column of the
-        table: name written}``."""
-        columns = self._columns(frame)
+    def _row_plan(
+        self, columns: dict[str, dict[str, str]], sinks: dict, names: list[str]
+    ) -> tuple[list, dict[str, dict[str, str]]]:
+        """The table the driver writes sinks ``names`` from, given the
+        frame's ``_columns``: a flag per sink and each sink's
+        ``row_columns`` (a column of the frame once, however many sinks
+        write it); and per sink, ``{column of the table: name written}``."""
         project: dict[str, str | Column] = {}
         picks: dict[str, dict[str, str]] = {}
         for name in names:

@@ -3,13 +3,23 @@
 Local mode is the test/bench environment; the same settings are what we
 would submit with ``spark-submit --py-files`` to a real cluster (AQE,
 Arrow, skew-join handling are cluster-relevant, not local-only hacks).
+
+On local masters the JVM talks to its Python workers, and the Python
+driver to the JVM's collect and accumulator servers, over Unix domain
+sockets instead of loopback TCP: over TCP each pandas-UDF task's worker
+pass stalled about 40 ms (the delayed-ACK timer) whatever its rows.
+Spark names each socket ``<dir>/.<uuid4>.sock``, so ``socket_dir`` picks
+a directory whose socket paths fit ``sun_path``, else TCP stays on.
 """
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
 import re
-from contextlib import contextmanager
+import tempfile
+from contextlib import contextmanager, suppress
 from contextvars import ContextVar
 from typing import Callable, Iterator, Sequence
 
@@ -32,6 +42,21 @@ LOCAL_RELATION_BYTES = 2 * 1024 * 1024
 #: import the installed pyspark (see its docstring).
 DAEMON_MODULE = "collector_spark.python_daemon"
 
+#: Bytes a Unix socket path may hold (``sun_path`` is 108 with its NUL).
+SUN_PATH_BYTES = 107
+#: Bytes Spark adds to the socket directory: ``/.<uuid4>.sock``.
+SOCKET_NAME_BYTES = 43
+
+
+def socket_dir() -> str | None:
+    """The first of the temp dir and ``/tmp`` whose socket paths fit
+    ``SUN_PATH_BYTES``, or None (then Spark keeps loopback TCP). Spark's
+    own default is ``java.io.tmpdir``, which may be too long."""
+    for d in (tempfile.gettempdir(), "/tmp"):
+        if len(os.fsencode(d)) + SOCKET_NAME_BYTES <= SUN_PATH_BYTES and os.path.isdir(d):
+            return d
+    return None
+
 
 def get_spark(
     app_name: str = "collector_spark",
@@ -46,7 +71,23 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    accumulators = spark.sparkContext._accumulatorServer.server_address
+    if isinstance(accumulators, str):  # a Unix socket
+        _unlink_at_exit(accumulators)
     return spark
+
+
+@functools.cache
+def _unlink_at_exit(path: str) -> None:
+    """Remove the socket at ``path`` when the driver exits: only
+    ``spark.stop()`` removes the accumulator server's, so a driver that
+    exits without it would leave the file behind."""
+    atexit.register(_unlink, path)
+
+
+def _unlink(path: str) -> None:
+    with suppress(FileNotFoundError):
+        os.remove(path)
 
 
 def spark_conf(
@@ -104,6 +145,11 @@ def spark_conf(
         conf["spark.executorEnv.PYTHONPATH"] = os.path.dirname(
             os.path.dirname(os.path.abspath(__file__))
         )
+        # JVM <-> Python over Unix sockets, not loopback TCP (see above)
+        sockets = socket_dir()
+        if sockets is not None:
+            conf["spark.python.unix.domain.socket.enabled"] = "true"
+            conf["spark.python.unix.domain.socket.dir"] = sockets
     return {**conf, **(extra_conf or {})}
 
 

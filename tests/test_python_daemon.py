@@ -6,7 +6,9 @@
 zipimporter is left for every task's ``invalidate_caches()`` to re-scan,
 and pyspark loads from cached ``.pyc``."""
 
+import glob
 import os
+import stat
 import subprocess
 import sys
 import textwrap
@@ -91,15 +93,55 @@ def test_worker_path_unchanged_on_version_mismatch(tmp_path):
     assert worker_path(path, home) == path
 
 
+UDS_ENABLED = "spark.python.unix.domain.socket.enabled"
+UDS_DIR = "spark.python.unix.domain.socket.dir"
+
+
 def test_daemon_module_only_on_local_masters():
     for master in ("local", "local[2]", "local[*]"):
         conf = session.spark_conf(master)
         assert conf["spark.python.daemon.module"] == session.DAEMON_MODULE
         assert conf["spark.executorEnv.PYTHONPATH"] == ROOT
+        assert conf[UDS_ENABLED] == "true"
+        # Spark binds <dir>/.<uuid4>.sock; sun_path holds 107 bytes
+        assert len(os.fsencode(conf[UDS_DIR])) + 43 <= 107, conf[UDS_DIR]
+        assert os.path.isdir(conf[UDS_DIR])
     for master in ("spark://host:7077", "yarn", "local-cluster[2,1,1024]"):
         conf = session.spark_conf(master)
         assert "spark.python.daemon.module" not in conf
         assert "spark.executorEnv.PYTHONPATH" not in conf
+        assert UDS_ENABLED not in conf and UDS_DIR not in conf
+
+
+def test_socket_dir_falls_back_to_tmp_then_tcp(monkeypatch, tmp_path):
+    long_dir = tmp_path / ("d" * 80)
+    long_dir.mkdir()
+    monkeypatch.setattr(session.tempfile, "tempdir", str(long_dir))
+    assert session.socket_dir() == "/tmp"
+    monkeypatch.setattr(session, "socket_dir", lambda: None)
+    conf = session.spark_conf("local[2]")
+    assert UDS_ENABLED not in conf and UDS_DIR not in conf
+
+
+def test_local_session_talks_over_unix_sockets(spark):
+    """The shared session's workers and its accumulator server use the
+    Unix sockets the conf asks for."""
+    sock_dir = spark.conf.get(UDS_DIR)
+
+    @F.pandas_udf(T.StringType())
+    def channel(s: pd.Series) -> pd.Series:
+        import os
+
+        # pyspark's daemon reads the flag case-insensitively
+        enabled = os.environ.get("PYTHON_UNIX_DOMAIN_ENABLED", "").lower()
+        env = f"{enabled}|{os.environ.get('PYTHON_WORKER_FACTORY_SOCK_DIR')}"
+        return s.map(lambda _: env)
+
+    got = {r.c for r in spark.range(0, 4, numPartitions=2).select(channel("id").alias("c")).collect()}
+    assert got == {f"true|{sock_dir}"}
+    address = spark.sparkContext._accumulatorServer.server_address
+    assert isinstance(address, str) and os.path.dirname(address) == sock_dir, address
+    assert stat.S_ISSOCK(os.stat(address).st_mode)
 
 
 def test_package_import_leaves_pyspark_unloaded():
@@ -143,3 +185,58 @@ def test_session_from_another_cwd_runs_a_udf(tmp_path):
     )
     assert res.returncode == 0, res.stderr[-3000:]
     assert res.stdout.strip().endswith("[Row(plus_one(id)=1), Row(plus_one(id)=2), Row(plus_one(id)=3)]")
+
+
+def test_long_tmpdir_keeps_sockets_short_and_leaves_none(tmp_path):
+    """With ``TMPDIR`` and the JVM's ``java.io.tmpdir`` too long for a
+    socket path, the sockets go to ``/tmp``: a pandas UDF, ``toArrow()``
+    and ``collect()`` run, ``spark.stop()`` leaves no socket behind, and
+    neither does a driver that exits with a session it never stopped."""
+    long_dir = tmp_path / ("t" * 90)
+    long_dir.mkdir()
+    assert len(str(long_dir)) >= 80
+    code = textwrap.dedent(
+        f"""
+        import glob, os, sys
+        sys.path.insert(0, {ROOT!r})
+        import pandas as pd
+        from pyspark.sql import functions as F, types as T
+        from collector_spark import get_spark
+
+        @F.pandas_udf(T.StringType())
+        def sock_dir(s: pd.Series) -> pd.Series:
+            import os
+            return s.map(lambda _: os.environ["PYTHON_WORKER_FACTORY_SOCK_DIR"])
+
+        before = set(glob.glob("/tmp/.*.sock"))
+        spark = get_spark(
+            app_name="long_tmpdir", master="local[1]",
+            extra_conf={{"spark.driver.extraJavaOptions": "-Djava.io.tmpdir={long_dir}"}},
+        )
+        print("jvm_tmpdir", spark._jvm.java.lang.System.getProperty("java.io.tmpdir"))
+        print("conf_dir", spark.conf.get("spark.python.unix.domain.socket.dir"))
+        print("accumulator", spark.sparkContext._accumulatorServer.server_address)
+        print("udf", sorted({{r[0] for r in spark.range(3).select(sock_dir("id")).collect()}}))
+        print("arrow", spark.range(5).toArrow().num_rows)
+        print("collect", len(spark.range(7).collect()))
+        spark.stop()
+        print("left", sorted(set(glob.glob("/tmp/.*.sock")) - before))
+        get_spark(app_name="never_stopped", master="local[1]").range(1).collect()
+        """
+    )
+    before = set(glob.glob("/tmp/.*.sock"))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    res = subprocess.run(
+        [sys.executable, "-c", code],
+        capture_output=True, text=True, timeout=300, cwd=tmp_path,
+        env={**env, "SPARK_GRAFT_DRIVER_MEM": "1g", "TMPDIR": str(long_dir)},
+    )
+    assert res.returncode == 0, res.stderr[-3000:]
+    out = dict(line.split(" ", 1) for line in res.stdout.strip().splitlines()[-7:])
+    assert out["jvm_tmpdir"] == str(long_dir)
+    assert out["conf_dir"] == "/tmp"
+    assert out["accumulator"].startswith("/tmp/.") and out["accumulator"].endswith(".sock")
+    assert out["udf"] == "['/tmp']"
+    assert out["arrow"] == "5" and out["collect"] == "7"
+    assert out["left"] == "[]"
+    assert set(glob.glob("/tmp/.*.sock")) - before == set()

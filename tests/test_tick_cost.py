@@ -560,21 +560,39 @@ def _second_tick_build(spark, config: dict) -> _PlanBuildCounter:
     return counter
 
 
-def test_tick_plan_build_budget(spark):
-    """The operators' Columns are compiled once, the parent's
-    bookkeeping columns ride in the stages' own projections, and a view
-    selects plain names and renames compiled once."""
-    counter = _second_tick_build(spark, DAEMON_CONFIG)
-    assert counter.round_trips <= 106, counter.round_trips
-    assert counter.analysed <= 12, counter.analysed
-
-
 class _Action(Exception):
     """Raised in place of a batch's action."""
 
 
-def _no_action(frame):
+def _no_action(frame, *_, **__):
     raise _Action
+
+
+def test_tick_plan_build_budget(spark, monkeypatch):
+    """The operators' Columns are compiled once, the parent's
+    bookkeeping columns ride in the stages' own projections, and a view
+    selects plain names and renames compiled once. A mixed small batch
+    (a rotating events sink is a Spark write, the dead letters ride it
+    as driver rows) builds the sinks' columns once for its row plan and
+    its view."""
+    counter = _second_tick_build(spark, DAEMON_CONFIG)
+    assert counter.round_trips <= 106, counter.round_trips
+    assert counter.analysed <= 12, counter.analysed
+
+    rotating = {"name": "events", "kind": "file", "config": {"path": "/nonexistent/events", "max_records_per_file": 100}}
+    pipe = Pipeline(PipelineConfig.from_dict({**DAEMON_CONFIG, "sinks": [rotating]}))
+    monkeypatch.setattr(pipe.sinks["events"], "write", _no_action)
+
+    def build(df):
+        with pytest.raises(_Action):
+            pipe.run_batch(df, batch_id=0)
+
+    build(lines_frame(spark, ["a"]))
+    fresh = lines_frame(spark, ["b"])
+    with _PlanBuildCounter(spark) as counter:
+        build(fresh)
+    assert counter.round_trips <= 145, counter.round_trips
+    assert counter.analysed <= 9, counter.analysed
 
 
 def test_tick_build_before_its_action(spark, monkeypatch):
