@@ -30,6 +30,10 @@ Log rules:
   query from memory; any other handle on the same path is a reader and
   sees what the writer has committed when it first loads.
 
+Without a state dir the same log lives in memory only: state, status
+and errors carry from tick to tick within the process and start over
+after a restart.
+
 JSON-lines (not parquet) because the manifest is tiny, append-only, and
 driver-side; on a cluster this would be an Iceberg/Delta table — the
 interface below is the swap point.
@@ -63,9 +67,9 @@ class BatchRecord:
     # pkg/core/channel.go:3-8, generalized below file granularity)
     partition_counts: dict = field(default_factory=dict)
     committed_at: float = 0.0
-    # True only on records returned by run_batch's on_error='drop' path —
-    # never committed to the manifest, lets run_tick distinguish a
-    # swallowed failure from a success when no manifest is configured
+    # True only on the record of a batch or tick dropped under
+    # on_error='drop' (its error is in Manifest.status()); never
+    # committed to the manifest
     failed: bool = False
 
 
@@ -87,15 +91,18 @@ class Status:
 
 class Manifest:
     """Append-only batch log of one instance plus its error log, indexed
-    in memory after the first call (see the module docstring)."""
+    in memory after the first call (see the module docstring). With
+    ``state_dir=None`` it writes no file and ``path`` is None."""
 
-    def __init__(self, state_dir: str, instance_id: str):
-        os.makedirs(state_dir, exist_ok=True)
-        self.path = os.path.join(state_dir, f"{instance_id}.manifest.jsonl")
-        self.errors_path = os.path.join(state_dir, f"{instance_id}.errors.jsonl")
+    def __init__(self, state_dir: str | None, instance_id: str):
+        self.path = self.errors_path = None
         # filled by _index() on first use, never in __init__, so binding
-        # an instance reads no history
-        self._records: dict[int, BatchRecord] | None = None
+        # an instance reads no history; a memory-only log has none
+        self._records: dict[int, BatchRecord] | None = None if state_dir else {}
+        if state_dir:
+            os.makedirs(state_dir, exist_ok=True)
+            self.path = os.path.join(state_dir, f"{instance_id}.manifest.jsonl")
+            self.errors_path = os.path.join(state_dir, f"{instance_id}.errors.jsonl")
         self._max_id = -1
         self._end = 0  # bytes of whole, newline-terminated lines
         self._errors: list[dict] = []  # errors logged after the last commit
@@ -152,15 +159,23 @@ class Manifest:
 
     def commit(self, record: BatchRecord) -> None:
         """THE commit point (reference saveState, manager.go:218-235).
-        Appends one JSON line and fsyncs it; the in-memory index changes
-        only after the fsync returned. Never reads or rewrites the log.
-        A torn tail left by an earlier crash or failed append is
-        truncated first; a failed append is rolled back to the last
-        whole line (best effort — the next commit truncates it anyway),
-        so a fresh reader does not count a batch this writer reported as
-        failed."""
+        Appends one JSON line to the file, if any, and fsyncs it; the
+        in-memory index changes only after the fsync returned. Never
+        reads or rewrites the log. A torn tail left by an earlier crash
+        or failed append is truncated first; a failed append is rolled
+        back to the last whole line (best effort — the next commit
+        truncates it anyway), so a fresh reader does not count a batch
+        this writer reported as failed."""
         records = self._index()
         record.committed_at = time.time()
+        if self.path is not None:
+            self._append(record)
+        records.pop(record.batch_id, None)
+        records[record.batch_id] = record
+        self._max_id = max(self._max_id, record.batch_id)
+        self._errors = [e for e in self._errors if e["at"] > record.committed_at]
+
+    def _append(self, record: BatchRecord) -> None:
         line = (json.dumps(record.__dict__, separators=(",", ":")) + "\n").encode()
         fd = os.open(self.path, os.O_WRONLY | os.O_APPEND | os.O_CREAT, 0o644)
         try:
@@ -182,17 +197,14 @@ class Manifest:
         finally:
             os.close(fd)
         self._end += len(line)
-        records.pop(record.batch_id, None)
-        records[record.batch_id] = record
-        self._max_id = max(self._max_id, record.batch_id)
-        self._errors = [e for e in self._errors if e["at"] > record.committed_at]
 
     def record_error(self, batch_id: int, message: str) -> None:
         """Append a batch failure (reference errorHandler path,
         manager.go:166-169: the batch is dropped, the error logged)."""
         entry = {"batch_id": batch_id, "error": message, "at": time.time()}
-        with open(self.errors_path, "a") as f:
-            f.write(json.dumps(entry, separators=(",", ":")) + "\n")
+        if self.errors_path is not None:
+            with open(self.errors_path, "a") as f:
+                f.write(json.dumps(entry, separators=(",", ":")) + "\n")
         self._errors.append(entry)
 
     def status(self) -> Status:

@@ -19,13 +19,13 @@ The reference runs one goroutine manager per instance; in Spark the
 driver is the scheduler, so ticks are explicit (or via
 ``submit.py --ticks``) — same lifecycle, no hidden threads. Per the
 reference's isolation model, one instance's failing tick never stalls
-the others (tick_all is log-and-continue per instance)."""
+the others: under on_error='drop' ``Pipeline.run_tick`` records the
+failure in the instance's manifest and returns a failed record."""
 
 from __future__ import annotations
 
 import dataclasses
 import json
-import time
 
 from pyspark.sql import SparkSession
 
@@ -37,9 +37,6 @@ class Collector:
     def __init__(self, state_dir: str | None = None):
         self.state_dir = state_dir
         self._instances: dict[str, Pipeline] = {}
-        # in-memory status roll-up for state_dir-less embedding (the
-        # reference's Status is in-memory too, manager/status.go:7-27)
-        self._mem_status: dict[str, Status] = {}
 
     def start(self, instance_id: str, config: PipelineConfig | dict | str) -> Pipeline:
         """Bind an instance (reference Start, collector.go:66-153):
@@ -56,7 +53,6 @@ class Collector:
             config = dataclasses.replace(config, instance_id=instance_id)
         pipe = Pipeline(config, state_dir=self.state_dir)
         self._instances[instance_id] = pipe
-        self._mem_status[instance_id] = Status()
         return pipe
 
     def stop(self, instance_id: str) -> None:
@@ -73,7 +69,6 @@ class Collector:
                 stop_fn()
         finally:
             self._instances.pop(instance_id, None)
-            self._mem_status.pop(instance_id, None)
 
     def stop_all(self) -> None:
         """Best-effort stop of every instance (reference StopAll,
@@ -93,12 +88,10 @@ class Collector:
         return sorted(self._instances)
 
     def status(self, instance_id: str) -> Status:
-        """Status roll-up: manifest-backed when a state_dir is set, else
-        the in-memory tally (the reference's Status is in-memory)."""
-        pipe = self._instances[instance_id]
-        if pipe.manifest is not None:
-            return pipe.manifest.status()
-        return self._mem_status[instance_id]
+        """Status roll-up from the instance's manifest, which lives in
+        memory without a state_dir (the reference's Status is in-memory,
+        manager/status.go:7-27)."""
+        return self._instances[instance_id].manifest.status()
 
     def list_status(self) -> dict[str, Status]:
         return {iid: self.status(iid) for iid in self.list()}
@@ -107,39 +100,13 @@ class Collector:
         """One daemon tick for one instance (the manager loop body,
         manager.go:73-177): read-new → process → outputs → commit.
         on_error='drop' mirrors the reference's log-and-continue."""
-        record = self._instances[instance_id].run_tick(spark, on_error=on_error)
-        mem = self._mem_status[instance_id]
-        if record.failed:
-            mem.errors.append(f"batch {record.batch_id} failed")
-            mem.errors_since_successful_run += 1
-        else:
-            mem.last_successful_run = record.committed_at or time.time()
-            mem.last_successful_result_count = sum(record.per_sink_counts.values())
-            mem.errors = []
-            mem.errors_since_successful_run = 0
-        return record
+        return self._instances[instance_id].run_tick(spark, on_error=on_error)
 
     def tick_all(self, spark: SparkSession, on_error: str = "drop") -> dict[str, BatchRecord]:
-        """Tick every source-configured instance; one instance's failure
-        (including a SOURCE read error, which run_tick propagates even
-        under on_error='drop') is recorded and the remaining instances
-        still run — reference per-manager isolation."""
-        out: dict[str, BatchRecord] = {}
-        for iid in self.list():
-            pipe = self._instances[iid]
-            if pipe.source is None:
-                continue
-            try:
-                out[iid] = self.tick(spark, iid, on_error=on_error)
-            except Exception as e:  # noqa: BLE001 — isolate instances
-                if on_error == "raise":
-                    raise
-                if pipe.manifest is not None:
-                    pipe.manifest.record_error(
-                        pipe.manifest.last_batch_id() + 1, f"{type(e).__name__}: {e}"
-                    )
-                mem = self._mem_status[iid]
-                mem.errors.append(f"{type(e).__name__}: {e}")
-                mem.errors_since_successful_run += 1
-                out[iid] = BatchRecord(batch_id=-1, failed=True)
-        return out
+        """Tick every source-configured instance; under 'drop' a failing
+        one returns a failed record and the rest still tick."""
+        return {
+            iid: self.tick(spark, iid, on_error=on_error)
+            for iid in self.list()
+            if self._instances[iid].source is not None
+        }

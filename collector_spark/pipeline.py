@@ -192,9 +192,8 @@ class Pipeline:
                 )
         else:
             self.quarantine_sink = None
-        self.manifest = (
-            Manifest(state_dir, config.instance_id) if state_dir else None
-        )
+        # without a state_dir the log lives in memory (checkpoint.Manifest)
+        self.manifest = Manifest(state_dir, config.instance_id)
         self._failure_cols: dict[int, tuple[Column, Column]] = {}
 
     # -- plan construction ---------------------------------------------------
@@ -365,25 +364,26 @@ class Pipeline:
         Idempotent: re-running a committed batch is a no-op; re-running an
         UNcommitted batch overwrites the same deterministic sink paths.
 
-        on_error='drop' mirrors the reference (a processor error drops
-        the whole batch, logged, pipeline continues — manager.go:166-169,
-        tracked in Manifest.status()); 'raise' (default) propagates.
+        A failure is recorded in ``Manifest.status()``; on_error='drop'
+        then mirrors the reference (a processor error drops the whole
+        batch, pipeline continues — manager.go:166-169) and returns a
+        ``failed`` record; 'raise' (default) propagates.
         """
-        if on_error not in ("raise", "drop"):
-            raise ValueError(on_error)
-        if self.manifest is not None and self.manifest.committed(batch_id):
+        _check(on_error)
+        if self.manifest.committed(batch_id):
             return BatchRecord(batch_id=batch_id, source_state=source_state or {})
-
         try:
             return self._run_batch_inner(df, batch_id, source_state)
         except Exception as e:  # noqa: BLE001 — mirrors reference error path
-            if self.manifest is not None:
-                self.manifest.record_error(batch_id, f"{type(e).__name__}: {e}")
-            if on_error == "drop":
-                return BatchRecord(
-                    batch_id=batch_id, source_state=source_state or {}, failed=True
-                )
-            raise
+            failed = self._failed(batch_id, e)
+            if on_error == "raise":
+                raise
+            return failed
+
+    def _failed(self, batch_id: int, error: Exception) -> BatchRecord:
+        """Record ``error`` under ``batch_id``; the failed record."""
+        self.manifest.record_error(batch_id, f"{type(error).__name__}: {error}")
+        return BatchRecord(batch_id=batch_id, failed=True)
 
     def _run_batch_inner(
         self, df: DataFrame, batch_id: int, source_state: dict | None
@@ -457,8 +457,7 @@ class Pipeline:
                 pick = picks[name]
                 chosen = table.filter(table[f"_route_{name}"]).select(list(pick)).rename_columns(list(pick.values()))
                 wrote(name, sinks[name].write_rows(chosen, batch_id=batch_id))
-        if self.manifest is not None:
-            self.manifest.commit(record)  # AFTER sinks — reference order
+        self.manifest.commit(record)  # AFTER sinks — reference order
         return record
 
     def _row_plan(
@@ -482,27 +481,31 @@ class Pipeline:
     def run_tick(self, spark: SparkSession, on_error: str = "raise") -> BatchRecord:
         """One reference daemon tick (internal/input/file/file.go:62-133 →
         manager loop): read NEW rows from the configured source (resuming
-        from the committed state), process, fan out, commit state.
-        Batch ids auto-increment from the manifest."""
+        from the committed state), process, fan out, commit state, ack.
+        Batch ids auto-increment from the manifest.
+
+        ``on_error`` covers the whole tick, as each reference manager
+        isolates its input (manager.go:73-235): under 'drop' a failure of
+        the state read, ``read_new``, the batch or the ack is recorded
+        once, under the tick's batch id, and the tick returns a
+        ``failed`` record; 'raise' propagates it."""
         if self.source is None:
             raise ValueError("run_tick needs a config with an 'input' block")
-        state = self.manifest.last_state() if self.manifest else {}
-        df, new_state = self.source.read_new(spark, state)
-        batch_id = (self.manifest.last_batch_id() + 1) if self.manifest else 0
-        ack = getattr(self.source, "commit_read", None)
+        _check(on_error)
+        batch_id = self.manifest.last_batch_id() + 1
+        ack = getattr(self.source, "commit_read", lambda committed: None)
         try:
-            record = self.run_batch(
-                df, batch_id=batch_id, source_state=new_state, on_error=on_error
-            )
-        except Exception:
-            if ack is not None:
-                ack(False)  # leave messages unacked → queue redelivers
-            raise
-        if ack is not None:
-            committed = not record.failed and (
-                self.manifest is None or self.manifest.committed(batch_id)
-            )
-            ack(committed)
+            try:
+                df, state = self.source.read_new(spark, self.manifest.last_state())
+                # a failed batch records its own error
+                record = self.run_batch(df, batch_id=batch_id, source_state=state, on_error=on_error)
+            finally:
+                # unacked messages of an uncommitted batch are redelivered
+                ack(self.manifest.committed(batch_id))
+        except Exception as e:  # noqa: BLE001 — isolate this instance's tick
+            if on_error == "raise":
+                raise
+            return self._failed(batch_id, e)
         return record
 
     def sink_counts(self, df: DataFrame) -> DataFrame:
@@ -512,12 +515,24 @@ class Pipeline:
         return self.router.sink_counts(self.transform(df))
 
 
+def _check(on_error: str) -> None:
+    if on_error not in ("raise", "drop"):
+        raise ValueError(on_error)
+
+
 def load_instances(config_dir: str, state_dir: str | None = None) -> dict[str, Pipeline]:
     """CLI-style startup: glob *.conf in a dir, one Pipeline per file
-    (reference internal/cli/cli.go:18-51)."""
-    out = {}
+    (reference internal/cli/cli.go:18-51). Two files with one
+    instance_id would share a manifest, so they are rejected."""
+    out, files = {}, {}
     for fname in sorted(os.listdir(config_dir)):
         if fname.endswith(".conf"):
-            cfg = PipelineConfig.from_file(os.path.join(config_dir, fname))
+            path = os.path.join(config_dir, fname)
+            cfg = PipelineConfig.from_file(path)
+            if cfg.instance_id in files:
+                raise ValueError(
+                    f"instance {cfg.instance_id!r} defined by both {files[cfg.instance_id]} and {path}"
+                )
+            files[cfg.instance_id] = path
             out[cfg.instance_id] = Pipeline(cfg, state_dir=state_dir)
     return out

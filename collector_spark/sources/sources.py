@@ -26,6 +26,7 @@ import glob as _glob
 import json
 import os
 import re as _re
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -82,22 +83,22 @@ class FileSource:
         max_driver_bytes: int = 64 * 1024 * 1024,
         spill_dir: str | None = None,
     ):
-        import tempfile
-
         self.path = path
         self.delete = delete
         self.max_driver_bytes = max_driver_bytes
         if spill_dir:
             os.makedirs(spill_dir, exist_ok=True)
-            self.spill_dir = spill_dir
-        else:
-            self.spill_dir = tempfile.mkdtemp(prefix="collector_spark_spill_")
+        # None: a temp dir is made on the first spill, so a source that
+        # never spills leaves no directory behind
+        self.spill_dir = spill_dir or None
         self._spill_seq = 0
         self._pending_spills: list[str] = []
         self._pending_deletes: list[tuple[str, int]] = []
 
     def _spill_tail(self, fpath: str, offset: int, size: int) -> str:
         """Copy bytes [offset, size) to a spill file in bounded chunks."""
+        if self.spill_dir is None:
+            self.spill_dir = tempfile.mkdtemp(prefix="collector_spark_spill_")
         self._spill_seq += 1
         out_path = os.path.join(self.spill_dir, f"tail_{self._spill_seq}.txt")
         remaining = size - offset
@@ -112,7 +113,7 @@ class FileSource:
         return out_path
 
     def _clean_spill(self) -> None:
-        for fname in os.listdir(self.spill_dir):
+        for fname in os.listdir(self.spill_dir) if self.spill_dir else ():
             if fname.startswith("tail_"):
                 os.remove(os.path.join(self.spill_dir, fname))
 

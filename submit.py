@@ -102,9 +102,10 @@ def main() -> None:
     )
     ap.add_argument(
         "--on-error", default="drop", choices=["drop", "raise"],
-        help="daemon error policy: 'drop' logs the failed batch and "
-             "continues (the reference's manager.go:166-169 behavior); "
-             "'raise' aborts the loop",
+        help="daemon error policy: 'drop' records a failing instance's "
+             "tick, whether its source or its batch failed, and the other "
+             "instances still tick (the reference's manager.go:166-169 "
+             "behavior); 'raise' aborts the loop",
     )
     args = ap.parse_args()
 
@@ -144,10 +145,8 @@ def main() -> None:
     for tick in ticks:
         for iid, pipe in instances.items():
             if pipe.source is not None:
-                # instance carries its own input block → full daemon tick;
-                # a failed batch is dropped + recorded and the daemon
-                # continues (reference manager.go:166-169) unless
-                # --on-error raise
+                # instance carries its own input block → full daemon tick,
+                # isolated by run_tick under --on-error drop
                 record = pipe.run_tick(spark, on_error=args.on_error)
             elif df is not None:
                 if tick > 0:

@@ -1,5 +1,7 @@
+import glob
 import os
 import sys
+import tempfile
 
 import pytest
 from pyspark import SparkContext
@@ -37,3 +39,17 @@ def no_leaked_caches():
         yield
     leaked = persisted_rdds() - before
     assert not leaked, f"persisted RDDs left behind: {sorted(leaked)}"
+
+
+def spill_dirs() -> set[str]:
+    """``FileSource``'s default spill dirs in the temp dir."""
+    return set(glob.glob(os.path.join(tempfile.gettempdir(), "collector_spark_spill_*")))
+
+
+@pytest.fixture(autouse=True)
+def no_leaked_spill_dirs():
+    """No test may leave a new default spill dir behind."""
+    before = spill_dirs()
+    yield
+    leaked = spill_dirs() - before
+    assert not leaked, f"spill dirs left behind: {sorted(leaked)}"

@@ -63,9 +63,9 @@ def test_start_rejects_bad_config_and_duplicates(tmp_path):
 
 
 def test_tick_all_isolates_failing_instances(spark, tmp_path):
-    """One instance's SOURCE failure (which escapes run_tick even with
-    on_error='drop') must not stall the other instances — reference
-    per-manager isolation; the error lands in status()."""
+    """One instance's SOURCE failure must not stall the other instances
+    — reference per-manager isolation: under on_error='drop' run_tick
+    records it, so the error lands in status()."""
     c = Collector(state_dir=str(tmp_path / "state"))
 
     def boom_receiver(n):
@@ -95,6 +95,45 @@ def test_stateless_collector_status(spark, tmp_path):
     assert st.last_successful_result_count == 2
     assert not st.has_errors
     assert set(c.list_status()) == {"a"}
+
+
+def test_stateless_collector_resumes_within_the_process(spark, tmp_path):
+    """Without a state_dir the in-memory manifest carries the file
+    offsets and batch ids from tick to tick: an appended line is the next
+    batch, not a re-read of the whole file as batch 0."""
+    log = tmp_path / "app.log"
+    log.write_text('{"code": 200}\n{"code": 201}\n')
+    c = Collector()
+    c.start("a", {**_conf(tmp_path / "out"), "input": {"kind": "file", "path": str(log)}})
+    first = c.tick(spark, "a")
+    with open(log, "a") as f:
+        f.write('{"code": 202}\n')
+    second = c.tick(spark, "a")
+    assert (first.batch_id, first.per_sink_counts) == (0, {"out": 2})
+    assert (second.batch_id, second.per_sink_counts) == (1, {"out": 1})
+    written = [spark.read.text(str(tmp_path / "out" / f"batch_id={b}")).count() for b in (0, 1)]
+    assert written == [2, 1]
+    assert c.status("a").last_successful_result_count == 1
+
+
+@pytest.mark.parametrize("state", [False, True], ids=["stateless", "state_dir"])
+def test_tick_applies_on_error_to_a_failing_source(spark, tmp_path, state):
+    """A source that raises is the tick's failure: 'drop' returns a
+    failed record under the tick's batch id and status() shows the
+    error; 'raise' propagates it."""
+    c = Collector(state_dir=str(tmp_path / "state") if state else None)
+
+    def boom_receiver(n):
+        raise RuntimeError("receiver down")
+
+    c.start("bad", _conf(tmp_path / "bad")).source = QueuePollerSource(boom_receiver)
+    record = c.tick(spark, "bad")
+    assert (record.batch_id, record.failed) == (0, True)
+    st = c.status("bad")
+    assert st.errors == ["RuntimeError: receiver down"]
+    assert st.errors_since_successful_run == 1
+    with pytest.raises(RuntimeError, match="receiver down"):
+        c.tick(spark, "bad", on_error="raise")
 
 
 def test_start_does_not_mutate_caller_config(tmp_path):

@@ -107,15 +107,16 @@ def test_driver_and_spark_writers_agree(spark, tmp_path, case):
 
 
 def test_replay_overwrites_a_driver_written_batch(spark, tmp_path):
-    """Replaying a batch id replaces its directory, as Spark's overwrite
-    does: the same batch again holds its rows once, and a different one
-    holds only the new rows. No temp directory is left."""
-    pipe = _pipe(tmp_path, "replay")
+    """Replaying a batch id (each run a restarted pipeline with no
+    state_dir, so the batch is not committed) replaces its directory, as
+    Spark's overwrite does: the same batch again holds its rows once,
+    and a different one holds only the new rows. No temp directory is
+    left."""
     first = lines_frame(spark, ['{"code": 200}', "bad 1", "bad 2"])
     second = lines_frame(spark, ["bad 3"])
     batch = tmp_path / "q" / "batch_id=4"
     for df, want in ((first, ["bad 1", "bad 2"]), (first, ["bad 1", "bad 2"]), (second, ["bad 3"])):
-        record = pipe.run_batch(df, batch_id=4)
+        record = _pipe(tmp_path, "replay").run_batch(df, batch_id=4)
         assert record.per_sink_counts["__quarantine__"] == len(want)
         assert sorted(r.value for r in spark.read.parquet(str(batch)).collect()) == want
         assert _layout(batch) == (["_SUCCESS", "part"], [])

@@ -422,6 +422,22 @@ def test_config_dir_loading(tmp_path):
     assert list(instances) == ["myinst"]
 
 
+def test_config_dir_rejects_duplicate_instance_ids(tmp_path):
+    """Two .conf files with one instance_id would share a manifest; the
+    later one must not silently replace the earlier."""
+    import pytest
+
+    from collector_spark.pipeline import load_instances
+
+    conf = {"instance_id": "same", "sinks": [{"name": "out", "kind": "stdout"}]}
+    for name in ("a.conf", "b.conf"):
+        (tmp_path / name).write_text(json.dumps(conf))
+    with pytest.raises(ValueError, match="same") as err:
+        load_instances(str(tmp_path))
+    assert str(tmp_path / "a.conf") in str(err.value)
+    assert str(tmp_path / "b.conf") in str(err.value)
+
+
 def test_manifest_replay_of_old_batch_does_not_roll_back_resume_token(tmp_path):
     """commit() of a replayed OLDER batch rewrites its record at the end
     of the manifest file; last_batch_id/last_state must still answer by

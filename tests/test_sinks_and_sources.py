@@ -429,6 +429,36 @@ def test_file_source_spills_large_tails_off_driver(spark, tmp_path):
     assert [r.value for r in df3.collect()] == ["row-100"]
 
 
+def test_file_source_default_spill_dir_made_on_first_spill(spark, tmp_path, monkeypatch):
+    """Without a ``spill_dir`` no directory exists until a tail spills;
+    the first spill makes one temp dir and later reads reuse it."""
+    import tempfile
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
+    (tmp_path / "tmp").mkdir()
+
+    def spill_dirs():
+        return [d for d in os.listdir(tmp_path / "tmp") if d.startswith("collector_spark_spill_")]
+
+    log = tmp_path / "a.log"
+    log.write_text("small\n")
+    src = FileSource(str(tmp_path / "*.log"), max_driver_bytes=16)
+    _, state = src.read_new(spark, None)
+    src.commit_read(True)
+    assert src.spill_dir is None and spill_dirs() == []
+    with open(log, "a") as f:
+        f.write("".join(f"row-{i}\n" for i in range(10)))
+    df, state = src.read_new(spark, state)
+    assert df.count() == 10
+    spill_dir = src.spill_dir
+    assert spill_dirs() == [os.path.basename(spill_dir)]
+    src.commit_read(True)
+    with open(log, "a") as f:
+        f.write("".join(f"row-{i}\n" for i in range(10, 20)))
+    assert src.read_new(spark, state)[0].count() == 10
+    assert src.spill_dir == spill_dir
+
+
 def test_file_source_delete_deferred_to_commit(spark, tmp_path):
     """delete=True removes a consumed file only after commit_read(True);
     a failed batch keeps it so the un-advanced offset re-reads (the

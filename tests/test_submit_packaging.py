@@ -81,3 +81,47 @@ def test_submit_daemon_ticks(spark, tmp_path, monkeypatch, capsys):
     assert any("batch=1" in l and "'out': 1" in l for l in outlines), outlines
     # third tick: nothing new → zero-count batch still commits state
     assert any("batch=2" in l and "'out': 0" in l for l in outlines), outlines
+
+
+def test_submit_daemon_isolates_a_failing_source(spark, tmp_path, monkeypatch, capsys):
+    """An instance whose source fails (an ``incremental`` input on a
+    missing table) must not stop the daemon: under the default
+    ``--on-error drop`` it prints FAILED and the healthy instance after
+    it still writes its batch; under ``--on-error raise`` main raises."""
+    import json as _json
+
+    import pytest
+
+    sys.path.insert(0, REPO)
+    import submit
+
+    log = tmp_path / "app.log"
+    log.write_text('{"code": 200}\n')
+    conf_dir = tmp_path / "confs"
+    conf_dir.mkdir()
+    sink = {"name": "out", "kind": "file", "predicate": None}
+    (conf_dir / "a_bad.conf").write_text(_json.dumps({
+        "instance_id": "bad",
+        "input": {"kind": "incremental", "table_path": str(tmp_path / "missing")},
+        "sinks": [{**sink, "config": {"path": str(tmp_path / "bad_out")}}],
+    }))
+    (conf_dir / "b_good.conf").write_text(_json.dumps({
+        "instance_id": "good",
+        "input": {"kind": "file", "path": str(log)},
+        "sinks": [{**sink, "config": {"path": str(tmp_path / "out")}}],
+    }))
+
+    def run(*extra):
+        monkeypatch.setattr(sys, "argv", [
+            "submit.py", "--config-dir", str(conf_dir),
+            "--state-dir", str(tmp_path / "state"), "--ticks", "1", *extra,
+        ])
+        submit.main()
+
+    run()
+    outlines = capsys.readouterr().out.strip().splitlines()
+    assert any(l.startswith("bad: batch=0 FAILED") for l in outlines), outlines
+    assert any(l.startswith("good: batch=0 ") and "'out': 1" in l for l in outlines), outlines
+    assert spark.read.text(str(tmp_path / "out" / "batch_id=0")).count() == 1
+    with pytest.raises(Exception, match="PATH_NOT_FOUND"):
+        run("--on-error", "raise")
